@@ -105,7 +105,7 @@ def main() -> int:
             f"read_parquet('{os.path.join(sf_dir, t)}.parquet')"
         )
 
-    from sressentials_spark.operators.dedup import release_persisted
+    from sressentials_spark.artifacts import release_persisted
 
     fails: list[str] = []
     results: dict[str, dict] = {}

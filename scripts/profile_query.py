@@ -36,12 +36,8 @@ def main() -> None:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
 
     from sressentials_spark import get_spark, loggen
-    from sressentials_spark.catalog import (
-        INDEX_BUILDERS,
-        QUERIES,
-        clear_sheets_cache,
-    )
-    from sressentials_spark.operators.dedup import release_persisted
+    from sressentials_spark.artifacts import release_persisted
+    from sressentials_spark.catalog import INDEX_BUILDERS, QUERIES
 
     spark = get_spark(
         "profile-query", extra_conf={"spark.ui.enabled": "true"}
@@ -70,7 +66,6 @@ def main() -> None:
         # Warmup at the SAME scale so codegen/index lazy-builds are out
         # of the profiled window, then a clean timed pass.
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        clear_sheets_cache()
         release_persisted()
 
         before = {j["jobId"] for j in _get(f"{ui}/applications/{app_id}/jobs")}

@@ -27,6 +27,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sressentials_spark import loggen
+from sressentials_spark.artifacts import (
+    get_or_build,
+    release_persisted,
+    track,
+    tracked_persist,
+)
 from sressentials_spark.operators import curation as C
 from sressentials_spark.operators import dedup as D
 from sressentials_spark.operators import pipeline as P
@@ -59,7 +65,7 @@ ORACLE_SQL: dict[str, str] = {}
 #: Named builders for the persisted serving artifacts some queries are
 #: served from (ANN inverted lists, the bucketed dedup index). Each
 #: callable takes ``(spark, sf_dir)``, builds the artifact if this
-#: session hasn't yet (``get_or_build_disk_artifact`` keying), and
+#: session hasn't yet (a disk-tier ``artifacts.get_or_build``), and
 #: returns its handle. bench.py invokes these OUTSIDE the timed region
 #: and reports each build as its own line, so per-query timings are
 #: steady-state serve costs — at scale the build is a scheduled
@@ -82,26 +88,17 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 # Log pipelines (reference surface, SURVEY §2: M1-M14, S1-S9, N1-N6)
 # --------------------------------------------------------------------------
 
-# Parsed-sheet cache: lets the 5 mongo / 3 mysql catalog queries share
-# one persisted parse per (session, log). Keyed by applicationId so a
-# second SparkSession in the same process never sees another session's
-# dead plans; bounded, and evicted entries unpersist their root.
-_SHEETS_CACHE_MAX = 4
-_sheets_cache: dict[tuple[str, str, str], dict[str, DataFrame]] = {}
-
-
 def _shared_query(spark: SparkSession, sf_dir: str, name: str, build):
     """Session-share a query materialization that several registered
     queries consume (every recall eval re-serves its exact/ANN
     components; ``sim_cosine_topk`` alone is re-served by 10 queries).
 
-    Same registry, hygiene and release point as the parsed log sheets
-    and the minhash artifacts: computed INSIDE the timed region on
-    first use per (session, sf_dir), persisted via ``tracked_persist``,
-    dropped by ``release_persisted`` — bench clears it between passes
-    and driver_sim builds a fresh session, so every run still computes
-    from the parquet inputs; only intra-pass recomputation of the
-    identical frame is removed.
+    A memory artifact like the parsed log sheets and the minhash
+    tables: computed INSIDE the timed region on first use per
+    (session, sf_dir), dropped by ``release_persisted`` — bench clears
+    it between passes and driver_sim builds a fresh session, so every
+    run still computes from the parquet inputs; only intra-pass
+    recomputation of the identical frame is removed.
 
     Two disclosed consequences (r12 ADVICE/VERDICT): per-query bench
     timings of consumers are ORDER-DEPENDENT within a pass (the first
@@ -110,16 +107,15 @@ def _shared_query(spark: SparkSession, sf_dir: str, name: str, build):
     (session, name, sf_dir) — inputs rewritten under ``sf_dir``
     MID-SESSION would serve a stale frame (no engine query path does
     this; rebuilds go through new scratch dirs + manifests)."""
-    return D.get_or_build_artifact(
-        spark, ("qshare", name, sf_dir), lambda: D.tracked_persist(build())
+    return get_or_build(
+        spark, ("qshare", name, sf_dir), lambda: tracked_persist(build())
     )
 
 
 def _consume_shared(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Consumer-side session-sharing of another registered query's
     frame: persist ``QUERIES[name]``'s plan once per (session, sf_dir)
-    at the FIRST consumer call, through the same registry/hygiene as
-    :func:`_shared_query`.
+    at the FIRST consumer call, through :func:`_shared_query`.
 
     The difference from wrapping the producer (r12's approach, reverted
     per its VERDICT item 1): the producer query itself stays an
@@ -135,33 +131,27 @@ def _consume_shared(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     )
 
 
-def _evict_sheets(sheets: dict[str, DataFrame]) -> None:
-    unpersist = getattr(sheets, "unpersist_base", None)
-    if unpersist is not None:
-        unpersist()
-
-
 def _sheets(
     spark: SparkSession,
     tool: str,
     path: str,
     analyze: Callable[[SparkSession, str], dict[str, DataFrame]],
 ) -> dict[str, DataFrame]:
-    key = (spark.sparkContext.applicationId, tool, path)
-    if key not in _sheets_cache:
-        D.ARTIFACT_EVENTS.append(("build", ("sheets", tool)))
-        while len(_sheets_cache) >= _SHEETS_CACHE_MAX:
-            _evict_sheets(_sheets_cache.pop(next(iter(_sheets_cache))))
-        _sheets_cache[key] = analyze(spark, path)
-    else:
-        D.ARTIFACT_EVENTS.append(("hit", ("sheets", tool)))
-    return _sheets_cache[key]
+    """One parse per (session, log), shared by the 5 mongo / 3 mysql
+    catalog queries: a memory artifact whose persisted root
+    (``SheetDict.base``) is tracked, so the release frees it."""
+
+    def build():
+        sheets = analyze(spark, path)
+        track(sheets.base)
+        return sheets
+
+    return get_or_build(spark, ("sheets", tool, path), build)
 
 
-def clear_sheets_cache() -> None:
-    """Unpersist and drop every cached parse (end-of-run hygiene)."""
-    while _sheets_cache:
-        _evict_sheets(_sheets_cache.pop(next(iter(_sheets_cache))))
+#: Kept for callers that clear the parse cache by this name; the one
+#: release frees parsed sheets along with every other memory artifact.
+clear_sheets_cache = release_persisted
 
 
 def _mongo_sheet(spark: SparkSession, sf_dir: str, sheet: str) -> DataFrame:
@@ -761,9 +751,7 @@ def _dedup_index_tables(
             docs.filter(F.col("doc_id") < split), base, prefix
         )
 
-    return D.get_or_build_disk_artifact(
-        spark, ("dedup_index", sf_dir, split), _build
-    )
+    return get_or_build(spark, ("dedup_index", sf_dir, split), _build, tier="disk")
 
 
 INDEX_BUILDERS["dedup_index_build"] = _dedup_index_tables
@@ -1193,7 +1181,7 @@ def _ivf_index_path(spark: SparkSession, sf_dir: str) -> str:
             scratch_dir("sressentials_ivf_index_"),
         )
 
-    return D.get_or_build_disk_artifact(spark, ("ivf_index", sf_dir), _build)
+    return get_or_build(spark, ("ivf_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivf_index_build"] = _ivf_index_path
@@ -1504,9 +1492,7 @@ def _ivf_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_ingest_index", sf_dir, split), _build
-    )
+    return get_or_build(spark, ("ivf_ingest_index", sf_dir, split), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivf_ingest_index_build"] = _ivf_ingest_index_path
@@ -1617,9 +1603,7 @@ def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_rebalance_index", sf_dir), _build
-    )
+    return get_or_build(spark, ("ivf_rebalance_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivf_rebalance_index_build"] = _ivf_rebalance_index_path
@@ -1787,8 +1771,8 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_versioned_index", sf_dir, split), _build
+    return get_or_build(
+        spark, ("ivf_versioned_index", sf_dir, split), _build, tier="disk"
     )
 
 
@@ -1936,8 +1920,8 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_compacted_index", sf_dir, split), _build
+    return get_or_build(
+        spark, ("ivf_compacted_index", sf_dir, split), _build, tier="disk"
     )
 
 
@@ -2139,7 +2123,7 @@ def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
             scratch_dir("sressentials_ivfpq_index_"),
         )
 
-    return D.get_or_build_disk_artifact(spark, ("ivfpq_index", sf_dir), _build)
+    return get_or_build(spark, ("ivfpq_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivfpq_index_build"] = _ivfpq_index_path
@@ -2169,9 +2153,7 @@ def _ivfpq_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivfpq_versioned_index", sf_dir), _build
-    )
+    return get_or_build(spark, ("ivfpq_versioned_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivfpq_versioned_index_build"] = _ivfpq_versioned_index_path
@@ -2534,9 +2516,7 @@ def _ivfpq_rerank_index_path(spark: SparkSession, sf_dir: str) -> str:
             m=S.PQ_RERANK_M,
         )
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivfpq_m8_index", sf_dir), _build
-    )
+    return get_or_build(spark, ("ivfpq_m8_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivfpq_rerank_index_build"] = _ivfpq_rerank_index_path
@@ -2730,8 +2710,8 @@ def _ivfpq_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivfpq_ingest_index", sf_dir, split), _build
+    return get_or_build(
+        spark, ("ivfpq_ingest_index", sf_dir, split), _build, tier="disk"
     )
 
 
@@ -3001,8 +2981,8 @@ def _ivf_versioned_delete_index_path(spark: SparkSession, sf_dir: str) -> str:
             raise ValueError(f"delete fixture went wrong: {out}")
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_versioned_delete_index", sf_dir), _build
+    return get_or_build(
+        spark, ("ivf_versioned_delete_index", sf_dir), _build, tier="disk"
     )
 
 
@@ -3061,9 +3041,7 @@ def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivfpq_rebalanced_index", sf_dir), _build
-    )
+    return get_or_build(spark, ("ivfpq_rebalanced_index", sf_dir), _build, tier="disk")
 
 
 INDEX_BUILDERS["ivfpq_rebalanced_index_build"] = _ivfpq_rebalanced_index_path
@@ -3148,8 +3126,8 @@ def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
             )
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivfpq_versioned_lifecycle", sf_dir, split), _build
+    return get_or_build(
+        spark, ("ivfpq_versioned_lifecycle", sf_dir, split), _build, tier="disk"
     )
 
 
@@ -3264,8 +3242,8 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
             raise ValueError("redelivered stream committed new versions")
         return base
 
-    return D.get_or_build_disk_artifact(
-        spark, ("ivf_streamed_ingest", sf_dir, split), _build
+    return get_or_build(
+        spark, ("ivf_streamed_ingest", sf_dir, split), _build, tier="disk"
     )
 
 
@@ -3541,7 +3519,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-cached: three catalog queries consume it (the pairs query
     itself, PageRank, triangle counting), so a multi-query session
     materializes the basket self-join ONCE via the shared artifact
-    registry (released by ``dedup.release_persisted``)."""
+    registry (released by ``artifacts.release_persisted``)."""
 
     def build() -> DataFrame:
         li = (
@@ -3550,7 +3528,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         a, b = li.alias("a"), li.alias("b")
-        return D.tracked_persist(
+        return tracked_persist(
             a.join(
                 b,
                 (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -3564,7 +3542,7 @@ def _copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("n_orders") >= 2)
         )
 
-    return D.get_or_build_artifact(spark, ("copurchase_pairs", sf_dir), build)
+    return get_or_build(spark, ("copurchase_pairs", sf_dir), build)
 
 
 @register(
@@ -7186,10 +7164,10 @@ def _kmeans_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3-round iteration instead of re-collecting centroids each time —
     # the "fit once, serve many" shape; released by release_persisted.
     emb = load_table(spark, sf_dir, "embeddings")
-    return D.get_or_build_artifact(
+    return get_or_build(
         spark,
         ("kmeans", sf_dir, _KMEANS_K, _KMEANS_ITERS),
-        lambda: D.tracked_persist(
+        lambda: tracked_persist(
             kmeans_quantized(emb, k=_KMEANS_K, iters=_KMEANS_ITERS)
         ),
     )
@@ -7818,7 +7796,6 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
 
     def _build() -> str:
@@ -7839,7 +7816,7 @@ def maintenance_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFra
             raise ValueError(f"compaction did not reduce file count: {stats}")
         return compacted
 
-    path = get_or_build_disk_artifact(spark, ("compact_docs", sf_dir), _build)
+    path = get_or_build(spark, ("compact_docs", sf_dir), _build, tier="disk")
     return spark.read.parquet(path).select(
         "doc_id", "text", "lang", "source", "n_chars"
     )
@@ -8101,7 +8078,6 @@ def maintenance_compact_clustered(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.sources.columnar import ensure_lineitem_clustered
 
@@ -8117,9 +8093,7 @@ def maintenance_compact_clustered(spark: SparkSession, sf_dir: str) -> DataFrame
             raise ValueError(f"compaction did not reduce file count: {stats}")
         return out
 
-    path = get_or_build_disk_artifact(
-        spark, ("compact_clustered", sf_dir), _build
-    )
+    path = get_or_build(spark, ("compact_clustered", sf_dir), _build, tier="disk")
     li = spark.read.parquet(path)
     return (
         li.filter(
@@ -8591,7 +8565,6 @@ def maintenance_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFr
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
 
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
@@ -8607,7 +8580,7 @@ def maintenance_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFr
             raise ValueError(f"unexpected versions: {(v1, v2)}")
         return table
 
-    table = get_or_build_disk_artifact(spark, ("snapshot_events", sf_dir), _build)
+    table = get_or_build(spark, ("snapshot_events", sf_dir), _build, tier="disk")
 
     def _stats(version: int) -> DataFrame:
         return (
@@ -8658,7 +8631,6 @@ def maintenance_snapshot_prune_scan(spark: SparkSession, sf_dir: str) -> DataFra
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
 
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
@@ -8685,9 +8657,7 @@ def maintenance_snapshot_prune_scan(spark: SparkSession, sf_dir: str) -> DataFra
             raise ValueError(f"manifest pruning skipped nothing: {kept}/{total}")
         return table
 
-    table = get_or_build_disk_artifact(
-        spark, ("snapshot_prune_events", sf_dir), _build
-    )
+    table = get_or_build(spark, ("snapshot_prune_events", sf_dir), _build, tier="disk")
     return (
         MT.read_snapshot(spark, table, 1, prune=("event_id", 0, hi))
         .filter(F.col("event_id") <= hi)
@@ -8734,7 +8704,6 @@ def maintenance_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
 
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
@@ -8771,9 +8740,7 @@ def maintenance_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             raise ValueError(f"merge rewrote too much: {stats}")
         return table
 
-    table = get_or_build_disk_artifact(
-        spark, ("snapshot_merge_events", sf_dir), _build
-    )
+    table = get_or_build(spark, ("snapshot_merge_events", sf_dir), _build, tier="disk")
     return (
         MT.read_snapshot(spark, table, 2)
         .groupBy("event_type")
@@ -8816,7 +8783,6 @@ def maintenance_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
 
     cols = ["event_id", "user_id", "ts", "event_type", "value"]
@@ -8851,8 +8817,8 @@ def maintenance_compact_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return table
 
-    table = get_or_build_disk_artifact(
-        spark, ("compact_snapshot_events", sf_dir), _build
+    table = get_or_build(
+        spark, ("compact_snapshot_events", sf_dir), _build, tier="disk"
     )
 
     def _stats(version: int) -> DataFrame:

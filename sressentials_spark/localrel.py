@@ -42,17 +42,14 @@ from pyspark.sql import types as T
 
 
 def _has_timestamp(schema) -> bool:
+    """Whether a top-level field is a timestamp. A DDL string is parsed
+    first, so a column merely NAMED ``..._timestamp`` does not count."""
     if isinstance(schema, str):
-        return "timestamp" in schema.lower()
-    try:
-        return any(
-            isinstance(
-                f.dataType, (T.TimestampType, T.TimestampNTZType)
-            )
-            for f in schema.fields
-        )
-    except AttributeError:
-        return False
+        schema = T._parse_datatype_string(schema)
+    return isinstance(schema, T.StructType) and any(
+        isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
+        for f in schema.fields
+    )
 
 
 def local_df(spark: SparkSession, rows: Iterable, schema) -> DataFrame:

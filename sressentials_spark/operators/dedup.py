@@ -48,140 +48,14 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import (  # noqa: F401 (re-exported)
+    ARTIFACT_EVENTS,
+    get_or_build,
+    release_persisted,
+    tracked_persist,
+)
 from sressentials_spark.operators.text import tokens
 
-# Persisted-intermediate registry. The pair generators persist shared
-# subplans (shingle tables, signatures, norm-annotated corpora) that
-# must stay cached until the CALLER materializes the returned lazy
-# frame — so the functions cannot unpersist them themselves. Tracking
-# them here lets a long-lived session release every block between jobs
-# (bench.py and scripts/driver_sim.py call :func:`release_persisted`
-# between passes) instead of accumulating cached corpora per
-# invocation.
-_PERSISTED: list[DataFrame] = []
-
-
-def _tracked_persist(df: DataFrame) -> DataFrame:
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    _PERSISTED.append(out)
-    return out
-
-
-def release_persisted() -> int:
-    """Unpersist every intermediate this module has cached; returns the
-    number of frames released. Safe to call at any time AFTER the
-    consuming queries have materialized (collect/write/count).
-    Blocking on purpose: callers (bench pass boundaries, cache-hygiene
-    tests) reason about the block store immediately after the call, and
-    the default async unpersist leaves blocks visible for an
-    arbitrary beat afterwards."""
-    _ARTIFACTS.clear()
-    n = 0
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist(blocking=True)
-        n += 1
-    return n
-
-
-# Session-level minhash artifact cache: (shingle rows, signatures) per
-# corpus plan. The MinHash family (batch pairs + incremental ingest)
-# shares these exactly — a real multi-query session computes them once,
-# the way the log pipelines share one parsed sheet cache. Keyed by
-# applicationId (a second session never sees dead plans) + the
-# DataFrame's semantic hash; dropped by :func:`release_persisted`.
-_ARTIFACTS: dict[tuple, object] = {}
-
-#: Build/hit event log for the artifact caches, appended as
-#: ``("build"|"hit", key_parts)``. bench.py reads it to LABEL
-#: amortized queries — a query whose time partly measures "consume a
-#: frame another query built this pass" is flagged in the output
-#: instead of masquerading as an optimization (r12 VERDICT item 2).
-#: Append-only within a process; readers track their own offsets.
-ARTIFACT_EVENTS: list[tuple[str, tuple]] = []
-
-#: Capacity covers one bench/oracle pass's live artifacts: minhash /
-#: simhash / embedding-LSH intermediates, the three annotated-corpus
-#: variants, k-means assignments, co-purchase edges, staged-replay
-#: dirs, and the shared query materializations the recall evals reuse
-#: (catalog._shared_query) — ~20 keys; 8 made the FIFO evict frames
-#: still in use once query-sharing landed.
-_ARTIFACTS_MAX = 32
-
-
-def tracked_persist(df: DataFrame) -> DataFrame:
-    """Public handle on the module's persisted-intermediate registry:
-    persist ``df`` such that :func:`release_persisted` frees it."""
-    return _tracked_persist(df)
-
-
-def _evict_artifact(val: object) -> None:
-    """Free an artifact evicted from the FIFO cache: unpersist every
-    DataFrame it holds and drop it from the release registry, so a
-    long session cycling more than ``_ARTIFACTS_MAX`` artifacts does
-    not accumulate dead cached blocks until :func:`release_persisted`."""
-    frames = val if isinstance(val, (tuple, list)) else (val,)
-    for f in frames:
-        if isinstance(f, DataFrame):
-            try:
-                f.unpersist(blocking=False)
-            except Exception:  # context already gone — nothing to free
-                pass
-            _PERSISTED[:] = [p for p in _PERSISTED if p is not f]
-
-
-def get_or_build_artifact(spark, key_parts: tuple, builder):
-    """Generic session-level artifact cache (same registry and
-    hygiene as the minhash artifacts): build once per
-    (applicationId, ``key_parts``), reuse until
-    :func:`release_persisted`. The builder should persist its frames
-    via :func:`tracked_persist` so release actually frees the blocks.
-    Used for shared derivations consumed by several catalog queries —
-    e.g. the co-purchase edge list feeding the pairs/PageRank/triangle
-    family — mirroring how a real multi-query session materializes a
-    shared intermediate once."""
-    try:
-        key = (spark.sparkContext.applicationId,) + key_parts
-    except Exception:  # no live context → build uncached
-        return builder()
-    if key in _ARTIFACTS:
-        ARTIFACT_EVENTS.append(("hit", key_parts))
-        return _ARTIFACTS[key]
-    ARTIFACT_EVENTS.append(("build", key_parts))
-    val = builder()
-    while len(_ARTIFACTS) >= _ARTIFACTS_MAX:
-        _evict_artifact(_ARTIFACTS.pop(next(iter(_ARTIFACTS))))
-    _ARTIFACTS[key] = val
-    return val
-
-
-def _minhash_artifacts(
-    docs: DataFrame, n: int, id_col: str
-) -> tuple[DataFrame, DataFrame]:
-    try:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs.semanticHash(),
-            n,
-            id_col,
-        )
-    except Exception:  # semanticHash unavailable → build uncached
-        key = None
-    if key is not None and key in _ARTIFACTS:
-        ARTIFACT_EVENTS.append(("hit", ("minhash", n, id_col)))
-        return _ARTIFACTS[key]
-    if key is not None:
-        ARTIFACT_EVENTS.append(("build", ("minhash", n, id_col)))
-    ex = _tracked_persist(shingle_rows(docs, n, id_col))
-    sig = _tracked_persist(
-        signatures_from_shingles(
-            ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
-        )
-    )
-    if key is not None:
-        while len(_ARTIFACTS) >= _ARTIFACTS_MAX:
-            _evict_artifact(_ARTIFACTS.pop(next(iter(_ARTIFACTS))))
-        _ARTIFACTS[key] = (ex, sig)
-    return ex, sig
 
 #: 60-bit md5-derived integer hash (DuckDB-reproducible).
 def md5_long(c: Column) -> Column:
@@ -331,7 +205,7 @@ def ngram_jaccard_pairs(
     # Three consumers (sizes + both sides of the inverted-index join;
     # four with the DF cap) and per-consumer pruning defeats exchange
     # reuse — persist the shingle table rather than re-tokenizing.
-    ex = _tracked_persist(ex)
+    ex = tracked_persist(ex)
     return _pair_jaccard(ex, id_col).filter(F.col("jaccard") >= threshold)
 
 
@@ -394,16 +268,11 @@ def simhash_pairs(
     # signatures are the expensive shareable input — sharing the
     # VERIFIED pair table instead (r12) moved a persist-materialization
     # cost into the producer query (r12 VERDICT item 1).
-    try:
-        sem = docs.semanticHash()
-    except Exception:  # semanticHash unavailable → build uncached
-        sig = _tracked_persist(simhash_signatures(docs, id_col))
-    else:
-        sig = get_or_build_artifact(
-            docs.sparkSession,
-            ("simhash_sig", sem, id_col),
-            lambda: _tracked_persist(simhash_signatures(docs, id_col)),
-        )
+    sig = get_or_build(
+        docs.sparkSession,
+        ("simhash_sig", docs, id_col),
+        lambda: tracked_persist(simhash_signatures(docs, id_col)),
+    )
     mask = (1 << SIMHASH_BAND_BITS) - 1
     bands = sig.select(
         F.col(id_col),
@@ -477,6 +346,26 @@ def signatures_from_shingles(
     return hv.groupBy(id_col).agg(*sigs, *(extra_aggs or []))
 
 
+def minhash_tables(
+    docs: DataFrame, n: int = 3, id_col: str = "doc_id"
+) -> tuple[DataFrame, DataFrame]:
+    """The persisted (id, shingle) table and its signatures (with the
+    shingle-set size ``n_sh``) as one session artifact per corpus plan:
+    the MinHash family (batch pairs and incremental ingest) shares them
+    exactly, the way the log pipelines share one parse."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        ex = tracked_persist(shingle_rows(docs, n, id_col))
+        sig = tracked_persist(
+            signatures_from_shingles(
+                ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
+            )
+        )
+        return ex, sig
+
+    return get_or_build(docs.sparkSession, ("minhash", docs, n, id_col), build)
+
+
 def minhash_signatures(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -517,7 +406,7 @@ def minhash_lsh_pairs(
       rides the same groupBy as a 25th buffer instead of paying a
       second aggregation over the shingle table.
     """
-    ex, sig = _minhash_artifacts(docs, n, id_col)
+    ex, sig = minhash_tables(docs, n, id_col)
 
     band_structs = [
         F.struct(
@@ -617,7 +506,7 @@ def minhash_incremental(
     scan to stay self-contained. Verification stays relational (shingle
     intersection counts), and candidates travel as bare id pairs.
     """
-    ex, sig = _minhash_artifacts(docs, n, id_col)
+    ex, sig = minhash_tables(docs, n, id_col)
 
     band_structs = [
         F.struct(
@@ -848,7 +737,7 @@ def embedding_near_dup_lsh(
     sig = emb.withColumn(
         "_nb", linalg.norm_bands_kernel(bands, band_bits)(F.col("embedding"))
     ).select(id_col, F.col("_nb.bands").alias("bands"))
-    exploded = _tracked_persist(
+    exploded = tracked_persist(
         sig.select(id_col, F.posexplode("bands").alias("band", "val"))
     )
     a, b = exploded.alias("a"), exploded.alias("b")
@@ -869,7 +758,7 @@ def embedding_near_dup_lsh(
     # joins (x and y sides); unpersisted, each side would re-run the
     # norm pass over the whole corpus (same treatment as the minhash
     # pipeline's shared subplans).
-    n = _tracked_persist(
+    n = tracked_persist(
         with_norm(emb, dim=dim).select(
             F.col(id_col), F.col("embedding"), F.col("norm")
         )
@@ -923,7 +812,7 @@ def embedding_decontaminate(
     sig = flagged.withColumn(
         "_nb", linalg.norm_bands_kernel(bands, band_bits)(F.col("embedding"))
     ).select(id_col, "_bench", F.col("_nb.bands").alias("bands"))
-    exploded = _tracked_persist(
+    exploded = tracked_persist(
         sig.select(
             id_col, "_bench", F.posexplode("bands").alias("band", "val")
         )
@@ -939,7 +828,7 @@ def embedding_decontaminate(
         .select("corpus_id", "bench_id")
         .distinct()
     )
-    n = _tracked_persist(
+    n = tracked_persist(
         with_norm(flagged, dim=dim).select(
             F.col(id_col), F.col("_bench"), F.col("embedding"), F.col("norm")
         )
@@ -1036,7 +925,7 @@ def semantic_dedup(
     qv = emb.select(
         F.col(id_col), quantize_vec(vec_col, scale).alias("qv")
     ).withColumn("n2", linalg.int_dot_arrow(F.col("qv"), F.col("qv")))
-    members = _tracked_persist(
+    members = tracked_persist(
         assignments.select(id_col, "cluster").join(qv, id_col)
     )
     a = members.select(
@@ -1186,32 +1075,6 @@ def build_dedup_index(
     return t
 
 
-# Disk-backed artifact registry: table-name handles for indexes already
-# built this session. Deliberately NOT cleared by release_persisted():
-# a persisted index's entire point is durability across queries/passes
-# (reuse costs a catalog lookup; no executor blocks are held). Keyed by
-# applicationId so a new session never trusts another session's
-# catalog registrations.
-_DISK_ARTIFACTS: dict[tuple, object] = {}
-
-
-def get_or_build_disk_artifact(spark, key_parts: tuple, builder):
-    """Build-once handle cache for disk-backed artifacts (bucketed
-    index tables). Unlike :func:`get_or_build_artifact` this survives
-    :func:`release_persisted` — the artifact lives in the warehouse,
-    not the block store."""
-    try:
-        key = (spark.sparkContext.applicationId,) + key_parts
-    except Exception:  # no live context → build uncached
-        return builder()
-    if key not in _DISK_ARTIFACTS:
-        ARTIFACT_EVENTS.append(("build", key_parts))
-        _DISK_ARTIFACTS[key] = builder()
-    else:
-        ARTIFACT_EVENTS.append(("hit", key_parts))
-    return _DISK_ARTIFACTS[key]
-
-
 def minhash_incremental_from_index(
     spark,
     batch_docs: DataFrame,
@@ -1240,8 +1103,8 @@ def minhash_incremental_from_index(
     hist_sig = sinks.read_bucketed(spark, index.signatures)
     hist_bands = sinks.read_bucketed(spark, index.bands)
 
-    batch_ex = _tracked_persist(shingle_rows(batch_docs, n, id_col))
-    batch_sig = _tracked_persist(
+    batch_ex = tracked_persist(shingle_rows(batch_docs, n, id_col))
+    batch_sig = tracked_persist(
         signatures_from_shingles(
             batch_ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
         )
@@ -1360,8 +1223,8 @@ def minhash_history_triage(
     hist_sig = sinks.read_bucketed(spark, index.signatures)
     hist_bands = sinks.read_bucketed(spark, index.bands)
 
-    batch_ex = _tracked_persist(shingle_rows(batch_docs, n, id_col))
-    batch_sig = _tracked_persist(
+    batch_ex = tracked_persist(shingle_rows(batch_docs, n, id_col))
+    batch_sig = tracked_persist(
         signatures_from_shingles(
             batch_ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
         )

@@ -42,13 +42,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sressentials_spark.operators.dedup import (
-    DEFAULT_DIM,
-    get_or_build_artifact,
-    md5_long,
-    tracked_persist,
-    with_norm,
-)
+from sressentials_spark.artifacts import get_or_build, tracked_persist
+from sressentials_spark.operators.dedup import DEFAULT_DIM, md5_long, with_norm
 from sressentials_spark.localrel import local_df
 from sressentials_spark.operators.linalg import dot, ivf_cells_kernel, norm_bucket_kernel
 
@@ -105,13 +100,11 @@ def _cached_corpus(emb: DataFrame, tag: str, params: tuple, builder):
     cells) through the shared artifact registry: every similarity
     query over the same corpus plan reuses ONE materialization — the
     way a real embedding store builds its index once and serves many
-    query batches — released by ``dedup.release_persisted``."""
-    try:
-        key = ("sim", tag, emb.semanticHash()) + params
-    except Exception:  # semanticHash unavailable → build uncached
-        return builder()
-    return get_or_build_artifact(
-        emb.sparkSession, key, lambda: tracked_persist(builder())
+    query batches — released by ``artifacts.release_persisted``."""
+    return get_or_build(
+        emb.sparkSession,
+        ("sim", tag, emb) + params,
+        lambda: tracked_persist(builder()),
     )
 
 

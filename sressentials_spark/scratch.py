@@ -1,8 +1,10 @@
 """Process-scoped scratch directories for disk-backed artifacts.
 
 Persisted indexes (dedup band tables, IVF cell stores, staged
-streaming arrival sequences) live on disk so they survive
-``release_persisted`` and serve many queries per session — but a
+streaming arrival sequences) are disk-tier session artifacts
+(:func:`sressentials_spark.artifacts.get_or_build` with
+``tier="disk"``): they survive ``artifacts.release_persisted`` and
+serve many queries per session — but a
 session's scratch must not outlive the process, or repeated runs
 accumulate unbounded /tmp data (round-5 advisory). Every artifact
 builder allocates through :func:`scratch_dir`, which registers the

@@ -1,8 +1,9 @@
 """Columnar-layout fixtures: ORC, partitioned, clustered, Z-ordered.
 
 Disk-backed layout artifacts behind the format/layout-breadth queries
-(built once per (session, sf_dir) through
-``get_or_build_disk_artifact``, removed at exit via ``scratch_dir``):
+(built once per (session, sf_dir) as disk-tier
+``artifacts.get_or_build`` entries, removed at exit via
+``scratch_dir``):
 
 * an ORC copy of ``documents`` — same corpus through Spark's other
   built-in columnar format, proving the engine's scan/pushdown story
@@ -29,6 +30,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
 from sressentials_spark.scratch import scratch_dir
 from sressentials_spark.sources.tables import load_table
 
@@ -51,10 +53,11 @@ def _render_documents_orc(spark: SparkSession, sf_dir: str) -> str:
 
 def ensure_documents_orc(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per session/sf_dir) ``documents`` as ORC."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
-        spark, ("orc_docs", sf_dir), lambda: _render_documents_orc(spark, sf_dir)
+    return get_or_build(
+        spark,
+        ("orc_docs", sf_dir),
+        lambda: _render_documents_orc(spark, sf_dir),
+        tier="disk",
     )
 
 
@@ -92,12 +95,11 @@ def _render_documents_generations(spark: SparkSession, sf_dir: str) -> str:
 
 def ensure_documents_generations(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per session/sf_dir) the two-generation corpus."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
+    return get_or_build(
         spark,
         ("docs_generations", sf_dir),
         lambda: _render_documents_generations(spark, sf_dir),
+        tier="disk",
     )
 
 
@@ -120,12 +122,11 @@ def _render_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
 
 def ensure_events_partitioned(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per session/sf_dir) ``events`` day-partitioned."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
+    return get_or_build(
         spark,
         ("events_partitioned", sf_dir),
         lambda: _render_events_partitioned(spark, sf_dir),
+        tier="disk",
     )
 
 
@@ -138,12 +139,11 @@ def ensure_events_partitioned_repair(spark: SparkSession, sf_dir: str) -> str:
     the corrupting overwrite and the rebuild, silently poisoning every
     later reader (e.g. ``partitioned_events_pruned_week``). A dedicated
     artifact key gives the drill its own copy to break and fix."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
+    return get_or_build(
         spark,
         ("events_partitioned_repair", sf_dir),
         lambda: _render_events_partitioned(spark, sf_dir),
+        tier="disk",
     )
 
 
@@ -192,12 +192,11 @@ def _render_lineitem_clustered(spark: SparkSession, sf_dir: str) -> str:
 def ensure_lineitem_clustered(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per session/sf_dir) ``lineitem`` range-clustered
     on ``l_shipdate``."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
+    return get_or_build(
         spark,
         ("lineitem_clustered", sf_dir),
         lambda: _render_lineitem_clustered(spark, sf_dir),
+        tier="disk",
     )
 
 
@@ -310,12 +309,11 @@ def _render_lineitem_zordered(spark: SparkSession, sf_dir: str) -> str:
 def ensure_lineitem_zordered(spark: SparkSession, sf_dir: str) -> str:
     """Render (once per session/sf_dir) ``lineitem`` Z-order-clustered
     on (l_partkey, l_shipdate)."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    return get_or_build_disk_artifact(
+    return get_or_build(
         spark,
         ("lineitem_zordered", sf_dir),
         lambda: _render_lineitem_zordered(spark, sf_dir),
+        tier="disk",
     )
 
 

@@ -41,6 +41,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from sressentials_spark.artifacts import get_or_build
+
 #: A user is "silent" when more than this elapses between events
 #: (strictly greater; matches the oracle's `nxt > ts + INTERVAL`).
 SILENCE_GAP_US = 7 * 24 * 3600 * 1_000_000
@@ -199,7 +201,6 @@ def run_absence_batch(
     ``stage_dir`` (tests only) replays pre-staged arrival files
     instead of the canonical staging — used to pin late-data
     accounting with an adversarial beyond-delay row."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.streaming import (
         DEFAULT_STATE_PARTITIONS,
         dropped_by_watermark,
@@ -209,10 +210,11 @@ def run_absence_batch(
 
     prestaged = stage_dir is not None
     if stage_dir is None:
-        stage_dir = get_or_build_disk_artifact(
+        stage_dir = get_or_build(
             spark,
             ("absence_stage", sf_dir),
             lambda: _stage_with_sentinel(spark, sf_dir),
+            tier="disk",
         )
     with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         stream = (

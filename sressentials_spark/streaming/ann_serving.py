@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
 from sressentials_spark.localrel import local_df
 
 
@@ -72,7 +73,6 @@ def run_ivfpq_serving_stream(
     table from the parquet sink."""
     import os
 
-    from sressentials_spark.operators import dedup as D
     from sressentials_spark.operators import similarity as S
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.sources.tables import load_table
@@ -80,10 +80,11 @@ def run_ivfpq_serving_stream(
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _replay() -> str:
-        stage = D.get_or_build_disk_artifact(
+        stage = get_or_build(
             spark,
             ("ann_serving_stage", sf_dir, tuple(query_ids)),
             lambda: _stage_query_arrivals(spark, query_ids),
+            tier="disk",
         )
         d = scratch_dir("sressentials_ann_serve_out_")
         out = os.path.join(d, "topk")
@@ -114,8 +115,11 @@ def run_ivfpq_serving_stream(
         q.awaitTermination()
         return out
 
-    final = D.get_or_build_disk_artifact(
-        spark, ("ann_serving_stream", sf_dir, tuple(query_ids), topk), _replay
+    final = get_or_build(
+        spark,
+        ("ann_serving_stream", sf_dir, tuple(query_ids), topk),
+        _replay,
+        tier="disk",
     )
     return spark.read.parquet(final).select(
         "query_id", "neighbor_id", "adc_dist", F.col("rank").cast("long").alias("rank")

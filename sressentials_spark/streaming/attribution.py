@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
+
 
 def _typed_stream(
     spark: SparkSession,
@@ -174,15 +176,17 @@ def run_attribution_outer_batch(
     the inner join's, plus the guarantee that left state is held until
     expiry. Sentinel rows (user -1) drive the final watermark and are
     filtered from the result."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.streaming import (
         DEFAULT_STATE_PARTITIONS,
         replay_to_parquet,
         state_partitions,
     )
 
-    stage = get_or_build_disk_artifact(
-        spark, ("attr_outer_stage", sf_dir), lambda: _stage_with_sentinels(spark, sf_dir)
+    stage = get_or_build(
+        spark,
+        ("attr_outer_stage", sf_dir),
+        lambda: _stage_with_sentinels(spark, sf_dir),
+        tier="disk",
     )
     with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         views = _typed_stream(
@@ -222,15 +226,17 @@ def run_attribution_full_outer_batch(
     replay; the emitted key is the COALESCE of the two sides' user
     ids. Shares the sentinel-staged arrival artifact with the
     left-outer replay."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.streaming import (
         DEFAULT_STATE_PARTITIONS,
         replay_to_parquet,
         state_partitions,
     )
 
-    stage = get_or_build_disk_artifact(
-        spark, ("attr_outer_stage", sf_dir), lambda: _stage_with_sentinels(spark, sf_dir)
+    stage = get_or_build(
+        spark,
+        ("attr_outer_stage", sf_dir),
+        lambda: _stage_with_sentinels(spark, sf_dir),
+        tier="disk",
     )
     with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         views = _typed_stream(

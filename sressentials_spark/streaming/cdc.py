@@ -30,6 +30,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
+
 
 def latest_state_stream(
     spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
@@ -177,18 +179,19 @@ def run_latest_state_foreachbatch(
     O(batch + |keys|), never O(history of events). Must agree exactly
     with the single-pass streaming aggregate and the relational
     oracle."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
 
-    stage = get_or_build_disk_artifact(
+    stage = get_or_build(
         spark,
         ("enrich_stage", sf_dir),
         lambda: _stage_ordered_arrivals(spark, sf_dir),
+        tier="disk",
     )
-    final = get_or_build_disk_artifact(
+    final = get_or_build(
         spark,
         ("cdc_foreachbatch", sf_dir),
         lambda: _run_merge_replay(spark, f"{stage}/arrivals"),
+        tier="disk",
     )
     return spark.read.parquet(final)
 
@@ -216,14 +219,14 @@ def run_latest_state_snapshot_merge(
     import os
 
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
 
-    stage = get_or_build_disk_artifact(
+    stage = get_or_build(
         spark,
         ("enrich_stage", sf_dir),
         lambda: _stage_ordered_arrivals(spark, sf_dir),
+        tier="disk",
     )
 
     def _replay() -> str:
@@ -276,9 +279,7 @@ def run_latest_state_snapshot_merge(
             raise ValueError("replay committed fewer than 2 versions")
         return table
 
-    table = get_or_build_disk_artifact(
-        spark, ("cdc_snapshot_merge", sf_dir), _replay
-    )
+    table = get_or_build(spark, ("cdc_snapshot_merge", sf_dir), _replay, tier="disk")
     from sressentials_spark.operators import maintenance as MT2
 
     return MT2.read_snapshot(spark, table, MT2.snapshot_versions(table)[-1])

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import free, get_or_build, tracking
+
 
 def exact_dedup_stream(
     spark: SparkSession, sf_dir: str, glob: str = "documents.parquet"
@@ -119,7 +121,6 @@ def run_dedup_within_watermark_batch(
     needs; output lands on a parquet sink (executors write, the driver
     tracks only the commit log) and must equal the events table
     exactly."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.streaming import (
         DEFAULT_STATE_PARTITIONS,
@@ -133,9 +134,7 @@ def run_dedup_within_watermark_batch(
         stage_duplicate_arrivals(spark, sf_dir, d)
         return d
 
-    stage_dir = get_or_build_disk_artifact(
-        spark, ("dup_arrivals", sf_dir), _stage
-    )
+    stage_dir = get_or_build(spark, ("dup_arrivals", sf_dir), _stage, tier="disk")
     with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         schema = (
             "event_id long, user_id long, ts timestamp, "
@@ -228,25 +227,32 @@ def run_minhash_ingest_stream(
             docs.filter(F.col("doc_id") < split), base, prefix
         )
 
-    index = D.get_or_build_disk_artifact(
-        spark, ("dedup_index", sf_dir, split), _build_index
+    index = get_or_build(
+        spark, ("dedup_index", sf_dir, split), _build_index, tier="disk"
     )
 
     def _replay() -> str:
-        stage = D.get_or_build_disk_artifact(
+        stage = get_or_build(
             spark,
             ("dedup_ingest_stage", sf_dir, split),
             lambda: _stage_document_arrivals(spark, sf_dir, split),
+            tier="disk",
         )
         d = scratch_dir("sressentials_dedup_ingest_out_")
         out = os.path.join(d, "verdicts")
         schema = spark.read.parquet(f"{stage}/arrivals").schema
 
         def triage(batch: DataFrame, batch_id: int) -> None:
-            D.minhash_history_triage(
-                batch.sparkSession, batch, index, split
-            ).write.mode("append").parquet(out)
-            D.release_persisted()
+            # Free only the batch's own shingle/signature frames: a
+            # global release here would drop every other query's
+            # shared frames mid-pass.
+            with tracking() as frames:
+                try:
+                    D.minhash_history_triage(
+                        batch.sparkSession, batch, index, split
+                    ).write.mode("append").parquet(out)
+                finally:
+                    free(frames, blocking=True)
 
         q = (
             spark.readStream.schema(schema)
@@ -260,7 +266,7 @@ def run_minhash_ingest_stream(
         q.awaitTermination()
         return out
 
-    final = D.get_or_build_disk_artifact(
-        spark, ("dedup_ingest_stream", sf_dir, split), _replay
+    final = get_or_build(
+        spark, ("dedup_ingest_stream", sf_dir, split), _replay, tier="disk"
     )
     return spark.read.parquet(final)

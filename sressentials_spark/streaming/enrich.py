@@ -26,6 +26,8 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
+
 
 def enriched_event_rollup_stream(
     spark: SparkSession,
@@ -171,12 +173,11 @@ def run_enriched_rollup_multibatch(
     boundaries — and the per-batch broadcast of the static dimension
     side is re-planned every batch, as in production. Must agree with
     the single-batch replay and the relational oracle exactly."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
-
-    stage = get_or_build_disk_artifact(
+    stage = get_or_build(
         spark,
         ("enrich_stage", sf_dir),
         lambda: _stage_ordered_arrivals(spark, sf_dir),
+        tier="disk",
     )
     return run_enriched_rollup_batch(
         spark,

@@ -26,6 +26,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
+
 
 def build_lm_artifact(
     spark: SparkSession, train_docs: DataFrame, out_dir: str
@@ -51,7 +53,6 @@ def run_lm_scoring_stream(
     import glob as globmod
     import time
 
-    from sressentials_spark.operators import dedup as D
     from sressentials_spark.operators.curation import score_unigram_logloss
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.sources.tables import load_table
@@ -61,7 +62,7 @@ def run_lm_scoring_stream(
     decile = F.pmod(F.col("doc_id"), F.lit(10))
     cut = train_pct // 10
 
-    model_path = D.get_or_build_disk_artifact(
+    model_path = get_or_build(
         spark,
         ("unigram_lm", sf_dir, train_pct),
         lambda: build_lm_artifact(
@@ -69,6 +70,7 @@ def run_lm_scoring_stream(
             docs.filter(decile < cut),
             os.path.join(scratch_dir("sressentials_lm_"), "model"),
         ),
+        tier="disk",
     )
 
     def _replay() -> str:
@@ -104,8 +106,11 @@ def run_lm_scoring_stream(
         q.awaitTermination()
         return out
 
-    final = D.get_or_build_disk_artifact(
-        spark, ("lm_scoring_stream", sf_dir, train_pct, n_files), _replay
+    final = get_or_build(
+        spark,
+        ("lm_scoring_stream", sf_dir, train_pct, n_files),
+        _replay,
+        tier="disk",
     )
     return spark.read.parquet(final).select(
         "doc_id", "n_tokens", "nll_micro_total", "avg_nll_micro", "keep"

@@ -29,6 +29,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sressentials_spark.artifacts import get_or_build
+
 #: MV key + additive measure columns.
 _KEYS = ["day", "event_type"]
 
@@ -111,14 +113,14 @@ class RollupMvWriter:
 def run_rollup_mv_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the staged event-time-ordered arrivals one file per
     micro-batch through the additive MV writer; return the final MV."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
 
-    stage = get_or_build_disk_artifact(
+    stage = get_or_build(
         spark,
         ("enrich_stage", sf_dir),
         lambda: _stage_ordered_arrivals(spark, sf_dir),
+        tier="disk",
     )
 
     def _run() -> str:
@@ -140,7 +142,5 @@ def run_rollup_mv_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return writer.state
 
-    final = get_or_build_disk_artifact(
-        spark, ("rollup_mv", sf_dir), _run
-    )
+    final = get_or_build(spark, ("rollup_mv", sf_dir), _run, tier="disk")
     return spark.read.parquet(final)

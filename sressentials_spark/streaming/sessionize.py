@@ -43,6 +43,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
+from sressentials_spark.artifacts import get_or_build
+
 #: Inactivity gap that closes a session (must match catalog's
 #: ``_SESSION_GAP_US`` so the oracle restates both queries).
 SESSION_GAP_US = 30 * 60 * 1_000_000
@@ -467,9 +469,6 @@ def run_sessionize_ooo_batch(
         # it per invocation (bench passes, repeated queries) would
         # just re-pay the write. Disk artifact — survives
         # release_persisted like the dedup index.
-        from sressentials_spark.operators.dedup import (
-            get_or_build_disk_artifact,
-        )
         from sressentials_spark.scratch import scratch_dir
 
         def _stage() -> str:
@@ -477,9 +476,7 @@ def run_sessionize_ooo_batch(
             stage_ooo_arrival(spark, sf_dir, d)
             return d
 
-        stage_dir = get_or_build_disk_artifact(
-            spark, ("ooo_stage", sf_dir), _stage
-        )
+        stage_dir = get_or_build(spark, ("ooo_stage", sf_dir), _stage, tier="disk")
     elif not prestaged:
         # prestaged=True replays arrival files the caller laid out
         # directly (tests stage adversarial sequences, e.g. a
@@ -611,7 +608,6 @@ def run_session_window_append(
     session end = last + 30 min, which a mergeable future row (ts ≤
     last + 30 min) always precedes. Output matches the batch and
     complete-mode queries row for row."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
     from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.streaming import (
         DEFAULT_STATE_PARTITIONS,
@@ -625,9 +621,7 @@ def run_session_window_append(
         stage_ooo_arrival(spark, sf_dir, d)
         return d
 
-    stage_dir = get_or_build_disk_artifact(
-        spark, ("ooo_stage", sf_dir), _stage
-    )
+    stage_dir = get_or_build(spark, ("ooo_stage", sf_dir), _stage, tier="disk")
     with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
         schema = "event_id long, user_id long, ts timestamp"
         stream = (

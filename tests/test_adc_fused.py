@@ -96,12 +96,29 @@ class TestLocalDfFallbacks:
         assert got["id"] == 1
         assert got["ts"] == rows[0][1]
 
-    def test_arrow_path_still_used_for_plain_rows(self, spark):
+    def test_arrow_path_still_used_for_plain_rows(self, spark, monkeypatch):
         import warnings
+
+        import pandas as pd
 
         from sressentials_spark.localrel import local_df
 
-        with warnings.catch_warnings():
-            warnings.simplefilter("error", RuntimeWarning)
-            df = local_df(spark, [(1, [0.5, 1.5])], "id long, v array<double>")
-        assert df.collect()[0]["v"] == [0.5, 1.5]
+        # A column merely NAMED like a timestamp is a plain row too.
+        cases = [
+            ([(1, [0.5, 1.5])], "id long, v array<double>"),
+            ([(1, 7)], "id long, event_timestamp long"),
+        ]
+        create = spark.createDataFrame
+        inputs = []
+        monkeypatch.setattr(
+            spark,
+            "createDataFrame",
+            lambda data, *a, **kw: inputs.append(data) or create(data, *a, **kw),
+        )
+        for rows, schema in cases:
+            inputs.clear()
+            with warnings.catch_warnings():
+                warnings.simplefilter("error", RuntimeWarning)
+                df = local_df(spark, rows, schema)
+            assert [type(d) for d in inputs] == [pd.DataFrame], schema
+            assert tuple(df.collect()[0]) == rows[0]

@@ -101,7 +101,7 @@ def test_cdc_foreachbatch_is_genuinely_multibatch(spark):
     arrival files (anything less means the rate limit silently
     collapsed the replay into one batch and the merge was never
     exercised across a boundary)."""
-    from sressentials_spark.operators.dedup import get_or_build_disk_artifact
+    from sressentials_spark.artifacts import get_or_build
     from sressentials_spark.streaming.cdc import run_latest_state_foreachbatch
     from sressentials_spark.streaming.enrich import (
         MULTIBATCH_FILES,
@@ -109,18 +109,24 @@ def test_cdc_foreachbatch_is_genuinely_multibatch(spark):
     )
 
     run_latest_state_foreachbatch(spark, SF)  # ensure artifacts exist
-    state = get_or_build_disk_artifact(
-        spark, ("cdc_foreachbatch", SF), lambda: (_ for _ in ()).throw(
+    state = get_or_build(
+        spark,
+        ("cdc_foreachbatch", SF),
+        lambda: (_ for _ in ()).throw(
             AssertionError("artifact should already be cached")
-        )
+        ),
+        tier="disk",
     )
     commits = os.path.join(os.path.dirname(state), "ckpt", "commits")
     done = [f for f in os.listdir(commits) if not f.startswith(".")]
     assert len(done) == MULTIBATCH_FILES, (
         f"expected {MULTIBATCH_FILES} committed micro-batches, saw {done}"
     )
-    stage = get_or_build_disk_artifact(
-        spark, ("enrich_stage", SF), lambda: _stage_ordered_arrivals(spark, SF)
+    stage = get_or_build(
+        spark,
+        ("enrich_stage", SF),
+        lambda: _stage_ordered_arrivals(spark, SF),
+        tier="disk",
     )
     n_files = len(
         [
@@ -175,26 +181,40 @@ def test_clustered_scan_pushes_shipdate_filter(spark):
     assert "l_shipdate" in pushed
 
 
-def test_streaming_dedup_ingest_matches_oneshot_triage(spark):
+def test_streaming_dedup_ingest_matches_oneshot_triage(spark, tmp_path):
     """Union of per-micro-batch history-only verdicts == the one-shot
-    history-only triage of the whole split (batching invariance)."""
+    history-only triage of the whole split (batching invariance). The
+    per-batch cleanup frees only the batch's own frames: a memory
+    artifact built before the replay is still served after it."""
     from pyspark.sql import functions as F  # noqa: F811
 
+    from sressentials_spark import artifacts as A
     from sressentials_spark.operators import dedup as D
     from sressentials_spark.sources.tables import load_table
     from sressentials_spark.streaming.dedup import run_minhash_ingest_stream
 
-    streamed = run_minhash_ingest_stream(spark, SF).toPandas()
+    # A fresh path to the same tables, so the replay runs in this test
+    # even when an earlier query already built it under ``SF``.
+    sf = str(tmp_path / "sf")
+    os.symlink(SF, sf)
+    probe = ("ingest_probe", sf)
+    A.get_or_build(spark, probe, lambda: A.tracked_persist(spark.range(3)))
 
-    docs = load_table(spark, SF, "documents")
+    streamed = run_minhash_ingest_stream(spark, sf).toPandas()
+
+    A.get_or_build(spark, probe, lambda: A.tracked_persist(spark.range(3)))
+    assert A.ARTIFACT_EVENTS[-1] == ("hit", probe)
+
+    docs = load_table(spark, sf, "documents")
     max_id = docs.agg(F.max("doc_id")).first()[0]
     split = (max_id + 1) * 7 // 10
-    index = D.get_or_build_disk_artifact(
+    index = A.get_or_build(
         spark,
-        ("dedup_index", SF, split),
+        ("dedup_index", sf, split),
         lambda: (_ for _ in ()).throw(
             AssertionError("index should have been built by the stream run")
         ),
+        tier="disk",
     )
     oneshot = D.minhash_history_triage(
         spark, docs.filter(F.col("doc_id") >= split), index, split

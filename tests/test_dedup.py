@@ -73,20 +73,37 @@ def test_embedding_pairs_symmetric_free(spark):
 def test_release_persisted_frees_cached_intermediates(spark, docs):
     """Long-lived-session hygiene: every persist a pair generator takes
     is tracked, and release_persisted() drops them all once the result
-    has materialized (ADVICE r3: unbounded cache growth otherwise)."""
+    has materialized (ADVICE r3: unbounded cache growth otherwise). The
+    same release frees the cached log parse; disk artifacts survive it."""
+    from pyspark import StorageLevel
+
+    from sressentials_spark import loggen
+    from sressentials_spark.artifacts import get_or_build
+    from sressentials_spark.catalog import _sheets
+    from sressentials_spark.plans.mysql import analyze_mysql_log
+
     D.release_persisted()  # start from a clean registry
     jsc = spark.sparkContext._jsc.sc()
     baseline = jsc.getPersistentRDDs().size()
     emb = load_table(spark, SF_DIR, "embeddings")
     D.embedding_near_dup_lsh(emb).count()
     D.minhash_lsh_pairs(docs).count()
+    sheets = _sheets(
+        spark, "mysql", loggen.ensure_mysql_log(SF_DIR), analyze_mysql_log
+    )
+    sheets["aggregate"].count()
+    assert sheets.base.storageLevel != StorageLevel.NONE
+    disk_key = ("release_probe", SF_DIR)
+    assert get_or_build(spark, disk_key, lambda: "on-disk", tier="disk") == "on-disk"
     assert jsc.getPersistentRDDs().size() > baseline
     released = D.release_persisted()
-    assert released >= 3  # exploded bands + norm corpus + shingles/sigs
+    assert released >= 4  # exploded bands + norm corpus + shingles/sigs + parse
     assert D.release_persisted() == 0  # registry drained
-    # Every tracked block is back out of the store (other modules'
-    # caches, e.g. the parsed-sheet cache, may still hold theirs).
+    # Every tracked block is back out of the store, the parse included.
     assert jsc.getPersistentRDDs().size() <= baseline
+    assert sheets.base.storageLevel == StorageLevel.NONE
+    # The disk entry is still served without a rebuild.
+    assert get_or_build(spark, disk_key, lambda: "rebuilt", tier="disk") == "on-disk"
 
 
 class TestMinhashIncremental:
@@ -127,23 +144,24 @@ class TestMinhashIncremental:
 
 class TestMinhashArtifactCache:
     def test_hit_miss_and_release(self, spark):
+        from sressentials_spark import artifacts as A
         from sressentials_spark.sources.tables import load_table
 
         D.release_persisted()
-        base = len(D._PERSISTED)
+        base = len(A._TRACKED)
         a = load_table(spark, SF_DIR, "documents")
-        D._minhash_artifacts(a, 3, "doc_id")
-        assert len(D._PERSISTED) == base + 2
+        D.minhash_tables(a, 3, "doc_id")
+        assert len(A._TRACKED) == base + 2
         # Same corpus plan -> cache hit, no new persisted frames.
         b = load_table(spark, SF_DIR, "documents")
-        D._minhash_artifacts(b, 3, "doc_id")
-        assert len(D._PERSISTED) == base + 2
+        D.minhash_tables(b, 3, "doc_id")
+        assert len(A._TRACKED) == base + 2
         # Different shingle width -> distinct artifacts.
-        D._minhash_artifacts(a, 2, "doc_id")
-        assert len(D._PERSISTED) == base + 4
+        D.minhash_tables(a, 2, "doc_id")
+        assert len(A._TRACKED) == base + 4
         # Release drops both the blocks and the cache.
         D.release_persisted()
-        assert len(D._PERSISTED) == 0 and len(D._ARTIFACTS) == 0
+        assert len(A._TRACKED) == 0 and len(A._MEMORY) == 0
 
 
 def test_semantic_dedup_verdicts(spark):

@@ -59,8 +59,8 @@ def test_retried_batch_is_a_noop(spark, tmp_path):
 
 
 def test_replay_equals_one_shot_rollup(spark):
-    from sressentials_spark.operators.dedup import (
-        get_or_build_disk_artifact,  # noqa: F401 (artifact reuse path)
+    from sressentials_spark.artifacts import (  # noqa: F401 (artifact reuse path)
+        get_or_build,
     )
     from sressentials_spark.streaming.rollup_mv import (
         run_rollup_mv_foreachbatch,
@@ -89,10 +89,7 @@ def test_cdc_snapshot_merge_commits_versioned_history(spark):
     readable after the replay (nothing vacuumed)."""
     from sressentials_spark.catalog import QUERIES
     from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.operators.dedup import (
-        _DISK_ARTIFACTS,
-        release_persisted,
-    )
+    from sressentials_spark.artifacts import _DISK, release_persisted
     from sressentials_spark.streaming.enrich import MULTIBATCH_FILES
 
     snap = (
@@ -112,7 +109,7 @@ def test_cdc_snapshot_merge_commits_versioned_history(spark):
 
     table = next(
         v
-        for k, v in _DISK_ARTIFACTS.items()
+        for k, (v, _frames) in _DISK.items()
         if "cdc_snapshot_merge" in str(k)
     )
     versions = MT.snapshot_versions(table)
