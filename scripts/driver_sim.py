@@ -28,10 +28,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 import pandas as pd
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from sressentials_spark.sources.tables import TABLES
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:

@@ -13,9 +13,10 @@ results and index stores. All of them go through one keyed registry,
   freed by :func:`release_persisted` and, oldest first, once more
   than :data:`MEMORY_MAX` are live.
 * ``"disk"`` — handles to artifacts that live on disk (bucketed index
-  tables, IVF stores, staged replay arrivals, replay outputs). They
-  survive :func:`release_persisted`: reuse costs a path or catalog
-  lookup and holds no executor blocks. Their directories are removed
+  tables, IVF stores, staged replay arrivals, replay outputs) or on
+  the driver (trained PQ codebooks). They survive
+  :func:`release_persisted`: reuse costs a path or catalog lookup and
+  holds no executor blocks. Their directories are removed
   at process exit (:mod:`sressentials_spark.scratch`).
 
 Keys are ``(applicationId,) + key_parts``, so a second session in the
@@ -84,7 +85,9 @@ def tracking():
 
     Scopes are process-wide: a ``foreachBatch`` callback runs on
     another thread, but only while the thread that started its query
-    waits in ``awaitTermination``, so one thread tracks at a time."""
+    waits for the replay to drain
+    (:func:`sressentials_spark.streaming.drain_foreach_batch`), so one
+    thread tracks at a time."""
     frames: list[DataFrame] = []
     _SCOPES.append(frames)
     try:

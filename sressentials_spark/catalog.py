@@ -3209,35 +3209,24 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
     split = (max_id + 1) * 7 // 10
 
     def _build() -> str:
-        import glob as _g
-        import os as _o
-        import time as _t
-
         from sressentials_spark.scratch import scratch_dir
         from sressentials_spark.streaming import ann_ingest as AI
+        from sressentials_spark.streaming import stage_arrivals
 
-        arrivals = scratch_dir("sressentials_ann_arrivals_")
-        (
-            emb.filter(F.col("vec_id") >= split)
-            .select("vec_id", "embedding")
-            .repartitionByRange(3, "vec_id")
-            .write.mode("overwrite")
-            .parquet(arrivals)
+        stage = stage_arrivals(
+            emb.filter(F.col("vec_id") >= split).select("vec_id", "embedding"),
+            3,
+            "vec_id",
         )
-        t0 = _t.time() - 3600
-        for i, p in enumerate(sorted(_g.glob(f"{arrivals}/part-*.parquet"))):
-            _o.utime(p, (t0 + i, t0 + i))
+        arrivals = f"{stage}/arrivals"
         base = scratch_dir("sressentials_ivf_streamed_")
         IV.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
-        AI.run_versioned_ingest_stream(
-            spark, arrivals, base, scratch_dir("sressentials_ann_ckpt_")
-        )
+        AI.run_versioned_ingest_stream(spark, arrivals, base)
         if AI.committed_stream_batch(base) < 0:
             raise ValueError("stream committed no stamped version")
         versions = IV.ivf_index_versions(base)
-        AI.run_versioned_ingest_stream(
-            spark, arrivals, base, scratch_dir("sressentials_ann_ckpt2_")
-        )
+        # A fresh checkpoint over the same files re-delivers the stream.
+        AI.run_versioned_ingest_stream(spark, arrivals, base)
         if IV.ivf_index_versions(base) != versions:
             raise ValueError("redelivered stream committed new versions")
         return base
@@ -4285,17 +4274,6 @@ def streaming_silent_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sressentials_spark.streaming.absence import run_absence_batch
 
     return run_absence_batch(spark, sf_dir)
-
-
-# A transformWithStateInPandas twin of the sessionizer ships in
-# streaming/sessionize.py::SessionAssignProcessor (Spark 4's successor
-# arbitrary-state API: named state handles, RocksDB backend). It is NOT
-# a registered query because the API's Python<->JVM state protocol
-# requires the `protobuf` package, absent from this sandbox — the
-# operator is complete and its test skips honestly when protobuf is
-# missing (the same documented-boundary treatment as the multimodal
-# codec). On a cluster with protobuf installed it registers cleanly
-# against _SESSIONIZE_ORACLE.
 
 
 #: Session-LEVEL rollup oracle for Spark's native ``session_window``.

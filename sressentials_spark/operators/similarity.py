@@ -855,12 +855,6 @@ def _lloyd_int(P, ids, k: int, iters: int):
     return _np.array(cids, dtype=_np.int64), _np.stack([cents[c] for c in cids])
 
 
-#: Session cache for trained codebooks (driver-side numpy tensors),
-#: keyed by corpus plan + training params — one sample collect + one
-#: training per corpus per session, like the persisted-corpus caches.
-_BOOKS_CACHE: dict = {}
-
-
 def pq_train_codebooks(
     emb: DataFrame,
     m: int = PQ_M,
@@ -885,46 +879,48 @@ def pq_train_codebooks(
     cells measurably do NOT shrink residuals — docs/ANN_EVAL.md).
 
     Returns ``[(cids, C_int64), ...]`` — one surviving-centroid set
-    per subspace, on the QUANT_SCALE integer grid."""
+    per subspace, on the QUANT_SCALE integer grid.
+
+    Trained once per (corpus plan, params) per session: a disk-tier
+    session artifact (driver-side numpy tensors), so the codebooks
+    survive ``release_persisted`` like the index stores built on them."""
     import numpy as np
 
     from sressentials_spark.operators.cluster import QUANT_SCALE
     from sressentials_spark.operators.linalg import quantize_exact
 
-    try:
-        rkey = (
-            None
-            if residual_coarse is None
-            else tuple(sorted((c, tuple(v)) for c, v in residual_coarse.items()))
+    def train():
+        ids, mat = ivf_seed_centroids(
+            emb, n_cells=PQ_TRAIN_N, id_col=id_col, seed=seed
         )
-        key = ("pqbooks", emb.semanticHash(), m, k, iters, seed, rkey)
-    except Exception:
-        key = None
-    if key is not None and key in _BOOKS_CACHE:
-        return _BOOKS_CACHE[key]
-
-    ids, mat = ivf_seed_centroids(
-        emb, n_cells=PQ_TRAIN_N, id_col=id_col, seed=seed
-    )
-    if residual_coarse is not None:
-        cids_c = sorted(residual_coarse)
-        Cc = np.array([residual_coarse[c] for c in cids_c], dtype=np.int64)
+        if residual_coarse is not None:
+            cids_c = sorted(residual_coarse)
+            Cc = np.array([residual_coarse[c] for c in cids_c], dtype=np.int64)
+            Q = quantize_exact(mat)
+            diff = Q[:, None, :] - Cc[None, :, :]
+            home = np.argmin(np.einsum("nkd,nkd->nk", diff, diff), axis=1)
+            mat = mat - Cc[home].astype(np.float64) / float(QUANT_SCALE)
+        dim = mat.shape[1]
+        if dim % m:
+            raise ValueError(f"dim {dim} not divisible by {m} subspaces")
+        dsub = dim // m
         Q = quantize_exact(mat)
-        diff = Q[:, None, :] - Cc[None, :, :]
-        home = np.argmin(np.einsum("nkd,nkd->nk", diff, diff), axis=1)
-        mat = mat - Cc[home].astype(np.float64) / float(QUANT_SCALE)
-    dim = mat.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by {m} subspaces")
-    dsub = dim // m
-    Q = quantize_exact(mat)
-    books = [
-        _lloyd_int(Q[:, mi * dsub : (mi + 1) * dsub], ids, k, iters)
-        for mi in range(m)
-    ]
-    if key is not None:
-        _BOOKS_CACHE[key] = books
-    return books
+        return [
+            _lloyd_int(Q[:, mi * dsub : (mi + 1) * dsub], ids, k, iters)
+            for mi in range(m)
+        ]
+
+    rkey = (
+        None
+        if residual_coarse is None
+        else tuple(sorted((c, tuple(v)) for c, v in residual_coarse.items()))
+    )
+    return get_or_build(
+        emb.sparkSession,
+        ("pqbooks", emb, m, k, iters, seed, rkey),
+        train,
+        tier="disk",
+    )
 
 
 def pq_books_float(books):

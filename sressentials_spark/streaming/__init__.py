@@ -1,4 +1,14 @@
-"""Structured Streaming operators.
+"""Structured Streaming operators and the one replay harness they share.
+
+Every streaming query in this engine is a bounded REPLAY of a parquet
+file source: open the source (:func:`file_source`), optionally over
+arrival files staged in key order (:func:`stage_arrivals`), and drain
+it to completion with an ``availableNow`` trigger through one of three
+sinks — a complete-mode memory table for small aggregates
+(:func:`drain_to_memory`), a parquet sink for per-event output
+(:func:`replay_to_parquet`), or a ``foreachBatch`` callback
+(:func:`drain_foreach_batch`). Operator modules build only the query
+between source and sink.
 
 Shared sizing rule: a streaming STATE partition count is baked into
 the query at planning time from ``spark.sql.shuffle.partitions``, and
@@ -9,18 +19,23 @@ streaming state cannot coalesce after the fact, so the right count
 tracks STATE SIZE (≈ state_bytes / 200 MB at production scale), not
 cluster cores. Measured here: the stream-stream attribution replay
 runs 8.8 s with 32 one-core-box state partitions and 2.9 s with 8 —
-pure fixed-cost multiplication. :func:`state_partitions` scopes the
-setting around a streaming query's planning + execution and restores
-the batch default afterwards.
+pure fixed-cost multiplication. The stateful drains pin
+:data:`DEFAULT_STATE_PARTITIONS` around a query's planning + execution
+(:func:`state_partitions`) and restore the batch default afterwards.
 """
 
 from __future__ import annotations
 
+import glob as globmod
+import hashlib
 import json
 import os
+import time
+from collections.abc import Callable
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 
 from sressentials_spark.scratch import scratch_dir
 
@@ -30,13 +45,9 @@ DEFAULT_STATE_PARTITIONS = 8
 
 
 @contextmanager
-def state_partitions(spark: SparkSession, n: int | None):
+def state_partitions(spark: SparkSession, n: int):
     """Temporarily pin ``spark.sql.shuffle.partitions`` (which fixes
-    the streaming state partition count at query planning) to ``n``;
-    ``None`` leaves the session setting untouched."""
-    if n is None:
-        yield
-        return
+    the streaming state partition count at query planning) to ``n``."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -45,33 +56,8 @@ def state_partitions(spark: SparkSession, n: int | None):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-#: State-store backend required by ``transformWithStateInPandas``
-#: (Spark 4's arbitrary-state API is RocksDB-only). Bundled with the
-#: Spark distribution; also the production choice at scale — state
-#: lives off-heap on local disk with incremental checkpointing to the
-#: checkpoint location, instead of fully in executor memory.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-
-@contextmanager
-def state_store_provider(spark: SparkSession, provider: str):
-    """Temporarily pin the streaming state-store backend (read at
-    query start; restored afterwards so other replays keep the
-    default HDFS-backed store)."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key)
-    spark.conf.set(key, provider)
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
-
-
 def ephemeral_checkpoint() -> str:
-    """Explicit checkpoint dir for a memory-sink availableNow replay.
+    """Explicit checkpoint dir for an availableNow replay.
 
     Without it Spark creates a temporary checkpoint under
     ``java.io.tmpdir`` — on this sandbox that is ext4 at 5-9 ms/fsync,
@@ -80,6 +66,135 @@ def ephemeral_checkpoint() -> str:
     checkpoint on the engine's fast scratch base (tmpfs here), removed
     at process exit exactly like the auto-created one."""
     return os.path.join(scratch_dir("sressentials_ckpt_"), "ckpt")
+
+
+def stage_arrivals(
+    frame: DataFrame,
+    n_files: int | None = None,
+    by: str | Column | None = None,
+    tails: dict[str, DataFrame] | None = None,
+    out_dir: str | None = None,
+) -> str:
+    """Stage a replay's input as arrival files and return the stage dir
+    (``out_dir``, or a fresh scratch dir).
+
+    ``frame`` lands in ``arrivals/`` — range-partitioned on ``by`` into
+    ``n_files`` part files, or as written when ``n_files`` is None.
+    Each tail frame (a sentinel row, a re-delivery) lands as ONE file
+    in its own sub-dir, named by its key in ``tails``. A file source
+    processes the oldest-modified file first, so the part files get
+    strictly increasing mtimes in part (= key range) order and the
+    tails are stamped after every part, in the order given: a replay
+    at one file per trigger sees the ranges in key order, then the
+    tails."""
+    if out_dir is None:
+        out_dir = scratch_dir("sressentials_arrivals_")
+    if n_files is not None:
+        frame = frame.repartitionByRange(n_files, by)
+    frame.write.mode("overwrite").parquet(f"{out_dir}/arrivals")
+    tails = tails or {}
+    for name, tail in tails.items():
+        tail.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/{name}")
+    base = time.time() - 3600
+    parts = sorted(globmod.glob(f"{out_dir}/arrivals/part-*.parquet"))
+    for i, p in enumerate(parts):
+        os.utime(p, (base + i, base + i))
+    tail_files = [
+        p
+        for name in tails
+        for p in sorted(globmod.glob(f"{out_dir}/{name}/part-*.parquet"))
+    ]
+    for i, p in enumerate(tail_files):
+        os.utime(p, (base + 900 + i, base + 900 + i))
+    return out_dir
+
+
+def file_source(
+    spark: SparkSession,
+    path: str,
+    *,
+    schema: str | None = None,
+    glob: str | None = None,
+    recursive: bool = False,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """Open ``path`` as a streaming parquet file source.
+
+    ``schema`` is a DDL string; by default it is inferred by
+    ``spark.read`` over the same files (``glob`` → ``pathGlobFilter``,
+    ``recursive`` → ``recursiveFileLookup``).
+    ``max_files_per_trigger`` bounds each micro-batch to N files —
+    ``1`` replays staged arrivals one file per batch."""
+    opts = {}
+    if glob is not None:
+        opts["pathGlobFilter"] = glob
+    if recursive:
+        opts["recursiveFileLookup"] = "true"
+    if schema is None:
+        schema = spark.read.options(**opts).parquet(path).schema
+    if max_files_per_trigger is not None:
+        opts["maxFilesPerTrigger"] = str(max_files_per_trigger)
+    return spark.readStream.schema(schema).options(**opts).parquet(path)
+
+
+def stage_source(spark: SparkSession, stage_dir: str, schema: str) -> DataFrame:
+    """A :func:`stage_arrivals` dir as a file source: every part and
+    tail file, one file per micro-batch, in stamped order."""
+    return file_source(
+        spark,
+        stage_dir,
+        schema=schema,
+        glob="part-*.parquet",
+        recursive=True,
+        max_files_per_trigger=1,
+    )
+
+
+def _run(writer: DataStreamWriter, checkpoint: str) -> list[dict]:
+    """Start a replay, wait for it to drain, return its progress."""
+    q = (
+        writer.trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    q.awaitTermination()
+    return [json.loads(p) if isinstance(p, str) else p for p in q.recentProgress]
+
+
+def drain_to_memory(stream: DataFrame, prefix: str, run_key: str) -> DataFrame:
+    """Run a stateful aggregate stream to completion in ``complete``
+    mode into a memory table and return that table.
+
+    The table is named ``prefix`` + a hash of ``run_key``, so re-running
+    one replay overwrites its table: the driver holds at most one
+    table per distinct replay. Only for small outputs — the memory
+    sink keeps every output row on the driver."""
+    spark = stream.sparkSession
+    name = prefix + hashlib.md5(run_key.encode()).hexdigest()[:10]
+    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
+        _run(
+            stream.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete"),
+            ephemeral_checkpoint(),
+        )
+    return spark.table(name)
+
+
+def drain_foreach_batch(
+    stream: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str | None = None,
+) -> None:
+    """Run ``stream`` to completion, handing each micro-batch to
+    ``fn(batch, batch_id)``.
+
+    ``checkpoint`` defaults to a fresh one (a fresh checkpoint over
+    already-replayed files re-delivers them); pass a path to resume a
+    replay from it, or to keep its commit log beside its output.
+    The session's shuffle-partition setting is left alone: the batch
+    jobs ``fn`` runs plan with it."""
+    _run(stream.writeStream.foreachBatch(fn), checkpoint or ephemeral_checkpoint())
 
 
 def replay_to_parquet(
@@ -108,18 +223,13 @@ def replay_to_parquet(
     out = scratch_dir(f"sressentials_replay_{name}_")
     data_dir = os.path.join(out, "data")
     os.makedirs(data_dir, exist_ok=True)
-    q = (
-        stream_df.writeStream.format("parquet")
-        .option("path", data_dir)
-        .option("checkpointLocation", os.path.join(out, "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    progress = [
-        json.loads(p) if isinstance(p, str) else p for p in q.recentProgress
-    ]
+    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
+        progress = _run(
+            stream_df.writeStream.format("parquet")
+            .option("path", data_dir)
+            .outputMode("append"),
+            os.path.join(out, "ckpt"),
+        )
     # Explicit schema: a replay with zero output rows leaves no data
     # files, and schema inference over an empty dir would fail.
     return spark.read.schema(stream_df.schema).parquet(data_dir), progress

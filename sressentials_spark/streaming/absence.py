@@ -42,6 +42,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import (
+    dropped_by_watermark,
+    replay_to_parquet,
+    stage_arrivals,
+    stage_source,
+)
 
 #: A user is "silent" when more than this elapses between events
 #: (strictly greater; matches the oracle's `nxt > ts + INTERVAL`).
@@ -53,6 +60,7 @@ SILENCE_GAP_SQL = "INTERVAL 7 DAY"
 ABSENCE_DELAY = "1 minute"
 
 _OUT_SCHEMA = "user_id long, last_ts timestamp"
+_IN_SCHEMA = "event_id long, user_id long, ts timestamp"
 _STATE_SCHEMA = "last_us long"
 
 
@@ -142,45 +150,24 @@ def _stage_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     enough out (max_ts + gap + delay + margin) that the final
     watermark passes EVERY user's last + gap, draining the trailing
     alerts."""
-    import glob as globmod
-    import os
-    import time
-
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
-
-    d = scratch_dir("sressentials_absence_")
     e = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "ts"
     )
-    # 2 ordered arrival files + sentinel = 3 micro-batches: the minimum
-    # that exercises cross-batch state (stored-last -> first-new-row
-    # gaps), watermark advance, and the timer-drain round. More files
-    # only multiply fixed per-batch state-store latency (r6 plan
-    # audit: 7.2 s at 5 batches, dominated by harness overhead).
-    (
-        e.repartitionByRange(2, "ts")
-        .write.mode("overwrite")
-        .parquet(f"{d}/arrivals")
-    )
-    parts = sorted(globmod.glob(f"{d}/arrivals/part-*.parquet"))
-    base = time.time() - 3600
-    for i, p in enumerate(parts):
-        os.utime(p, (base + i, base + i))
-
     max_ts = e.agg(F.max("ts")).first()[0]
     sentinel_ts = (
         pd.Timestamp(max_ts)
         + pd.Timedelta(microseconds=SILENCE_GAP_US)
         + pd.Timedelta(hours=2)
     )
-    spark.createDataFrame(
-        [(int(-1), int(-1), sentinel_ts.to_pydatetime())],
-        "event_id long, user_id long, ts timestamp",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/sentinel")
-    for p in globmod.glob(f"{d}/sentinel/part-*.parquet"):
-        os.utime(p, (base + 900, base + 900))
-    return d
+    sentinel = spark.createDataFrame(
+        [(int(-1), int(-1), sentinel_ts.to_pydatetime())], _IN_SCHEMA
+    )
+    # 2 ordered arrival files + sentinel = 3 micro-batches: the minimum
+    # that exercises cross-batch state (stored-last -> first-new-row
+    # gaps), watermark advance, and the timer-drain round. More files
+    # only multiply fixed per-batch state-store latency (r6 plan
+    # audit: 7.2 s at 5 batches, dominated by harness overhead).
+    return stage_arrivals(e, 2, "ts", tails={"sentinel": sentinel})
 
 
 #: Watermark observability from the most recent absence replay
@@ -201,13 +188,6 @@ def run_absence_batch(
     ``stage_dir`` (tests only) replays pre-staged arrival files
     instead of the canonical staging — used to pin late-data
     accounting with an adversarial beyond-delay row."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        dropped_by_watermark,
-        replay_to_parquet,
-        state_partitions,
-    )
-
     prestaged = stage_dir is not None
     if stage_dir is None:
         stage_dir = get_or_build(
@@ -216,26 +196,19 @@ def run_absence_batch(
             lambda: _stage_with_sentinel(spark, sf_dir),
             tier="disk",
         )
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        stream = (
-            spark.readStream.schema("event_id long, user_id long, ts timestamp")
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage_dir)
+    alerts = (
+        stage_source(spark, stage_dir, _IN_SCHEMA)
+        .withWatermark("ts", ABSENCE_DELAY)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _detect_silence,
+            outputStructType=_OUT_SCHEMA,
+            stateStructType=_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        alerts = (
-            stream.withWatermark("ts", ABSENCE_DELAY)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _detect_silence,
-                outputStructType=_OUT_SCHEMA,
-                stateStructType=_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-        out, progress = replay_to_parquet(spark, alerts, "absence")
+    )
+    out, progress = replay_to_parquet(spark, alerts, "absence")
     dropped = dropped_by_watermark(progress)
     LAST_ABSENCE_STATS.clear()
     LAST_ABSENCE_STATS.update(dropped_late=dropped)

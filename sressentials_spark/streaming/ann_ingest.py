@@ -34,12 +34,10 @@ JSON, and readers never block on the writer.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sressentials_spark.operators import ivf_versioned as V
+from sressentials_spark.streaming import drain_foreach_batch, file_source
 
 _STAMP = "stream_batch_id"
 
@@ -66,7 +64,7 @@ def _run_ingest_stream(
     spark: SparkSession,
     arrivals_dir: str,
     base_path: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None,
     ingest_verb,
     id_col: str,
 ) -> None:
@@ -97,29 +95,31 @@ def _run_ingest_stream(
             manifest_extra={_STAMP: int(batch_id)},
         )
 
-    q = (
-        spark.readStream.schema(f"{id_col} long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals_dir)
-        .writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        file_source(
+            spark,
+            arrivals_dir,
+            schema=f"{id_col} long, embedding array<float>",
+            max_files_per_trigger=1,
+        ),
+        ingest,
+        checkpoint_dir,
     )
-    q.awaitTermination()
 
 
 def run_versioned_ingest_stream(
     spark: SparkSession,
     arrivals_dir: str,
     base_path: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     id_col: str = "vec_id",
 ) -> None:
     """Replay the staged embedding arrivals (one file per trigger)
     through exactly-once versioned ingest: each micro-batch whose id
     is not yet stamped commits one manifest version; redelivered
-    batches are skipped driver-side before any staging."""
+    batches are skipped driver-side before any staging.
+    ``checkpoint_dir`` defaults to a fresh checkpoint; a fresh one
+    over the same files re-delivers the whole stream."""
     _run_ingest_stream(
         spark,
         arrivals_dir,
@@ -134,7 +134,7 @@ def run_versioned_ivfpq_ingest_stream(
     spark: SparkSession,
     arrivals_dir: str,
     base_path: str,
-    checkpoint_dir: str,
+    checkpoint_dir: str | None = None,
     id_col: str = "vec_id",
 ) -> None:
     """The PQ-tier twin: arrival batches are ENCODED under the latest

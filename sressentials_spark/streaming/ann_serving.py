@@ -30,35 +30,19 @@ tests/test_streaming_ann_serving.py.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
 from sressentials_spark.localrel import local_df
-
-
-def _stage_query_arrivals(
-    spark: SparkSession, query_ids: list[int], n_files: int = 2
-) -> str:
-    """Stage the query ids as ``n_files`` mtime-ordered arrival files
-    (id-ranged), one micro-batch each under ``maxFilesPerTrigger=1``."""
-    import glob as globmod
-    import os
-    import time
-
-    from sressentials_spark.scratch import scratch_dir
-
-    d = scratch_dir("sressentials_ann_serve_stage_")
-    (
-        local_df(spark, [(int(q),) for q in query_ids], "query_id long")
-        .repartitionByRange(n_files, "query_id")
-        .write.mode("overwrite")
-        .parquet(f"{d}/arrivals")
-    )
-    base = time.time() - 3600
-    for i, p in enumerate(sorted(globmod.glob(f"{d}/arrivals/part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
-    return d
+from sressentials_spark.scratch import scratch_dir
+from sressentials_spark.streaming import (
+    drain_foreach_batch,
+    file_source,
+    stage_arrivals,
+)
 
 
 def run_ivfpq_serving_stream(
@@ -71,23 +55,24 @@ def run_ivfpq_serving_stream(
     """Replay the staged query arrivals through the IVFADC serving
     tier (one file per trigger) and return the accumulated top-k
     table from the parquet sink."""
-    import os
-
     from sressentials_spark.operators import similarity as S
-    from sressentials_spark.scratch import scratch_dir
     from sressentials_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _replay() -> str:
+        # The query ids as 2 id-ranged arrival files.
         stage = get_or_build(
             spark,
             ("ann_serving_stage", sf_dir, tuple(query_ids)),
-            lambda: _stage_query_arrivals(spark, query_ids),
+            lambda: stage_arrivals(
+                local_df(spark, [(int(q),) for q in query_ids], "query_id long"),
+                2,
+                "query_id",
+            ),
             tier="disk",
         )
-        d = scratch_dir("sressentials_ann_serve_out_")
-        out = os.path.join(d, "topk")
+        out = os.path.join(scratch_dir("sressentials_ann_serve_out_"), "topk")
 
         def serve(batch: DataFrame, batch_id: int) -> None:
             # The one driver hop: this batch's request ids (a few rows
@@ -103,16 +88,15 @@ def run_ivfpq_serving_stream(
                 topk=topk,
             ).write.mode("append").parquet(out)
 
-        q = (
-            spark.readStream.schema("query_id long")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{stage}/arrivals")
-            .writeStream.foreachBatch(serve)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_foreach_batch(
+            file_source(
+                spark,
+                f"{stage}/arrivals",
+                schema="query_id long",
+                max_files_per_trigger=1,
+            ),
+            serve,
         )
-        q.awaitTermination()
         return out
 
     final = get_or_build(

@@ -24,10 +24,13 @@ with the same predicates.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import file_source, replay_to_parquet, stage_arrivals
 
 
 def _typed_stream(
@@ -38,23 +41,17 @@ def _typed_stream(
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    schema = (
-        spark.read.option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-        .parquet(sf_dir)
-        .schema
+    # max_files_per_trigger bounds each micro-batch to N files: tests
+    # use it to force a multi-batch replay where one side's rows must
+    # be BUFFERED in join state across the batch boundary to match the
+    # other.
+    stream = file_source(
+        spark,
+        sf_dir,
+        glob=glob,
+        recursive=True,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    reader = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        # Bounds each micro-batch to N files: tests use it to force a
-        # multi-batch replay where one side's rows must be BUFFERED in
-        # join state across the batch boundary to match the other.
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(sf_dir)
     return stream.filter(F.col("event_type") == event_type).select(
         F.col("user_id").alias(f"{prefix}_user_id"),
         F.col("event_id").alias(f"{prefix}_event_id"),
@@ -69,10 +66,13 @@ def attribution_stream(
     watermark: str = "2 hours",
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
+    how: str = "inner",
 ) -> DataFrame:
     """(view, purchase) pairs for the same user with the purchase
     inside ``[view_ts, view_ts + window]`` — each side watermarked so
-    join state is evictable."""
+    join state is evictable. ``how`` is the join type; the emitted key
+    is the COALESCE of the two sides' user ids, so a full outer join's
+    organic purchases keep theirs."""
     views = _typed_stream(
         spark, sf_dir, "view", "view", glob, max_files_per_trigger
     ).withWatermark("view_ts", watermark)
@@ -84,9 +84,10 @@ def attribution_stream(
         (F.col("view_user_id") == F.col("p_user_id"))
         & (F.col("p_ts") >= F.col("view_ts"))
         & (F.col("p_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {window}")),
+        how,
     )
     return joined.select(
-        F.col("view_user_id").alias("user_id"),
+        F.coalesce(F.col("view_user_id"), F.col("p_user_id")).alias("user_id"),
         F.col("view_event_id").alias("view_event_id"),
         F.col("p_event_id").alias("purchase_event_id"),
         F.col("view_ts").alias("view_ts"),
@@ -103,62 +104,42 @@ def run_attribution_batch(
 ) -> DataFrame:
     """Replay both streams to completion (availableNow) and return the
     settled attribution pairs."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        replay_to_parquet,
-        state_partitions,
-    )
-
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        out, _ = replay_to_parquet(
+    out, _ = replay_to_parquet(
+        spark,
+        attribution_stream(
             spark,
-            attribution_stream(
-                spark,
-                sf_dir,
-                window,
-                glob=glob,
-                max_files_per_trigger=max_files_per_trigger,
-            ),
-            "attr",
-        )
+            sf_dir,
+            window,
+            glob=glob,
+            max_files_per_trigger=max_files_per_trigger,
+        ),
+        "attr",
+    )
     return out
 
 
-def _stage_with_sentinels(spark: SparkSession, sf_dir: str) -> str:
-    """Copy the events table plus one far-future sentinel per join side
-    (a 'view' and a 'purchase' for user -1) into a staging dir. The
-    sentinels' only job is to push BOTH streams' watermarks past every
-    real event at the end of an availableNow replay, so the OUTER
-    join's null-padded rows (emitted only once state provably expires)
-    all flush. Disk artifact — staged once per session, removed at
-    process exit."""
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
+def _sentinel_stage(spark: SparkSession, sf_dir: str) -> str:
+    """Stage the events table plus one far-future sentinel per join
+    side (a 'view' and a 'purchase' for user -1), the sentinels the
+    LAST file the source picks up. Their only job is to push BOTH
+    streams' watermarks past every real event at the end of an
+    availableNow replay, so the OUTER join's null-padded rows (emitted
+    only once state provably expires) all flush. Disk artifact —
+    staged once per session, removed at process exit."""
 
-    d = scratch_dir("sressentials_attr_outer_")
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts"
-    )
-    e.write.mode("overwrite").parquet(f"{d}/arrivals")
-    max_ts = e.agg(F.max("ts")).first()[0]
-    import pandas as pd
+    def _stage() -> str:
+        e = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "ts"
+        )
+        max_ts = e.agg(F.max("ts")).first()[0]
+        sentinel_ts = (pd.Timestamp(max_ts) + pd.Timedelta(hours=6)).to_pydatetime()
+        sentinel = spark.createDataFrame(
+            [(-1, -1, "view", sentinel_ts), (-2, -1, "purchase", sentinel_ts)],
+            "event_id long, user_id long, event_type string, ts timestamp",
+        )
+        return stage_arrivals(e, tails={"sentinel": sentinel})
 
-    sentinel_ts = (pd.Timestamp(max_ts) + pd.Timedelta(hours=6)).to_pydatetime()
-    spark.createDataFrame(
-        [(-1, -1, "view", sentinel_ts), (-2, -1, "purchase", sentinel_ts)],
-        "event_id long, user_id long, event_type string, ts timestamp",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/sentinel")
-    # sentinel must be the LAST file the source picks up
-    import glob as globmod
-    import os
-    import time
-
-    base = time.time() - 3600
-    for i, p in enumerate(sorted(globmod.glob(f"{d}/arrivals/part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
-    for p in globmod.glob(f"{d}/sentinel/part-*.parquet"):
-        os.utime(p, (base + 900, base + 900))
-    return d
+    return get_or_build(spark, ("attr_outer_stage", sf_dir), _stage, tier="disk")
 
 
 def run_attribution_outer_batch(
@@ -176,39 +157,18 @@ def run_attribution_outer_batch(
     the inner join's, plus the guarantee that left state is held until
     expiry. Sentinel rows (user -1) drive the final watermark and are
     filtered from the result."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        replay_to_parquet,
-        state_partitions,
-    )
-
-    stage = get_or_build(
+    out, _ = replay_to_parquet(
         spark,
-        ("attr_outer_stage", sf_dir),
-        lambda: _stage_with_sentinels(spark, sf_dir),
-        tier="disk",
+        attribution_stream(
+            spark,
+            _sentinel_stage(spark, sf_dir),
+            window,
+            watermark,
+            glob="part-*.parquet",
+            how="leftOuter",
+        ),
+        "attr_outer",
     )
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        views = _typed_stream(
-            spark, stage, "view", "view", glob="part-*.parquet"
-        ).withWatermark("view_ts", watermark)
-        purchases = _typed_stream(
-            spark, stage, "purchase", "p", glob="part-*.parquet"
-        ).withWatermark("p_ts", watermark)
-        joined = views.join(
-            purchases,
-            (F.col("view_user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("view_ts"))
-            & (F.col("p_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {window}")),
-            "leftOuter",
-        ).select(
-            F.col("view_user_id").alias("user_id"),
-            F.col("view_event_id").alias("view_event_id"),
-            F.col("p_event_id").alias("purchase_event_id"),
-            F.col("view_ts").alias("view_ts"),
-            F.col("p_ts").alias("purchase_ts"),
-        )
-        out, _ = replay_to_parquet(spark, joined, "attr_outer")
     return out.filter(F.col("user_id") >= 0)
 
 
@@ -226,37 +186,16 @@ def run_attribution_full_outer_batch(
     replay; the emitted key is the COALESCE of the two sides' user
     ids. Shares the sentinel-staged arrival artifact with the
     left-outer replay."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        replay_to_parquet,
-        state_partitions,
-    )
-
-    stage = get_or_build(
+    out, _ = replay_to_parquet(
         spark,
-        ("attr_outer_stage", sf_dir),
-        lambda: _stage_with_sentinels(spark, sf_dir),
-        tier="disk",
+        attribution_stream(
+            spark,
+            _sentinel_stage(spark, sf_dir),
+            window,
+            watermark,
+            glob="part-*.parquet",
+            how="fullOuter",
+        ),
+        "attr_full",
     )
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        views = _typed_stream(
-            spark, stage, "view", "view", glob="part-*.parquet"
-        ).withWatermark("view_ts", watermark)
-        purchases = _typed_stream(
-            spark, stage, "purchase", "p", glob="part-*.parquet"
-        ).withWatermark("p_ts", watermark)
-        joined = views.join(
-            purchases,
-            (F.col("view_user_id") == F.col("p_user_id"))
-            & (F.col("p_ts") >= F.col("view_ts"))
-            & (F.col("p_ts") <= F.col("view_ts") + F.expr(f"INTERVAL {window}")),
-            "fullOuter",
-        ).select(
-            F.coalesce(F.col("view_user_id"), F.col("p_user_id")).alias("user_id"),
-            F.col("view_event_id").alias("view_event_id"),
-            F.col("p_event_id").alias("purchase_event_id"),
-            F.col("view_ts").alias("view_ts"),
-            F.col("p_ts").alias("purchase_ts"),
-        )
-        out, _ = replay_to_parquet(spark, joined, "attr_full")
     return out.filter(F.col("user_id") >= 0)

@@ -25,27 +25,28 @@ harness wants, not what a 100 TB/day changelog gets.
 
 from __future__ import annotations
 
-import hashlib
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.operators import maintenance as MT
+from sressentials_spark.scratch import scratch_dir
+from sressentials_spark.streaming import (
+    drain_foreach_batch,
+    drain_to_memory,
+    file_source,
+)
+from sressentials_spark.streaming.enrich import ordered_arrivals
 
 
 def latest_state_stream(
     spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
 ) -> DataFrame:
     """Per-user latest-event state as a streaming aggregation."""
-    schema = (
-        spark.read.option("pathGlobFilter", glob).parquet(sf_dir).schema
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(sf_dir)
-    )
-    events = stream.select(
+    events = file_source(spark, sf_dir, glob=glob).select(
         "user_id",
         F.col("ts").cast("timestamp").alias("ts"),
         "event_id",
@@ -72,27 +73,11 @@ def run_latest_state_batch(
     spark: SparkSession, sf_dir: str, glob: str = "events.parquet"
 ) -> DataFrame:
     """Replay the changelog to completion; return the state table."""
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    return drain_to_memory(
+        latest_state_stream(spark, sf_dir, glob),
+        "stream_latest_state_",
+        f"{sf_dir}|{glob}",
     )
-
-    name = "stream_latest_state_" + hashlib.md5(
-        f"{sf_dir}|{glob}".encode()
-    ).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            latest_state_stream(spark, sf_dir, glob)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
 
 
 def _latest_wins(df: DataFrame) -> DataFrame:
@@ -118,15 +103,10 @@ def _latest_wins(df: DataFrame) -> DataFrame:
 def _run_merge_replay(spark: SparkSession, arrivals_dir: str) -> str:
     """Replay staged arrivals one file per micro-batch through a
     ``foreachBatch`` MERGE into an on-disk keyed state table; return
-    the final state path."""
-    import os
-    import shutil
-
-    from sressentials_spark.scratch import scratch_dir
-
+    the final state path. The replay's commit log stays beside the
+    state (``ckpt/``), the record of how many batches were merged."""
     d = scratch_dir("sressentials_cdc_state_")
     state = os.path.join(d, "state")
-    schema = spark.read.parquet(arrivals_dir).schema
 
     def merge(batch: DataFrame, batch_id: int) -> None:
         b = _latest_wins(
@@ -149,18 +129,11 @@ def _run_merge_replay(spark: SparkSession, arrivals_dir: str) -> str:
         shutil.rmtree(state, ignore_errors=True)
         os.replace(tmp, state)
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(arrivals_dir)
-        .writeStream.foreachBatch(merge)
-        .option(
-            "checkpointLocation", os.path.join(d, "ckpt")
-        )
-        .trigger(availableNow=True)
-        .start()
+    drain_foreach_batch(
+        file_source(spark, arrivals_dir, max_files_per_trigger=1),
+        merge,
+        checkpoint=os.path.join(d, "ckpt"),
     )
-    q.awaitTermination()
     return state
 
 
@@ -179,18 +152,11 @@ def run_latest_state_foreachbatch(
     O(batch + |keys|), never O(history of events). Must agree exactly
     with the single-pass streaming aggregate and the relational
     oracle."""
-    from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
-
-    stage = get_or_build(
-        spark,
-        ("enrich_stage", sf_dir),
-        lambda: _stage_ordered_arrivals(spark, sf_dir),
-        tier="disk",
-    )
+    arrivals = ordered_arrivals(spark, sf_dir)
     final = get_or_build(
         spark,
         ("cdc_foreachbatch", sf_dir),
-        lambda: _run_merge_replay(spark, f"{stage}/arrivals"),
+        lambda: _run_merge_replay(spark, arrivals),
         tier="disk",
     )
     return spark.read.parquet(final)
@@ -216,24 +182,10 @@ def run_latest_state_snapshot_merge(
     O(event history). Must agree exactly with both the complete-mode
     aggregate twin and the pointer-swap foreachBatch twin — all three
     share one relational oracle."""
-    import os
-
-    from sressentials_spark.operators import maintenance as MT
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
-
-    stage = get_or_build(
-        spark,
-        ("enrich_stage", sf_dir),
-        lambda: _stage_ordered_arrivals(spark, sf_dir),
-        tier="disk",
-    )
+    arrivals = ordered_arrivals(spark, sf_dir)
 
     def _replay() -> str:
-        d = scratch_dir("sressentials_cdc_snapmerge_")
-        table = os.path.join(d, "state_table")
-        arrivals = f"{stage}/arrivals"
-        schema = spark.read.parquet(arrivals).schema
+        table = os.path.join(scratch_dir("sressentials_cdc_snapmerge_"), "state_table")
 
         def merge(batch: DataFrame, batch_id: int) -> None:
             sess = batch.sparkSession
@@ -263,16 +215,9 @@ def run_latest_state_snapshot_merge(
                 sess, table, upserts, key_col="user_id"
             )
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(arrivals)
-            .writeStream.foreachBatch(merge)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_foreach_batch(
+            file_source(spark, arrivals, max_files_per_trigger=1), merge
         )
-        q.awaitTermination()
         # One committed version per micro-batch: a genuinely
         # multi-batch replay must leave a multi-version history.
         if len(MT.snapshot_versions(table)) < 2:
@@ -280,6 +225,4 @@ def run_latest_state_snapshot_merge(
         return table
 
     table = get_or_build(spark, ("cdc_snapshot_merge", sf_dir), _replay, tier="disk")
-    from sressentials_spark.operators import maintenance as MT2
-
-    return MT2.read_snapshot(spark, table, MT2.snapshot_versions(table)[-1])
+    return MT.read_snapshot(spark, table, MT.snapshot_versions(table)[-1])

@@ -16,23 +16,30 @@ stateful shuffle carries 32 bytes per row, not documents.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import free, get_or_build, tracking
+from sressentials_spark.scratch import register_scratch, scratch_dir
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import (
+    drain_foreach_batch,
+    dropped_by_watermark,
+    file_source,
+    replay_to_parquet,
+    stage_arrivals,
+    stage_source,
+)
 
 
 def exact_dedup_stream(
     spark: SparkSession, sf_dir: str, glob: str = "documents.parquet"
 ) -> DataFrame:
     """Streaming distinct content hashes over a parquet file source."""
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(sf_dir)
-    )
-    return stream.select(
+    return file_source(spark, sf_dir, glob=glob).select(
         F.md5(F.col("text").cast("binary")).alias("content_hash")
     ).dropDuplicates(["content_hash"])
 
@@ -40,17 +47,7 @@ def exact_dedup_stream(
 def run_exact_dedup_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the dedup stream to completion (availableNow) and return the
     distinct-hash result table."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
-    )
-
-    from sressentials_spark.streaming import replay_to_parquet
-
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        out, _ = replay_to_parquet(
-            spark, exact_dedup_stream(spark, sf_dir), "dedup"
-        )
+    out, _ = replay_to_parquet(spark, exact_dedup_stream(spark, sf_dir), "dedup")
     return out
 
 
@@ -68,46 +65,25 @@ _DUP_DELAY_US = 2 * 24 * 3600 * 1_000_000
 _EVENT_COLS = ["event_id", "user_id", "ts", "event_type", "value"]
 
 
-def stage_duplicate_arrivals(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
+def stage_duplicate_arrivals(
+    spark: SparkSession, sf_dir: str, out_dir: str | None = None
+) -> str:
     """Stage the events table as an at-least-once delivery sequence:
-    two ts-ranged, mtime-ordered arrival files, then a RE-DELIVERY file
-    duplicating every event from the trailing ``DUP_DELAY`` window —
-    the rows whose first delivery is still inside the dedup state's TTL
-    when the re-delivery batch arrives (``ts >= max_ts - delay`` also
-    keeps them ahead of the watermark, so they reach the state store
-    and are suppressed there, not silently late-filtered). Returns the
-    number of staged files."""
-    import glob as globmod
-    import os
-    import time
-
-    from sressentials_spark.sources.tables import load_table
-
+    two ts-ranged arrival files, then a RE-DELIVERY file duplicating
+    every event from the trailing ``DUP_DELAY`` window — the rows whose
+    first delivery is still inside the dedup state's TTL when the
+    re-delivery batch arrives (``ts >= max_ts - delay`` also keeps them
+    ahead of the watermark, so they reach the state store and are
+    suppressed there, not silently late-filtered). Returns the stage
+    dir."""
     e = load_table(spark, sf_dir, "events").select(*_EVENT_COLS)
-    (
-        e.repartitionByRange(2, "ts")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/arrivals")
-    )
-    parts = sorted(globmod.glob(f"{out_dir}/arrivals/part-*.parquet"))
-    base = time.time() - 3600
-    for i, p in enumerate(parts):
-        os.utime(p, (base + i, base + i))
-
     max_ts = e.agg(F.max("ts")).first()[0]
-    (
-        e.filter(
-            F.col("ts")
-            >= F.lit(max_ts) - F.expr(f"INTERVAL {DUP_DELAY}")
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/redelivery")
+    redelivery = e.filter(
+        F.col("ts") >= F.lit(max_ts) - F.expr(f"INTERVAL {DUP_DELAY}")
     )
-    redel = sorted(globmod.glob(f"{out_dir}/redelivery/part-*.parquet"))
-    for i, p in enumerate(redel):
-        os.utime(p, (base + 900 + i, base + 900 + i))
-    return len(parts) + len(redel)
+    return stage_arrivals(
+        e, 2, "ts", tails={"redelivery": redelivery}, out_dir=out_dir
+    )
 
 
 def run_dedup_within_watermark_batch(
@@ -121,36 +97,22 @@ def run_dedup_within_watermark_batch(
     needs; output lands on a parquet sink (executors write, the driver
     tracks only the commit log) and must equal the events table
     exactly."""
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        dropped_by_watermark,
-        replay_to_parquet,
-        state_partitions,
+    stage_dir = get_or_build(
+        spark,
+        ("dup_arrivals", sf_dir),
+        lambda: stage_duplicate_arrivals(spark, sf_dir),
+        tier="disk",
     )
-
-    def _stage() -> str:
-        d = scratch_dir("sressentials_dup_arrivals_")
-        stage_duplicate_arrivals(spark, sf_dir, d)
-        return d
-
-    stage_dir = get_or_build(spark, ("dup_arrivals", sf_dir), _stage, tier="disk")
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        schema = (
-            "event_id long, user_id long, ts timestamp, "
-            "event_type string, value double"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage_dir)
-        )
-        deduped = stream.withWatermark("ts", DUP_DELAY).dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        out, progress = replay_to_parquet(spark, deduped, "dedup_within_wm")
+    schema = (
+        "event_id long, user_id long, ts timestamp, "
+        "event_type string, value double"
+    )
+    deduped = (
+        stage_source(spark, stage_dir, schema)
+        .withWatermark("ts", DUP_DELAY)
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    out, progress = replay_to_parquet(spark, deduped, "dedup_within_wm")
     dropped = dropped_by_watermark(progress)
     if dropped:
         raise ValueError(
@@ -158,32 +120,6 @@ def run_dedup_within_watermark_batch(
             "a re-delivery arrived outside the state TTL window"
         )
     return out
-
-
-def _stage_document_arrivals(
-    spark: SparkSession, sf_dir: str, split: int, n_files: int = 4
-) -> str:
-    """Write the new-split documents as ``n_files`` id-ranged,
-    mtime-ordered arrival files for a rate-limited replay."""
-    import glob as globmod
-    import os
-    import time
-
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
-
-    d = scratch_dir("sressentials_dedup_ingest_stage_")
-    (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") >= split)
-        .repartitionByRange(n_files, "doc_id")
-        .write.mode("overwrite")
-        .parquet(f"{d}/arrivals")
-    )
-    base = time.time() - 3600
-    for i, p in enumerate(sorted(globmod.glob(f"{d}/arrivals/part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
-    return d
 
 
 def run_minhash_ingest_stream(
@@ -201,25 +137,15 @@ def run_minhash_ingest_stream(
     which is exactly what lets this run synchronously in the ingest
     path at 100 TB/day. New-vs-new dups within the arrival window are
     the nightly compaction's job (`dedup_incremental_ingest`)."""
-    import os
-
     from sressentials_spark.operators import dedup as D
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     max_id = docs.agg(F.max("doc_id")).first()[0]
     split = (max_id + 1) * 7 // 10
 
     def _build_index() -> D.DedupIndexTables:
-        import re as _re
-
-        from sressentials_spark.scratch import register_scratch
-
-        app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
-        tag = _re.sub(
-            r"\W", "_", os.path.basename(os.path.normpath(sf_dir))
-        )
+        app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+        tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
         base = f"/tmp/sressentials_dedup_index/{app}/{tag}_{split}"
         prefix = f"ssk_dedup_idx_{app}_{tag}_{split}"
         register_scratch(f"/tmp/sressentials_dedup_index/{app}")
@@ -232,15 +158,16 @@ def run_minhash_ingest_stream(
     )
 
     def _replay() -> str:
+        # The new-split documents as 4 id-ranged arrival files.
         stage = get_or_build(
             spark,
             ("dedup_ingest_stage", sf_dir, split),
-            lambda: _stage_document_arrivals(spark, sf_dir, split),
+            lambda: stage_arrivals(
+                docs.filter(F.col("doc_id") >= split), 4, "doc_id"
+            ),
             tier="disk",
         )
-        d = scratch_dir("sressentials_dedup_ingest_out_")
-        out = os.path.join(d, "verdicts")
-        schema = spark.read.parquet(f"{stage}/arrivals").schema
+        out = os.path.join(scratch_dir("sressentials_dedup_ingest_out_"), "verdicts")
 
         def triage(batch: DataFrame, batch_id: int) -> None:
             # Free only the batch's own shingle/signature frames: a
@@ -254,16 +181,10 @@ def run_minhash_ingest_stream(
                 finally:
                     free(frames, blocking=True)
 
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{stage}/arrivals")
-            .writeStream.foreachBatch(triage)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_foreach_batch(
+            file_source(spark, f"{stage}/arrivals", max_files_per_trigger=1),
+            triage,
         )
-        q.awaitTermination()
         return out
 
     final = get_or_build(

@@ -21,12 +21,12 @@ summed as BIGINT) so the DuckDB oracle restates the rollup exactly.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import drain_to_memory, file_source, stage_arrivals
 
 
 def enriched_event_rollup_stream(
@@ -57,14 +57,15 @@ def enriched_event_rollup_stream(
         )
         .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
     )
-    src = stream_dir if stream_dir is not None else sf_dir
-    schema = spark.read.option("pathGlobFilter", glob).parquet(src).schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        # Bounds each micro-batch to N files: tests use it to prove the
-        # complete-mode rollup merges partial counts across batches.
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(src)
+    # max_files_per_trigger bounds each micro-batch to N files: tests
+    # use it to prove the complete-mode rollup merges partial counts
+    # across batches.
+    stream = file_source(
+        spark,
+        stream_dir if stream_dir is not None else sf_dir,
+        glob=glob,
+        max_files_per_trigger=max_files_per_trigger,
+    )
     events = stream.select(
         F.col("ts").cast("timestamp").alias("ts"),
         "user_id",
@@ -99,69 +100,40 @@ def run_enriched_rollup_batch(
 ) -> DataFrame:
     """Replay the stream to completion (availableNow) and return the
     settled rollup."""
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    stream = enriched_event_rollup_stream(
+        spark,
+        sf_dir,
+        window,
+        glob=glob,
+        max_files_per_trigger=max_files_per_trigger,
+        stream_dir=stream_dir,
     )
-
     run_key = f"{sf_dir}|{window}|{glob}|{max_files_per_trigger}|{stream_dir}"
-    name = "enrich_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            enriched_event_rollup_stream(
-                spark,
-                sf_dir,
-                window,
-                glob=glob,
-                max_files_per_trigger=max_files_per_trigger,
-                stream_dir=stream_dir,
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(stream, "enrich_", run_key)
 
 
 #: Arrival files for the rate-limited multi-batch replay.
 MULTIBATCH_FILES = 4
 
 
-def _stage_ordered_arrivals(spark: SparkSession, sf_dir: str) -> str:
-    """Write the events table as ``MULTIBATCH_FILES`` arrival files,
-    range-partitioned AND mtime-stamped in event-time order, so an
-    availableNow replay with ``maxFilesPerTrigger=1`` becomes a
-    genuine multi-batch run with in-order arrivals (no late data —
-    this twin isolates BATCH-BOUNDARY correctness of the windowed
-    aggregate's state, the way the sessionize tests do for user
-    state)."""
-    import glob as globmod
-    import os
-    import time
+def ordered_arrivals(spark: SparkSession, sf_dir: str) -> str:
+    """The events table staged as ``MULTIBATCH_FILES`` event-time-
+    ranged arrival files, once per session (disk artifact shared by
+    the enrich, CDC and rollup-MV replays), so a replay with
+    ``maxFilesPerTrigger=1`` becomes a genuine multi-batch run with
+    in-order arrivals (no late data — this twin isolates
+    BATCH-BOUNDARY correctness of the windowed aggregate's state, the
+    way the sessionize tests do for user state). Returns the
+    ``arrivals`` dir."""
 
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
+    def _stage() -> str:
+        e = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "ts", "value"
+        )
+        return stage_arrivals(e, MULTIBATCH_FILES, "ts")
 
-    d = scratch_dir("sressentials_enrich_stage_")
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "ts", "value"
-    )
-    (
-        e.repartitionByRange(MULTIBATCH_FILES, "ts")
-        .write.mode("overwrite")
-        .parquet(f"{d}/arrivals")
-    )
-    # File-stream sources process oldest-modified first; range output
-    # part files sort in range (= event-time) order.
-    base = time.time() - 3600
-    for i, p in enumerate(sorted(globmod.glob(f"{d}/arrivals/part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
-    return d
+    stage = get_or_build(spark, ("enrich_stage", sf_dir), _stage, tier="disk")
+    return f"{stage}/arrivals"
 
 
 def run_enriched_rollup_multibatch(
@@ -173,17 +145,11 @@ def run_enriched_rollup_multibatch(
     boundaries — and the per-batch broadcast of the static dimension
     side is re-planned every batch, as in production. Must agree with
     the single-batch replay and the relational oracle exactly."""
-    stage = get_or_build(
-        spark,
-        ("enrich_stage", sf_dir),
-        lambda: _stage_ordered_arrivals(spark, sf_dir),
-        tier="disk",
-    )
     return run_enriched_rollup_batch(
         spark,
         sf_dir,
         window,
         glob="part-*.parquet",
         max_files_per_trigger=1,
-        stream_dir=f"{stage}/arrivals",
+        stream_dir=ordered_arrivals(spark, sf_dir),
     )

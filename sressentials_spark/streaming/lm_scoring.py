@@ -27,6 +27,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.scratch import scratch_dir
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import (
+    drain_foreach_batch,
+    file_source,
+    stage_arrivals,
+)
 
 
 def build_lm_artifact(
@@ -50,12 +57,7 @@ def run_lm_scoring_stream(
     """Train on the first ``train_pct``% of documents (by doc_id
     decile), stream the rest through the frozen-model scorer (one
     file per trigger), and return the accumulated score table."""
-    import glob as globmod
-    import time
-
     from sressentials_spark.operators.curation import score_unigram_logloss
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.sources.tables import load_table
 
     assert train_pct % 10 == 0, "train_pct must be a whole decile"
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -74,36 +76,23 @@ def run_lm_scoring_stream(
     )
 
     def _replay() -> str:
-        # Stage the incoming documents as mtime-ordered arrival files.
-        d = scratch_dir("sressentials_lm_score_")
-        arrivals = os.path.join(d, "arrivals")
-        (
-            docs.filter(decile >= cut)
-            .repartitionByRange(n_files, "doc_id")
-            .write.mode("overwrite")
-            .parquet(arrivals)
-        )
-        base = time.time() - 3600
-        for i, p in enumerate(
-            sorted(globmod.glob(os.path.join(arrivals, "part-*.parquet")))
-        ):
-            os.utime(p, (base + i, base + i))
+        # The incoming documents as id-ranged arrival files.
+        d = stage_arrivals(docs.filter(decile >= cut), n_files, "doc_id")
         out = os.path.join(d, "scores")
         model = spark.read.parquet(model_path)
 
         def score(batch: DataFrame, batch_id: int) -> None:
             score_unigram_logloss(batch, model).write.mode("append").parquet(out)
 
-        q = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(arrivals)
-            .writeStream.foreachBatch(score)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        drain_foreach_batch(
+            file_source(
+                spark,
+                f"{d}/arrivals",
+                schema="doc_id long, text string",
+                max_files_per_trigger=1,
+            ),
+            score,
         )
-        q.awaitTermination()
         return out
 
     final = get_or_build(

@@ -30,6 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.scratch import scratch_dir
+from sressentials_spark.streaming import drain_foreach_batch, file_source
+from sressentials_spark.streaming.enrich import ordered_arrivals
 
 #: MV key + additive measure columns.
 _KEYS = ["day", "event_type"]
@@ -113,30 +116,13 @@ class RollupMvWriter:
 def run_rollup_mv_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the staged event-time-ordered arrivals one file per
     micro-batch through the additive MV writer; return the final MV."""
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.streaming.enrich import _stage_ordered_arrivals
-
-    stage = get_or_build(
-        spark,
-        ("enrich_stage", sf_dir),
-        lambda: _stage_ordered_arrivals(spark, sf_dir),
-        tier="disk",
-    )
+    arrivals = ordered_arrivals(spark, sf_dir)
 
     def _run() -> str:
-        d = scratch_dir("sressentials_rollup_mv_")
-        writer = RollupMvWriter(d)
-        schema = spark.read.parquet(f"{stage}/arrivals").schema
-        q = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{stage}/arrivals")
-            .writeStream.foreachBatch(writer)
-            .option("checkpointLocation", os.path.join(d, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+        writer = RollupMvWriter(scratch_dir("sressentials_rollup_mv_"))
+        drain_foreach_batch(
+            file_source(spark, arrivals, max_files_per_trigger=1), writer
         )
-        q.awaitTermination()
         assert writer.committed_batch() >= 1, (
             "rollup-MV replay must be genuinely multi-batch"
         )

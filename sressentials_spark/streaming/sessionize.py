@@ -33,7 +33,6 @@ semantically free).
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -41,21 +40,25 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
 from sressentials_spark.artifacts import get_or_build
+from sressentials_spark.sources.tables import load_table
+from sressentials_spark.streaming import (
+    drain_to_memory,
+    dropped_by_watermark,
+    file_source,
+    replay_to_parquet,
+    stage_arrivals,
+    stage_source,
+)
 
 #: Inactivity gap that closes a session (must match catalog's
 #: ``_SESSION_GAP_US`` so the oracle restates both queries).
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 _OUTPUT_SCHEMA = "event_id long, user_id long, ts timestamp, session_id long"
+_STAGED_SCHEMA = "event_id long, user_id long, ts timestamp"
 _STATE_SCHEMA = "last_us long, session_id long"
-
-
-def _ts_us(ts: pd.Series) -> pd.Series:
-    """Event time → epoch µs (exact: testdata is µs-precision)."""
-    return ts.astype("datetime64[us]").astype("int64")
 
 
 def _assign_sessions(
@@ -116,15 +119,13 @@ def sessionize_stream(
     glob: str = "events.parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Incremental per-user sessionization over a parquet file source."""
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        # Source option: bounds each micro-batch to N files, so an
-        # availableNow replay becomes a multi-batch run (tests use this
-        # to exercise the cross-batch state hand-off).
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.parquet(sf_dir)
+    """Incremental per-user sessionization over a parquet file source.
+    ``max_files_per_trigger`` bounds each micro-batch to N files, so an
+    availableNow replay becomes a multi-batch run (tests use this to
+    exercise the cross-batch state hand-off)."""
+    stream = file_source(
+        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    )
     events = stream.select(
         "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
@@ -146,138 +147,10 @@ def run_sessionize_batch(
     """Replay the stream to completion (availableNow) and return the
     sessionized table. ``max_files_per_trigger`` forces multi-batch
     replays in tests so the cross-batch state hand-off is exercised."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    src = sessionize_stream(
+        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
     )
-
-    from sressentials_spark.streaming import replay_to_parquet
-
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        src = sessionize_stream(
-            spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
-        )
-        out, _ = replay_to_parquet(spark, src, "sessionize")
-    return out
-
-
-# --------------------------------------------------------------------------
-# transformWithState twin (Spark 4 arbitrary-state API)
-# --------------------------------------------------------------------------
-
-
-class SessionAssignProcessor(StatefulProcessor):
-    """The sessionizer re-expressed on ``transformWithStateInPandas`` —
-    Spark 4's successor to ``applyInPandasWithState``: state is a NAMED
-    value handle acquired in ``init`` (composable with list/map state
-    and timers) instead of one positional tuple, and the backend is
-    RocksDB (off-heap, incrementally checkpointed — the store a
-    production deployment runs anyway). Assignment logic, ordering
-    contract and output are identical to :func:`_assign_sessions`; the
-    shared oracle pins all the twins to the same session numbering."""
-
-    def init(self, handle) -> None:  # StatefulProcessorHandle
-        self._state = handle.getValueState("sess", _STATE_SCHEMA)
-
-    def handleInputRows(
-        self, key: tuple, rows: Iterable[pd.DataFrame], timer_values
-    ) -> Iterator[pd.DataFrame]:
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(
-            ["ts", "event_id"], kind="mergesort"
-        ).reset_index(drop=True)
-        us = _ts_us(pdf["ts"])
-        stored = self._state.get()
-        if stored is not None:
-            last_us, sid = stored
-            if len(us) and int(us.iloc[0]) < last_us:
-                raise ValueError(
-                    f"sessionize ordering contract violated for key {key}: "
-                    f"batch min event time {int(us.iloc[0])}us precedes "
-                    f"stored last-seen {last_us}us"
-                )
-        else:
-            last_us, sid = None, 0
-        session_ids = []
-        for t in us:
-            if last_us is None or t - last_us > SESSION_GAP_US:
-                sid += 1
-            last_us = t
-            session_ids.append(sid)
-        self._state.update((int(last_us), int(sid)))
-        out = pdf[["event_id", "user_id", "ts"]].copy()
-        out["session_id"] = pd.Series(session_ids, dtype="int64")
-        yield out
-
-    def close(self) -> None:
-        pass
-
-
-def sessionize_stream_tws(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """:func:`sessionize_stream` on the ``transformWithState`` API."""
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option(
-            "maxFilesPerTrigger", str(max_files_per_trigger)
-        )
-    stream = reader.parquet(sf_dir)
-    events = stream.select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=SessionAssignProcessor(),
-        outputStructType=_OUTPUT_SCHEMA,
-        outputMode="append",
-        timeMode="none",
-    )
-
-
-def run_sessionize_tws_batch(
-    spark: SparkSession,
-    sf_dir: str,
-    glob: str = "events.parquet",
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Replay the transformWithState sessionizer to completion over a
-    RocksDB state store (the API requires it; also the store that
-    holds multi-TB state at production scale).
-
-    Environment boundary: the transformWithState Python<->JVM state
-    protocol is protobuf-based; without the ``protobuf`` package the
-    driver-side state server crashes opaquely, so we fail fast with a
-    clear error instead (the operator itself is complete — this is the
-    same documented sandbox boundary as the multimodal codec)."""
-    try:
-        from google.protobuf import descriptor as _  # noqa: F401
-    except ImportError as exc:
-        raise NotImplementedError(
-            "transformWithStateInPandas requires the `protobuf` package "
-            "(Python<->JVM state protocol); install protobuf to run the "
-            "transformWithState sessionizer"
-        ) from exc
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        ROCKSDB_PROVIDER,
-        replay_to_parquet,
-        state_partitions,
-        state_store_provider,
-    )
-
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        with state_store_provider(spark, ROCKSDB_PROVIDER):
-            src = sessionize_stream_tws(
-                spark,
-                sf_dir,
-                glob=glob,
-                max_files_per_trigger=max_files_per_trigger,
-            )
-            out, _ = replay_to_parquet(spark, src, "sessionize_tws")
+    out, _ = replay_to_parquet(spark, src, "sessionize")
     return out
 
 
@@ -400,49 +273,44 @@ _OOO_FILES = 3
 LAST_OOO_STATS: dict[str, int] = {}
 
 
-def stage_ooo_arrival(spark: SparkSession, sf_dir: str, out_dir: str) -> int:
-    """Write the events table as an out-of-order arrival sequence:
+def stage_ooo_arrival(
+    spark: SparkSession, sf_dir: str, out_dir: str | None = None
+) -> str:
+    """Stage the events table as an out-of-order arrival sequence:
     ``_OOO_FILES`` parquet files ordered by jittered event time (each
     file a later arrival window, rows inside genuinely out of order
     across file boundaries), plus a far-future sentinel row for a
     dummy user (user_id = -1) whose only job is to push the GLOBAL
     watermark past every real event so the final timeout round drains
-    all reorder buffers. Returns the number of staged files."""
-    import glob as globmod
-    import os
-    import time
-
-    from sressentials_spark.sources.tables import load_table
-
+    all reorder buffers. Returns the stage dir."""
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts")
     # Overflow-safe jitter: a raw `event_id * 2654435761` long multiply
     # trips ANSI ARITHMETIC_OVERFLOW for ids above ~3.4e9 — exactly the
     # id range of the 100 TB ingest this staging models. xxhash64 is a
     # bounded 64-bit mix; pmod folds it into [0, _JITTER_US).
     jitter = F.pmod(F.xxhash64(F.col("event_id")), F.lit(_JITTER_US))
-    staged = e.withColumn("_pk", F.unix_micros(F.col("ts")) + jitter)
-    (
-        staged.repartitionByRange(_OOO_FILES, "_pk")
-        .drop("_pk")
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/arrivals")
-    )
-    # File-stream sources process oldest-modified first: stamp strictly
-    # increasing mtimes in part-file (== range) order.
-    parts = sorted(globmod.glob(f"{out_dir}/arrivals/part-*.parquet"))
-    base = time.time() - 3600
-    for i, p in enumerate(parts):
-        os.utime(p, (base + i, base + i))
-
     max_ts = e.agg(F.max("ts")).first()[0]
     sentinel_ts = pd.Timestamp(max_ts) + pd.Timedelta(hours=3)
-    spark.createDataFrame(
-        [(int(-1), int(-1), sentinel_ts.to_pydatetime())],
-        "event_id long, user_id long, ts timestamp",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/sentinel")
-    for p in globmod.glob(f"{out_dir}/sentinel/part-*.parquet"):
-        os.utime(p, (base + 900, base + 900))
-    return len(parts) + 1
+    sentinel = spark.createDataFrame(
+        [(int(-1), int(-1), sentinel_ts.to_pydatetime())], _STAGED_SCHEMA
+    )
+    return stage_arrivals(
+        e,
+        _OOO_FILES,
+        F.unix_micros(F.col("ts")) + jitter,
+        tails={"sentinel": sentinel},
+        out_dir=out_dir,
+    )
+
+
+def _ooo_stage(spark: SparkSession, sf_dir: str) -> str:
+    """The OOO arrival sequence, staged once per (session, corpus)."""
+    return get_or_build(
+        spark,
+        ("ooo_stage", sf_dir),
+        lambda: stage_ooo_arrival(spark, sf_dir),
+        tier="disk",
+    )
 
 
 def run_sessionize_ooo_batch(
@@ -458,57 +326,32 @@ def run_sessionize_ooo_batch(
     (``maxFilesPerTrigger=1``), so rows for one user really do arrive
     out of event-time order across state updates — the case the strict
     variant refuses loudly."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
-    )
-
     if stage_dir is None:
         # Stage once per (session, corpus): the arrival sequence is a
         # deterministic function of the events table, so re-rendering
         # it per invocation (bench passes, repeated queries) would
         # just re-pay the write. Disk artifact — survives
         # release_persisted like the dedup index.
-        from sressentials_spark.scratch import scratch_dir
-
-        def _stage() -> str:
-            d = scratch_dir("sressentials_ooo_")
-            stage_ooo_arrival(spark, sf_dir, d)
-            return d
-
-        stage_dir = get_or_build(spark, ("ooo_stage", sf_dir), _stage, tier="disk")
+        stage_dir = _ooo_stage(spark, sf_dir)
     elif not prestaged:
         # prestaged=True replays arrival files the caller laid out
         # directly (tests stage adversarial sequences, e.g. a
         # beyond-delay row); default re-stages from the events table.
         stage_ooo_arrival(spark, sf_dir, stage_dir)
 
-    from sressentials_spark.streaming import (
-        dropped_by_watermark,
-        replay_to_parquet,
+    sessions = (
+        stage_source(spark, stage_dir, _STAGED_SCHEMA)
+        .withWatermark("ts", OOO_DELAY)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            _assign_sessions_ooo,
+            outputStructType=_OUTPUT_SCHEMA,
+            stateStructType=_OOO_STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
     )
-
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        schema = "event_id long, user_id long, ts timestamp"
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage_dir)
-        )
-        sessions = (
-            stream.withWatermark("ts", OOO_DELAY)
-            .groupBy("user_id")
-            .applyInPandasWithState(
-                _assign_sessions_ooo,
-                outputStructType=_OUTPUT_SCHEMA,
-                stateStructType=_OOO_STATE_SCHEMA,
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-        out, progress = replay_to_parquet(spark, sessions, "sessionize_ooo")
+    out, progress = replay_to_parquet(spark, sessions, "sessionize_ooo")
     LAST_OOO_STATS.clear()
     LAST_OOO_STATS.update(
         dropped_late=dropped_by_watermark(progress),
@@ -519,6 +362,21 @@ def run_sessionize_ooo_batch(
         emitted=out.count(),
     )
     return out.filter(F.col("user_id") >= 0)
+
+
+def _session_stats(events: DataFrame) -> DataFrame:
+    """Native ``session_window`` rollup: one row per (user, merged
+    30-minute session) with its start, end and event count."""
+    return (
+        events.groupBy("user_id", F.session_window("ts", "30 minutes"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            "user_id",
+            F.col("session_window.start").alias("session_start"),
+            F.col("session_window.end").alias("session_end"),
+            "n_events",
+        )
+    )
 
 
 def run_session_window_batch(
@@ -542,45 +400,12 @@ def run_session_window_batch(
     attribution replays above demonstrate, and which
     :func:`run_session_window_append` below runs for this exact
     aggregation."""
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    events = file_source(spark, sf_dir, glob=glob).select(
+        "user_id", F.col("ts").cast("timestamp").alias("ts")
     )
-
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    name = "stream_session_window_" + hashlib.md5(
-        f"{sf_dir}|{glob}".encode()
-    ).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", glob)
-            .parquet(sf_dir)
-        )
-        events = stream.select(
-            "user_id", F.col("ts").cast("timestamp").alias("ts")
-        )
-        agg = (
-            events.groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            )
-        )
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(
+        _session_stats(events), "stream_session_window_", f"{sf_dir}|{glob}"
+    )
 
 
 def run_session_window_append(
@@ -608,41 +433,12 @@ def run_session_window_append(
     session end = last + 30 min, which a mergeable future row (ts ≤
     last + 30 min) always precedes. Output matches the batch and
     complete-mode queries row for row."""
-    from sressentials_spark.scratch import scratch_dir
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        dropped_by_watermark,
-        replay_to_parquet,
-        state_partitions,
+    stream = stage_source(spark, _ooo_stage(spark, sf_dir), _STAGED_SCHEMA)
+    out, progress = replay_to_parquet(
+        spark,
+        _session_stats(stream.withWatermark("ts", OOO_DELAY)),
+        "session_window_append",
     )
-
-    def _stage() -> str:
-        d = scratch_dir("sressentials_ooo_")
-        stage_ooo_arrival(spark, sf_dir, d)
-        return d
-
-    stage_dir = get_or_build(spark, ("ooo_stage", sf_dir), _stage, tier="disk")
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        schema = "event_id long, user_id long, ts timestamp"
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .option("pathGlobFilter", "part-*.parquet")
-            .option("recursiveFileLookup", "true")
-            .parquet(stage_dir)
-        )
-        agg = (
-            stream.withWatermark("ts", OOO_DELAY)
-            .groupBy("user_id", F.session_window("ts", "30 minutes"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.col("session_window.start").alias("session_start"),
-                F.col("session_window.end").alias("session_end"),
-                "n_events",
-            )
-        )
-        out, progress = replay_to_parquet(spark, agg, "session_window_append")
     dropped = dropped_by_watermark(progress)
     if dropped:
         raise ValueError(

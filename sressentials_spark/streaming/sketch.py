@@ -16,8 +16,6 @@ estimate on demand).
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,6 +27,7 @@ from sressentials_spark.operators.sketch import (
     finish_estimate,
     hll_registers,
 )
+from sressentials_spark.streaming import drain_to_memory, file_source
 
 
 def hll_register_stream(
@@ -37,11 +36,12 @@ def hll_register_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming ``(bucket, m_j)`` registers over a parquet file source."""
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return hll_registers(reader.parquet(sf_dir), col)
+    return hll_registers(
+        file_source(
+            spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+        ),
+        col,
+    )
 
 
 def run_hll_stream_batch(
@@ -55,26 +55,11 @@ def run_hll_stream_batch(
     appends a batch-side exact count as a self-validation column —
     tests only; the shipped query omits it (it is the computation the
     sketch avoids)."""
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    regs = drain_to_memory(
+        hll_register_stream(spark, sf_dir, col, glob, max_files_per_trigger),
+        "stream_hll_",
+        f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}",
     )
-
-    run_key = f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}"
-    name = "stream_hll_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            hll_register_stream(spark, sf_dir, col, glob, max_files_per_trigger)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    regs = spark.table(name)
     out = finish_estimate(regs)
     if with_exact:
         exact = (
@@ -108,37 +93,19 @@ def run_histogram_stream_batch(
 
     from sressentials_spark.operators.sketch import HIST_BINS
 
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.parquet(sf_dir).filter(F.col(col).isNotNull())
+    src = file_source(
+        spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+    ).filter(F.col(col).isNotNull())
     binned = src.select(
         F.least(F.lit(HIST_BINS - 1), F.floor(F.col(col)).cast("long")).alias(
             "bin"
         )
     )
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    counts = drain_to_memory(
+        binned.groupBy("bin").agg(F.count(F.lit(1)).alias("n")),
+        "stream_hist_",
+        f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}|hist",
     )
-
-    run_key = f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}|hist"
-    name = "stream_hist_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            binned.groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    counts = spark.table(name)
     w_cum = Window.orderBy("bin").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
@@ -190,29 +157,16 @@ def run_cms_stream_batch(
     query; at production scale the stream maintains counters
     continuously and readers probe them on demand).
     """
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    counters = drain_to_memory(
+        cms_counters(
+            file_source(
+                spark, sf_dir, glob=glob, max_files_per_trigger=max_files_per_trigger
+            ),
+            col,
+        ),
+        "stream_cms_",
+        f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}|cms",
     )
-
-    run_key = f"{sf_dir}|{col}|{glob}|{max_files_per_trigger}|cms"
-    name = "stream_cms_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            cms_counters(reader.parquet(sf_dir), col)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
     total = (
         spark.read.option("pathGlobFilter", glob)
         .parquet(sf_dir)
@@ -220,7 +174,7 @@ def run_cms_stream_batch(
         .agg(F.count(F.lit(1)).alias("total_rows"))
     )
     return cms_probe_from_counters(
-        spark.table(name), total, col, probe_keys, heavy_pm=heavy_pm
+        counters, total, col, probe_keys, heavy_pm=heavy_pm
     )
 
 
@@ -251,18 +205,8 @@ def run_drift_stream_batch(
     it must agree bit-for-bit with the batch audit's oracle.
     """
     from sressentials_spark.operators.drift import bin_cohorts, drift_from_counts
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
-    )
 
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", glob)
-        .parquet(sf_dir)
-    )
+    src = file_source(spark, sf_dir, glob=glob)
     # NULL metric values are dropped inside bin_cohorts — the single
     # gate shared with the batch audit and the oracles, so batch,
     # stream, and DuckDB agree on NULL handling by construction.
@@ -274,27 +218,19 @@ def run_drift_stream_batch(
         bin_width=bin_width,
         n_bins=n_bins,
     )
-    run_key = f"{sf_dir}|{glob}|{split_expr}|{group_col}|{value_col}|drift"
-    name = "stream_drift_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            binned.groupBy("grp", "is_ref", "bin")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
+    settled = drain_to_memory(
+        binned.groupBy("grp", "is_ref", "bin").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
+        ),
+        "stream_drift_",
+        f"{sf_dir}|{glob}|{split_expr}|{group_col}|{value_col}|drift",
+    )
     # The settled state is histogram-sized (|groups| x 2 x n_bins rows)
     # so rematerializing it driver-side is O(sketch), not O(corpus) —
     # and it gives the PSI fold a fresh leaf plan: the fold self-joins
     # the count table (bin grid + totals), which DeduplicateRelations
     # does not resolve over a streaming MemorySink view (internal
     # "Conflicting attributes" analyzer error on Spark 4.1).
-    settled = spark.table(name)
     state = spark.createDataFrame(settled.toPandas(), settled.schema)
     counts = state.groupBy("grp", "bin").agg(
         F.sum(F.when(F.col("is_ref"), F.col("n")).otherwise(0))
@@ -326,28 +262,11 @@ def run_f2_stream_batch(
     streaming counter state must equal the batch counter table
     bit-for-bit, or the min-of-squares fold diverges.
     """
-    schema = spark.read.parquet(f"{sf_dir}/{glob}").schema
-    reader = spark.readStream.schema(schema).option("pathGlobFilter", glob)
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
+    counters = drain_to_memory(
+        cms_counters(file_source(spark, sf_dir, glob=glob), col),
+        "stream_f2_",
+        f"{sf_dir}|{col}|{glob}|f2",
     )
-
-    run_key = f"{sf_dir}|{col}|{glob}|f2"
-    name = "stream_f2_" + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            cms_counters(reader.parquet(sf_dir), col)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    counters = spark.table(name)
     est = (
         counters.groupBy("r")
         .agg(F.sum(F.col("n") * F.col("n")).cast("long").alias("s"))

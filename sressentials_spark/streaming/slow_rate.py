@@ -20,12 +20,11 @@ check a Structured Streaming query like any other.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.schemas import CORRUPT_COL, MONGO_ENVELOPE
+from sressentials_spark.streaming import drain_to_memory
 
 #: Timestamp format written by the log generator (ISO-8601, µs, Z).
 TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS'Z'"
@@ -99,22 +98,4 @@ def run_slow_rate_batch(
     spark: SparkSession, path: str, window: str = "1 hour"
 ) -> DataFrame:
     """Run the stream to completion (availableNow) and return the result."""
-    from sressentials_spark.streaming import (
-        ephemeral_checkpoint,
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
-    )
-
-    name = "slow_rate_" + hashlib.md5(path.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
-        q = (
-            slow_rate_stream(spark, path, window)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ephemeral_checkpoint())
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(slow_rate_stream(spark, path, window), "slow_rate_", path)

@@ -2,10 +2,15 @@
 
 Mirrors the driver's correctness check (row count + schema + order-
 insensitive values) at sf0.001 so oracle drift is caught locally before
-the per-round sf0.01 run.
+the per-round sf0.01 run. The value compare is the driver simulator's
+own (``scripts/driver_sim.py``): stringified cells, so an int-vs-float
+drift fails here exactly as it fails the gate.
 """
 
 from __future__ import annotations
+
+import os
+import sys
 
 import duckdb
 import pandas as pd
@@ -13,6 +18,11 @@ import pytest
 
 from sressentials_spark import catalog
 from sressentials_spark.sources.tables import TABLES
+
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+)
+from driver_sim import strict_values_equal  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -28,35 +38,15 @@ def run_oracle(sql: str) -> pd.DataFrame:
     return out
 
 
-def canonical(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    if len(df):
-        key = df.astype(str).agg("\x00".join, axis=1)
-        df = df.iloc[key.argsort(kind="mergesort")]
-    return df.reset_index(drop=True)
-
-
 @pytest.mark.parametrize("name", sorted(catalog.ORACLE_SQL))
 def test_query_matches_oracle(spark, name):
     spark_df = catalog.QUERIES[name](spark, SF_DIR).toPandas()
     oracle_df = run_oracle(catalog.ORACLE_SQL[name])
+    assert len(oracle_df) > 0, f"{name}: oracle returned 0 rows"
     assert len(spark_df) == len(oracle_df), f"{name}: row count mismatch"
     assert sorted(spark_df.columns) == sorted(oracle_df.columns), f"{name}: columns"
-    left, right = canonical(spark_df), canonical(oracle_df)
-    for col in left.columns:
-        l, r = left[col], right[col]
-        if pd.api.types.is_datetime64_any_dtype(l) or pd.api.types.is_datetime64_any_dtype(r):
-            l = pd.to_datetime(l).astype("datetime64[us]")
-            r = pd.to_datetime(r).astype("datetime64[us]")
-        pd.testing.assert_series_equal(
-            l, r, check_dtype=False, check_names=False, check_exact=True, obj=f"{name}.{col}"
-        )
-
-
-def test_all_queries_have_rows(spark):
-    """Every registered query returns a non-degenerate result at sf0.001."""
-    for name, fn in catalog.QUERIES.items():
-        assert fn(spark, SF_DIR).limit(1).count() == 1, f"{name} returned 0 rows"
+    diag = strict_values_equal(spark_df, oracle_df)
+    assert diag is None, f"{name}: {diag}"
 
 
 def test_documents_fixture_is_ascii():

@@ -105,7 +105,7 @@ def test_cdc_foreachbatch_is_genuinely_multibatch(spark):
     from sressentials_spark.streaming.cdc import run_latest_state_foreachbatch
     from sressentials_spark.streaming.enrich import (
         MULTIBATCH_FILES,
-        _stage_ordered_arrivals,
+        ordered_arrivals,
     )
 
     run_latest_state_foreachbatch(spark, SF)  # ensure artifacts exist
@@ -122,16 +122,10 @@ def test_cdc_foreachbatch_is_genuinely_multibatch(spark):
     assert len(done) == MULTIBATCH_FILES, (
         f"expected {MULTIBATCH_FILES} committed micro-batches, saw {done}"
     )
-    stage = get_or_build(
-        spark,
-        ("enrich_stage", SF),
-        lambda: _stage_ordered_arrivals(spark, SF),
-        tier="disk",
-    )
     n_files = len(
         [
             f
-            for f in os.listdir(os.path.join(stage, "arrivals"))
+            for f in os.listdir(ordered_arrivals(spark, SF))
             if f.endswith(".parquet")
         ]
     )

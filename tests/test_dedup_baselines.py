@@ -16,19 +16,14 @@ import pytest
 from sressentials_spark.catalog import BASELINE_ORACLE_SQL
 from sressentials_spark.operators import dedup as D
 from sressentials_spark.sources.tables import load_table
-from tests.test_catalog_oracle import SF_DIR, canonical, run_oracle
+from tests.test_catalog_oracle import SF_DIR, run_oracle, strict_values_equal
 
 
 def _assert_matches(spark_df: pd.DataFrame, oracle_df: pd.DataFrame, name: str):
     assert len(spark_df) == len(oracle_df), f"{name}: row count"
     assert sorted(spark_df.columns) == sorted(oracle_df.columns), f"{name}: columns"
-    left, right = canonical(spark_df), canonical(oracle_df)
-    for col in left.columns:
-        pd.testing.assert_series_equal(
-            left[col], right[col],
-            check_dtype=False, check_names=False, check_exact=True,
-            obj=f"{name}.{col}",
-        )
+    diag = strict_values_equal(spark_df, oracle_df)
+    assert diag is None, f"{name}: {diag}"
 
 
 def test_ngram_jaccard_baseline(spark):

@@ -18,24 +18,20 @@ from pyspark.sql import functions as F
 from sressentials_spark.operators import ivf_versioned as V
 from sressentials_spark.sources.tables import load_table
 from sressentials_spark.streaming import ann_ingest as AI
+from sressentials_spark.streaming import stage_arrivals
 
 SF = "/root/testdata/sf0.001"
 QIDS = [0, 1, 2]
 
 
 def _stage_arrivals(spark, emb, tmp_path, n_files=3):
-    d = str(tmp_path / "arrivals")
-    (
-        emb.filter(F.col("vec_id") >= 25)
-        .select("vec_id", "embedding")
-        .repartitionByRange(n_files, "vec_id")
-        .write.mode("overwrite")
-        .parquet(d)
+    d = stage_arrivals(
+        emb.filter(F.col("vec_id") >= 25).select("vec_id", "embedding"),
+        n_files,
+        "vec_id",
+        out_dir=str(tmp_path / "stage"),
     )
-    base = time.time() - 3600
-    for i, p in enumerate(sorted(globmod.glob(f"{d}/part-*.parquet"))):
-        os.utime(p, (base + i, base + i))
-    return d
+    return f"{d}/arrivals"
 
 
 def _topk(spark, base):

@@ -11,6 +11,8 @@ real corpus at sf0.001.
 
 from __future__ import annotations
 
+import glob
+
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -42,8 +44,8 @@ def test_dedup_within_watermark_matches_events(spark, tmp_path):
     # exceeds the table, and the re-delivery file is non-empty.
     from sressentials_spark.sources.tables import load_table
 
-    d = str(tmp_path / "stage")
-    n_files = stage_duplicate_arrivals(spark, SF, d)
+    d = stage_duplicate_arrivals(spark, SF, str(tmp_path / "stage"))
+    n_files = len(glob.glob(f"{d}/*/part-*.parquet"))
     assert n_files == 3
     events = load_table(spark, SF, "events").select(*_EVENT_COLS)
     staged = spark.read.option("recursiveFileLookup", "true").parquet(d)

@@ -191,54 +191,3 @@ def test_native_session_window_boundary_semantics(spark):
     assert per_user[1] == [3], per_user
     # user 2: just-inside stays merged (1 session of 2 events)
     assert per_user[2] == [2], per_user
-
-
-def test_tws_sessionizer_matches_reference_across_batches(
-    spark, events_pdf, tmp_path
-):
-    """The transformWithStateInPandas twin (RocksDB state store, named
-    value-state handle) must produce the exact session numbering of the
-    reference, including across a forced micro-batch boundary (state
-    hand-off through the new API's state store)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol needs protobuf",
-    )
-    from sressentials_spark.streaming.sessionize import (
-        run_sessionize_tws_batch,
-    )
-
-    d = str(tmp_path)
-    _write_time_split(d, events_pdf)
-    got = (
-        run_sessionize_tws_batch(
-            spark, d, glob="*.parquet", max_files_per_trigger=1
-        )
-        .toPandas()
-        .sort_values(["user_id", "ts", "event_id"], kind="mergesort")
-        .reset_index(drop=True)
-    )
-    assert len(got) == len(events_pdf)
-    exp = _expected_sessions(events_pdf).reset_index(drop=True)
-    pd.testing.assert_frame_equal(
-        got[["event_id", "user_id", "session_id"]],
-        exp[["event_id", "user_id", "session_id"]],
-    )
-
-
-def test_tws_sessionizer_fails_fast_without_protobuf(spark):
-    """Sandbox boundary pin: without protobuf the transformWithState
-    runner must raise a clear NotImplementedError up front, not crash
-    opaquely inside the driver-side state server."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf installed; guard not reachable")
-    except ImportError:
-        pass
-    from sressentials_spark.streaming.sessionize import (
-        run_sessionize_tws_batch,
-    )
-
-    with pytest.raises(NotImplementedError, match="protobuf"):
-        run_sessionize_tws_batch(spark, "/root/testdata/sf0.001")
