@@ -33,10 +33,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+from sressentials_spark.sources.tables import TABLES
 
 #: DuckDB result types that do NOT round-trip to pandas as the dtype
 #: the matching Spark column produces.

@@ -55,7 +55,7 @@ from sressentials_spark.operators.text import (
 )
 from sressentials_spark.plans.mongo import analyze_mongo_log
 from sressentials_spark.plans.mysql import analyze_mysql_log
-from sressentials_spark.sources.tables import load_table
+from sressentials_spark.sources.tables import history_split, load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -91,7 +91,8 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
 def _shared_query(spark: SparkSession, sf_dir: str, name: str, build):
     """Session-share a query materialization that several registered
     queries consume (every recall eval re-serves its exact/ANN
-    components; ``sim_cosine_topk`` alone is re-served by 10 queries).
+    components; ``sim_cosine_topk`` alone is re-served by the 11
+    recall@10 evals, through ``_recall_at_k``).
 
     A memory artifact like the parsed log sheets and the minhash
     tables: computed INSIDE the timed region on first use per
@@ -660,9 +661,19 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _split_cte(table: str, id_col: str) -> str:
+    """The 70/30 history split as one CTE, ``split(s)``: ids below ``s``
+    are the ingested history, the rest the arriving batch — the SQL
+    twin of :func:`sources.tables.history_split`."""
+    return (
+        f"split AS (SELECT CAST((max({id_col}) + 1) * 7 // 10 AS BIGINT) AS s"
+        f" FROM {table})"
+    )
+
+
 _INCR_ORACLE = f"""
 WITH {_SHINGLE_CTE},
-split AS (SELECT CAST((max(doc_id) + 1) * 7 // 10 AS BIGINT) AS s FROM documents),
+{_split_cte("documents", "doc_id")},
 j AS (
   SELECT doc_a, doc_b
   FROM p JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id
@@ -706,9 +717,8 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     never materializes. The split point is a one-scalar
     ``max(doc_id)`` action (70/30 at any scale factor)."""
     docs = load_table(spark, sf_dir, "documents")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
-    idx = _dedup_index_tables(spark, sf_dir, docs=docs, split=split)
+    split = history_split(docs, "doc_id")
+    idx = D.dedup_index_tables(spark, sf_dir, docs, split)
     return D.minhash_incremental_from_index(
         spark,
         docs.filter(F.col("doc_id") >= split),
@@ -718,40 +728,11 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_index_tables(
-    spark: SparkSession,
-    sf_dir: str,
-    docs: DataFrame | None = None,
-    split: int | None = None,
-) -> "D.DedupIndexTables":
+def _dedup_index_tables(spark: SparkSession, sf_dir: str) -> "D.DedupIndexTables":
     """Build-once handle for the persisted bucketed dedup index over
     the history slice (first 70% of the corpus by doc_id)."""
-    import os as _os
-    import re as _re
-
-    if docs is None:
-        docs = load_table(spark, sf_dir, "documents")
-    if split is None:
-        max_id = docs.agg(F.max("doc_id")).first()[0]
-        split = (max_id + 1) * 7 // 10
-
-    def _build() -> D.DedupIndexTables:
-        from sressentials_spark.scratch import register_scratch
-
-        app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
-        tag = _re.sub(r"\W", "_", _os.path.basename(_os.path.normpath(sf_dir)))
-        base = f"/tmp/sressentials_dedup_index/{app}/{tag}_{split}"
-        prefix = f"ssk_dedup_idx_{app}_{tag}_{split}"
-        # Per-applicationId path: a second process never trusts this
-        # one's files, and the registration below removes them at exit
-        # (table entries are session-scoped — the in-memory catalog
-        # dies with the JVM; only the files need cleanup).
-        register_scratch(f"/tmp/sressentials_dedup_index/{app}")
-        return D.build_dedup_index(
-            docs.filter(F.col("doc_id") < split), base, prefix
-        )
-
-    return get_or_build(spark, ("dedup_index", sf_dir, split), _build, tier="disk")
+    docs = load_table(spark, sf_dir, "documents")
+    return D.dedup_index_tables(spark, sf_dir, docs, history_split(docs, "doc_id"))
 
 
 INDEX_BUILDERS["dedup_index_build"] = _dedup_index_tables
@@ -996,32 +977,82 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TOPK_QUERY_IDS = [0, 1, 2, 3, 4]
+_TOPK_IDS_SQL = ", ".join(map(str, _TOPK_QUERY_IDS))
+
+#: Rank the scored (query_id, neighbor_id, cosine) candidates and keep
+#: each query's top 10: the tail every cosine top-k oracle ends in.
+_COSINE_TOP10_SQL = """r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
+      FROM scored)
+SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10"""
 
 
 @register(
     "sim_cosine_topk",
     f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
-           WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})),
+           WHERE vec_id IN ({_TOPK_IDS_SQL})),
 scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                   {_cos_sql('q.qv', 'e.embedding')} AS cosine
            FROM q JOIN embeddings e ON e.vec_id <> q.query_id),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
+{_COSINE_TOP10_SQL}
 """,
 )
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors for 5 query vectors (brute force).
-    Session-shared: ten other queries (every recall eval) re-serve this
-    exact frame, so it materializes once per pass (_shared_query)."""
+    Session-shared: eleven other queries (every recall@10 eval, through
+    :func:`_recall_at_k`) re-serve this exact frame, so it materializes
+    once per pass (_shared_query)."""
     return _shared_query(
         spark, sf_dir, "sim_cosine_topk",
         lambda: S.cosine_topk(
             load_table(spark, sf_dir, "embeddings"), _TOPK_QUERY_IDS, k=10
         ),
     )
+
+
+def _recall_at_k(spark: SparkSession, sf_dir: str, approx: DataFrame) -> DataFrame:
+    """Recall@10 of an approximate top-k against the exact one, per
+    query (integer permille): the session-shared ``sim_cosine_topk``
+    rows left-joined to ``approx`` on (query_id, neighbor_id), hits
+    counted. Every ANN eval is this fragment over its own approximate
+    side; :func:`_recall_sql` is its DuckDB twin."""
+    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
+        "query_id", "neighbor_id"
+    )
+    hits = approx.select("query_id", "neighbor_id").withColumn("hit", F.lit(1))
+    return (
+        exact.join(hits, ["query_id", "neighbor_id"], "left")
+        .groupBy("query_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_exact"),
+            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
+        )
+        .select(
+            "query_id",
+            "n_exact",
+            "n_hits",
+            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
+        )
+    )
+
+
+def _recall_sql(approx_sql: str) -> str:
+    """DuckDB twin of :func:`_recall_at_k`: the exact top-k oracle
+    left-joined to ``approx_sql`` (any SELECT exposing query_id and
+    neighbor_id, one row per pair)."""
+    return f"""
+SELECT e.query_id,
+       CAST(COUNT(*) AS BIGINT) AS n_exact,
+       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_hits,
+       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
+         // COUNT(*) AS BIGINT) AS recall_permille
+FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
+LEFT JOIN ({approx_sql}) a
+  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
+GROUP BY e.query_id
+"""
 
 
 def _lsh_proj_sql(vec: str, p: int, planes: int | None = None) -> str:
@@ -1050,14 +1081,11 @@ def _lsh_bucket_sql(vec: str, planes: int | None = None) -> str:
 WITH wb AS (SELECT vec_id, embedding, {_lsh_bucket_sql('embedding')} AS bucket
             FROM embeddings),
 q AS (SELECT vec_id AS query_id, embedding AS qv, bucket AS qb FROM wb
-      WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})),
+      WHERE vec_id IN ({_TOPK_IDS_SQL})),
 scored AS (SELECT q.query_id, e.vec_id AS neighbor_id,
                   {_cos_sql('q.qv', 'e.embedding')} AS cosine
            FROM q JOIN wb e ON e.bucket = q.qb AND e.vec_id <> q.query_id),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
+{_COSINE_TOP10_SQL}
 """,
 )
 def sim_cosine_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,10 +1129,7 @@ WITH wb AS (SELECT vec_id, embedding, {_lsh_bucket_sql('embedding')} AS bucket
 scored AS (SELECT p.query_id, e.vec_id AS neighbor_id,
                   {_cos_sql('p.qv', 'e.embedding')} AS cosine
            FROM probes p JOIN wb e ON e.bucket = p.pb AND e.vec_id <> p.query_id),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
+{_COSINE_TOP10_SQL}
 """
 
 
@@ -1123,36 +1148,127 @@ def sim_cosine_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@register(
-    "sim_cosine_topk_ivf",
-    f"""
-WITH seeds AS (
+def _ivf_cells_ctes(history_split: bool) -> str:
+    """The hash-seeded cosine-IVF cells as CTEs (no leading WITH):
+    ``seeds`` (IVF_CELLS hash-picked centroids, drawn from the history
+    slice when ``history_split`` — the frozen build-time seeds of the
+    70/30 ingest — else from the full corpus), ``assign`` (every
+    vector's centroids ranked by fold-exact cosine, ``rn``) and
+    ``cells`` (its nearest one); rows keep ``label`` for the filtered
+    search."""
+    split, hist = "", ""
+    if history_split:
+        split = f"{_split_cte('embeddings', 'vec_id')},"
+        hist = "WHERE vec_id < (SELECT s FROM split)"
+    return f"""{split}
+seeds AS (
   SELECT vec_id AS cid, embedding AS cv
   FROM embeddings
+  {hist}
   ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
            vec_id
   LIMIT {S.IVF_CELLS}
 ),
 assign AS (
-  SELECT vec_id, embedding, cid, ccos,
+  SELECT vec_id, embedding, label, cid, ccos,
          ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, s.cid,
+  FROM (SELECT e.vec_id, e.embedding, e.label, s.cid,
                {_cos_sql('e.embedding', 's.cv')} AS ccos
         FROM embeddings e CROSS JOIN seeds s)
 ),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
+cells AS (SELECT vec_id, embedding, label, cid AS cell FROM assign WHERE rn = 1)"""
+
+
+def _ivf_topk_sql(history_split: bool) -> str:
+    """Cosine-IVF top-10 over :func:`_ivf_cells_ctes`: each query
+    probes its IVF_NPROBE nearest cells and ranks their members by
+    exact cosine. ``history_split`` restates the 70/30
+    build-then-ingest index (every vector assigned under seeds frozen
+    on the history slice)."""
+    return f"""
+WITH {_ivf_cells_ctes(history_split)},
 probes AS (SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM assign
-           WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})
+           WHERE vec_id IN ({_TOPK_IDS_SQL})
              AND rn <= {S.IVF_NPROBE}),
 scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
                   {_cos_sql('p.qv', 'c.embedding')} AS cosine
            FROM probes p JOIN cells c ON c.cell = p.pcell AND c.vec_id <> p.query_id),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
-""",
-)
+{_COSINE_TOP10_SQL}
+"""
+
+
+#: The rebalance split decision over ``cells``: a cell holding more
+#: than IVF_REBALANCE_PCT% of the uniform share is oversized.
+_IVF_OVERSIZED_CTES = f"""
+thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
+                       // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
+           FROM embeddings),
+oversized AS (
+  SELECT cell FROM cells, thresh GROUP BY cell, t HAVING COUNT(*) > t
+)"""
+
+
+def _ivf_rebalanced_topk_sql(history_split: bool) -> str:
+    """Cosine-IVF top-10 after a REBALANCE of :func:`_ivf_cells_ctes`:
+    every oversized cell splits into two hash-picked child seeds, its
+    members re-pointed to the nearer child; probes are ranked against
+    the POST-split centroid set, exact cosine scoring inside probed
+    cells. ``history_split`` restates the full versioned lifecycle
+    (build 70% -> ingest 30% under frozen seeds -> rebalance)."""
+    return f"""
+WITH {_ivf_cells_ctes(history_split)},{_IVF_OVERSIZED_CTES},
+chseeds AS (
+  SELECT cell AS parent, vec_id AS cid, embedding AS cv FROM (
+    SELECT c.cell, c.vec_id, c.embedding,
+           ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
+             ('0x' || substring(md5('{S.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
+             c.vec_id) AS rn
+    FROM cells c JOIN oversized o ON o.cell = c.cell)
+  WHERE rn <= 2
+),
+moved AS (
+  SELECT vec_id, embedding, cid AS cell FROM (
+    SELECT m.vec_id, m.embedding, s.cid,
+           ROW_NUMBER() OVER (PARTITION BY m.vec_id ORDER BY ccos DESC, s.cid ASC) AS rn
+    FROM (SELECT c.* FROM cells c JOIN oversized o ON o.cell = c.cell) m
+    JOIN chseeds s ON s.parent = m.cell
+    JOIN LATERAL (SELECT {_cos_sql('m.embedding', 's.cv')} AS ccos) x ON TRUE)
+  WHERE rn = 1
+),
+cells2 AS (
+  SELECT vec_id, cell FROM cells
+  WHERE cell NOT IN (SELECT cell FROM oversized)
+  UNION ALL
+  SELECT vec_id, cell FROM moved
+),
+cents2 AS (
+  SELECT DISTINCT ON (cid) cid, cv FROM (
+    SELECT cid, cv FROM seeds WHERE cid NOT IN (SELECT cell FROM oversized)
+    UNION ALL
+    SELECT cid, cv FROM chseeds
+  ) ORDER BY cid
+),
+probes AS (
+  SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM (
+    SELECT e.vec_id, e.embedding, c2.cid,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY ccos DESC, c2.cid ASC) AS rn
+    FROM embeddings e CROSS JOIN cents2 c2
+    JOIN LATERAL (SELECT {_cos_sql('e.embedding', 'c2.cv')} AS ccos) x ON TRUE
+    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
+  WHERE rn <= {S.IVF_NPROBE}
+),
+scored AS (
+  SELECT p.query_id, c.vec_id AS neighbor_id,
+         {_cos_sql('p.qv', 'emb2.embedding')} AS cosine
+  FROM probes p
+  JOIN cells2 c ON c.cell = p.pcell AND c.vec_id <> p.query_id
+  JOIN embeddings emb2 ON emb2.vec_id = c.vec_id
+),
+{_COSINE_TOP10_SQL}
+"""
+
+
+@register("sim_cosine_topk_ivf", _ivf_topk_sql(history_split=False))
 def sim_cosine_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-10 neighbors via an IVF coarse quantizer:
     hash-seeded centroids, fold-exact cell assignment, nprobe-cell
@@ -1190,34 +1306,17 @@ INDEX_BUILDERS["ivf_index_build"] = _ivf_index_path
 @register(
     "sim_cosine_topk_ivf_filtered",
     f"""
-WITH seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, embedding, label, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, e.label, s.cid,
-               {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, embedding, label, cid AS cell FROM assign WHERE rn = 1),
+WITH {_ivf_cells_ctes(history_split=False)},
 probes AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel, cid AS pcell
            FROM assign
-           WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})
+           WHERE vec_id IN ({_TOPK_IDS_SQL})
              AND rn <= {S.IVF_NPROBE}),
 scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
                   {_cos_sql('p.qv', 'c.embedding')} AS cosine
            FROM probes p JOIN cells c
              ON c.cell = p.pcell AND c.label = p.qlabel
             AND c.vec_id <> p.query_id),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
+{_COSINE_TOP10_SQL}
 """,
 )
 def sim_cosine_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1320,7 +1419,7 @@ WITH {_PQ_TRAIN_SQL},
 qd AS (SELECT q.vec_id AS query_id, b.m, b.cid AS k,
               {_pq_adc_term_sql('q.embedding', 'b')} AS dq
        FROM embeddings q CROSS JOIN pq_books b
-       WHERE q.vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})),
+       WHERE q.vec_id IN ({_TOPK_IDS_SQL})),
 p AS (SELECT qd.query_id, c.vec_id AS neighbor_id, qd.m, qd.dq
       FROM pq_codes c JOIN qd ON qd.m = c.m AND qd.k = c.code
       WHERE c.vec_id <> qd.query_id),
@@ -1352,65 +1451,17 @@ def sim_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_pq_recall_at_k",
-    None,  # composed from the exact and ADC oracles below
-)
+@register("sim_pq_recall_at_k", _recall_sql(ORACLE_SQL["sim_pq_adc_topk"]))
 def sim_pq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ quality as a first-class query: recall@10 of the
     compressed-domain ADC top-k against the exact cosine top-k, per
     query (integer permille). This is the tuning loop for (M, K) —
     quantization error shows up here directly, the same in-engine
     eval the LSH paths get."""
-    exact = S.cosine_topk(
-        load_table(spark, sf_dir, "embeddings"), _TOPK_QUERY_IDS, k=10
-    ).select("query_id", "neighbor_id")
-    adc = S.pq_adc_topk(
-        load_table(spark, sf_dir, "embeddings"), _TOPK_QUERY_IDS, topk=10
-    ).select(
-        F.col("query_id").alias("a_query_id"),
-        F.col("neighbor_id").alias("a_neighbor_id"),
-    )
-    hit = F.when(F.col("a_neighbor_id").isNotNull(), 1).otherwise(0)
-    return (
-        exact.join(
-            adc,
-            (F.col("query_id") == F.col("a_query_id"))
-            & (F.col("neighbor_id") == F.col("a_neighbor_id")),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(hit).alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
+    return _recall_at_k(spark, sf_dir, QUERIES["sim_pq_adc_topk"](spark, sf_dir))
 
 
-ORACLE_SQL["sim_pq_recall_at_k"] = f"""
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN ({ORACLE_SQL["sim_pq_adc_topk"]}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
-
-
-@register(
-    "sim_ivf_recall_at_k",
-    None,  # composed from the exact and IVF oracles below
-)
+@register("sim_ivf_recall_at_k", _recall_sql(ORACLE_SQL["sim_cosine_topk_ivf"]))
 def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF quality as a first-class query: recall@10 of the
     nprobe-cell IVF search against the exact cosine top-k, per query
@@ -1419,42 +1470,9 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop for (cells, nprobe): recall lost to cell pruning shows up
     here directly, measured against the same persisted
     cell-partitioned index the serving query scans."""
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
+    return _recall_at_k(
+        spark, sf_dir, QUERIES["sim_cosine_topk_ivf"](spark, sf_dir)
     )
-    approx = (
-        QUERIES["sim_cosine_topk_ivf"](spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-ORACLE_SQL["sim_ivf_recall_at_k"] = f"""
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN ({ORACLE_SQL["sim_cosine_topk_ivf"]}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
 
 
 def _ivf_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -1465,8 +1483,7 @@ def _ivf_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
     import os as _os
 
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -1498,10 +1515,7 @@ def _ivf_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivf_ingest_index_build"] = _ivf_ingest_index_path
 
 
-@register(
-    "sim_ivf_index_ingest",
-    None,  # composed oracle appended below
-)
+@register("sim_ivf_index_ingest", _recall_sql(_ivf_topk_sql(history_split=True)))
 def sim_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the ANN twin of
     ``dedup_incremental_ingest``: the first 70% of the corpus (by
@@ -1518,73 +1532,11 @@ def sim_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift has accumulated enough to warrant the periodic re-seed
     rebuild. Per-ingest cost at 100 TB: O(batch), never O(index)."""
     path = _ivf_ingest_index_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
+    return _recall_at_k(
+        spark,
+        sf_dir,
+        S.cosine_topk_ivf_from_index(spark, path, _TOPK_QUERY_IDS, k=10),
     )
-    approx = (
-        S.cosine_topk_ivf_from_index(spark, path, _TOPK_QUERY_IDS, k=10)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-# Restatement: centroids seeded from the HISTORY side only (the frozen
-# build-time seeds), every vector — history and ingested batch alike —
-# assigned to those centroids, probes/scoring as in the plain IVF
-# oracle, recall joined against the exact top-k over the full corpus.
-ORACLE_SQL["sim_ivf_index_ingest"] = f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  WHERE vec_id < (SELECT s FROM split)
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, embedding, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, s.cid,
-               {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-probes AS (SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM assign
-           WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})
-             AND rn <= {S.IVF_NPROBE}),
-scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-                  {_cos_sql('p.qv', 'c.embedding')} AS cosine
-           FROM probes p JOIN cells c ON c.cell = p.pcell AND c.vec_id <> p.query_id),
-r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored),
-approx AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 10)
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
 
 
 def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -1610,8 +1562,7 @@ INDEX_BUILDERS["ivf_rebalance_index_build"] = _ivf_rebalance_index_path
 
 
 @register(
-    "sim_ivf_rebalance",
-    None,  # composed oracle appended below
+    "sim_ivf_rebalance", _recall_sql(_ivf_rebalanced_topk_sql(history_split=False))
 )
 def sim_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF cell REBALANCE — the third lifecycle op (build -> ingest ->
@@ -1625,121 +1576,13 @@ def sim_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k — recall parity with the pre-split index at equal nprobe is
     the acceptance bar (docs/ANN_EVAL.md)."""
     path = _ivf_rebalance_index_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
+    return _recall_at_k(
+        spark,
+        sf_dir,
         S.cosine_topk_ivf_from_index(
             spark, path, _TOPK_QUERY_IDS, k=10, probe_from_centroids=True
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+        ),
     )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-# Restatement: original hash-seeded assignment; cells over the integer
-# threshold split into two hash-picked child seeds; members re-pointed
-# to the nearer child; probes ranked against the POST-split centroid
-# set; scoring/recall as in the other IVF evals.
-ORACLE_SQL["sim_ivf_rebalance"] = f"""
-WITH seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, embedding, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, s.cid,
-               {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
-                       // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
-           FROM embeddings),
-oversized AS (
-  SELECT cell FROM cells, thresh GROUP BY cell, t HAVING COUNT(*) > t
-),
-chseeds AS (
-  SELECT cell AS parent, vec_id AS cid, embedding AS cv FROM (
-    SELECT c.cell, c.vec_id, c.embedding,
-           ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{S.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
-             c.vec_id) AS rn
-    FROM cells c JOIN oversized o ON o.cell = c.cell)
-  WHERE rn <= 2
-),
-moved AS (
-  SELECT vec_id, embedding, cid AS cell FROM (
-    SELECT m.vec_id, m.embedding, s.cid,
-           ROW_NUMBER() OVER (PARTITION BY m.vec_id ORDER BY ccos DESC, s.cid ASC) AS rn
-    FROM (SELECT c.* FROM cells c JOIN oversized o ON o.cell = c.cell) m
-    JOIN chseeds s ON s.parent = m.cell
-    JOIN LATERAL (SELECT {_cos_sql('m.embedding', 's.cv')} AS ccos) x ON TRUE)
-  WHERE rn = 1
-),
-cells2 AS (
-  SELECT vec_id, cell FROM cells
-  WHERE cell NOT IN (SELECT cell FROM oversized)
-  UNION ALL
-  SELECT vec_id, cell FROM moved
-),
-cents2 AS (
-  SELECT DISTINCT ON (cid) cid, cv FROM (
-    SELECT cid, cv FROM seeds WHERE cid NOT IN (SELECT cell FROM oversized)
-    UNION ALL
-    SELECT cid, cv FROM chseeds
-  ) ORDER BY cid
-),
-probes AS (
-  SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM (
-    SELECT e.vec_id, e.embedding, c2.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY ccos DESC, c2.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cents2 c2
-    JOIN LATERAL (SELECT {_cos_sql('e.embedding', 'c2.cv')} AS ccos) x ON TRUE
-    WHERE e.vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))}))
-  WHERE rn <= {S.IVF_NPROBE}
-),
-scored AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id,
-         {_cos_sql('p.qv', 'emb2.embedding')} AS cosine
-  FROM probes p
-  JOIN cells2 c ON c.cell = p.pcell AND c.vec_id <> p.query_id
-  JOIN embeddings emb2 ON emb2.vec_id = c.vec_id
-),
-r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored),
-approx AS (SELECT query_id, neighbor_id FROM r WHERE rank <= 10)
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
-
 
 
 def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -1753,8 +1596,7 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
     half-applied lifecycle step; the guard asserts all three versions
     committed and at least one cell actually split."""
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -1779,90 +1621,8 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivf_versioned_index_build"] = _ivf_versioned_index_path
 
 
-# Restatement of the full versioned lifecycle: centroids seeded from
-# the HISTORY slice only (frozen at v1), every vector — history and
-# ingested batch alike — assigned to them (the ingest), oversized cells
-# split into two hash-picked child seeds with members re-pointed (the
-# rebalance), probes ranked against the POST-split centroid set, exact
-# cosine scoring inside probed cells.
 @register(
-    "sim_ivf_versioned_lifecycle_topk",
-    f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  WHERE vec_id < (SELECT s FROM split)
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, embedding, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, s.cid,
-               {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
-thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
-                       // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
-           FROM embeddings),
-oversized AS (
-  SELECT cell FROM cells, thresh GROUP BY cell, t HAVING COUNT(*) > t
-),
-chseeds AS (
-  SELECT cell AS parent, vec_id AS cid, embedding AS cv FROM (
-    SELECT c.cell, c.vec_id, c.embedding,
-           ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{S.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
-             c.vec_id) AS rn
-    FROM cells c JOIN oversized o ON o.cell = c.cell)
-  WHERE rn <= 2
-),
-moved AS (
-  SELECT vec_id, embedding, cid AS cell FROM (
-    SELECT m.vec_id, m.embedding, s.cid,
-           ROW_NUMBER() OVER (PARTITION BY m.vec_id ORDER BY ccos DESC, s.cid ASC) AS rn
-    FROM (SELECT c.* FROM cells c JOIN oversized o ON o.cell = c.cell) m
-    JOIN chseeds s ON s.parent = m.cell
-    JOIN LATERAL (SELECT {_cos_sql('m.embedding', 's.cv')} AS ccos) x ON TRUE)
-  WHERE rn = 1
-),
-cells2 AS (
-  SELECT vec_id, cell FROM cells
-  WHERE cell NOT IN (SELECT cell FROM oversized)
-  UNION ALL
-  SELECT vec_id, cell FROM moved
-),
-cents2 AS (
-  SELECT DISTINCT ON (cid) cid, cv FROM (
-    SELECT cid, cv FROM seeds WHERE cid NOT IN (SELECT cell FROM oversized)
-    UNION ALL
-    SELECT cid, cv FROM chseeds
-  ) ORDER BY cid
-),
-probes AS (
-  SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM (
-    SELECT e.vec_id, e.embedding, c2.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY ccos DESC, c2.cid ASC) AS rn
-    FROM embeddings e CROSS JOIN cents2 c2
-    JOIN LATERAL (SELECT {_cos_sql('e.embedding', 'c2.cv')} AS ccos) x ON TRUE
-    WHERE e.vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))}))
-  WHERE rn <= {S.IVF_NPROBE}
-),
-scored AS (
-  SELECT p.query_id, c.vec_id AS neighbor_id,
-         {_cos_sql('p.qv', 'emb2.embedding')} AS cosine
-  FROM probes p
-  JOIN cells2 c ON c.cell = p.pcell AND c.vec_id <> p.query_id
-  JOIN embeddings emb2 ON emb2.vec_id = c.vec_id
-),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
-""",
+    "sim_ivf_versioned_lifecycle_topk", _ivf_rebalanced_topk_sql(history_split=True)
 )
 def sim_ivf_versioned_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k served from the CRASH-ATOMIC manifest-versioned index
@@ -1899,8 +1659,7 @@ def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str) -> str:
     committed) so a silently non-compacting store can never serve the
     registered query."""
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -1945,10 +1704,8 @@ def maintenance_ivf_compact_serve_topk(spark: SparkSession, sf_dir: str) -> Data
     pre-compaction lifecycle answer bit-for-bit — this query SHARES
     ``sim_ivf_versioned_lifecycle_topk``'s oracle verbatim (the same
     zero-residue statement ``maintenance_ivfpq_refresh_serve_topk``
-    makes by sharing the full-build oracle). Parity rehearsed at
-    sf0.001 in tests/test_ivfpq_rebalance_oracle.py::
-    test_versioned_compact_serve_matches_lifecycle_oracle; the crash
-    atomicity of the verb itself is kill-injection model-tested in
+    makes by sharing the full-build oracle). The crash atomicity of
+    the verb itself is kill-injection model-tested in
     tests/test_ivf_versioned.py."""
     path = _ivf_compacted_index_path(spark, sf_dir)
     return IV.cosine_topk_ivf_versioned(
@@ -1968,37 +1725,15 @@ ORACLE_SQL["maintenance_ivf_compact_serve_topk"] = ORACLE_SQL[
 def _ivf_version_history_sql() -> str:
     """Restatement of the LOGICAL columns of ``ivf_index_history``
     over the shared cosine lifecycle store (build 70% -> ingest 30% ->
-    rebalance) — written and parity-validated in round 11
-    (tests/test_ivfpq_rebalance_oracle.py), registration planned for a
-    future rotation slot (`maintenance_ivf_version_history`). v1 rows
-    = the history slice, v2/v3 rows = the full corpus, and v3's cell
-    count grows by exactly the split decision's oversized-cell count
-    (each split retires one cell and seeds two children); ``n_files``
-    and the stamp column are physical/ledger surface outside the
-    relational statement (model-tested instead)."""
+    rebalance), parity-checked in tests/test_ivfpq_rebalance_oracle.py
+    and not yet a registered query. v1 rows = the history slice, v2/v3
+    rows = the full corpus, and v3's cell count grows by exactly the
+    split decision's oversized-cell count (each split retires one cell
+    and seeds two children); ``n_files`` and the stamp column are
+    physical/ledger surface outside the relational statement
+    (model-tested instead)."""
     return f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  WHERE vec_id < (SELECT s FROM split)
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, s.cid, {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, cid AS cell FROM assign WHERE rn = 1),
-thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
-                       // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
-           FROM embeddings),
-oversized AS (
-  SELECT cell FROM cells, thresh GROUP BY cell, t HAVING COUNT(*) > t
-)
+WITH {_ivf_cells_ctes(history_split=True)},{_IVF_OVERSIZED_CTES}
 SELECT * FROM (
   SELECT CAST(1 AS BIGINT) AS version,
          (SELECT COUNT(*) FROM embeddings
@@ -2039,7 +1774,7 @@ iprobes AS (
                             for j in generate_series(1, 64)]) AS BIGINT),
              c.cid) AS rn
     FROM emb e CROSS JOIN tcents c
-    WHERE e.vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))}))
+    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
   WHERE rn <= {S.IVF_NPROBE}),
 cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
          FROM iprobes p JOIN icells c
@@ -2162,58 +1897,59 @@ INDEX_BUILDERS["ivfpq_versioned_index_build"] = _ivfpq_versioned_index_path
 def _ivf_versioned_delete_topk_sql() -> str:
     """Restatement of the versioned tier's copy-on-write DELETE
     (operators/ivf_versioned.py:delete_ivf_index_versioned) composed
-    into a serve query — written and parity-validated in round 10
-    (tests/test_ivfpq_rebalance_oracle.py), registration planned for
-    round 11 (rotation budget). Semantics: the index is BUILT on the
-    full corpus (hash-seeded centroids over every vector — deleting
-    rows never moves a centroid), then the victims — query 0's top-3
+    into a serve query. Semantics: the index is BUILT on the full
+    corpus (hash-seeded centroids over every vector — deleting rows
+    never moves a centroid), then the victims — query 0's top-3
     neighbors per the PRE-delete IVF serve itself, a deterministic
     data-derived set that guarantees the delete visibly changes the
     answer (exact-cosine neighbors may live outside the probed cells;
     the index's own answers never do) — are removed from the lists, so
     they vanish from CANDIDATES while seeds, assignments and probes
     still derive from the full corpus."""
-    victims = f"""
-victims AS (
+    return f"""
+WITH victims AS (
   SELECT neighbor_id FROM ({ORACLE_SQL["sim_cosine_topk_ivf"]})
   WHERE query_id = 0 AND rank <= 3
-)"""
-    return f"""
-WITH {victims},
-seeds AS (
-  SELECT vec_id AS cid, embedding AS cv
-  FROM embeddings
-  ORDER BY ('0x' || substring(md5('{S.IVF_SEED}:' || CAST(vec_id AS VARCHAR)), 1, 15))::BIGINT,
-           vec_id
-  LIMIT {S.IVF_CELLS}
-),
-assign AS (
-  SELECT vec_id, embedding, cid, ccos,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cid ASC) AS rn
-  FROM (SELECT e.vec_id, e.embedding, s.cid,
-               {_cos_sql('e.embedding', 's.cv')} AS ccos
-        FROM embeddings e CROSS JOIN seeds s)
-),
-cells AS (SELECT vec_id, embedding, cid AS cell FROM assign WHERE rn = 1),
+),{_ivf_cells_ctes(history_split=False)},
 probes AS (SELECT vec_id AS query_id, embedding AS qv, cid AS pcell FROM assign
-           WHERE vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))})
+           WHERE vec_id IN ({_TOPK_IDS_SQL})
              AND rn <= {S.IVF_NPROBE}),
 scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
                   {_cos_sql('p.qv', 'c.embedding')} AS cosine
            FROM probes p JOIN cells c ON c.cell = p.pcell AND c.vec_id <> p.query_id
            WHERE c.vec_id NOT IN (SELECT neighbor_id FROM victims)),
-r AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                     ORDER BY cosine DESC, neighbor_id) AS BIGINT) AS rank
-      FROM scored)
-SELECT query_id, neighbor_id, cosine, rank FROM r WHERE rank <= 10
+{_COSINE_TOP10_SQL}
 """
 
 
-def _ivfpq_versioned_sql(*, history_split: bool, output: str) -> str:
+#: The history-trained IVF-PQ head (CTEs, no leading WITH): coarse
+#: k-means trained on the oldest-70% slice ``hist`` and frozen
+#: (``tcents``), then EVERY row quantized (``allq``) and assigned to its
+#: nearest frozen centroid by exact integer L2 (``icells``) — the state
+#: a build on the history plus an ingest of the batch leaves behind.
+_IVFPQ_HIST_CELLS_CTES = f"""
+{_split_cte("embeddings", "vec_id")},
+hist AS (SELECT vec_id, embedding FROM embeddings
+         WHERE vec_id < (SELECT s FROM split)),
+{_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64, table="hist")},
+tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
+allq AS (SELECT vec_id,
+                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
+         FROM embeddings),
+icells AS (
+  SELECT vec_id, cid AS cell FROM (
+    SELECT e.vec_id, c.cid,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
+                            for j in generate_series(1, 64)]) AS BIGINT),
+             c.cid) AS rn
+    FROM allq e CROSS JOIN tcents c)
+  WHERE rn = 1)"""
+
+
+def _ivfpq_versioned_sql(*, history_split: bool) -> str:
     """Parameterized restatement of the versioned IVF-PQ tier's
-    maintenance compositions — written and parity-validated in round
-    10 (tests/test_ivfpq_rebalance_oracle.py), registrations planned
-    for round 11 (rotation budget).
+    maintenance compositions, ending in the served top-10 rows.
 
     The shared chain: trained coarse k-means cells -> every row
     assigned under the FROZEN centroids -> split decision over cell
@@ -2230,38 +1966,19 @@ def _ivfpq_versioned_sql(*, history_split: bool, output: str) -> str:
     the oldest-70% slice only and assigns/encodes every row under
     those frozen artifacts first (the import -> ingest -> rebalance
     lifecycle: exactly the ingest oracle's frozen-artifact
-    restatement, then the split on the merged population). ``output``
-    is ``"topk"`` (the served rows) or ``"recall"`` (recall@10 joined
-    against the exact cosine top-k)."""
+    restatement, then the split on the merged population)."""
     m = S.PQ_M
     dsub = 64 // m
     total = "d0"
     for i in range(1, m):
         total = f"({total} + d{i})"
-    qids = ", ".join(map(str, _TOPK_QUERY_IDS))
     mq = (
         f"[CAST(ROUND(CAST(t.rv[_m.m*{dsub}+j] AS DOUBLE) * {_PQ_SCALE})"
         f" AS BIGINT) for j in generate_series(1, {dsub})]"
     )
     if history_split:
         head = f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-hist AS (SELECT vec_id, embedding FROM embeddings
-         WHERE vec_id < (SELECT s FROM split)),
-{_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64, table="hist")},
-tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-allq AS (SELECT vec_id,
-                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
-         FROM embeddings),
-icells AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT e.vec_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c.cid) AS rn
-    FROM allq e CROSS JOIN tcents c)
-  WHERE rn = 1),"""
+WITH {_IVFPQ_HIST_CELLS_CTES},"""
         histresid = """
 histresid AS (SELECT vec_id, rv FROM pqr_src
               WHERE vec_id < (SELECT s FROM split)),"""
@@ -2278,26 +1995,6 @@ icells AS (SELECT vec_id, cluster AS cell FROM afin),"""
         src="pqr_src", vec="rv", prefix="pqr", m=m,
         train_src="histresid" if history_split else None,
     )
-    if output == "topk":
-        tail = f"""
-SELECT query_id, neighbor_id, adc_dist, rank FROM rr WHERE rank <= 10
-"""
-    elif output == "recall":
-        tail = f"""
-, approx AS (SELECT query_id, neighbor_id FROM rr WHERE rank <= 10)
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
-    else:
-        raise ValueError(f"unknown output {output!r}")
     return f"""{head}
 thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
                        // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
@@ -2383,7 +2080,7 @@ iprobes AS (
                             for j in generate_series(1, 64)]) AS BIGINT),
              c2.cid) AS rn
     FROM allq e CROSS JOIN cents2 c2
-    WHERE e.vec_id IN ({qids}))
+    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
   WHERE rn <= {S.IVF_NPROBE}),
 cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
          FROM iprobes p JOIN cells2 c
@@ -2410,12 +2107,9 @@ r AS (SELECT query_id, neighbor_id,
              {total} AS adc_dist FROM g),
 rr AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                       ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       FROM r){tail}"""
-
-
-def _ivfpq_rebalance_recall_sql() -> str:
-    """Build-then-rebalance recall — see :func:`_ivfpq_versioned_sql`."""
-    return _ivfpq_versioned_sql(history_split=False, output="recall")
+       FROM r)
+SELECT query_id, neighbor_id, adc_dist, rank FROM rr WHERE rank <= 10
+"""
 
 
 @register(
@@ -2447,10 +2141,7 @@ def sim_ivfpq_versioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_ivf_versioned_ingest_recall",
-    None,  # shares sim_ivf_index_ingest's composed oracle (set below)
-)
+@register("sim_ivf_versioned_ingest_recall", ORACLE_SQL["sim_ivf_index_ingest"])
 def sim_ivf_versioned_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the versioned tier's INGEST verb — the oracle row
     the r9 verdict asked for (the verb was model-tested only): serve
@@ -2465,10 +2156,9 @@ def sim_ivf_versioned_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFra
     now gates both stores' ingest semantics AND the manifest tier's
     historical-version read path."""
     path = _ivf_versioned_index_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
+    return _recall_at_k(
+        spark,
+        sf_dir,
         IV.cosine_topk_ivf_versioned(
             spark,
             path,
@@ -2476,27 +2166,8 @@ def sim_ivf_versioned_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFra
             k=10,
             version=2,
             query_src=load_table(spark, sf_dir, "embeddings"),
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+        ),
     )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-ORACLE_SQL["sim_ivf_versioned_ingest_recall"] = ORACLE_SQL["sim_ivf_index_ingest"]
 
 
 def _ivfpq_rerank_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -2570,10 +2241,7 @@ def sim_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_ivfpq_recall_at_k",
-    None,  # composed from the exact and IVF-PQ oracles below
-)
+@register("sim_ivfpq_recall_at_k", _recall_sql(ORACLE_SQL["sim_pq_adc_topk_ivf"]))
 def sim_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ quality as a first-class query: recall@10 of the
     cell-pruned compressed-domain search against the exact cosine
@@ -2582,48 +2250,12 @@ def sim_ivfpq_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantization error (M, K) — so this eval sits alongside the pure
     IVF and pure PQ evals to attribute the loss: ivfpq ≤ min(ivf, pq)
     is the expected envelope at matched settings."""
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        QUERIES["sim_pq_adc_topk_ivf"](spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
+    return _recall_at_k(
+        spark, sf_dir, QUERIES["sim_pq_adc_topk_ivf"](spark, sf_dir)
     )
 
 
-ORACLE_SQL["sim_ivfpq_recall_at_k"] = f"""
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN ({ORACLE_SQL["sim_pq_adc_topk_ivf"]}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
-
-
-@register(
-    "sim_ivfpq_rerank_recall_at_k",
-    None,  # composed from the exact and rerank oracles below
-)
+@register("sim_ivfpq_rerank_recall_at_k", _recall_sql(ORACLE_SQL["sim_ivfpq_rerank_topk"]))
 def sim_ivfpq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage serving quality as a first-class query: recall@10 of
     the shortlist-then-exact-rerank search against the exact cosine
@@ -2635,42 +2267,9 @@ def sim_ivfpq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval — any residual gap to the ceiling would be shortlist
     truncation, and at this config it is zero, so what remains is the
     nprobe knob (4 -> 6 moves the ceiling itself to 900‰)."""
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
+    return _recall_at_k(
+        spark, sf_dir, QUERIES["sim_ivfpq_rerank_topk"](spark, sf_dir)
     )
-    approx = (
-        QUERIES["sim_ivfpq_rerank_topk"](spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-ORACLE_SQL["sim_ivfpq_rerank_recall_at_k"] = f"""
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN ({ORACLE_SQL["sim_ivfpq_rerank_topk"]}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-"""
 
 
 def _ivfpq_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -2683,8 +2282,7 @@ def _ivfpq_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
     import os as _os
 
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -2718,78 +2316,13 @@ def _ivfpq_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivfpq_ingest_index_build"] = _ivfpq_ingest_index_path
 
 
-@register(
-    "sim_ivfpq_index_ingest",
-    None,  # composed oracle appended below
-)
-def sim_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental IVF-PQ index maintenance — completing the trained
-    compressed index's lifecycle under the oracle gate the plain-IVF
-    stack already has (``sim_ivf_index_ingest``): the first 70% of the
-    corpus (by vec_id) trains and builds the persisted IVF-PQ index
-    (coarse quantizer + residual codebooks frozen at build time), the
-    newest 30% arrives as an ingest batch and is encoded under those
-    FROZEN artifacts and appended as new cell-partition files
-    (:func:`similarity.ingest_ivfpq_index` — one assign + encode pass
-    over the batch; existing list files and both sidecars are never
-    read into tasks or rewritten, enforced here by a size+mtime
-    snapshot and pinned independently in
-    tests/test_similarity_ivf.py::TestIvfPqIngest). Serving then runs
-    the normal IVFADC scan over the merged lists. Returns recall@10
-    against the exact top-k over the FULL corpus — the quantizer-drift
-    gauge that tells an operator when to schedule the periodic
-    retrain-rebuild. Per-ingest cost at 100 TB: O(batch), never
-    O(index)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = _ivfpq_ingest_index_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        S.pq_adc_topk_ivf_from_index(spark, emb, path, _TOPK_QUERY_IDS, topk=10)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
 # Restatement: BOTH quantizers trained on the HISTORY slice only
 # (coarse k-means over hist; residual codebooks sampled from history
 # residuals), then every vector — history and ingested batch alike —
 # assigned and residual-encoded under those frozen artifacts, IVFADC
-# scoring as in the full-corpus IVF-PQ oracle, recall joined against
-# the exact top-k over the full corpus.
-ORACLE_SQL["sim_ivfpq_index_ingest"] = f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-hist AS (SELECT vec_id, embedding FROM embeddings
-         WHERE vec_id < (SELECT s FROM split)),
-{_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64, table="hist")},
-tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-allq AS (SELECT vec_id,
-                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
-         FROM embeddings),
-icells AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT e.vec_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c.cid) AS rn
-    FROM allq e CROSS JOIN tcents c)
-  WHERE rn = 1),
+# scoring as in the full-corpus IVF-PQ oracle.
+_IVFPQ_INGEST_TOPK_SQL = f"""
+WITH {_IVFPQ_HIST_CELLS_CTES},
 iprobes AS (
   SELECT vec_id AS query_id, cid AS pcell FROM (
     SELECT e.vec_id, c.cid,
@@ -2798,7 +2331,7 @@ iprobes AS (
                             for j in generate_series(1, 64)]) AS BIGINT),
              c.cid) AS rn
     FROM allq e CROSS JOIN tcents c
-    WHERE e.vec_id IN ({', '.join(map(str, _TOPK_QUERY_IDS))}))
+    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
   WHERE rn <= {S.IVF_NPROBE}),
 cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
          FROM iprobes p JOIN icells c
@@ -2836,19 +2369,37 @@ r AS (SELECT query_id, neighbor_id,
              ((d0 + d1) + d2) + d3 AS adc_dist FROM g),
 rr AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
                       ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       FROM r),
-approx AS (SELECT query_id, neighbor_id FROM rr WHERE rank <= 10)
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN approx a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
+       FROM r)
+SELECT query_id, neighbor_id FROM rr WHERE rank <= 10
 """
+
+
+@register("sim_ivfpq_index_ingest", _recall_sql(_IVFPQ_INGEST_TOPK_SQL))
+def sim_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental IVF-PQ index maintenance — completing the trained
+    compressed index's lifecycle under the oracle gate the plain-IVF
+    stack already has (``sim_ivf_index_ingest``): the first 70% of the
+    corpus (by vec_id) trains and builds the persisted IVF-PQ index
+    (coarse quantizer + residual codebooks frozen at build time), the
+    newest 30% arrives as an ingest batch and is encoded under those
+    FROZEN artifacts and appended as new cell-partition files
+    (:func:`similarity.ingest_ivfpq_index` — one assign + encode pass
+    over the batch; existing list files and both sidecars are never
+    read into tasks or rewritten, enforced here by a size+mtime
+    snapshot and pinned independently in
+    tests/test_similarity_ivf.py::TestIvfPqIngest). Serving then runs
+    the normal IVFADC scan over the merged lists. Returns recall@10
+    against the exact top-k over the FULL corpus — the quantizer-drift
+    gauge that tells an operator when to schedule the periodic
+    retrain-rebuild. Per-ingest cost at 100 TB: O(batch), never
+    O(index)."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    path = _ivfpq_ingest_index_path(spark, sf_dir)
+    return _recall_at_k(
+        spark,
+        sf_dir,
+        S.pq_adc_topk_ivf_from_index(spark, emb, path, _TOPK_QUERY_IDS, topk=10),
+    )
 
 
 @register(
@@ -2878,8 +2429,7 @@ def maintenance_ivfpq_refresh_decision(spark: SparkSession, sf_dir: str) -> Data
     collect and the ratio is arbitrary-precision integer arithmetic,
     restated HUGEINT-exact by the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
     return S.ivfpq_refresh_decision(
         spark, emb, _ivfpq_ingest_index_path(spark, sf_dir), split
     )
@@ -2891,23 +2441,7 @@ def maintenance_ivfpq_refresh_decision(spark: SparkSession, sf_dir: str) -> Data
 # to its chosen codeword, aggregated into the exact HUGEINT permille
 # ratio and the thresholded decision.
 ORACLE_SQL["maintenance_ivfpq_refresh_decision"] = f"""
-WITH split AS (SELECT CAST((max(vec_id) + 1) * 7 // 10 AS BIGINT) AS s FROM embeddings),
-hist AS (SELECT vec_id, embedding FROM embeddings
-         WHERE vec_id < (SELECT s FROM split)),
-{_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64, table="hist")},
-tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-allq AS (SELECT vec_id,
-                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
-         FROM embeddings),
-icells AS (
-  SELECT vec_id, cid AS cell FROM (
-    SELECT e.vec_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c.cid) AS rn
-    FROM allq e CROSS JOIN tcents c)
-  WHERE rn = 1),
+WITH {_IVFPQ_HIST_CELLS_CTES},
 allresid AS (
   SELECT e2.vec_id,
          [CAST(e2.embedding[i] AS DOUBLE) - CAST(t.cq[i] AS DOUBLE) / {_PQ_SCALE}
@@ -3047,7 +2581,7 @@ def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivfpq_rebalanced_index_build"] = _ivfpq_rebalanced_index_path
 
 
-@register("sim_ivfpq_rebalance_recall", _ivfpq_rebalance_recall_sql())
+@register("sim_ivfpq_rebalance_recall", _recall_sql(_ivfpq_versioned_sql(history_split=False)))
 def sim_ivfpq_rebalance_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the PQ tier AFTER the crash-atomic rebalance —
     pinning the measured 400‰ -> 420‰ rebalance gain (docs/ANN_EVAL.md)
@@ -3062,29 +2596,10 @@ def sim_ivfpq_rebalance_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic (catalog._ivfpq_versioned_sql)."""
     emb = load_table(spark, sf_dir, "embeddings")
     path = _ivfpq_rebalanced_index_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        IV.pq_adc_topk_ivfpq_versioned(
-            spark, emb, path, _TOPK_QUERY_IDS, topk=10
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
+    return _recall_at_k(
+        spark,
+        sf_dir,
+        IV.pq_adc_topk_ivfpq_versioned(spark, emb, path, _TOPK_QUERY_IDS, topk=10),
     )
 
 
@@ -3101,8 +2616,7 @@ def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
     ``sim_ivfpq_versioned_lifecycle_topk`` pins v3,
     ``maintenance_ivfpq_refresh_serve_topk`` serves the latest (v4)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -3136,7 +2650,7 @@ INDEX_BUILDERS["ivfpq_lifecycle_index_build"] = _ivfpq_versioned_lifecycle_path
 
 @register(
     "sim_ivfpq_versioned_lifecycle_topk",
-    _ivfpq_versioned_sql(history_split=True, output="topk"),
+    _ivfpq_versioned_sql(history_split=True),
 )
 def sim_ivfpq_versioned_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC serving after the versioned-PQ MAINTENANCE TRIAD —
@@ -3205,8 +2719,7 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
     fixture so the registered query serves a state that provably
     survived redelivery."""
     emb = load_table(spark, sf_dir, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
@@ -3239,10 +2752,7 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivf_streamed_ingest_build"] = _streamed_ivf_ingest_path
 
 
-@register(
-    "streaming_ann_ingest_recall",
-    None,  # shares sim_ivf_index_ingest's oracle by batch-invariance
-)
+@register("streaming_ann_ingest_recall", ORACLE_SQL["sim_ivf_index_ingest"])
 def streaming_ann_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 served from the STREAM-MAINTAINED versioned index —
     the online index-maintenance tier under the oracle gate: arrival
@@ -3258,37 +2768,17 @@ def streaming_ann_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     read (``sim_ivf_versioned_ingest_recall``), and the streaming
     twin."""
     path = _streamed_ivf_ingest_path(spark, sf_dir)
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
+    return _recall_at_k(
+        spark,
+        sf_dir,
         IV.cosine_topk_ivf_versioned(
             spark,
             path,
             _TOPK_QUERY_IDS,
             k=10,
             query_src=load_table(spark, sf_dir, "embeddings"),
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
+        ),
     )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-    )
-
-
-ORACLE_SQL["streaming_ann_ingest_recall"] = ORACLE_SQL["sim_ivf_index_ingest"]
 
 
 @register(
@@ -4438,7 +3928,7 @@ _BLOOM_H = (
 )
 
 _BLOOM_ORACLE = f"""
-WITH split AS (SELECT CAST((max(doc_id) + 1) * 7 // 10 AS BIGINT) AS s FROM documents),
+WITH {_split_cte("documents", "doc_id")},
 rows_i AS (SELECT unnest(range(3)) AS i),
 hist AS (SELECT md5(text) AS fp FROM documents, split WHERE doc_id < s),
 bits AS (SELECT DISTINCT {_BLOOM_H} AS bit FROM hist, rows_i),
@@ -4465,8 +3955,7 @@ def sketch_bloom_history_membership(spark: SparkSession, sf_dir: str) -> DataFra
     member can never read 0 (pinned by test), a 1 is "maybe" at the
     fill-ratio FP rate."""
     docs = load_table(spark, sf_dir, "documents")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(docs, "doc_id")
     fp = F.md5(F.col("text").cast("binary")).alias("fp")
     hist = docs.filter(F.col("doc_id") < split).select(fp)
     newd = docs.filter(F.col("doc_id") >= split).select("doc_id", fp)
@@ -5519,21 +5008,7 @@ def cdc_scd2_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "sim_lsh_recall_at_k",
-    f"""
-SELECT e.query_id,
-       CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST((1000 * SUM(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END))
-         // COUNT(*) AS BIGINT) AS recall_permille
-FROM ({ORACLE_SQL["sim_cosine_topk"]}) e
-LEFT JOIN ({ORACLE_SQL["sim_cosine_topk_lsh"]}) a
-  ON e.query_id = a.query_id AND e.neighbor_id = a.neighbor_id
-GROUP BY e.query_id
-""",
-)
+@register("sim_lsh_recall_at_k", _recall_sql(ORACLE_SQL["sim_cosine_topk_lsh"]))
 def sim_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality as a first-class query: recall@10 of the hyperplane-
     LSH top-k against the exact top-k, per query vector (integer
@@ -5541,27 +5016,8 @@ def sim_lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     when tuning bands/probes — the exact side is the deliberate
     baseline scan, the approx side the production path, and the
     comparison a tiny per-query join of two k-row sets."""
-    exact = QUERIES["sim_cosine_topk"](spark, sf_dir).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        QUERIES["sim_cosine_topk_lsh"](spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
+    return _recall_at_k(
+        spark, sf_dir, QUERIES["sim_cosine_topk_lsh"](spark, sf_dir)
     )
 
 
@@ -7839,10 +7295,10 @@ def maintenance_partition_overwrite_rebuild(
 
 @register(
     "schema_evolution_documents_source",
-    """
+    f"""
+WITH {_split_cte("documents", "doc_id")}
 SELECT doc_id, lang, n_chars,
-       CASE WHEN doc_id >= (SELECT CAST((MAX(doc_id) + 1) * 7 // 10 AS BIGINT)
-                            FROM documents)
+       CASE WHEN doc_id >= (SELECT s FROM split)
             THEN CASE WHEN n_chars >= 500 THEN 'long' ELSE 'short' END
        END AS quality_tier
 FROM documents
@@ -7963,7 +7419,7 @@ def partitioned_events_pruned_week(
 
 _STREAM_INGEST_ORACLE = f"""
 WITH {_SHINGLE_CTE},
-split AS (SELECT CAST((max(doc_id) + 1) * 7 // 10 AS BIGINT) AS s FROM documents),
+{_split_cte("documents", "doc_id")},
 j AS (
   SELECT doc_a, doc_b
   FROM p JOIN sz x ON doc_a = x.doc_id JOIN sz y ON doc_b = y.doc_id

@@ -42,6 +42,8 @@ document cluster) cannot go quadratic. All groupBys key on hashes or
 
 from __future__ import annotations
 
+import os
+import re
 from dataclasses import dataclass
 
 from pyspark import StorageLevel
@@ -55,6 +57,7 @@ from sressentials_spark.artifacts import (  # noqa: F401 (re-exported)
     tracked_persist,
 )
 from sressentials_spark.operators.text import tokens
+from sressentials_spark.scratch import register_scratch
 
 
 #: 60-bit md5-derived integer hash (DuckDB-reproducible).
@@ -1073,6 +1076,31 @@ def build_dedup_index(
         ex.unpersist()
         sig.unpersist()
     return t
+
+
+def dedup_index_tables(
+    spark, sf_dir: str, docs: DataFrame, split: int
+) -> DedupIndexTables:
+    """Build-once handle (disk artifact ``("dedup_index", sf_dir,
+    split)``) for the persisted bucketed dedup index over the history
+    slice ``doc_id < split`` — the one builder behind the catalog's
+    incremental ingest and the streaming ingest triage."""
+
+    def _build() -> DedupIndexTables:
+        app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+        tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
+        base = f"/tmp/sressentials_dedup_index/{app}/{tag}_{split}"
+        prefix = f"ssk_dedup_idx_{app}_{tag}_{split}"
+        # Per-applicationId path: a second process never trusts this
+        # one's files, and the registration below removes them at exit
+        # (table entries are session-scoped — the in-memory catalog
+        # dies with the JVM; only the files need cleanup).
+        register_scratch(f"/tmp/sressentials_dedup_index/{app}")
+        return build_dedup_index(
+            docs.filter(F.col("doc_id") < split), base, prefix
+        )
+
+    return get_or_build(spark, ("dedup_index", sf_dir, split), _build, tier="disk")
 
 
 def minhash_incremental_from_index(

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import get_or_build
 from sressentials_spark.scratch import scratch_dir
-from sressentials_spark.sources.tables import load_table
+from sressentials_spark.sources.tables import history_split, load_table
 
 #: File count for the rendered layouts — small but >1 so scans are
 #: genuinely multi-task.
@@ -70,8 +70,7 @@ def _render_documents_generations(spark: SparkSession, sf_dir: str) -> str:
     d = scratch_dir("sressentials_docs_gen_")
     out = os.path.join(d, "documents_gen")
     docs = load_table(spark, sf_dir, "documents")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(docs, "doc_id")
     (
         docs.filter(F.col("doc_id") < split)
         .repartition(2)

@@ -53,6 +53,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def history_split(frame: DataFrame, id_col: str) -> int:
+    """The 70/30 history split point over ``frame``'s ids (one scalar
+    collect): ids below it are the ingested history, the rest the
+    arriving batch, at any scale factor."""
+    return (frame.agg(F.max(id_col)).first()[0] + 1) * 7 // 10
+
+
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every testdata table as a temp view for the SQL API."""
     for name in TABLES:

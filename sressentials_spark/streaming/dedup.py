@@ -17,14 +17,13 @@ stateful shuffle carries 32 bytes per row, not documents.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import free, get_or_build, tracking
-from sressentials_spark.scratch import register_scratch, scratch_dir
-from sressentials_spark.sources.tables import load_table
+from sressentials_spark.scratch import scratch_dir
+from sressentials_spark.sources.tables import history_split, load_table
 from sressentials_spark.streaming import (
     drain_foreach_batch,
     dropped_by_watermark,
@@ -140,22 +139,8 @@ def run_minhash_ingest_stream(
     from sressentials_spark.operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents")
-    max_id = docs.agg(F.max("doc_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
-
-    def _build_index() -> D.DedupIndexTables:
-        app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-        tag = re.sub(r"\W", "_", os.path.basename(os.path.normpath(sf_dir)))
-        base = f"/tmp/sressentials_dedup_index/{app}/{tag}_{split}"
-        prefix = f"ssk_dedup_idx_{app}_{tag}_{split}"
-        register_scratch(f"/tmp/sressentials_dedup_index/{app}")
-        return D.build_dedup_index(
-            docs.filter(F.col("doc_id") < split), base, prefix
-        )
-
-    index = get_or_build(
-        spark, ("dedup_index", sf_dir, split), _build_index, tier="disk"
-    )
+    split = history_split(docs, "doc_id")
+    index = D.dedup_index_tables(spark, sf_dir, docs, split)
 
     def _replay() -> str:
         # The new-split documents as 4 id-ranged arrival files.

@@ -4,7 +4,8 @@ Mirrors the driver's correctness check (row count + schema + order-
 insensitive values) at sf0.001 so oracle drift is caught locally before
 the per-round sf0.01 run. The value compare is the driver simulator's
 own (``scripts/driver_sim.py``): stringified cells, so an int-vs-float
-drift fails here exactly as it fails the gate.
+drift fails here exactly as it fails the gate. Column order is pinned
+too, stricter than the gate's sorted-name compare.
 """
 
 from __future__ import annotations
@@ -44,7 +45,7 @@ def test_query_matches_oracle(spark, name):
     oracle_df = run_oracle(catalog.ORACLE_SQL[name])
     assert len(oracle_df) > 0, f"{name}: oracle returned 0 rows"
     assert len(spark_df) == len(oracle_df), f"{name}: row count mismatch"
-    assert sorted(spark_df.columns) == sorted(oracle_df.columns), f"{name}: columns"
+    assert list(spark_df.columns) == list(oracle_df.columns), f"{name}: columns"
     diag = strict_values_equal(spark_df, oracle_df)
     assert diag is None, f"{name}: {diag}"
 

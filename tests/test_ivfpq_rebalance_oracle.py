@@ -1,225 +1,27 @@
-"""Parity validation for the UNREGISTERED PQ-rebalance recall oracle
-(catalog._ivfpq_rebalance_recall_sql) — round-10 prep for the round-11
-registration (the rotation budget was exactly full this round): the
-Spark composition (versioned IVF-PQ build on the full corpus →
-crash-atomic rebalance → IVFADC serve from the post-split manifest →
-recall@10 vs the exact cosine top-k) must match the DuckDB restatement
-cell-for-cell, exactly the driver's compare. When this is promoted to
-a registered query, this test becomes its sf0.001 gate rehearsal for
-free (test_catalog_oracle covers all registered names)."""
+"""Parity check for the UNREGISTERED IVF version-history oracle
+(catalog._ivf_version_history_sql): the history verb's logical columns
+over the cosine lifecycle store must match the relational restatement
+cell-for-cell. The registered IVF / IVF-PQ lifecycle, delete and
+compact oracles are covered by tests/test_catalog_oracle.py."""
 
 from __future__ import annotations
 
-import duckdb
 import pandas as pd
 from pyspark.sql import functions as F
 
 from sressentials_spark import catalog
 from sressentials_spark.operators import ivf_versioned as V
-from sressentials_spark.sources.tables import TABLES, load_table
-
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _run_oracle(sql: str) -> pd.DataFrame:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
-    out = con.execute(sql).fetchdf()
-    con.close()
-    return out
-
-
-def test_pq_rebalance_recall_matches_oracle(spark, tmp_path):
-    emb = load_table(spark, SF_DIR, "embeddings")
-    base = str(tmp_path / "pq")
-    V.build_ivfpq_index_versioned(emb, base)
-    stats = V.rebalance_ivfpq_index_versioned(spark, emb, base)
-    assert stats["cells_split"] >= 1
-
-    exact = catalog.QUERIES["sim_cosine_topk"](spark, SF_DIR).select(
-        "query_id", "neighbor_id"
-    )
-    approx = (
-        V.pq_adc_topk_ivfpq_versioned(
-            spark, emb, base, catalog._TOPK_QUERY_IDS, topk=10
-        )
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    got = (
-        exact.join(approx, ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.sum(F.coalesce("hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-        .select(
-            "query_id",
-            "n_exact",
-            "n_hits",
-            F.expr("(1000 * n_hits) div n_exact").alias("recall_permille"),
-        )
-        .toPandas()
-        .sort_values("query_id")
-        .reset_index(drop=True)
-    )
-    want = (
-        _run_oracle(catalog._ivfpq_rebalance_recall_sql())
-        .sort_values("query_id")
-        .reset_index(drop=True)
-    )
-    assert list(got.columns) == list(want.columns)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_exact=True
-    )
-
-
-def test_versioned_delete_topk_matches_oracle(spark, tmp_path):
-    """Parity for the UNREGISTERED delete-serve oracle
-    (catalog._ivf_versioned_delete_topk_sql): build the versioned
-    cosine-IVF index on the full corpus, delete query 0's pre-delete top-3
-    IVF-served neighbors, serve — must match the restatement (victims excluded
-    from candidates only; seeds/probes still full-corpus) exactly, and
-    must visibly differ from the pre-delete answer."""
-    emb = load_table(spark, SF_DIR, "embeddings")
-    base = str(tmp_path / "ver")
-    V.build_ivf_index_versioned(emb, base)
-    pre = (
-        V.cosine_topk_ivf_versioned(
-            spark, base, catalog._TOPK_QUERY_IDS, k=10, query_src=emb
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    victims = [
-        int(r["neighbor_id"])
-        for r in pre[(pre["query_id"] == 0) & (pre["rank"] <= 3)]
-        .to_dict("records")
-    ]
-    assert len(victims) == 3
-    out = V.delete_ivf_index_versioned(spark, base, victims)
-    assert out["deleted_rows"] == 3 and out["version"] == 2
-    got = (
-        V.cosine_topk_ivf_versioned(
-            spark, base, catalog._TOPK_QUERY_IDS, k=10, query_src=emb
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert not got.equals(pre)  # the delete visibly changed the answer
-    assert not set(victims) & set(got["neighbor_id"])
-    want = (
-        _run_oracle(catalog._ivf_versioned_delete_topk_sql())
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert list(got.columns) == list(want.columns)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_exact=True
-    )
-
-
-def test_versioned_pq_lifecycle_topk_matches_oracle(spark, tmp_path):
-    """Parity for the UNREGISTERED full versioned-PQ lifecycle oracle
-    (catalog._ivfpq_versioned_sql(history_split=True, output='topk')):
-    a bare index TRAINED AND BUILT on the oldest 70% migrates into the
-    manifest store (import), the newest 30% ingests under the frozen
-    artifacts, the merged population rebalances (every oversized cell
-    split, members re-encoded under frozen books), and IVFADC serving
-    from the final version must match the single DuckDB restatement of
-    all three lifecycle steps composed."""
-    from sressentials_spark.operators import similarity as S
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
-    bare = S.build_ivfpq_index(
-        emb.filter(F.col("vec_id") < split), str(tmp_path / "bare")
-    )
-    base = str(tmp_path / "ver")
-    V.import_ivfpq_index_versioned(spark, bare, base)
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= split), base)
-    stats = V.rebalance_ivfpq_index_versioned(spark, emb, base)
-    assert stats["cells_split"] >= 1
-    assert V.ivf_index_versions(base) == [1, 2, 3]
-    got = (
-        V.pq_adc_topk_ivfpq_versioned(
-            spark, emb, base, catalog._TOPK_QUERY_IDS, topk=10
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    want = (
-        _run_oracle(
-            catalog._ivfpq_versioned_sql(history_split=True, output="topk")
-        )
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert list(got.columns) == list(want.columns)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_exact=True
-    )
-
-
-def test_versioned_compact_serve_matches_lifecycle_oracle(spark, tmp_path):
-    """Round-11 prep for a round-12 registration (the r11 rotation
-    budget closed exactly full): COMPACT is the one table-format verb
-    left without an oracle row. Serving the cosine lifecycle index
-    (build 70% -> ingest 30% -> rebalance) AFTER compacting its
-    fragmented cells must match the registered lifecycle oracle
-    VERBATIM — compaction swaps files, never rows/cells/centroids, so
-    the serve is bit-equal by construction and the registration can
-    share ``ORACLE_SQL['sim_ivf_versioned_lifecycle_topk']`` the same
-    way refresh shares the full-build oracle. This test is the sf0.001
-    gate rehearsal for that row."""
-    from sressentials_spark.operators import similarity as S  # noqa: F401
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
-    base = str(tmp_path / "ver")
-    V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= split), base)
-    stats = V.rebalance_ivf_index_versioned(spark, base)
-    assert stats["cells_split"] >= 1
-    out = V.compact_ivf_index_versioned(spark, base)
-    assert out["cells_compacted"] >= 1  # the verb actually ran
-    assert out["files_after"] < out["files_before"]
-    got = (
-        V.cosine_topk_ivf_versioned(
-            spark, base, catalog._TOPK_QUERY_IDS, k=10, query_src=emb
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    want = (
-        _run_oracle(catalog.ORACLE_SQL["sim_ivf_versioned_lifecycle_topk"])
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    assert list(got.columns) == list(want.columns)
-    pd.testing.assert_frame_equal(
-        got, want, check_dtype=False, check_exact=True
-    )
+from sressentials_spark.sources.tables import history_split, load_table
+from tests.test_catalog_oracle import SF_DIR, run_oracle
 
 
 def test_ivf_version_history_matches_oracle(spark, tmp_path):
-    """Round-11 prep for a future `maintenance_ivf_version_history`
-    registration: the history verb's LOGICAL columns (version, n_rows,
-    n_cells) over the cosine lifecycle store must match the relational
+    """The history verb's LOGICAL columns (version, n_rows, n_cells)
+    over the cosine lifecycle store must match the relational
     restatement — history-slice rows at v1, full-corpus rows at v2/v3,
     and v3's cell growth = the split decision's oversized count."""
     emb = load_table(spark, SF_DIR, "embeddings")
-    max_id = emb.agg(F.max("vec_id")).first()[0]
-    split = (max_id + 1) * 7 // 10
+    split = history_split(emb, "vec_id")
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
     V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= split), base)
@@ -233,7 +35,7 @@ def test_ivf_version_history_matches_oracle(spark, tmp_path):
         .reset_index(drop=True)
     )
     want = (
-        _run_oracle(catalog._ivf_version_history_sql())
+        run_oracle(catalog._ivf_version_history_sql())
         .sort_values("version")
         .reset_index(drop=True)
     )
