@@ -154,9 +154,6 @@ ALLOWED: dict[str, dict[str, str]] = {
     "sim_ivf_index_ingest": {
         "BroadcastNestedLoopJoin": "inherits the exact-baseline side it evaluates"
     },
-    "sim_ivf_versioned_ingest_recall": {
-        "BroadcastNestedLoopJoin": "inherits the exact-baseline side it evaluates"
-    },
     "sim_ivfpq_recall_at_k": {
         "BroadcastNestedLoopJoin": "inherits the exact-baseline side it evaluates"
     },

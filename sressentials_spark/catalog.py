@@ -1200,7 +1200,7 @@ scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
 #: The rebalance split decision over ``cells``: a cell holding more
 #: than IVF_REBALANCE_PCT% of the uniform share is oversized.
 _IVF_OVERSIZED_CTES = f"""
-thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
+thresh AS (SELECT CAST(COUNT(*) * {IV.IVF_REBALANCE_PCT}
                        // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
            FROM embeddings),
 oversized AS (
@@ -1221,7 +1221,7 @@ chseeds AS (
   SELECT cell AS parent, vec_id AS cid, embedding AS cv FROM (
     SELECT c.cell, c.vec_id, c.embedding,
            ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{S.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
+             ('0x' || substring(md5('{IV.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
              c.vec_id) AS rn
     FROM cells c JOIN oversized o ON o.cell = c.cell)
   WHERE rn <= 2
@@ -1475,84 +1475,43 @@ def sim_ivf_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the 70/30 build-then-ingest IVF index:
-    history slice builds, batch slice appends under the FROZEN
-    centroids, append-only enforced by a size+mtime snapshot."""
-    import glob as _glob
-    import os as _os
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    split = history_split(emb, "vec_id")
-
-    def _build() -> str:
-        from sressentials_spark.scratch import scratch_dir
-
-        base = S.build_ivf_index(
-            emb.filter(F.col("vec_id") < split),
-            scratch_dir("sressentials_ivf_ingest_"),
-        )
-        pre = {
-            p: (_os.path.getsize(p), _os.path.getmtime(p))
-            for p in _glob.glob(f"{base}/cell=*/*.parquet")
-        }
-        S.ingest_ivf_index(emb.filter(F.col("vec_id") >= split), base)
-        post = {
-            p: (_os.path.getsize(p), _os.path.getmtime(p))
-            for p in _glob.glob(f"{base}/cell=*/*.parquet")
-        }
-        changed = [p for p in pre if post.get(p) != pre[p]]
-        if changed or len(post) <= len(pre):
-            raise ValueError(
-                f"ingest must only append new list files: changed="
-                f"{changed[:3]} pre={len(pre)} post={len(post)}"
-            )
-        return base
-
-    return get_or_build(spark, ("ivf_ingest_index", sf_dir, split), _build, tier="disk")
-
-
-INDEX_BUILDERS["ivf_ingest_index_build"] = _ivf_ingest_index_path
-
-
 @register("sim_ivf_index_ingest", _recall_sql(_ivf_topk_sql(history_split=True)))
 def sim_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF index maintenance — the ANN twin of
     ``dedup_incremental_ingest``: the first 70% of the corpus (by
-    vec_id) builds the persisted cell-partitioned index, the newest
-    30% arrives as an ingest batch and is APPENDED into the inverted
-    lists using the centroids FROZEN at build time
-    (:func:`similarity.ingest_ivf_index` — assign the batch, append
-    its cell partitions; existing list files are never read or
-    rewritten, enforced here by a size+mtime snapshot and pinned
-    independently in tests/test_similarity_ivf.py). Serving then reads
-    the merged lists exactly like the rebuild-only path. Returns
-    recall@10 of the post-ingest search against the exact top-k over
-    the FULL corpus — the number that tells an operator when centroid
+    vec_id) builds the manifest-versioned index (v1), the newest 30%
+    arrives as an ingest batch and is APPENDED as one committed
+    version (v2) under the centroids FROZEN at build time
+    (:func:`ivf_versioned.ingest_ivf_index_versioned` — assign the
+    batch, commit its lists; no v1 file is read or rewritten, pinned in
+    tests/test_ivf_versioned.py). Served as a TIME-TRAVEL read of v2
+    while the lifecycle store's later versions (rebalance v3, compact
+    v4) are live. Returns recall@10 against the exact top-k over the
+    FULL corpus — the number that tells an operator when centroid
     drift has accumulated enough to warrant the periodic re-seed
     rebuild. Per-ingest cost at 100 TB: O(batch), never O(index)."""
-    path = _ivf_ingest_index_path(spark, sf_dir)
     return _recall_at_k(
-        spark,
-        sf_dir,
-        S.cosine_topk_ivf_from_index(spark, path, _TOPK_QUERY_IDS, k=10),
+        spark, sf_dir, _ivf_versioned_topk(spark, sf_dir, _ivf_versioned_index_path, 2)
     )
 
 
 def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the built-then-rebalanced IVF index
-    (build over the full corpus, then split every oversized cell)."""
+    """Build-once handle for the built-then-rebalanced IVF index: a
+    versioned build over the full corpus (v1), then every oversized
+    cell split in one crash-atomic commit (v2)."""
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
 
-        base = S.build_ivf_index(
-            load_table(spark, sf_dir, "embeddings"),
-            scratch_dir("sressentials_ivf_rebal_"),
-        )
-        stats = S.rebalance_ivf_index(spark, base)
+        base = scratch_dir("sressentials_ivf_rebal_")
+        IV.build_ivf_index_versioned(load_table(spark, sf_dir, "embeddings"), base)
+        stats = IV.rebalance_ivf_index_versioned(spark, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
+        if IV.ivf_index_versions(base) != [1, 2]:
+            raise ValueError(
+                f"rebalance must commit v2: {IV.ivf_index_versions(base)}"
+            )
         return base
 
     return get_or_build(spark, ("ivf_rebalance_index", sf_dir), _build, tier="disk")
@@ -1561,40 +1520,60 @@ def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
 INDEX_BUILDERS["ivf_rebalance_index_build"] = _ivf_rebalance_index_path
 
 
+def _ivf_versioned_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    path_of: Callable[[SparkSession, str], str],
+    version: int | None = None,
+) -> DataFrame:
+    """IVF top-10 of the query set served from the versioned store
+    ``path_of`` builds, at ``version`` (default latest), with the query
+    vectors looked up in the embeddings table."""
+    return IV.cosine_topk_ivf_versioned(
+        spark,
+        path_of(spark, sf_dir),
+        _TOPK_QUERY_IDS,
+        k=10,
+        version=version,
+        query_src=load_table(spark, sf_dir, "embeddings"),
+    )
+
+
 @register(
     "sim_ivf_rebalance", _recall_sql(_ivf_rebalanced_topk_sql(history_split=False))
 )
 def sim_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF cell REBALANCE — the third lifecycle op (build -> ingest ->
-    rebalance): every cell whose inverted list outgrew 115% of the
-    uniform share splits into two hash-seeded children, its members
-    re-pointed to the nearer child; the rest of the index is neither
-    read nor rewritten (pinned in tests/test_similarity_ivf.py via
-    file sizes + mtimes), and the centroid sidecar is updated so
-    queries probe the post-split cell structure at query time.
+    """IVF cell REBALANCE — the lifecycle op that follows ingest: every
+    cell whose inverted list outgrew 115% of the uniform share splits
+    into two hash-seeded children, its members re-pointed to the
+    nearer child, and the split publishes as ONE crash-atomic manifest
+    version (:func:`ivf_versioned.rebalance_ivf_index_versioned`; the
+    rest of the index is neither read nor rewritten, pinned in
+    tests/test_ivf_versioned.py via file sizes + mtimes). Queries probe
+    the post-split centroid set that rides in the same manifest.
     Returns recall@10 of the rebalanced search against the exact
     top-k — recall parity with the pre-split index at equal nprobe is
     the acceptance bar (docs/ANN_EVAL.md)."""
-    path = _ivf_rebalance_index_path(spark, sf_dir)
     return _recall_at_k(
-        spark,
-        sf_dir,
-        S.cosine_topk_ivf_from_index(
-            spark, path, _TOPK_QUERY_IDS, k=10, probe_from_centroids=True
-        ),
+        spark, sf_dir, _ivf_versioned_topk(spark, sf_dir, _ivf_rebalance_index_path)
     )
 
 
 def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once handle for the CRASH-ATOMIC (manifest-versioned) IVF
-    index exercised across its whole lifecycle: v1 = build on the
-    oldest 70% of the corpus, v2 = ingest the newest 30% under the
-    frozen v1 centroids, v3 = rebalance (every oversized cell split).
-    Every transition is one atomically-linked manifest commit
-    (operators/ivf_versioned.py — kill-between-steps model-tested in
-    tests/test_ivf_versioned.py), so a reader can never observe a
-    half-applied lifecycle step; the guard asserts all three versions
-    committed and at least one cell actually split."""
+    index exercised across its whole lifecycle on ONE store: v1 =
+    build on the oldest 70% of the corpus, v2 = ingest the newest 30%
+    under the frozen v1 centroids, v3 = rebalance (every oversized cell
+    split), v4 = COMPACT (every cell the ingest/rebalance commits left
+    fragmented rewritten into size-targeted files). Every transition
+    is one atomically-linked manifest commit (operators/ivf_versioned.py
+    — kill-between-steps model-tested in tests/test_ivf_versioned.py),
+    so a reader can never observe a half-applied step, and each
+    lifecycle state is served as a version-pinned read:
+    ``sim_ivf_index_ingest`` pins v2, ``sim_ivf_versioned_lifecycle_topk``
+    pins v3, ``maintenance_ivf_compact_serve_topk`` reads the latest.
+    The guards assert at least one cell actually split, compaction ran
+    and shrank the file count, and exactly four versions committed."""
     emb = load_table(spark, sf_dir, "embeddings")
     split = history_split(emb, "vec_id")
 
@@ -1607,9 +1586,12 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
         stats = IV.rebalance_ivf_index_versioned(spark, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
-        if IV.ivf_index_versions(base) != [1, 2, 3]:
+        out = IV.compact_ivf_index_versioned(spark, base)
+        if out["cells_compacted"] < 1 or out["files_after"] >= out["files_before"]:
+            raise ValueError(f"compaction did not run or did not shrink: {out}")
+        if IV.ivf_index_versions(base) != [1, 2, 3, 4]:
             raise ValueError(
-                f"lifecycle must commit 3 versions: {IV.ivf_index_versions(base)}"
+                f"lifecycle must commit 4 versions: {IV.ivf_index_versions(base)}"
             )
         return base
 
@@ -1626,65 +1608,19 @@ INDEX_BUILDERS["ivf_versioned_index_build"] = _ivf_versioned_index_path
 )
 def sim_ivf_versioned_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-k served from the CRASH-ATOMIC manifest-versioned index
-    after its full lifecycle (build 70% -> ingest 30% -> rebalance),
-    putting the versioned tier under the oracle gate end-to-end: the
-    result must equal a relational restatement of all three lifecycle
-    steps composed. Versioned-tier properties on the hook: centroids
-    ride INSIDE the atomically-published manifest (probes derive from
-    the same committed object as the lists — no sidecar race), the
-    split decision reads only manifest row counts, and the query scan
-    plans only the probed cells' files (manifest-level pruning). The
-    crash semantics themselves are model-tested by killing the
-    rebalance after every mutation step (tests/test_ivf_versioned.py);
-    this query pins the VALUES the surviving commits serve."""
-    path = _ivf_versioned_index_path(spark, sf_dir)
-    return IV.cosine_topk_ivf_versioned(
-        spark,
-        path,
-        _TOPK_QUERY_IDS,
-        k=10,
-        query_src=load_table(spark, sf_dir, "embeddings"),
-    )
-
-
-def _ivf_compacted_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the compact-then-serve fixture: the cosine
-    lifecycle (build oldest 70% -> ingest newest 30% -> rebalance) run
-    on its OWN store — the shared ``_ivf_versioned_index_path`` store
-    must stay at v3 for ``sim_ivf_versioned_lifecycle_topk`` — and then
-    COMPACTed (v4): every cell fragmented by the ingest/rebalance
-    commits is rewritten into size-targeted files and published as ONE
-    crash-atomic manifest swap. The builder asserts the verb really ran
-    (>= 1 cell compacted, file count strictly shrank, 4 versions
-    committed) so a silently non-compacting store can never serve the
-    registered query."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    split = history_split(emb, "vec_id")
-
-    def _build() -> str:
-        from sressentials_spark.scratch import scratch_dir
-
-        base = scratch_dir("sressentials_ivf_compacted_")
-        IV.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
-        IV.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= split), base)
-        stats = IV.rebalance_ivf_index_versioned(spark, base)
-        if stats["cells_split"] < 1:
-            raise ValueError(f"fixture produced no oversized cell: {stats}")
-        out = IV.compact_ivf_index_versioned(spark, base)
-        if out["cells_compacted"] < 1 or out["files_after"] >= out["files_before"]:
-            raise ValueError(f"compaction did not run or did not shrink: {out}")
-        if IV.ivf_index_versions(base) != [1, 2, 3, 4]:
-            raise ValueError(
-                f"lifecycle+compact must commit 4 versions: {IV.ivf_index_versions(base)}"
-            )
-        return base
-
-    return get_or_build(
-        spark, ("ivf_compacted_index", sf_dir, split), _build, tier="disk"
-    )
-
-
-INDEX_BUILDERS["ivf_compacted_index_build"] = _ivf_compacted_index_path
+    after build 70% -> ingest 30% -> rebalance, putting the versioned
+    tier under the oracle gate end-to-end: the result must equal a
+    relational restatement of all three lifecycle steps composed.
+    Served as a TIME-TRAVEL read of v3 while v4 (the compaction) is
+    live. Versioned-tier properties on the hook: centroids ride INSIDE
+    the atomically-published manifest (probes derive from the same
+    committed object as the lists — no sidecar race), the split
+    decision reads only manifest row counts, and the query scan plans
+    only the probed cells' files (manifest-level pruning). The crash
+    semantics themselves are model-tested by killing the rebalance
+    after every mutation step (tests/test_ivf_versioned.py); this
+    query pins the VALUES the surviving commits serve."""
+    return _ivf_versioned_topk(spark, sf_dir, _ivf_versioned_index_path, 3)
 
 
 @register(
@@ -1695,26 +1631,19 @@ def maintenance_ivf_compact_serve_topk(spark: SparkSession, sf_dir: str) -> Data
     """The COMPACT verb end-to-end — the last table-format maintenance
     verb whose SERVED output gets an oracle row (append/ingest,
     rebalance, delete, refresh and vacuum survivors are already gated):
-    on a cosine lifecycle store whose ingest + rebalance commits left
-    hot cells fragmented across per-batch files,
+    on the cosine lifecycle store, whose ingest + rebalance commits
+    left hot cells fragmented across per-batch files,
     ``compact_ivf_index_versioned`` rewrites each fragmented cell into
     size-targeted files and publishes the swap as ONE crash-atomic
-    manifest version. Compaction swaps FILES, never rows/cells/
+    manifest version (v4). Compaction swaps FILES, never rows/cells/
     centroids, so serving from the compacted latest must equal the
-    pre-compaction lifecycle answer bit-for-bit — this query SHARES
-    ``sim_ivf_versioned_lifecycle_topk``'s oracle verbatim (the same
-    zero-residue statement ``maintenance_ivfpq_refresh_serve_topk``
+    pre-compaction lifecycle answer (v3) bit-for-bit — this query
+    SHARES ``sim_ivf_versioned_lifecycle_topk``'s oracle verbatim (the
+    same zero-residue statement ``maintenance_ivfpq_refresh_serve_topk``
     makes by sharing the full-build oracle). The crash atomicity of
     the verb itself is kill-injection model-tested in
     tests/test_ivf_versioned.py."""
-    path = _ivf_compacted_index_path(spark, sf_dir)
-    return IV.cosine_topk_ivf_versioned(
-        spark,
-        path,
-        _TOPK_QUERY_IDS,
-        k=10,
-        query_src=load_table(spark, sf_dir, "embeddings"),
-    )
+    return _ivf_versioned_topk(spark, sf_dir, _ivf_versioned_index_path)
 
 
 ORACLE_SQL["maintenance_ivf_compact_serve_topk"] = ORACLE_SQL[
@@ -1724,9 +1653,9 @@ ORACLE_SQL["maintenance_ivf_compact_serve_topk"] = ORACLE_SQL[
 
 def _ivf_version_history_sql() -> str:
     """Restatement of the LOGICAL columns of ``ivf_index_history``
-    over the shared cosine lifecycle store (build 70% -> ingest 30% ->
-    rebalance), parity-checked in tests/test_ivfpq_rebalance_oracle.py
-    and not yet a registered query. v1 rows = the history slice, v2/v3
+    over the cosine lifecycle (build 70% -> ingest 30% -> rebalance),
+    parity-checked in tests/test_ivfpq_rebalance_oracle.py and not yet
+    a registered query. v1 rows = the history slice, v2/v3
     rows = the full corpus, and v3's cell count grows by exactly the
     split decision's oversized-cell count (each split retires one cell
     and seeds two children); ``n_files`` and the stamp column are
@@ -1748,55 +1677,73 @@ SELECT * FROM (
 """
 
 
-def _ivfpq_adc_sql(*, m: int = S.PQ_M, limit: int = 10) -> str:
-    """Full IVFADC restatement, parameterized on the PQ subspace count
-    ``m`` and the per-query rank cut ``limit``: trained coarse k-means
-    cells -> integer-L2 probe selection -> residuals vs the probed
-    cell's centroid -> m residual-trained codebooks -> per-(query,
-    cell, subspace) distance terms -> fixed left-associated sum. The
-    default (m=PQ_M) IS the ``sim_pq_adc_topk_ivf`` oracle; the rerank
-    tier composes a finer m=8 grid at limit=50 (docs/ANN_EVAL.md: the
-    M sweep — ADC ranking inside probed cells is the knob that moves
-    shortlist quality, so only the rerank index pays the finer grid)."""
-    dsub = 64 // m
-    total = "d0"
-    for i in range(1, m):
-        total = f"({total} + d{i})"
-    return f"""
-WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
-tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-icells AS (SELECT vec_id, cluster AS cell FROM afin),
-iprobes AS (
-  SELECT vec_id AS query_id, cid AS pcell FROM (
-    SELECT e.vec_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c.cid) AS rn
-    FROM emb e CROSS JOIN tcents c
-    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
-  WHERE rn <= {S.IVF_NPROBE}),
-cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
-         FROM iprobes p JOIN icells c
-           ON c.cell = p.pcell AND c.vec_id <> p.query_id),
-pqr_src AS (
+def _pqr_codes_ctes(*, m: int = S.PQ_M, history_split: bool = False) -> str:
+    """Residual PQ (CTEs, no leading WITH): ``pqr_src`` holds every
+    row's raw embedding minus its home cell's coarse centroid
+    (``icells`` -> ``tcents``); codebooks ``pqr_books`` are trained on
+    every residual, or on the oldest-70% residuals only with
+    ``history_split`` (the frozen-codebook ingest state), and codes
+    ``pqr_codes`` cover every row."""
+    src = f"""pqr_src AS (
   SELECT e2.vec_id,
          [CAST(e2.embedding[i] AS DOUBLE) - CAST(t.cq[i] AS DOUBLE) / {_PQ_SCALE}
           for i in generate_series(1, 64)] AS rv
   FROM embeddings e2
   JOIN icells c ON c.vec_id = e2.vec_id
   JOIN tcents t ON t.cid = c.cell
-),
-{S.pq_train_sql_ctes(src="pqr_src", vec="rv", prefix="pqr", m=m)},
+)"""
+    hist = (
+        """
+histresid AS (SELECT vec_id, rv FROM pqr_src
+              WHERE vec_id < (SELECT s FROM split)),"""
+        if history_split
+        else ""
+    )
+    train = S.pq_train_sql_ctes(
+        src="pqr_src", vec="rv", prefix="pqr", m=m,
+        train_src="histresid" if history_split else None,
+    )
+    return f"{src},{hist}\n{train}"
+
+
+def _ivfadc_tail_sql(
+    *, queries: str, cents: str, cells: str, codes: str,
+    m: int = S.PQ_M, limit: int = 10,
+) -> str:
+    """The IVFADC serve tail (CTEs ``iprobes`` .. ``rr`` plus the final
+    SELECT) over named CTEs: ``queries(vec_id, q)`` the quantized
+    vectors, ``cents(cid, cq)`` the coarse centroids, ``cells(vec_id,
+    cell)`` the inverted lists and ``codes(vec_id, m, code)`` the PQ
+    codes under ``pqr_books``. Integer-L2 probe selection -> candidates
+    in the probed cells -> per-(query, cell, subspace) residual
+    distance terms -> fixed left-associated sum -> top ``limit`` per
+    query."""
+    dsub = 64 // m
+    total = "d0"
+    for i in range(1, m):
+        total = f"({total} + d{i})"
+    return f"""iprobes AS (
+  SELECT vec_id AS query_id, cid AS pcell FROM (
+    SELECT e.vec_id, c.cid,
+           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
+                            for j in generate_series(1, 64)]) AS BIGINT),
+             c.cid) AS rn
+    FROM {queries} e CROSS JOIN {cents} c
+    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
+  WHERE rn <= {S.IVF_NPROBE}),
+cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
+         FROM iprobes p JOIN {cells} c
+           ON c.cell = p.pcell AND c.vec_id <> p.query_id),
 rqd AS (SELECT p.query_id, p.pcell, b.m, b.cid AS k,
                {_pq_resid_term_sql('q.embedding', 't.cq', 'b', dsub=dsub)} AS dq
         FROM iprobes p
         JOIN embeddings q ON q.vec_id = p.query_id
-        JOIN tcents t ON t.cid = p.pcell
+        JOIN {cents} t ON t.cid = p.pcell
         CROSS JOIN pqr_books b),
 p2 AS (SELECT cand.query_id, cand.neighbor_id, rqd.m, rqd.dq
        FROM cand
-       JOIN pqr_codes c ON c.vec_id = cand.neighbor_id
+       JOIN {codes} c ON c.vec_id = cand.neighbor_id
        JOIN rqd ON rqd.query_id = cand.query_id
               AND rqd.pcell = cand.pcell
               AND rqd.m = c.m AND rqd.k = c.code),
@@ -1813,6 +1760,27 @@ rr AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
        FROM r)
 SELECT query_id, neighbor_id, adc_dist, rank FROM rr WHERE rank <= {limit}
 """
+
+
+def _ivfpq_adc_sql(*, m: int = S.PQ_M, limit: int = 10) -> str:
+    """Full IVFADC restatement, parameterized on the PQ subspace count
+    ``m`` and the per-query rank cut ``limit``: trained coarse k-means
+    cells -> integer-L2 probe selection -> residuals vs the probed
+    cell's centroid -> m residual-trained codebooks -> per-(query,
+    cell, subspace) distance terms -> fixed left-associated sum. The
+    default (m=PQ_M) IS the ``sim_pq_adc_topk_ivf`` oracle; the rerank
+    tier composes a finer m=8 grid at limit=50 (docs/ANN_EVAL.md: the
+    M sweep — ADC ranking inside probed cells is the knob that moves
+    shortlist quality, so only the rerank index pays the finer grid)."""
+    return f"""
+WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
+tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
+icells AS (SELECT vec_id, cluster AS cell FROM afin),
+{_pqr_codes_ctes(m=m)},
+{_ivfadc_tail_sql(
+    queries="emb", cents="tcents", cells="icells", codes="pqr_codes",
+    m=m, limit=limit,
+)}"""
 
 
 @register(
@@ -1969,9 +1937,6 @@ def _ivfpq_versioned_sql(*, history_split: bool) -> str:
     restatement, then the split on the merged population)."""
     m = S.PQ_M
     dsub = 64 // m
-    total = "d0"
-    for i in range(1, m):
-        total = f"({total} + d{i})"
     mq = (
         f"[CAST(ROUND(CAST(t.rv[_m.m*{dsub}+j] AS DOUBLE) * {_PQ_SCALE})"
         f" AS BIGINT) for j in generate_series(1, {dsub})]"
@@ -1979,9 +1944,6 @@ def _ivfpq_versioned_sql(*, history_split: bool) -> str:
     if history_split:
         head = f"""
 WITH {_IVFPQ_HIST_CELLS_CTES},"""
-        histresid = """
-histresid AS (SELECT vec_id, rv FROM pqr_src
-              WHERE vec_id < (SELECT s FROM split)),"""
     else:
         head = f"""
 WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
@@ -1990,13 +1952,8 @@ allq AS (SELECT vec_id,
                 [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
          FROM embeddings),
 icells AS (SELECT vec_id, cluster AS cell FROM afin),"""
-        histresid = ""
-    train = S.pq_train_sql_ctes(
-        src="pqr_src", vec="rv", prefix="pqr", m=m,
-        train_src="histresid" if history_split else None,
-    )
     return f"""{head}
-thresh AS (SELECT CAST(COUNT(*) * {S.IVF_REBALANCE_PCT}
+thresh AS (SELECT CAST(COUNT(*) * {IV.IVF_REBALANCE_PCT}
                        // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
            FROM embeddings),
 oversized AS (
@@ -2007,7 +1964,7 @@ chseeds AS (
          vec_id + {IV.IVFPQ_CHILD_ID_BASE} AS cid, q AS cq FROM (
     SELECT c.cell, c.vec_id, e.q,
            ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{S.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
+             ('0x' || substring(md5('{IV.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
              c.vec_id) AS rn
     FROM icells c JOIN oversized o ON o.cell = c.cell
     JOIN allq e ON e.vec_id = c.vec_id)
@@ -2037,15 +1994,7 @@ cents2 AS (
   UNION ALL
   SELECT cid, cq FROM chseeds
 ),
-pqr_src AS (
-  SELECT e2.vec_id,
-         [CAST(e2.embedding[i] AS DOUBLE) - CAST(t.cq[i] AS DOUBLE) / {_PQ_SCALE}
-          for i in generate_series(1, 64)] AS rv
-  FROM embeddings e2
-  JOIN icells c ON c.vec_id = e2.vec_id
-  JOIN tcents t ON t.cid = c.cell
-),{histresid}
-{train},
+{_pqr_codes_ctes(history_split=history_split)},
 movedresid AS (
   SELECT mv.vec_id,
          [CAST(e2.embedding[i] AS DOUBLE) - CAST(s.cq[i] AS DOUBLE) / {_PQ_SCALE}
@@ -2072,44 +2021,7 @@ codes2 AS (
   UNION ALL
   SELECT vec_id, m, code FROM moved_codes
 ),
-iprobes AS (
-  SELECT vec_id AS query_id, cid AS pcell FROM (
-    SELECT e.vec_id, c2.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c2.cq[j]) * (e.q[j] - c2.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c2.cid) AS rn
-    FROM allq e CROSS JOIN cents2 c2
-    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
-  WHERE rn <= {S.IVF_NPROBE}),
-cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
-         FROM iprobes p JOIN cells2 c
-           ON c.cell = p.pcell AND c.vec_id <> p.query_id),
-rqd AS (SELECT p.query_id, p.pcell, b.m, b.cid AS k,
-               {_pq_resid_term_sql('q.embedding', 't.cq', 'b', dsub=dsub)} AS dq
-        FROM iprobes p
-        JOIN embeddings q ON q.vec_id = p.query_id
-        JOIN cents2 t ON t.cid = p.pcell
-        CROSS JOIN pqr_books b),
-p2 AS (SELECT cand.query_id, cand.neighbor_id, rqd.m, rqd.dq
-       FROM cand
-       JOIN codes2 c ON c.vec_id = cand.neighbor_id
-       JOIN rqd ON rqd.query_id = cand.query_id
-              AND rqd.pcell = cand.pcell
-              AND rqd.m = c.m AND rqd.k = c.code),
-g AS (SELECT query_id, neighbor_id,
-             {', '.join(
-                 f'MAX(CASE WHEN m = {i} THEN dq END) AS d{i}'
-                 for i in range(m)
-             )}
-      FROM p2 GROUP BY query_id, neighbor_id),
-r AS (SELECT query_id, neighbor_id,
-             {total} AS adc_dist FROM g),
-rr AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       FROM r)
-SELECT query_id, neighbor_id, adc_dist, rank FROM rr WHERE rank <= 10
-"""
+{_ivfadc_tail_sql(queries="allq", cents="cents2", cells="cells2", codes="codes2")}"""
 
 
 @register(
@@ -2138,35 +2050,6 @@ def sim_ivfpq_versioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ivfpq_versioned_index_path(spark, sf_dir),
         _TOPK_QUERY_IDS,
         topk=10,
-    )
-
-
-@register("sim_ivf_versioned_ingest_recall", ORACLE_SQL["sim_ivf_index_ingest"])
-def sim_ivf_versioned_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@10 of the versioned tier's INGEST verb — the oracle row
-    the r9 verdict asked for (the verb was model-tested only): serve
-    the lifecycle index AT VERSION 2, i.e. TIME-TRAVEL to the
-    post-ingest, pre-rebalance commit while version 3 is live — a
-    capability the bare layout cannot express at all (its ingest
-    mutates the only state there is). v2 = history 70% built + newest
-    30% appended under the FROZEN v1 manifest centroids, so it is
-    bit-equal to the bare 70/30 ingest index and SHARES
-    ``sim_ivf_index_ingest``'s oracle verbatim (frozen history seeds,
-    full-corpus assignment, recall vs the exact top-k) — one oracle
-    now gates both stores' ingest semantics AND the manifest tier's
-    historical-version read path."""
-    path = _ivf_versioned_index_path(spark, sf_dir)
-    return _recall_at_k(
-        spark,
-        sf_dir,
-        IV.cosine_topk_ivf_versioned(
-            spark,
-            path,
-            _TOPK_QUERY_IDS,
-            k=10,
-            version=2,
-            query_src=load_table(spark, sf_dir, "embeddings"),
-        ),
     )
 
 
@@ -2272,50 +2155,6 @@ def sim_ivfpq_rerank_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivfpq_ingest_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the 70/30 build-then-ingest IVF-PQ index:
-    history slice trains + builds (coarse quantizer and residual
-    codebooks frozen at build time), batch slice is encoded under the
-    frozen artifacts and appended; append-only over EVERY index file
-    (lists + both sidecars) enforced by a size+mtime snapshot."""
-    import glob as _glob
-    import os as _os
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    split = history_split(emb, "vec_id")
-
-    def _build() -> str:
-        from sressentials_spark.scratch import scratch_dir
-
-        base = S.build_ivfpq_index(
-            emb.filter(F.col("vec_id") < split),
-            scratch_dir("sressentials_ivfpq_ingest_"),
-        )
-        pre = {
-            p: (_os.path.getsize(p), _os.path.getmtime(p))
-            for p in _glob.glob(f"{base}/**/*.parquet", recursive=True)
-        }
-        S.ingest_ivfpq_index(emb.filter(F.col("vec_id") >= split), base)
-        post = {
-            p: (_os.path.getsize(p), _os.path.getmtime(p))
-            for p in _glob.glob(f"{base}/**/*.parquet", recursive=True)
-        }
-        changed = [p for p in pre if post.get(p) != pre[p]]
-        if changed or len(post) <= len(pre):
-            raise ValueError(
-                f"ingest must only append new list files: changed="
-                f"{changed[:3]} pre={len(pre)} post={len(post)}"
-            )
-        return base
-
-    return get_or_build(
-        spark, ("ivfpq_ingest_index", sf_dir, split), _build, tier="disk"
-    )
-
-
-INDEX_BUILDERS["ivfpq_ingest_index_build"] = _ivfpq_ingest_index_path
-
-
 # Restatement: BOTH quantizers trained on the HISTORY slice only
 # (coarse k-means over hist; residual codebooks sampled from history
 # residuals), then every vector — history and ingested batch alike —
@@ -2323,55 +2162,8 @@ INDEX_BUILDERS["ivfpq_ingest_index_build"] = _ivfpq_ingest_index_path
 # scoring as in the full-corpus IVF-PQ oracle.
 _IVFPQ_INGEST_TOPK_SQL = f"""
 WITH {_IVFPQ_HIST_CELLS_CTES},
-iprobes AS (
-  SELECT vec_id AS query_id, cid AS pcell FROM (
-    SELECT e.vec_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-             CAST(list_sum([(e.q[j] - c.cq[j]) * (e.q[j] - c.cq[j])
-                            for j in generate_series(1, 64)]) AS BIGINT),
-             c.cid) AS rn
-    FROM allq e CROSS JOIN tcents c
-    WHERE e.vec_id IN ({_TOPK_IDS_SQL}))
-  WHERE rn <= {S.IVF_NPROBE}),
-cand AS (SELECT p.query_id, p.pcell, c.vec_id AS neighbor_id
-         FROM iprobes p JOIN icells c
-           ON c.cell = p.pcell AND c.vec_id <> p.query_id),
-allresid AS (
-  SELECT e2.vec_id,
-         [CAST(e2.embedding[i] AS DOUBLE) - CAST(t.cq[i] AS DOUBLE) / {_PQ_SCALE}
-          for i in generate_series(1, 64)] AS rv
-  FROM embeddings e2
-  JOIN icells c ON c.vec_id = e2.vec_id
-  JOIN tcents t ON t.cid = c.cell
-),
-histresid AS (SELECT vec_id, rv FROM allresid
-              WHERE vec_id < (SELECT s FROM split)),
-{S.pq_train_sql_ctes(src="allresid", vec="rv", prefix="pqr", train_src="histresid")},
-rqd AS (SELECT p.query_id, p.pcell, b.m, b.cid AS k,
-               {_pq_resid_term_sql('q.embedding', 't.cq', 'b')} AS dq
-        FROM iprobes p
-        JOIN embeddings q ON q.vec_id = p.query_id
-        JOIN tcents t ON t.cid = p.pcell
-        CROSS JOIN pqr_books b),
-p2 AS (SELECT cand.query_id, cand.neighbor_id, rqd.m, rqd.dq
-       FROM cand
-       JOIN pqr_codes c ON c.vec_id = cand.neighbor_id
-       JOIN rqd ON rqd.query_id = cand.query_id
-              AND rqd.pcell = cand.pcell
-              AND rqd.m = c.m AND rqd.k = c.code),
-g AS (SELECT query_id, neighbor_id,
-             {', '.join(
-                 f'MAX(CASE WHEN m = {i} THEN dq END) AS d{i}'
-                 for i in range(S.PQ_M)
-             )}
-      FROM p2 GROUP BY query_id, neighbor_id),
-r AS (SELECT query_id, neighbor_id,
-             ((d0 + d1) + d2) + d3 AS adc_dist FROM g),
-rr AS (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY adc_dist, neighbor_id) AS BIGINT) AS rank
-       FROM r)
-SELECT query_id, neighbor_id FROM rr WHERE rank <= 10
-"""
+{_pqr_codes_ctes(history_split=True)},
+{_ivfadc_tail_sql(queries="allq", cents="tcents", cells="icells", codes="pqr_codes")}"""
 
 
 @register("sim_ivfpq_index_ingest", _recall_sql(_IVFPQ_INGEST_TOPK_SQL))
@@ -2379,26 +2171,31 @@ def sim_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental IVF-PQ index maintenance — completing the trained
     compressed index's lifecycle under the oracle gate the plain-IVF
     stack already has (``sim_ivf_index_ingest``): the first 70% of the
-    corpus (by vec_id) trains and builds the persisted IVF-PQ index
-    (coarse quantizer + residual codebooks frozen at build time), the
-    newest 30% arrives as an ingest batch and is encoded under those
-    FROZEN artifacts and appended as new cell-partition files
-    (:func:`similarity.ingest_ivfpq_index` — one assign + encode pass
-    over the batch; existing list files and both sidecars are never
-    read into tasks or rewritten, enforced here by a size+mtime
-    snapshot and pinned independently in
-    tests/test_similarity_ivf.py::TestIvfPqIngest). Serving then runs
-    the normal IVFADC scan over the merged lists. Returns recall@10
-    against the exact top-k over the FULL corpus — the quantizer-drift
-    gauge that tells an operator when to schedule the periodic
-    retrain-rebuild. Per-ingest cost at 100 TB: O(batch), never
-    O(index)."""
+    corpus (by vec_id) trains and builds an IVF-PQ index (coarse
+    quantizer + residual codebooks frozen at build time) that migrates
+    into the versioned PQ lifecycle store (import, v1); the newest 30%
+    arrives as an ingest batch, is encoded under those FROZEN
+    artifacts and committed as one version
+    (:func:`ivf_versioned.ingest_ivfpq_index_versioned` — one assign +
+    encode pass over the batch; no v1 file is rewritten and the
+    quantizers stay frozen, pinned in tests/test_ivf_versioned.py).
+    Served as a TIME-TRAVEL read of v2 while the rebalance (v3) and
+    refresh (v4) commits are live. Returns recall@10 against the exact
+    top-k over the FULL corpus — the quantizer-drift gauge that tells
+    an operator when to schedule the periodic retrain-rebuild.
+    Per-ingest cost at 100 TB: O(batch), never O(index)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    path = _ivfpq_ingest_index_path(spark, sf_dir)
     return _recall_at_k(
         spark,
         sf_dir,
-        S.pq_adc_topk_ivf_from_index(spark, emb, path, _TOPK_QUERY_IDS, topk=10),
+        IV.pq_adc_topk_ivfpq_versioned(
+            spark,
+            emb,
+            _ivfpq_versioned_lifecycle_path(spark, sf_dir),
+            _TOPK_QUERY_IDS,
+            topk=10,
+            version=2,
+        ),
     )
 
 
@@ -2420,18 +2217,24 @@ def maintenance_ivfpq_refresh_decision(spark: SparkSession, sf_dir: str) -> Data
     policy output IS a gated column (measured: ~1237‰, i.e. ingested
     rows sit 24% farther from their codewords than the training
     slice's noise floor, over the 1050‰ threshold
-    S.IVFPQ_REFRESH_DRIFT_PERMILLE -> 'refresh'; the versioned tier's
+    IV.IVFPQ_REFRESH_DRIFT_PERMILLE -> 'refresh'; the versioned tier's
     refresh verb then makes the quantizer swap crash-atomic,
-    tests/test_ivf_versioned.py). Errors are exact int64 per row
-    (operators/similarity.py:ivfpq_quantization_error — broadcast
-    code lookup, native zip_with/aggregate, one pass over the
-    ~32x-compressed lists); the four aggregates are a bounded one-row
-    collect and the ratio is arbitrary-precision integer arithmetic,
-    restated HUGEINT-exact by the oracle."""
+    tests/test_ivf_versioned.py). The gauge reads the versioned PQ
+    lifecycle store at v2 — the build-then-ingest state, before the
+    rebalance re-encodes moved rows — through
+    :func:`ivf_versioned.ivfpq_refresh_decision`. Errors are exact
+    int64 per row (operators/similarity.py:ivfpq_quantization_error —
+    broadcast code lookup, native zip_with/aggregate, one pass over
+    the ~32x-compressed lists); the four aggregates are a bounded
+    one-row collect and the ratio is arbitrary-precision integer
+    arithmetic, restated HUGEINT-exact by the oracle."""
     emb = load_table(spark, sf_dir, "embeddings")
-    split = history_split(emb, "vec_id")
-    return S.ivfpq_refresh_decision(
-        spark, emb, _ivfpq_ingest_index_path(spark, sf_dir), split
+    return IV.ivfpq_refresh_decision(
+        spark,
+        emb,
+        _ivfpq_versioned_lifecycle_path(spark, sf_dir),
+        history_split(emb, "vec_id"),
+        version=2,
     )
 
 
@@ -2442,17 +2245,7 @@ def maintenance_ivfpq_refresh_decision(spark: SparkSession, sf_dir: str) -> Data
 # ratio and the thresholded decision.
 ORACLE_SQL["maintenance_ivfpq_refresh_decision"] = f"""
 WITH {_IVFPQ_HIST_CELLS_CTES},
-allresid AS (
-  SELECT e2.vec_id,
-         [CAST(e2.embedding[i] AS DOUBLE) - CAST(t.cq[i] AS DOUBLE) / {_PQ_SCALE}
-          for i in generate_series(1, 64)] AS rv
-  FROM embeddings e2
-  JOIN icells c ON c.vec_id = e2.vec_id
-  JOIN tcents t ON t.cid = c.cell
-),
-histresid AS (SELECT vec_id, rv FROM allresid
-              WHERE vec_id < (SELECT s FROM split)),
-{S.pq_train_sql_ctes(src="allresid", vec="rv", prefix="pqr", train_src="histresid")},
+{_pqr_codes_ctes(history_split=True)},
 qerr AS (
   SELECT a.vec_id,
          CAST(SUM(CAST(list_sum([(a.q[j] - b.cq[j]) * (a.q[j] - b.cq[j])
@@ -2476,7 +2269,7 @@ drift AS (
            AS drift_permille
   FROM agg)
 SELECT hist_n, batch_n, hist_err, batch_err, drift_permille,
-       CASE WHEN drift_permille > {S.IVFPQ_REFRESH_DRIFT_PERMILLE}
+       CASE WHEN drift_permille > {IV.IVFPQ_REFRESH_DRIFT_PERMILLE}
             THEN 'refresh' ELSE 'keep' END AS decision
 FROM drift
 """
@@ -2540,14 +2333,7 @@ def sim_ivf_versioned_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     is the refresh gauge's business). The crash/vacuum semantics are
     model-tested in tests/test_ivf_versioned.py; this query pins the
     VALUES the post-delete commit serves."""
-    path = _ivf_versioned_delete_index_path(spark, sf_dir)
-    return IV.cosine_topk_ivf_versioned(
-        spark,
-        path,
-        _TOPK_QUERY_IDS,
-        k=10,
-        query_src=load_table(spark, sf_dir, "embeddings"),
-    )
+    return _ivf_versioned_topk(spark, sf_dir, _ivf_versioned_delete_index_path)
 
 
 def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
@@ -2764,20 +2550,10 @@ def streaming_ann_ingest_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is bit-equal to the one-shot build-then-ingest over the same rows
     (pinned row-for-row in tests/test_streaming_ann_ingest.py) and
     this query SHARES ``sim_ivf_index_ingest``'s oracle verbatim —
-    one oracle now gates the bare ingest, the versioned time-travel
-    read (``sim_ivf_versioned_ingest_recall``), and the streaming
-    twin."""
-    path = _streamed_ivf_ingest_path(spark, sf_dir)
+    one oracle gates the one-shot ingest (served as a time-travel read
+    of the lifecycle store's v2) and the streaming twin."""
     return _recall_at_k(
-        spark,
-        sf_dir,
-        IV.cosine_topk_ivf_versioned(
-            spark,
-            path,
-            _TOPK_QUERY_IDS,
-            k=10,
-            query_src=load_table(spark, sf_dir, "embeddings"),
-        ),
+        spark, sf_dir, _ivf_versioned_topk(spark, sf_dir, _streamed_ivf_ingest_path)
     )
 
 

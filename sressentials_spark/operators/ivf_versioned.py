@@ -1,11 +1,12 @@
 """Crash-atomic (manifest-versioned) IVF index lifecycle.
 
-The bare cell-partitioned IVF index (operators/similarity.py) documents
-one honesty boundary: its REBALANCE publishes through directory renames
-and is not crash-atomic — a kill between the retire and the child moves
-leaves that cell's rows staged (repair = idempotent rebuild). This
-module closes that boundary by giving the IVF index the same commit
-discipline the snapshot tables already have (operators/maintenance.py):
+This module is the ONE mutation path for the ANN indexes. The bare
+cell-partitioned stores (operators/similarity.py: ``build_ivf_index``,
+``build_ivfpq_index``) are build-and-serve only; every maintenance
+verb — ingest, rebalance, refresh, compact, delete, vacuum — runs here,
+and a lifecycle state is served as a version-pinned read of one store.
+The commit discipline is the one the snapshot tables already have
+(operators/maintenance.py):
 
 - data files are IMMUTABLE and append-only under ``data/commit-<id>/``
   (a parquet writer never reuses a part-file name);
@@ -13,8 +14,7 @@ discipline the snapshot tables already have (operators/maintenance.py):
   visible file, its cell and row count — plus the centroid set itself
   (K x dim doubles, small enough to live inline, so one atomic publish
   covers lists AND centroids: no sidecar can ever be newer than the
-  lists it describes, the race the bare layout's ``_rebalanced`` marker
-  papers over);
+  lists it describes);
 - the manifest link-lands with an exclusive ``os.link`` — a crashed
   writer leaves orphan commit dirs (reclaimed by
   :func:`vacuum_ivf_index`), NEVER a half-split index, and two racing
@@ -25,11 +25,11 @@ At 100 TB the economics are the snapshot tier's: the rebalance job
 reads and writes O(oversized cells' rows), the publish is O(files)
 JSON, readers resolve a version by reading one small file, and the
 per-file row counts in the manifest make the SPLIT DECISION itself a
-manifest-only computation — no count scan over the index at all (the
-bare layout pays a full groupBy-count). Per-file cell attribution
-doubles as manifest-level scan pruning: a query batch plans only its
-probed cells' files, the same whole-directories-skipped effect as
-partition pruning but decided driver-side from the manifest.
+manifest-only computation — no count scan over the index at all.
+Per-file cell attribution doubles as manifest-level scan pruning: a
+query batch plans only its probed cells' files, the same
+whole-directories-skipped effect as partition pruning but decided
+driver-side from the manifest.
 
 Kill-between-steps model test: tests/test_ivf_versioned.py injects a
 crash after every mutation step and asserts readers always see exactly
@@ -52,8 +52,6 @@ from sressentials_spark.operators.similarity import (
     DEFAULT_DIM,
     IVF_CELLS,
     IVF_NPROBE,
-    IVF_REBALANCE_PCT,
-    IVF_SPLIT_SEED,
     _ivf_query,
     ivf_annotate_frozen,
     ivf_seed_centroids,
@@ -61,6 +59,13 @@ from sressentials_spark.operators.similarity import (
 from sressentials_spark.operators.dedup import md5_long
 
 _MANIFEST_FMT = "index-manifest-v{version}.json"
+
+#: Rebalance trigger: a cell holding more than
+#: ``rows * PCT // (n_cells * 100)`` of the index splits. 115% of the
+#: uniform share keeps the trigger tight enough to fire on the skew
+#: ingest actually produces, integer-exact and SQL-restateable.
+IVF_REBALANCE_PCT = 115
+IVF_SPLIT_SEED = "ivf-split-v1"
 
 #: Keys every manifest owns structurally; anything else is a rider a
 #: transactional upstream stamped in (e.g. the streaming ingest's
@@ -301,9 +306,8 @@ def build_ivf_index_versioned(
     :func:`similarity.build_ivf_index` (results are pinned identical by
     tests), but lists land as immutable commit files and the centroid
     set rides INSIDE the manifest. Per-row probe arrays are NOT stored
-    — the manifest centroids are the single probe truth, so the bare
-    layout's stale-probe hazard (its ``_rebalanced`` marker) cannot
-    exist here by construction."""
+    — the manifest centroids are the single probe truth, so a split
+    can never leave a row pointing at a retired cell."""
     ids, mat = ivf_seed_centroids(emb, n_cells, id_col=id_col)
     annotated = ivf_annotate_frozen(emb, ids, mat, nprobe).drop("cells")
     entries = _commit_lists(annotated, os.path.join(base_path, "data"))
@@ -393,9 +397,8 @@ def cosine_topk_ivf_versioned(
     the MANIFEST centroid set (query rows re-annotated by the same
     Arrow kernel as the build — always consistent with the lists the
     same manifest names), and the corpus scan plans only the probed
-    cells' files. Bit-identical to the bare index's
-    ``probe_from_centroids`` path at the same centroid set (pinned by
-    tests).
+    cells' files. Bit-identical to the bare index's serve at the same
+    centroid set (pinned by tests).
 
     ``query_src`` (``id_col`` + ``embedding``) is where the query
     vectors come from — normally the source embeddings table, a
@@ -517,11 +520,10 @@ def rebalance_ivf_index_versioned(
     fault: Callable[[str], None] | None = None,
     retries: int = 5,
 ) -> dict:
-    """CRASH-ATOMIC rebalance: same split semantics as
-    :func:`similarity.rebalance_ivf_index` (cells over
+    """CRASH-ATOMIC rebalance: cells over
     ``rows * factor_pct // (n_centroids * 100)`` split into two
-    hash-picked child seeds; members re-pointed to the nearer child by
-    the build's own kernel) — but committed as one manifest version.
+    hash-picked child seeds, members re-pointed to the nearer child by
+    the build's own kernel, committed as one manifest version.
 
     Ordering: every split's child lists land as immutable commit files
     first; the new manifest (old entries minus split cells' files, plus
@@ -718,8 +720,9 @@ def ingest_ivfpq_index_versioned(
     """Append a batch under the latest manifest's FROZEN coarse
     centroids and residual codebooks as one committed version (encode
     the batch only; parent files untouched; publish last, atomically).
-    Same drift trade as the bare ingest: the manifest pins exactly
-    which quantizers encoded every visible row. A lost publish race
+    The trade is quantizer drift (frozen artifacts age as the data
+    moves; :func:`ivfpq_refresh_decision` gauges it), and the manifest
+    pins exactly which quantizers encoded every visible row. A lost publish race
     retries on top of the new latest, reusing the staged files while
     the winner kept the quantizers (always, between ingests — they are
     frozen at build) and re-encoding defensively if some future
@@ -1251,7 +1254,7 @@ def refresh_ivfpq_index_versioned(
     fault: Callable[[str], None] | None = None,
 ) -> int:
     """CRASH-ATOMIC codebook refresh — the maintenance verb the drift
-    gauge (``similarity.ivfpq_refresh_decision``) schedules: retrain
+    gauge (:func:`ivfpq_refresh_decision`) schedules: retrain
     BOTH quantizers on the CURRENT corpus ``emb``, re-encode every row
     under the fresh artifacts, and publish lists + coarse centroids +
     codebooks as ONE new manifest version. Readers of the previous
@@ -1300,6 +1303,90 @@ def refresh_ivfpq_index_versioned(
     )
     fault("published")
     return version + 1
+
+
+IVFPQ_REFRESH_DRIFT_PERMILLE = 1050
+
+
+def ivfpq_refresh_decision(
+    spark,
+    emb: DataFrame,
+    base_path: str,
+    split_id: int,
+    version: int | None = None,
+    threshold_permille: int = IVFPQ_REFRESH_DRIFT_PERMILLE,
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """Codebook-refresh POLICY over a committed IVF-PQ version (default
+    latest) whose rows ``id >= split_id`` were INGESTED under
+    artifacts trained before they existed: compare their mean integer
+    quantization error (:func:`similarity.ivfpq_quantization_error`
+    over the version's lists, coarse centroids and codebooks) against
+    the HISTORY rows the artifacts were trained on, and decide whether
+    quantizer drift has crossed the refresh threshold. The ratio is
+    computed as ``1000 * batch_err * hist_n // (hist_err * batch_n)``
+    in exact arbitrary-precision integers (the four aggregates are a
+    bounded one-row collect — the convergence-scalar pattern), so the
+    permille and the decision are bit-reproducible by the DuckDB
+    restatement (HUGEINT arithmetic). ``decision = 'refresh'`` when
+    the batch's rows sit more than ``threshold_permille - 1000``
+    permille farther from their codewords than the training slice's
+    own quantization noise floor — the signal that schedules
+    :func:`refresh_ivfpq_index_versioned` instead of a timer."""
+    from sressentials_spark.operators import similarity as S
+
+    version = version or ivf_index_versions(base_path)[-1]
+    man = _read_manifest_raw(base_path, version)  # quantizers ride inline
+    err = S.ivfpq_quantization_error(
+        spark,
+        emb,
+        man["coarse"],
+        _books_from_json(man["books"]),
+        read_ivf_index_version(spark, base_path, version),
+        id_col=id_col,
+    )
+    hist = F.col(id_col) < split_id
+    row = err.agg(
+        F.sum(F.when(hist, 1).otherwise(0)).cast("long").alias("hist_n"),
+        F.sum(F.when(~hist, 1).otherwise(0)).cast("long").alias("batch_n"),
+        F.sum(F.when(hist, F.col("q_err"))).cast("long").alias("hist_err"),
+        F.sum(F.when(~hist, F.col("q_err"))).cast("long").alias("batch_err"),
+    ).first()
+    hist_n, batch_n = int(row["hist_n"]), int(row["batch_n"])
+    if hist_n == 0 or batch_n == 0:
+        # Degenerate split (split_id outside the corpus id range): one
+        # side's SUM is NULL and the ratio is undefined — a clear error
+        # beats int(None)/ZeroDivisionError surfacing from the guts.
+        raise ValueError(
+            f"split_id={split_id} leaves an empty "
+            f"{'history' if hist_n == 0 else 'batch'} side "
+            f"(hist_n={hist_n}, batch_n={batch_n}); the drift ratio needs "
+            "both a training slice and an ingested slice"
+        )
+    hist_err, batch_err = int(row["hist_err"]), int(row["batch_err"])
+    if hist_err == 0 and batch_err > 0:
+        # Zero training noise floor with nonzero batch error: the drift
+        # ratio is unbounded, so no permille is honest — refuse with the
+        # actionable reading (any drift off a zero floor means refresh).
+        raise ValueError(
+            "training slice has zero quantization error but the ingested "
+            f"slice does not (batch_err={batch_err}): the drift ratio is "
+            "unbounded — schedule a refresh unconditionally"
+        )
+    drift = (
+        0
+        if batch_err == 0
+        else 1000 * batch_err * hist_n // (hist_err * batch_n)
+    )
+    decision = (
+        "refresh" if drift > int(threshold_permille) else "keep"
+    )
+    return local_df(
+        spark,
+        [(hist_n, batch_n, hist_err, batch_err, drift, decision)],
+        "hist_n bigint, batch_n bigint, hist_err bigint, batch_err bigint, "
+        "drift_permille bigint, decision string",
+    )
 
 
 def import_ivfpq_index_versioned(

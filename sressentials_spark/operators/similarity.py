@@ -255,9 +255,9 @@ def ivf_annotate_frozen(
 ) -> DataFrame:
     """:func:`ivf_annotate` against FROZEN centroids, the assignment
     pass index INGEST needs: new batches are placed by the centroids
-    captured at build time (persisted beside the lists), never
-    re-seeded — re-seeding would reshuffle every existing vector's
-    cell and turn an append into a rebuild."""
+    captured at build time (persisted in the versioned index's
+    manifest), never re-seeded — re-seeding would reshuffle every
+    existing vector's cell and turn an append into a rebuild."""
     kern = ivf_cells_kernel(centroid_ids, centroid_mat, nprobe)
     return emb.withColumn("_nc", kern(F.col("embedding"))).select(
         *emb.columns,
@@ -287,40 +287,23 @@ def build_ivf_index(
     in-session path, so serving from the store is bit-identical to
     :func:`cosine_topk_ivf`.
 
-    The seed centroids are persisted beside the lists (under
-    ``_centroids`` — the underscore prefix keeps the directory
-    invisible to Spark's file index and partition discovery, like
-    ``_spark_metadata``) so :func:`ingest_ivf_index` can assign later
-    batches with the build-time centroids instead of re-seeding."""
+    The store is build-and-serve only: each row carries its probe
+    list, so nothing beside the lists is persisted. An index that must
+    be maintained (ingest, rebalance, compact, delete) lives on the
+    manifest-versioned tier (operators/ivf_versioned.py), whose
+    centroids ride inside each atomically published version."""
     from sressentials_spark import sinks
 
     ids, mat = ivf_seed_centroids(emb, n_cells, id_col=id_col)
     sinks.write_partitioned(
         ivf_annotate_frozen(emb, ids, mat, nprobe), base_path, ["cell"]
     )
-    local_df(
-        emb.sparkSession,
-        [(int(i), [float(x) for x in row]) for i, row in zip(ids, mat)],
-        "cid long, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base_path}/_centroids")
     return base_path
 
 
-def _write_centroid_sidecar(spark, base_path: str, cents: dict) -> None:
-    """(Re)write the ``_centroids`` sidecar from a {cid: vector} map."""
-    local_df(
-        spark,
-        [
-            (int(cid), [float(x) for x in row])
-            for cid, row in sorted(cents.items())
-        ],
-        "cid long, cv array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base_path}/_centroids")
-
-
 def _read_sidecar_pydict(base_path: str, name: str) -> dict:
-    """Read a K-row index sidecar (``_centroids``/``_coarse``/
-    ``_pq_books``) directly with pyarrow on the driver.
+    """Read a K-row IVF-PQ index sidecar (``_coarse``/``_pq_books``)
+    directly with pyarrow on the driver.
 
     These are bounded metadata artifacts — K centroids or M*K codebook
     rows — and every serve query loads them, so routing each load
@@ -340,181 +323,6 @@ def _read_sidecar_pydict(base_path: str, name: str) -> dict:
     return pq.read_table(parts).to_pydict()
 
 
-def load_ivf_centroids(spark, base_path: str):
-    """The frozen centroids persisted by :func:`build_ivf_index`, as
-    the same ``(ids, (K, dim) float64 matrix)`` shape
-    :func:`ivf_seed_centroids` returns."""
-    import numpy as np
-
-    d = _read_sidecar_pydict(base_path, "_centroids")
-    order = sorted(range(len(d["cid"])), key=d["cid"].__getitem__)
-    ids = [int(d["cid"][i]) for i in order]
-    mat = np.stack(
-        [np.asarray(d["cv"][i], dtype=np.float64) for i in order]
-    )
-    return ids, mat
-
-
-def ingest_ivf_index(
-    emb_batch: DataFrame,
-    base_path: str,
-    nprobe: int = IVF_NPROBE,
-) -> str:
-    """Append a new vector batch into a persisted cell-partitioned IVF
-    index WITHOUT a rebuild: assign the batch with the FROZEN
-    build-time centroids (one Arrow pass over the batch only), then an
-    append-mode partitioned write — new part files land under the
-    batch's cell directories; no existing list file is ever read,
-    listed into tasks, or rewritten (pinned by
-    tests/test_similarity_ivf.py via file sizes + mtimes).
-
-    This is the ANN twin of the dedup index's incremental ingest
-    (operators/dedup.py::minhash_incremental_from_index): at 100 TB
-    per-batch cost is O(batch), never O(index). The trade is the
-    standard IVF one — frozen centroids drift from the data
-    distribution over time, degrading recall (measured by the
-    ``sim_ivf_index_ingest`` recall eval); a periodic re-seed rebuild
-    remains the maintenance verb, amortized across many ingests."""
-    from sressentials_spark import sinks
-
-    ids, mat = load_ivf_centroids(emb_batch.sparkSession, base_path)
-    sinks.write_partitioned(
-        ivf_annotate_frozen(emb_batch, ids, mat, nprobe),
-        base_path,
-        ["cell"],
-        mode="append",
-    )
-    return base_path
-
-
-#: Rebalance trigger: a cell holding more than
-#: ``rows * PCT // (n_cells * 100)`` of the corpus splits. 115% of the
-#: uniform share keeps the trigger tight enough to fire on the skew
-#: ingest actually produces, integer-exact and SQL-restateable.
-IVF_REBALANCE_PCT = 115
-IVF_SPLIT_SEED = "ivf-split-v1"
-
-
-def rebalance_ivf_index(
-    spark,
-    base_path: str,
-    *,
-    factor_pct: int = IVF_REBALANCE_PCT,
-    split_seed: str = IVF_SPLIT_SEED,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-) -> dict:
-    """Third lifecycle op for the persisted IVF index (build -> ingest
-    -> REBALANCE): every cell whose list outgrew
-    ``rows * factor_pct // (n_cells * 100)`` is SPLIT — two new
-    centroids hash-picked from the cell's own members, the members
-    re-pointed to the nearer child (cosine, ties to the lowest id —
-    the same Arrow kernel as build/ingest), the children written as
-    new cell partitions, the old list directory dropped, and the
-    centroid sidecar updated. Never a full rebuild: cost is
-    O(oversized cells' rows) — the rest of the index is neither read
-    nor rewritten (pinned by tests via file sizes + mtimes), which is
-    the whole point at 100 TB where ingest skew concentrates in a few
-    hot cells. A ``_rebalanced`` marker is written beside the sidecar,
-    and :func:`cosine_topk_ivf_from_index` AUTO-switches to query-time
-    probes when it sees one — the per-row ``cells`` arrays stored
-    before a split are stale (they may reference the retired parent),
-    so trusting them on a rebalanced index would silently degrade
-    recall; recall parity vs the pre-split index is measured by
-    ``sim_ivf_rebalance`` (docs/ANN_EVAL.md).
-
-    Crash posture: the split publishes in the safest order a bare
-    directory layout allows (children staged to a temp dir; sidecar
-    updated per split; source retired by rename before children move
-    in; temp removed last) but is NOT crash-atomic — a kill between
-    the retire and the child renames leaves that cell's rows staged
-    under an underscore dir Spark ignores. The repair is an idempotent
-    index rebuild. Tables that need a zero-window guarantee use the
-    MANIFEST-VERSIONED tier instead
-    (operators/ivf_versioned.py::rebalance_ivf_index_versioned): same
-    split semantics, committed as one atomically-linked manifest
-    version, kill-between-steps model-tested — at the cost of
-    manifest-resolution on every read."""
-    import shutil
-
-    import numpy as np
-
-    from sressentials_spark import sinks
-
-    idx = spark.read.parquet(base_path)
-    ids, mat = load_ivf_centroids(spark, base_path)
-    n_rows = idx.count()
-    threshold = n_rows * factor_pct // (len(ids) * 100)
-    sizes = {
-        int(r["cell"]): int(r["n"])
-        for r in idx.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    oversized = sorted(c for c, n in sizes.items() if n > threshold)
-    cents = {int(i): mat[j] for j, i in enumerate(ids)}
-    base_cols = [c for c in idx.columns if c not in ("norm", "cells", "cell")]
-
-    for c in oversized:
-        members = (
-            spark.read.parquet(base_path)
-            .filter(F.col("cell") == c)
-            .select(*base_cols)
-        )
-        h = md5_long(
-            F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
-        )
-        seed_rows = (
-            members.withColumn("_h", h)
-            .orderBy("_h", id_col)
-            .limit(2)
-            .select(id_col, "embedding")
-            .collect()
-        )
-        ch_ids = [int(r[id_col]) for r in seed_rows]
-        ch_mat = np.stack(
-            [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-        )
-        # Children land in a temp dir first: the source partition must
-        # stay readable until the re-pointed rows are durably written.
-        tmp = os.path.join(base_path, f"_rebalance_tmp_{c}")
-        sinks.write_partitioned(
-            ivf_annotate_frozen(members, ch_ids, ch_mat, nprobe), tmp, ["cell"]
-        )
-        # Sidecar first (per split, not once at the end): a crash
-        # after this point can leave a cell staged, never a sidecar
-        # pointing at partitions that belonged to a LATER split.
-        cents.pop(c, None)
-        for cid, row in zip(ch_ids, ch_mat):
-            cents[cid] = row
-        _write_centroid_sidecar(spark, base_path, cents)
-        # Retire the source by rename (not delete) so the destructive
-        # step is last; also frees the cell=<c> name for a child whose
-        # seed id equals the parent centroid id.
-        retired = os.path.join(tmp, "_retired_source")
-        os.rename(os.path.join(base_path, f"cell={c}"), retired)
-        for d in globmod.glob(os.path.join(tmp, "cell=*")):
-            dest = os.path.join(base_path, os.path.basename(d))
-            if os.path.isdir(dest):
-                # duplicate-vector edge: a child id colliding with a
-                # kept cell merges file-wise (same cell value rows).
-                for f in globmod.glob(os.path.join(d, "*")):
-                    os.rename(f, os.path.join(dest, os.path.basename(f)))
-            else:
-                os.rename(d, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    if oversized:
-        # Marker: per-row probe arrays written before the split are
-        # stale; readers must derive probes from the sidecar.
-        with open(os.path.join(base_path, "_rebalanced"), "w") as fh:
-            fh.write("\n".join(str(c) for c in oversized))
-    return {
-        "cells_split": len(oversized),
-        "split_cells": oversized,
-        "threshold": int(threshold),
-        "n_centroids": len(cents),
-    }
-
-
 def cosine_topk_ivf_from_index(
     spark,
     index_path: str,
@@ -523,40 +331,17 @@ def cosine_topk_ivf_from_index(
     id_col: str = "vec_id",
     dim: int = DEFAULT_DIM,
     filter_col: str | None = None,
-    probe_from_centroids: bool = False,
-    nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """:func:`cosine_topk_ivf`, served from a persisted cell-partitioned
     index (:func:`build_ivf_index`) instead of a session-cached
     annotation: the corpus side scans ONLY the union of the query
     batch's probed cells (partition pruning), the steady-state cost a
-    vector store pays per query batch once the index exists."""
-    annotated = spark.read.parquet(index_path)
-    queries_src = None
-    if not probe_from_centroids and os.path.exists(
-        os.path.join(index_path, "_rebalanced")
-    ):
-        # The index was rebalanced: per-row probe arrays stored before
-        # the split are stale (they can reference retired cells), so
-        # trusting them would SILENTLY degrade recall — switch to
-        # sidecar-derived query-time probes instead.
-        probe_from_centroids = True
-    if probe_from_centroids:
-        # Probe lists computed at QUERY time against the centroid
-        # sidecar (the post-rebalance truth) — one tiny Arrow pass
-        # over the id-filtered query rows, same kernel as the build.
-        ids, mat = load_ivf_centroids(spark, index_path)
-        qsrc_cols = [id_col, "embedding", *([filter_col] if filter_col else [])]
-        qrows = (
-            annotated.filter(F.col(id_col).isin(query_ids))
-            .select(*qsrc_cols)
-            .collect()
-        )
-        qsrc = local_df(spark, qrows, annotated.select(*qsrc_cols).schema)
-        queries_src = ivf_annotate_frozen(qsrc, ids, mat, nprobe)
+    vector store pays per query batch once the index exists. The
+    stored per-row probe lists are the probe truth: the bare store is
+    never mutated after its build, so they cannot go stale."""
     return _ivf_query(
-        annotated, query_ids, k, id_col, dim, filter_col,
-        prune_cells=True, queries_src=queries_src,
+        spark.read.parquet(index_path), query_ids, k, id_col, dim, filter_col,
+        prune_cells=True,
     )
 
 
@@ -576,9 +361,10 @@ def _ivf_query(
     cells — semantically a no-op (the cell equi-join already restricts
     further, per query) but it is what turns the partitioned store
     into partition pruning at the scan. ``queries_src`` overrides
-    where the query rows' probe lists come from — the rebalanced-index
-    path re-annotates query rows against the CURRENT centroid sidecar
-    instead of trusting probe arrays stored before a split."""
+    where the query rows' probe lists come from — the versioned serve
+    (operators/ivf_versioned.py) annotates the query rows against the
+    centroid set of the manifest version it reads, since its lists
+    store no probe arrays."""
     spark = annotated.sparkSession
     extra = [filter_col] if filter_col else []
     qcols = [id_col, "embedding", "norm", *extra, "cells"]
@@ -1243,49 +1029,18 @@ def _encode_ivfpq_lists(
     )
 
 
-def ingest_ivfpq_index(
-    emb_batch: DataFrame,
-    base_path: str,
-    *,
-    m: int = PQ_M,
-    id_col: str = "vec_id",
-) -> str:
-    """Append a new vector batch into a persisted IVF-PQ index WITHOUT
-    retraining or rebuild: the batch is encoded under the FROZEN
-    ``_coarse`` centroids and ``_pq_books`` codebooks (one assignment
-    + encode pass over the batch only) and appended as new cell
-    partitions — existing list files and both sidecars are never read
-    into tasks or rewritten. The ANN twin of the dedup index's
-    incremental ingest, completing the trained-index lifecycle
-    (build -> ingest; rebalance covers the cosine-IVF tier). The
-    trade is the standard one: frozen quantizers drift from the data
-    over time, degrading recall; periodic retrain-rebuild remains the
-    maintenance verb, amortized across many ingests."""
-    from sressentials_spark import sinks
-
-    spark = emb_batch.sparkSession
-    coarse = load_ivfpq_coarse(spark, base_path)
-    books = load_pq_books(spark, base_path)
-    sinks.write_partitioned(
-        _encode_ivfpq_lists(emb_batch, coarse, books, m=m, id_col=id_col),
-        base_path,
-        ["cell"],
-        mode="append",
-    )
-    return base_path
-
-
-IVFPQ_REFRESH_DRIFT_PERMILLE = 1050
-
-
 def ivfpq_quantization_error(
     spark,
     emb: DataFrame,
-    ivfpq_path: str,
+    coarse: dict,
+    books,
+    lists: DataFrame,
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Per-vector integer PQ quantization error under a persisted
-    index's FROZEN artifacts: for each indexed row, the exact int64
+    """Per-vector integer PQ quantization error under an index's FROZEN
+    artifacts — ``coarse`` / ``books`` in their loader shapes and
+    ``lists``, the inverted-list rows they encoded (the same seam as
+    :func:`_ivfpq_adc_search`): for each listed row, the exact int64
     squared L2 distance between its quantized residual (raw embedding
     minus its assigned cell's coarse centroid, on the QUANT_SCALE
     grid — the same doubles-then-round chain the encoder ran) and the
@@ -1301,11 +1056,9 @@ def ivfpq_quantization_error(
     over the index, no Python in the hot path."""
     from sressentials_spark.operators.cluster import QUANT_SCALE
 
-    coarse = load_ivfpq_coarse(spark, ivfpq_path)
-    books = load_pq_books(spark, ivfpq_path)
     m = len(books)
     dsub = DEFAULT_DIM // m
-    lists = spark.read.parquet(ivfpq_path).select(
+    lists = lists.select(
         F.col(id_col),
         F.col("cell").cast("long").alias("cell"),
         *[F.col(f"code_{i}").cast("long").alias(f"code_{i}") for i in range(m)],
@@ -1364,75 +1117,6 @@ def ivfpq_quantization_error(
         ).alias("q_err"),
     )
     return err
-
-
-def ivfpq_refresh_decision(
-    spark,
-    emb: DataFrame,
-    ivfpq_path: str,
-    split_id: int,
-    threshold_permille: int = IVFPQ_REFRESH_DRIFT_PERMILLE,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Codebook-refresh POLICY over a build-then-ingest IVF-PQ index:
-    compare the mean integer quantization error of the INGESTED rows
-    (``id >= split_id``, encoded under artifacts trained before they
-    existed) against the HISTORY rows the artifacts were trained on,
-    and decide whether quantizer drift has crossed the refresh
-    threshold. The ratio is computed as
-    ``1000 * batch_err * hist_n // (hist_err * batch_n)`` in exact
-    arbitrary-precision integers (the four aggregates are a bounded
-    one-row collect — the convergence-scalar pattern), so the permille
-    and the decision are bit-reproducible by the DuckDB restatement
-    (HUGEINT arithmetic). ``decision = 'refresh'`` when the batch's
-    rows sit more than ``threshold_permille - 1000`` permille farther
-    from their codewords than the training slice's own quantization
-    noise floor — the signal that schedules the periodic
-    retrain-rebuild (crash-atomic via the versioned tier's
-    refresh/import verbs) instead of refreshing on a timer."""
-    err = ivfpq_quantization_error(spark, emb, ivfpq_path, id_col=id_col)
-    hist = F.col(id_col) < split_id
-    row = err.agg(
-        F.sum(F.when(hist, 1).otherwise(0)).cast("long").alias("hist_n"),
-        F.sum(F.when(~hist, 1).otherwise(0)).cast("long").alias("batch_n"),
-        F.sum(F.when(hist, F.col("q_err"))).cast("long").alias("hist_err"),
-        F.sum(F.when(~hist, F.col("q_err"))).cast("long").alias("batch_err"),
-    ).first()
-    hist_n, batch_n = int(row["hist_n"]), int(row["batch_n"])
-    if hist_n == 0 or batch_n == 0:
-        # Degenerate split (split_id outside the corpus id range): one
-        # side's SUM is NULL and the ratio is undefined — a clear error
-        # beats int(None)/ZeroDivisionError surfacing from the guts.
-        raise ValueError(
-            f"split_id={split_id} leaves an empty "
-            f"{'history' if hist_n == 0 else 'batch'} side "
-            f"(hist_n={hist_n}, batch_n={batch_n}); the drift ratio needs "
-            "both a training slice and an ingested slice"
-        )
-    hist_err, batch_err = int(row["hist_err"]), int(row["batch_err"])
-    if hist_err == 0 and batch_err > 0:
-        # Zero training noise floor with nonzero batch error: the drift
-        # ratio is unbounded, so no permille is honest — refuse with the
-        # actionable reading (any drift off a zero floor means refresh).
-        raise ValueError(
-            "training slice has zero quantization error but the ingested "
-            f"slice does not (batch_err={batch_err}): the drift ratio is "
-            "unbounded — schedule a refresh unconditionally"
-        )
-    drift = (
-        0
-        if batch_err == 0
-        else 1000 * batch_err * hist_n // (hist_err * batch_n)
-    )
-    decision = (
-        "refresh" if drift > int(threshold_permille) else "keep"
-    )
-    return local_df(
-        spark,
-        [(hist_n, batch_n, hist_err, batch_err, drift, decision)],
-        "hist_n bigint, batch_n bigint, hist_err bigint, batch_err bigint, "
-        "drift_permille bigint, decision string",
-    )
 
 
 def load_ivfpq_coarse(spark, base_path: str) -> dict[int, list[int]]:

@@ -22,14 +22,11 @@ def test_registry_names() -> None:
     assert set(INDEX_BUILDERS) == {
         "dedup_index_build",
         "ivf_index_build",
-        "ivf_ingest_index_build",
         "ivf_rebalance_index_build",
         "ivfpq_index_build",
-        "ivfpq_ingest_index_build",
         "ivfpq_rerank_index_build",
         "ivfpq_versioned_index_build",
         "ivf_versioned_index_build",
-        "ivf_compacted_index_build",
         "ivf_versioned_delete_index_build",
         "ivfpq_rebalanced_index_build",
         "ivfpq_lifecycle_index_build",

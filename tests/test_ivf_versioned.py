@@ -1,10 +1,10 @@
 """Crash-atomicity model tests for the manifest-versioned IVF index
-(operators/ivf_versioned.py — the r8-verdict stretch: the bare layout's
-rebalance documents a non-atomic window; the versioned tier must have
-none). The central test kills the rebalance after EVERY mutation step
-and asserts a reader always sees exactly the pre-split or the
-post-split index — never retired lists, missing rows, or a centroid
-set that disagrees with the lists."""
+(operators/ivf_versioned.py — the one mutation path for the ANN
+indexes; the bare stores are build-and-serve only). The central test
+kills the rebalance after EVERY mutation step and asserts a reader
+always sees exactly the pre-split or the post-split index — never
+retired lists, missing rows, or a centroid set that disagrees with
+the lists."""
 
 from __future__ import annotations
 
@@ -44,15 +44,14 @@ def _manifest_files_exist(base, version):
 
 def test_build_matches_bare_index(spark, tmp_path):
     """v1 of the versioned index serves bit-identically to the bare
-    cell-partitioned index (same seeds, same kernel, same plan)."""
+    cell-partitioned index (same seeds, same kernel, same plan), and
+    its manifest carries exactly the hash-picked seed centroids."""
     emb = _emb(spark)
     bare = S.build_ivf_index(emb, str(tmp_path / "bare"))
     base = str(tmp_path / "ver")
     assert V.build_ivf_index_versioned(emb, base) == 1
     want = (
-        S.cosine_topk_ivf_from_index(
-            spark, bare, QIDS, k=10, probe_from_centroids=True
-        )
+        S.cosine_topk_ivf_from_index(spark, bare, QIDS, k=10)
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
@@ -62,28 +61,63 @@ def test_build_matches_bare_index(spark, tmp_path):
     # Manifest row counts == actual rows (the split decision's input).
     man = V.read_ivf_manifest(base, 1)
     assert sum(e["rows"] for e in man["files"]) == emb.count()
+    # The inline centroid set round-trips the seeds (id -> vector).
+    ids0, mat0 = S.ivf_seed_centroids(emb)
+    assert {c: tuple(v) for c, v in man["centroids"].items()} == dict(
+        zip(ids0, map(tuple, mat0))
+    )
+
+
+def _cells(spark, base, version):
+    return {
+        int(r["vec_id"]): int(r["cell"])
+        for r in V.read_ivf_index_version(spark, base, version)
+        .select("vec_id", "cell")
+        .collect()
+    }
 
 
 def test_rebalance_matches_bare_rebalance_and_time_travels(spark, tmp_path):
-    """Same split decision and same post-split results as the bare
-    rebalance; the pre-split version stays readable as committed."""
+    """The split decision is the 115% rule over v1's real row counts;
+    v2's centroids are v1's minus the split cells plus two children
+    per split (each a member of its parent cell, its vector that
+    member's embedding); the rows are complete, unsplit cells keep
+    their members and moved rows land in their parent's children; the
+    pre-split version stays readable as committed."""
+    from collections import Counter
+
     emb = _emb(spark)
-    bare = S.build_ivf_index(emb, str(tmp_path / "bare"))
-    sb = S.rebalance_ivf_index(spark, bare)
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb, base)
     pre = _topk(spark, base, version=1)
+    cells1 = _cells(spark, base, 1)
+    threshold = len(cells1) * V.IVF_REBALANCE_PCT // (S.IVF_CELLS * 100)
+    split = sorted(c for c, n in Counter(cells1.values()).items() if n > threshold)
     sv = V.rebalance_ivf_index_versioned(spark, base)
-    assert sv["cells_split"] == sb["cells_split"] >= 1
-    assert sv["split_cells"] == sb["split_cells"]
+    assert sv["split_cells"] == split and sv["cells_split"] == len(split) >= 1
+    assert sv["threshold"] == threshold
     assert V.ivf_index_versions(base) == [1, 2]
-    want = (
-        S.cosine_topk_ivf_from_index(spark, bare, QIDS, k=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(_topk(spark, base), want, check_exact=True)
+
+    c1 = V.read_ivf_manifest(base, 1)["centroids"]
+    c2 = V.read_ivf_manifest(base, 2)["centroids"]
+    kept = {c: v for c, v in c1.items() if c not in split}
+    assert all(c2.get(c) == v for c, v in kept.items())
+    children = {c: v for c, v in c2.items() if c not in kept}
+    assert Counter(cells1[c] for c in children) == {c: 2 for c in split}
+    vecs = {
+        int(r["vec_id"]): [float(x) for x in r["embedding"]]
+        for r in emb.filter(emb.vec_id.isin(list(children))).collect()
+    }
+    assert children == vecs
+    assert sv["n_centroids"] == len(c2) == len(kept) + 2 * len(split)
+
+    cells2 = _cells(spark, base, 2)
+    assert set(cells2) == set(cells1)
+    for v, c in cells1.items():
+        if c in split:
+            assert cells1[cells2[v]] == c  # re-pointed to one of c's children
+        else:
+            assert cells2[v] == c
     # Time travel: v1 still serves the exact pre-split answer.
     pd.testing.assert_frame_equal(
         _topk(spark, base, version=1), pre, check_exact=True
@@ -176,9 +210,11 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
 
 
 def test_ingest_commits_a_version_matching_the_bare_twin(spark, tmp_path):
-    """Build on the oldest 70%, ingest the newest 30%: results match
-    the bare index's build+ingest path exactly; the build version still
-    time-travels; history files are byte-untouched (O(batch) cost)."""
+    """Build on the oldest 70%, ingest the newest 30%: v2's lists equal
+    a fresh assignment of the FULL corpus under v1's manifest
+    centroids (what a build over the merged corpus with the same seeds
+    would store); the build version still time-travels; history files
+    are byte-untouched (O(batch) cost)."""
     from pyspark.sql import functions as F
 
     emb = _emb(spark)
@@ -186,17 +222,6 @@ def test_ingest_commits_a_version_matching_the_bare_twin(spark, tmp_path):
     hist, batch = (
         emb.filter(F.col("vec_id") < split),
         emb.filter(F.col("vec_id") >= split),
-    )
-    bare = str(tmp_path / "bare")
-    S.build_ivf_index(hist, bare)
-    S.ingest_ivf_index(batch, bare)
-    want = (
-        S.cosine_topk_ivf_from_index(
-            spark, bare, QIDS, k=10, probe_from_centroids=True
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
     )
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(hist, base)
@@ -207,7 +232,22 @@ def test_ingest_commits_a_version_matching_the_bare_twin(spark, tmp_path):
         for e in man1["files"]
     }
     assert V.ingest_ivf_index_versioned(batch, base) == 2
-    pd.testing.assert_frame_equal(_topk(spark, base), want, check_exact=True)
+    ids, mat = V._load_centroids(man1)
+    want = (
+        S.ivf_annotate_frozen(emb, ids, mat)
+        .drop("cells")
+        .toPandas()
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+    got = (
+        V.read_ivf_index_version(spark, base, 2)
+        .select(*want.columns)
+        .toPandas()
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_exact=True)
     pd.testing.assert_frame_equal(
         _topk(spark, base, version=1), pre, check_exact=True
     )
@@ -597,10 +637,11 @@ def test_ivfpq_versioned_build_matches_bare_index(spark, tmp_path):
 
 
 def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
-    """70/30 build-then-ingest on the versioned IVF-PQ tier: results
-    match the bare twin, quantizers are frozen across the commit, the
-    pre-ingest version time-travels, history files are byte-untouched,
-    and a kill before publish commits nothing."""
+    """70/30 build-then-ingest on the versioned IVF-PQ tier: v2's lists
+    equal a one-shot encode of the full corpus under v1's manifest
+    artifacts, quantizers are frozen across the commit, the pre-ingest
+    version time-travels, history files are byte-untouched, and a kill
+    before publish commits nothing."""
     from pyspark.sql import functions as F
 
     emb = _emb(spark)
@@ -608,15 +649,6 @@ def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
     hist, batch = (
         emb.filter(F.col("vec_id") < split),
         emb.filter(F.col("vec_id") >= split),
-    )
-    bare = str(tmp_path / "bare")
-    S.build_ivfpq_index(hist, bare)
-    S.ingest_ivfpq_index(batch, bare)
-    want = (
-        S.pq_adc_topk_ivf_from_index(spark, emb, bare, QIDS, topk=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
     )
     base = str(tmp_path / "ver")
     V.build_ivfpq_index_versioned(hist, base)
@@ -641,7 +673,21 @@ def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
     )
 
     assert V.ingest_ivfpq_index_versioned(batch, base) == 2
-    pd.testing.assert_frame_equal(_adc_topk(spark, emb, base), want, check_exact=True)
+    expect = (
+        S._encode_ivfpq_lists(emb, man1["coarse"], V._books_from_json(man1["books"]))
+        .toPandas()
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+    got = (
+        V.read_ivf_index_version(spark, base, 2)
+        .select(expect.columns.tolist())
+        .toPandas()
+        .sort_values("vec_id")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, expect.astype(got.dtypes), check_exact=True)
+    want = _adc_topk(spark, emb, base)
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base, version=1), pre, check_exact=True
     )
@@ -989,7 +1035,7 @@ def test_refresh_retrains_and_swaps_quantizers_atomically(spark, tmp_path):
 
 
 def test_refresh_decision_gauge_is_exact_and_scale_free(spark, tmp_path):
-    """ivfpq_refresh_decision over a bare 70/30 build-then-ingest
+    """ivfpq_refresh_decision over a versioned 70/30 build-then-ingest
     index: counts partition the corpus exactly, errors are positive
     integers, and the permille ratio obeys its own integer identity
     (bit-reproducibility vs DuckDB is pinned by the registered
@@ -999,10 +1045,10 @@ def test_refresh_decision_gauge_is_exact_and_scale_free(spark, tmp_path):
     emb = _emb(spark)
     max_id = emb.agg(F.max("vec_id")).first()[0]
     split = (max_id + 1) * 7 // 10
-    bare = str(tmp_path / "bare")
-    S.build_ivfpq_index(emb.filter(F.col("vec_id") < split), bare)
-    S.ingest_ivfpq_index(emb.filter(F.col("vec_id") >= split), bare)
-    row = S.ivfpq_refresh_decision(spark, emb, bare, split).first()
+    base = str(tmp_path / "ver")
+    V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < split), base)
+    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= split), base)
+    row = V.ivfpq_refresh_decision(spark, emb, base, split).first()
     n = emb.count()
     assert row["hist_n"] + row["batch_n"] == n
     assert row["hist_err"] > 0 and row["batch_err"] > 0
@@ -1011,7 +1057,7 @@ def test_refresh_decision_gauge_is_exact_and_scale_free(spark, tmp_path):
     )
     assert row["drift_permille"] == want
     assert row["decision"] == (
-        "refresh" if want > S.IVFPQ_REFRESH_DRIFT_PERMILLE else "keep"
+        "refresh" if want > V.IVFPQ_REFRESH_DRIFT_PERMILLE else "keep"
     )
 
 
@@ -1653,12 +1699,12 @@ def test_refresh_decision_guards_degenerate_splits(spark, tmp_path):
 
     emb = _emb(spark)
     max_id = int(emb.agg(F.max("vec_id")).first()[0])
-    bare = str(tmp_path / "bare")
-    S.build_ivfpq_index(emb, bare)
+    base = str(tmp_path / "ver")
+    V.build_ivfpq_index_versioned(emb, base)
     with pytest.raises(ValueError, match="empty batch"):
-        S.ivfpq_refresh_decision(spark, emb, bare, max_id + 1)
+        V.ivfpq_refresh_decision(spark, emb, base, max_id + 1)
     with pytest.raises(ValueError, match="empty history"):
-        S.ivfpq_refresh_decision(spark, emb, bare, 0)
+        V.ivfpq_refresh_decision(spark, emb, base, 0)
 
 
 def test_ivf_index_history_catalog(spark, tmp_path):

@@ -311,185 +311,6 @@ def test_quantize_exact_matches_duckdb_round():
         assert g == exp, (v, g, exp)
 
 
-class TestIncrementalIngest:
-    def test_append_only_and_annotation_parity(self, spark, emb, tmp_path):
-        """Ingest contract (sim_ivf_index_ingest): appending a batch
-        into the persisted lists (a) never touches an existing list
-        file — sizes and mtimes survive byte-identically and every new
-        file lands under a cell directory — and (b) produces exactly
-        the table a fresh frozen-centroid assignment over the merged
-        corpus would, so serving from the ingested index is
-        bit-identical to serving from a one-shot build with the same
-        seeds."""
-        import glob
-        import os
-
-        hist = emb.filter(F.col("vec_id") < 40)
-        batch = emb.filter(F.col("vec_id") >= 40)
-        base = S.build_ivf_index(hist, str(tmp_path / "idx"), n_cells=4)
-
-        pre = {
-            p: (os.path.getsize(p), os.path.getmtime(p))
-            for p in glob.glob(f"{base}/cell=*/*.parquet")
-        }
-        assert pre, "build produced no list files"
-        S.ingest_ivf_index(batch, base)
-        post = {
-            p: (os.path.getsize(p), os.path.getmtime(p))
-            for p in glob.glob(f"{base}/cell=*/*.parquet")
-        }
-        # (a) strict append: every pre-existing file intact, new files
-        # only under cell=*/ directories.
-        assert {p: pre[p] for p in pre} == {p: post[p] for p in pre}
-        assert len(post) > len(pre)
-
-        # (b) the merged lists equal a fresh frozen assignment of the
-        # whole corpus (same centroids, same kernel).
-        ids, mat = S.load_ivf_centroids(spark, base)
-        expect = (
-            S.ivf_annotate_frozen(emb, ids, mat)
-            .withColumn("cell", F.col("cell").cast("int"))
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        got = (
-            spark.read.parquet(base)
-            .select(*expect.columns)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        import pandas as pd
-
-        pd.testing.assert_frame_equal(
-            got.astype({"cell": "int32"}), expect.astype({"cell": "int32"})
-        )
-
-    def test_frozen_centroids_roundtrip(self, spark, emb, tmp_path):
-        base = S.build_ivf_index(emb, str(tmp_path / "idx2"), n_cells=4)
-        ids, mat = S.load_ivf_centroids(spark, base)
-        ids0, mat0 = S.ivf_seed_centroids(emb, n_cells=4)
-        # Store order is cid-ascending, seed order is hash-ascending;
-        # the assignment kernel sorts by cid internally, so only the
-        # (id -> vector) mapping must round-trip.
-        assert dict(zip(ids, map(tuple, mat))) == dict(
-            zip(ids0, map(tuple, mat0))
-        )
-
-
-class TestRebalance:
-    def test_split_touches_only_oversized_cells(self, spark, tmp_path):
-        """Rebalance contract (sim_ivf_rebalance): splitting the
-        oversized cells (a) never reads or rewrites any other cell's
-        list files — sizes and mtimes survive byte-identically — (b)
-        drops the split cells' directories and lands their members
-        under child cells, row-complete, and (c) updates the centroid
-        sidecar to exactly (kept + children)."""
-        import glob as globmod
-        import os
-
-        from sressentials_spark.sources.tables import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        base = S.build_ivf_index(emb, str(tmp_path / "idx"))
-        before_rows = {
-            (r["vec_id"], r["cell"])
-            for r in spark.read.parquet(base).select("vec_id", "cell").collect()
-        }
-        ids0, _ = S.load_ivf_centroids(spark, base)
-        pre = {
-            p: (os.path.getsize(p), os.path.getmtime(p))
-            for p in globmod.glob(f"{base}/cell=*/*.parquet")
-        }
-
-        stats = S.rebalance_ivf_index(spark, base)
-        assert stats["cells_split"] >= 1
-        split = set(stats["split_cells"])
-
-        # (a) untouched cells' files byte-identical
-        for p, sig in pre.items():
-            cell = int(p.split("cell=")[1].split("/")[0])
-            if cell in split:
-                continue
-            assert os.path.exists(p) and (
-                os.path.getsize(p), os.path.getmtime(p)) == sig, p
-        # (b) split dirs gone unless re-created as a child id
-        ids1, _ = S.load_ivf_centroids(spark, base)
-        for c in split:
-            if c not in ids1:
-                assert not os.path.isdir(os.path.join(base, f"cell={c}"))
-        # row-complete: same vec_ids, moved rows changed cell only
-        after = {
-            (r["vec_id"], r["cell"])
-            for r in spark.read.parquet(base).select("vec_id", "cell").collect()
-        }
-        assert {v for v, _ in after} == {v for v, _ in before_rows}
-        kept = {(v, c) for v, c in before_rows if c not in split}
-        assert kept <= after
-        # (c) sidecar = kept + children
-        assert stats["n_centroids"] == len(ids1)
-        assert set(ids0) - split <= set(ids1)
-        assert len(ids1) >= len(ids0)  # each split adds >= 1 net id
-
-
-class TestIvfPqIngest:
-    def test_ingest_appends_only_and_matches_frozen_encode(
-        self, spark, tmp_path
-    ):
-        """IVF-PQ ingest contract: appending a batch under the FROZEN
-        artifacts (a) never touches an existing list file or sidecar —
-        sizes and mtimes survive byte-identically — and (b) leaves
-        exactly the table a one-shot encode of the merged corpus under
-        the same artifacts would, so serving from the ingested index
-        is bit-identical to serving from it."""
-        import glob as globmod
-        import os
-
-        from sressentials_spark.sources.tables import load_table
-
-        emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        max_id = emb.agg(F.max("vec_id")).first()[0]
-        split = (max_id + 1) * 7 // 10
-        hist = emb.filter(F.col("vec_id") < split)
-        batch = emb.filter(F.col("vec_id") >= split)
-
-        base = S.build_ivfpq_index(hist, str(tmp_path / "ivfpq"))
-        pre = {
-            p: (os.path.getsize(p), os.path.getmtime(p))
-            for p in globmod.glob(f"{base}/cell=*/*.parquet")
-            + globmod.glob(f"{base}/_coarse/*.parquet")
-            + globmod.glob(f"{base}/_pq_books/*.parquet")
-        }
-        S.ingest_ivfpq_index(batch, base)
-        for p, sig in pre.items():
-            assert os.path.exists(p) and (
-                os.path.getsize(p), os.path.getmtime(p)) == sig, p
-        post = globmod.glob(f"{base}/cell=*/*.parquet")
-        assert len(post) > sum("cell=" in p for p in pre)
-
-        coarse = S.load_ivfpq_coarse(spark, base)
-        books = S.load_pq_books(spark, base)
-        expect = (
-            S._encode_ivfpq_lists(emb, coarse, books)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        got = (
-            spark.read.parquet(base)
-            .select(expect.columns.tolist())
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        import pandas as pd
-
-        pd.testing.assert_frame_equal(
-            got, expect.astype(got.dtypes), check_like=True
-        )
-
-
 def test_quantize_exact_matches_spark_round(spark):
     """Close the three-engine triangle: quantize_exact (numpy, used by
     the PQ kernels and driver-side training) must equal quantize_vec
@@ -572,36 +393,3 @@ def test_rerank_tier_m8_index_layout_and_contract(spark, tmp_path):
         g = g.sort_values("rank")
         key = list(zip(-g["cosine"], g["neighbor_id"]))
         assert key == sorted(key)
-
-
-def test_rebalanced_index_auto_switches_to_sidecar_probes(spark, tmp_path):
-    """After a rebalance, stored per-row probe arrays are stale — the
-    default read path must auto-switch to sidecar-derived probes and
-    return exactly what the explicit probe_from_centroids path does."""
-    from sressentials_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = S.build_ivf_index(emb, str(tmp_path / "idx"))
-    stats = S.rebalance_ivf_index(spark, base)
-    assert stats["cells_split"] >= 1
-    import os
-
-    assert os.path.exists(os.path.join(base, "_rebalanced"))
-    qids = [0, 1, 2]
-    auto = (
-        S.cosine_topk_ivf_from_index(spark, base, qids, k=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    explicit = (
-        S.cosine_topk_ivf_from_index(
-            spark, base, qids, k=10, probe_from_centroids=True
-        )
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    import pandas as pd
-
-    pd.testing.assert_frame_equal(auto, explicit)
