@@ -37,6 +37,7 @@ from sressentials_spark.operators import curation as C
 from sressentials_spark.operators import dedup as D
 from sressentials_spark.operators import pipeline as P
 from sressentials_spark.operators import ivf_versioned as IV
+from sressentials_spark.operators.maintenance import manifest_versions
 from sressentials_spark.operators import similarity as S
 from sressentials_spark.operators import rangejoin as _RJ
 from sressentials_spark.operators import rownum as _RN
@@ -1508,9 +1509,9 @@ def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
         stats = IV.rebalance_ivf_index_versioned(spark, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
-        if IV.ivf_index_versions(base) != [1, 2]:
+        if manifest_versions(base) != [1, 2]:
             raise ValueError(
-                f"rebalance must commit v2: {IV.ivf_index_versions(base)}"
+                f"rebalance must commit v2: {manifest_versions(base)}"
             )
         return base
 
@@ -1589,9 +1590,9 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
         out = IV.compact_ivf_index_versioned(spark, base)
         if out["cells_compacted"] < 1 or out["files_after"] >= out["files_before"]:
             raise ValueError(f"compaction did not run or did not shrink: {out}")
-        if IV.ivf_index_versions(base) != [1, 2, 3, 4]:
+        if manifest_versions(base) != [1, 2, 3, 4]:
             raise ValueError(
-                f"lifecycle must commit 4 versions: {IV.ivf_index_versions(base)}"
+                f"lifecycle must commit 4 versions: {manifest_versions(base)}"
             )
         return base
 
@@ -1769,9 +1770,10 @@ def _ivfpq_adc_sql(*, m: int = S.PQ_M, limit: int = 10) -> str:
     cell's centroid -> m residual-trained codebooks -> per-(query,
     cell, subspace) distance terms -> fixed left-associated sum. The
     default (m=PQ_M) IS the ``sim_pq_adc_topk_ivf`` oracle; the rerank
-    tier composes a finer m=8 grid at limit=50 (docs/ANN_EVAL.md: the
-    M sweep — ADC ranking inside probed cells is the knob that moves
-    shortlist quality, so only the rerank index pays the finer grid)."""
+    tier composes a finer m=8 grid at limit=100, its shortlist
+    (docs/ANN_EVAL.md: the M sweep — ADC ranking inside probed cells
+    is the knob that moves shortlist quality, so only the rerank index
+    pays the finer grid)."""
     return f"""
 WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
 tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
@@ -1850,9 +1852,9 @@ def _ivfpq_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
         IV.import_ivfpq_index_versioned(
             spark, _ivfpq_index_path(spark, sf_dir), base
         )
-        if IV.ivf_index_versions(base) != [1]:
+        if manifest_versions(base) != [1]:
             raise ValueError(
-                f"import must commit exactly v1: {IV.ivf_index_versions(base)}"
+                f"import must commit exactly v1: {manifest_versions(base)}"
             )
         return base
 
@@ -1890,6 +1892,13 @@ scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
 """
 
 
+#: Every embedding on the QUANT_SCALE integer grid: the query and
+#: assignment vectors of the IVF-PQ oracle heads.
+_ALLQ_CTE = f"""allq AS (SELECT vec_id,
+                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
+         FROM embeddings)"""
+
+
 #: The history-trained IVF-PQ head (CTEs, no leading WITH): coarse
 #: k-means trained on the oldest-70% slice ``hist`` and frozen
 #: (``tcents``), then EVERY row quantized (``allq``) and assigned to its
@@ -1901,9 +1910,7 @@ hist AS (SELECT vec_id, embedding FROM embeddings
          WHERE vec_id < (SELECT s FROM split)),
 {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64, table="hist")},
 tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-allq AS (SELECT vec_id,
-                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
-         FROM embeddings),
+{_ALLQ_CTE},
 icells AS (
   SELECT vec_id, cid AS cell FROM (
     SELECT e.vec_id, c.cid,
@@ -1948,9 +1955,7 @@ WITH {_IVFPQ_HIST_CELLS_CTES},"""
         head = f"""
 WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
 tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
-allq AS (SELECT vec_id,
-                [CAST(ROUND(x * {_PQ_SCALE}) AS BIGINT) for x in embedding] AS q
-         FROM embeddings),
+{_ALLQ_CTE},
 icells AS (SELECT vec_id, cluster AS cell FROM afin),"""
     return f"""{head}
 thresh AS (SELECT CAST(COUNT(*) * {IV.IVF_REBALANCE_PCT}
@@ -2355,9 +2360,9 @@ def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
         stats = IV.rebalance_ivfpq_index_versioned(spark, emb, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
-        if IV.ivf_index_versions(base) != [1, 2]:
+        if manifest_versions(base) != [1, 2]:
             raise ValueError(
-                f"rebalance must commit v2: {IV.ivf_index_versions(base)}"
+                f"rebalance must commit v2: {manifest_versions(base)}"
             )
         return base
 
@@ -2420,9 +2425,9 @@ def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         IV.refresh_ivfpq_index_versioned(emb, base)
-        if IV.ivf_index_versions(base) != [1, 2, 3, 4]:
+        if manifest_versions(base) != [1, 2, 3, 4]:
             raise ValueError(
-                f"lifecycle must commit 4 versions: {IV.ivf_index_versions(base)}"
+                f"lifecycle must commit 4 versions: {manifest_versions(base)}"
             )
         return base
 
@@ -2523,10 +2528,10 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
         AI.run_versioned_ingest_stream(spark, arrivals, base)
         if AI.committed_stream_batch(base) < 0:
             raise ValueError("stream committed no stamped version")
-        versions = IV.ivf_index_versions(base)
+        versions = manifest_versions(base)
         # A fresh checkpoint over the same files re-delivers the stream.
         AI.run_versioned_ingest_stream(spark, arrivals, base)
-        if IV.ivf_index_versions(base) != versions:
+        if manifest_versions(base) != versions:
             raise ValueError("redelivered stream committed new versions")
         return base
 

@@ -3,23 +3,25 @@
 This module is the ONE mutation path for the ANN indexes. The bare
 cell-partitioned stores (operators/similarity.py: ``build_ivf_index``,
 ``build_ivfpq_index``) are build-and-serve only; every maintenance
-verb — ingest, rebalance, refresh, compact, delete, vacuum — runs here,
-and a lifecycle state is served as a version-pinned read of one store.
-The commit discipline is the one the snapshot tables already have
-(operators/maintenance.py):
+verb — ingest, rebalance, refresh, compact, delete — runs here, and a
+lifecycle state is served as a version-pinned read of one store. The
+commit protocol is shared with the snapshot tables: version listing,
+manifest reads, the publish-and-retry loop and vacuum all live in
+operators/maintenance.py (:func:`~maintenance.publish_next`,
+:func:`~maintenance.vacuum`), and this module only says what an index
+commit stages and lists:
 
 - data files are IMMUTABLE and append-only under ``data/commit-<id>/``
   (a parquet writer never reuses a part-file name);
 - what makes an index version is a tiny JSON MANIFEST listing, per
-  visible file, its cell and row count — plus the centroid set itself
-  (K x dim doubles, small enough to live inline, so one atomic publish
-  covers lists AND centroids: no sidecar can ever be newer than the
+  visible file, its cell and row count — plus the quantizer itself
+  (K x dim numbers, small enough to live inline, so one atomic publish
+  covers lists AND quantizers: no sidecar can ever be newer than the
   lists it describes);
 - the manifest link-lands with an exclusive ``os.link`` — a crashed
-  writer leaves orphan commit dirs (reclaimed by
-  :func:`vacuum_ivf_index`), NEVER a half-split index, and two racing
-  rebalances resolve as optimistic concurrency (loser gets
-  ``FileExistsError``, retries against the new latest).
+  writer leaves orphan commit dirs (reclaimed by vacuum), NEVER a
+  half-split index, and racing writers resolve as optimistic
+  concurrency (the loser re-plans against the new latest).
 
 At 100 TB the economics are the snapshot tier's: the rebalance job
 reads and writes O(oversized cells' rows), the publish is O(files)
@@ -39,26 +41,34 @@ the pre-split or the post-split index, never a mix.
 from __future__ import annotations
 
 import glob as globmod
-import json
 import os
-import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, functions as F
 
 from sressentials_spark.localrel import local_df
 
+from sressentials_spark.operators.maintenance import (
+    DEFAULT_TARGET_BYTES,
+    atomic_publish_json,
+    manifest_versions,
+    publish_manifest,
+    publish_next,
+    read_manifest,
+    read_manifest_block,
+)
 from sressentials_spark.operators.similarity import (
     DEFAULT_DIM,
     IVF_CELLS,
     IVF_NPROBE,
+    PQ_ITERS,
+    PQ_K,
+    PQ_M,
     _ivf_query,
     ivf_annotate_frozen,
     ivf_seed_centroids,
 )
 from sressentials_spark.operators.dedup import md5_long
-
-_MANIFEST_FMT = "index-manifest-v{version}.json"
 
 #: Rebalance trigger: a cell holding more than
 #: ``rows * PCT // (n_cells * 100)`` of the index splits. 115% of the
@@ -67,45 +77,18 @@ _MANIFEST_FMT = "index-manifest-v{version}.json"
 IVF_REBALANCE_PCT = 115
 IVF_SPLIT_SEED = "ivf-split-v1"
 
-#: Keys every manifest owns structurally; anything else is a rider a
-#: transactional upstream stamped in (e.g. the streaming ingest's
-#: ``stream_batch_id`` high-water mark) and MUST survive maintenance.
-#: ``manifest_list`` is the two-level layout's pointer array;
-#: ``_blocks`` is the in-memory pointer->entries cache the transparent
-#: read attaches (never serialized — core status keeps the rider
-#: carry-forward from ever copying it into a publish payload).
-_MANIFEST_CORE_KEYS = frozenset(
-    {"version", "files", "centroids", "coarse", "books", "manifest_list", "_blocks"}
-)
 
-
-def _carry_manifest_extra(parent: dict, payload: dict) -> dict:
-    """Copy the parent manifest's non-core keys into a child publish
-    payload (payload's own keys win). Every publish path that descends
-    from a committed parent — ingest, rebalance, refresh, compact,
-    delete — must carry these forward like it carries the quantizers:
-    the streaming exactly-once recipe (streaming/ann_ingest.py) reads
-    its ``stream_batch_id`` stamp from the VISIBLE manifests, so a
-    maintenance verb that dropped it would, after vacuum expires the
-    stamped version, let a redelivered in-flight micro-batch re-ingest
-    its rows (duplicates with no error)."""
-    for k, v in parent.items():
-        if k not in _MANIFEST_CORE_KEYS and k not in payload:
-            payload[k] = v
-    return payload
-
-
-def _manifest_path(base_path: str, version: int) -> str:
-    return os.path.join(base_path, _MANIFEST_FMT.format(version=version))
-
-
-def ivf_index_versions(base_path: str) -> list[int]:
-    """Committed index versions, ascending (empty for a fresh path)."""
-    out = []
-    for p in globmod.glob(os.path.join(base_path, "index-manifest-v*.json")):
-        base = os.path.basename(p)
-        out.append(int(base[len("index-manifest-v"):-len(".json")]))
-    return sorted(out)
+def _int_keyed(man: dict) -> dict:
+    """A copy of ``man`` with the quantizer cell ids back to int (JSON
+    object keys are strings)."""
+    return {
+        k: (
+            {int(c): v for c, v in val.items()}
+            if k in ("centroids", "coarse")
+            else val
+        )
+        for k, val in man.items()
+    }
 
 
 def _read_manifest_raw(base_path: str, version: int) -> dict:
@@ -116,19 +99,26 @@ def _read_manifest_raw(base_path: str, version: int) -> dict:
     all live here, so callers that don't need per-file entries — probe
     derivation, the exactly-once stamp scan, the history catalog —
     never pay the block reads."""
-    with open(_manifest_path(base_path, version)) as fh:
-        man = json.load(fh)
-    if "centroids" in man:
-        man["centroids"] = {int(c): v for c, v in man["centroids"].items()}
-    if "coarse" in man:
-        man["coarse"] = {int(c): v for c, v in man["coarse"].items()}
+    return _int_keyed(read_manifest(base_path, version))
+
+
+def _resolved(base_path: str, man: dict | None) -> dict:
+    """A published manifest as every verb reads it: quantizer keys
+    back to int and, for a two-level manifest, each pointed-to block
+    loaded and flattened into the same ``files`` shape, with
+    ``_blocks`` (pointer, entries) pairs attached so a descendant
+    publish can reuse untouched blocks without re-reading them."""
+    if man is None:
+        raise ValueError(f"no index versions under {base_path}")
+    man = _int_keyed(man)
+    if "manifest_list" in man:
+        blocks = [
+            (ptr, read_manifest_block(base_path, ptr))
+            for ptr in man["manifest_list"]
+        ]
+        man["files"] = [e for _, block in blocks for e in block]
+        man["_blocks"] = blocks
     return man
-
-
-def _read_manifest_entries(base_path: str, pointer: dict) -> list[dict]:
-    """One manifest FILE's entry block (two-level layout)."""
-    with open(os.path.join(base_path, pointer["path"])) as fh:
-        return json.load(fh)["files"]
 
 
 def read_ivf_manifest(base_path: str, version: int) -> dict:
@@ -141,30 +131,8 @@ def read_ivf_manifest(base_path: str, version: int) -> dict:
     Reads BOTH layouts transparently: a two-level manifest (published
     by :func:`promote_ivf_manifest_list` or any descendant of one) is
     resolved by loading each pointed-to manifest file and flattening
-    into the same ``files`` shape, so every verb sees one contract.
-    The resolved dict keeps ``manifest_list`` (the pointer array) and
-    attaches ``_blocks`` (pointer, entries) pairs so a descendant
-    publish can reuse untouched blocks without re-reading them."""
-    man = _read_manifest_raw(base_path, version)
-    if "manifest_list" in man:
-        blocks = [
-            (ptr, _read_manifest_entries(base_path, ptr))
-            for ptr in man["manifest_list"]
-        ]
-        man["files"] = [e for _, block in blocks for e in block]
-        man["_blocks"] = blocks
-    return man
-
-
-def _publish_ivf_manifest(base_path: str, version: int, payload: dict) -> None:
-    """Atomic exclusive durable publish — shared with the snapshot
-    tables (maintenance.atomic_publish_json: writer-unique staging
-    name, fsync file + directory, exclusive link; exactly one of two
-    racing writers wins, the loser raises FileExistsError with its
-    commit dirs left orphaned for vacuum)."""
-    from sressentials_spark.operators.maintenance import atomic_publish_json
-
-    atomic_publish_json(_manifest_path(base_path, version), payload)
+    into the same ``files`` shape, so every verb sees one contract."""
+    return _resolved(base_path, read_manifest(base_path, version))
 
 
 def _write_manifest_file(base_path: str, entries: list[dict]) -> dict:
@@ -177,8 +145,6 @@ def _write_manifest_file(base_path: str, entries: list[dict]) -> dict:
     a block staged by a writer that then loses its publish race is
     unreferenced and reclaims as vacuum fodder."""
     import uuid
-
-    from sressentials_spark.operators.maintenance import atomic_publish_json
 
     os.makedirs(os.path.join(base_path, "manifests"), exist_ok=True)
     rel = os.path.join("manifests", f"manifest-{uuid.uuid4().hex[:16]}.json")
@@ -218,7 +184,7 @@ def _files_payload(
     if parent_man is None or "manifest_list" not in parent_man:
         return {"files": entries}
     blocks = parent_man.get("_blocks") or [
-        (ptr, _read_manifest_entries(base_path, ptr))
+        (ptr, read_manifest_block(base_path, ptr))
         for ptr in parent_man["manifest_list"]
     ]
     kept_paths = {e["path"] for e in entries}
@@ -311,7 +277,7 @@ def build_ivf_index_versioned(
     ids, mat = ivf_seed_centroids(emb, n_cells, id_col=id_col)
     annotated = ivf_annotate_frozen(emb, ids, mat, nprobe).drop("cells")
     entries = _commit_lists(annotated, os.path.join(base_path, "data"))
-    _publish_ivf_manifest(
+    publish_manifest(
         base_path,
         1,
         {
@@ -349,7 +315,7 @@ def read_ivf_index_version(
     miss every probed cell are skipped without even loading their
     entry file, so a probe-narrow read costs O(blocks touched) JSON,
     not O(commits)."""
-    version = version or ivf_index_versions(base_path)[-1]
+    version = version or manifest_versions(base_path)[-1]
     man = _read_manifest_raw(base_path, version)
     if "manifest_list" in man:
         ptrs = man["manifest_list"]
@@ -359,11 +325,11 @@ def read_ivf_index_version(
         if cells is not None:
             want = set(cells)
             sel = [p for p in ptrs if want.intersection(p["cells"])]
-        entries = [e for p in sel for e in _read_manifest_entries(base_path, p)]
+        entries = [e for p in sel for e in read_manifest_block(base_path, p)]
         schema_entry = (
             entries[0]
             if entries
-            else _read_manifest_entries(base_path, ptrs[0])[0]
+            else read_manifest_block(base_path, ptrs[0])[0]
         )
     else:
         if not man["files"]:
@@ -407,7 +373,7 @@ def cosine_topk_ivf_versioned(
     ``isin`` filter): an O(index) read per batch that exists only as a
     self-contained fallback — at scale, always pass ``query_src`` (the
     corpus scan stays manifest-pruned either way)."""
-    version = version or ivf_index_versions(base_path)[-1]
+    version = version or manifest_versions(base_path)[-1]
     man = _read_manifest_raw(base_path, version)  # centroids ride inline
     ids, mat = _load_centroids(man)
     src = (
@@ -429,6 +395,45 @@ def cosine_topk_ivf_versioned(
         corpus, query_ids, k, id_col, dim,
         filter_col=None, prune_cells=False, queries_src=queries_src,
     )
+
+
+def _ingest_plan(
+    base_path: str,
+    encode: Callable[[dict], DataFrame],
+    fault: Callable[[str], None] | None,
+    manifest_extra: dict | None,
+) -> Callable[[dict | None], dict | None]:
+    """The append plan both ingest verbs publish through: ``encode(man)``
+    turns the batch into list rows under the parent manifest's frozen
+    quantizers, and the child lists parent files + the batch's fresh
+    commit, plus ``manifest_extra``. The staged commit is reused across
+    lost publish races while the latest quantizers equal the ones it
+    was encoded under, and re-encoded when they differ (the retry rule
+    :func:`ingest_ivf_index_versioned` documents). ``fault("staged")``
+    fires once, after the first staging; an empty batch commits
+    nothing."""
+    fault = fault or (lambda step: None)
+    staged: dict = {}
+
+    def plan(parent: dict | None) -> dict | None:
+        man = _resolved(base_path, parent)
+        under = [parent.get(k) for k in ("centroids", "coarse", "books")]
+        if staged.get("under") != under:
+            first = not staged
+            staged["under"] = under
+            staged["entries"] = _commit_lists(
+                encode(man), os.path.join(base_path, "data")
+            )
+            if first and staged["entries"]:
+                fault("staged")
+        if not staged["entries"]:
+            return None
+        return {
+            **_files_payload(base_path, man, man["files"] + staged["entries"]),
+            **(manifest_extra or {}),
+        }
+
+    return plan
 
 
 def ingest_ivf_index_versioned(
@@ -457,8 +462,9 @@ def ingest_ivf_index_versioned(
     the staged rows are still exactly right), and RE-ENCODING the batch
     when the winner was a rebalance (its split retired cells; appending
     rows under a retired cell id would make them invisible to every
-    probe). ``retries`` bounds pathological contention; the staged
-    files of abandoned attempts are vacuum fodder.
+    probe). ``retries`` bounds pathological contention (past it the
+    ``FileExistsError`` re-raises); the staged files of abandoned
+    attempts are vacuum fodder.
 
     ``manifest_extra`` rides verbatim in the published manifest —
     the hook a transactional upstream uses to make ingest IDEMPOTENT:
@@ -466,46 +472,16 @@ def ingest_ivf_index_versioned(
     batches whose stamp is already committed (streaming/ann_ingest.py:
     the Structured-Streaming foreachBatch exactly-once recipe, the
     manifest doubling as the transaction log)."""
-    fault = fault or (lambda step: None)
-    version = ivf_index_versions(base_path)[-1]
-    man = read_ivf_manifest(base_path, version)
-    ids, mat = _load_centroids(man)
-    entries = _commit_lists(
-        ivf_annotate_frozen(emb_batch, ids, mat, nprobe).drop("cells"),
-        os.path.join(base_path, "data"),
-    )
-    if not entries:
-        return version  # empty batch: nothing to commit
-    fault("staged")
-    for _ in range(retries + 1):
-        try:
-            payload = {
-                "version": version + 1,
-                "centroids": {
-                    str(c): v for c, v in sorted(man["centroids"].items())
-                },
-                **_files_payload(base_path, man, man["files"] + entries),
-            }
-            payload.update(manifest_extra or {})
-            _carry_manifest_extra(man, payload)
-            _publish_ivf_manifest(base_path, version + 1, payload)
-            return version + 1
-        except FileExistsError:
-            version = ivf_index_versions(base_path)[-1]
-            man = read_ivf_manifest(base_path, version)
-            new_ids, new_mat = _load_centroids(man)
-            if new_ids != ids or (new_mat != mat).any():
-                # A rebalance won the race: re-encode under its cells.
-                ids, mat = new_ids, new_mat
-                entries = _commit_lists(
-                    ivf_annotate_frozen(emb_batch, ids, mat, nprobe).drop(
-                        "cells"
-                    ),
-                    os.path.join(base_path, "data"),
-                )
-            fault("retrying")
-    raise RuntimeError(
-        f"ingest lost the publish race {retries + 1} times under {base_path}"
+
+    def encode(man: dict) -> DataFrame:
+        ids, mat = _load_centroids(man)
+        return ivf_annotate_frozen(emb_batch, ids, mat, nprobe).drop("cells")
+
+    return publish_next(
+        base_path,
+        _ingest_plan(base_path, encode, fault, manifest_extra),
+        retries=retries,
+        fault=fault,
     )
 
 
@@ -530,7 +506,7 @@ def rebalance_ivf_index_versioned(
     child files, centroids swapped) publishes LAST via one atomic
     exclusive link. A crash anywhere before the link leaves the
     previous version fully intact and readable — orphan commit dirs are
-    reclaimed by :func:`vacuum_ivf_index`; there is no window where a
+    reclaimed by :func:`maintenance.vacuum`; there is no window where a
     reader can observe retired lists, missing rows, or a centroid set
     that disagrees with the lists (the model test kills the job after
     every step and checks exactly this).
@@ -554,103 +530,89 @@ def rebalance_ivf_index_versioned(
     import numpy as np
 
     fault = fault or (lambda step: None)
-    versions = ivf_index_versions(base_path)
-    version = versions[-1]
-    man = read_ivf_manifest(base_path, version)
-    sizes: dict[int, int] = {}
-    for e in man["files"]:
-        sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
-    n_rows = sum(sizes.values())
-    cents = dict(man["centroids"])
-    threshold = n_rows * factor_pct // (len(cents) * 100)
-    oversized = sorted(c for c, n in sizes.items() if n > threshold)
+    stats: dict = {}
 
-    data_dir = os.path.join(base_path, "data")
-    new_entries: list[dict] = []
-    for c in oversized:
-        members = read_ivf_index_version(
-            spark, base_path, version, cells=[c]
-        ).drop("norm", "cell")
-        h = md5_long(
-            F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
-        )
-        seed_rows = (
-            members.withColumn("_h", h)
-            .orderBy("_h", id_col)
-            .limit(2)
-            .select(id_col, "embedding")
-            .collect()
-        )
-        ch_ids = [int(r[id_col]) for r in seed_rows]
-        ch_mat = np.stack(
-            [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-        )
-        new_entries += _commit_lists(
-            ivf_annotate_frozen(members, ch_ids, ch_mat, nprobe).drop("cells"),
-            data_dir,
-        )
-        cents.pop(c, None)
-        for cid, row in zip(ch_ids, ch_mat):
-            cents[int(cid)] = [float(x) for x in row]
-        fault(f"staged:{c}")
+    # A lost publish race re-runs the whole plan: unlike ingest, the
+    # staged work is NOT reusable — the winner changed the file set
+    # (and maybe the centroids), so the split decision's inputs are
+    # stale. Abandoned stages are vacuum fodder.
+    def plan(parent: dict | None) -> dict | None:
+        man = _resolved(base_path, parent)
+        version = man["version"]
+        sizes: dict[int, int] = {}
+        for e in man["files"]:
+            sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
+        n_rows = sum(sizes.values())
+        cents = dict(man["centroids"])
+        threshold = n_rows * factor_pct // (len(cents) * 100)
+        oversized = sorted(c for c, n in sizes.items() if n > threshold)
 
-    if oversized:
+        data_dir = os.path.join(base_path, "data")
+        new_entries: list[dict] = []
+        for c in oversized:
+            members = read_ivf_index_version(
+                spark, base_path, version, cells=[c]
+            ).drop("norm", "cell")
+            h = md5_long(
+                F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
+            )
+            seed_rows = (
+                members.withColumn("_h", h)
+                .orderBy("_h", id_col)
+                .limit(2)
+                .select(id_col, "embedding")
+                .collect()
+            )
+            ch_ids = [int(r[id_col]) for r in seed_rows]
+            ch_mat = np.stack(
+                [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
+            )
+            new_entries += _commit_lists(
+                ivf_annotate_frozen(members, ch_ids, ch_mat, nprobe).drop("cells"),
+                data_dir,
+            )
+            cents.pop(c, None)
+            for cid, row in zip(ch_ids, ch_mat):
+                cents[int(cid)] = [float(x) for x in row]
+            fault(f"staged:{c}")
+
+        stats.update(
+            cells_split=len(oversized),
+            split_cells=oversized,
+            threshold=int(threshold),
+            n_centroids=len(cents),
+        )
+        if not oversized:
+            return None
         split = set(oversized)
         files = [e for e in man["files"] if e["cell"] not in split]
-        files += new_entries
-        fault("prepared")
-        try:
-            _publish_ivf_manifest(
-                base_path,
-                version + 1,
-                _carry_manifest_extra(man, {
-                    "version": version + 1,
-                    "centroids": {str(c): v for c, v in sorted(cents.items())},
-                    **_files_payload(base_path, man, files),
-                }),
-            )
-        except FileExistsError:
-            # Lost the version race. Unlike ingest, the staged work is
-            # NOT reusable: the winner changed the file set (and maybe
-            # the centroids), so the split decision's inputs are stale.
-            # The correct retry is a full re-run against the new
-            # latest — a fresh decision over fresh sizes. Abandoned
-            # stages are vacuum fodder.
-            if retries <= 0:
-                raise
-            fault("retrying")
-            return rebalance_ivf_index_versioned(
-                spark,
-                base_path,
-                factor_pct=factor_pct,
-                split_seed=split_seed,
-                nprobe=nprobe,
-                id_col=id_col,
-                fault=fault,
-                retries=retries - 1,
-            )
-        fault("published")
-    return {
-        "cells_split": len(oversized),
-        "split_cells": oversized,
-        "threshold": int(threshold),
-        "n_centroids": len(cents),
-        "version": version + 1 if oversized else version,
-    }
+        return {
+            "centroids": dict(sorted(cents.items())),
+            **_files_payload(base_path, man, files + new_entries),
+        }
+
+    version = publish_next(base_path, plan, retries=retries, fault=fault)
+    return {**stats, "version": version}
 
 
 # ---- IVF-PQ on the same commit discipline --------------------------------
 
 
-def _books_to_json(books) -> list:
-    """``pq_train_codebooks`` shape -> manifest-storable nested lists
-    (per subspace: ``[[cid, [i64 components]], ...]``). Integer-exact:
-    the codebooks live on the QUANT_SCALE integer grid, so JSON
-    round-trips them losslessly."""
-    return [
-        [[int(cid), [int(x) for x in row]] for cid, row in zip(cids.tolist(), C)]
-        for cids, C in books
-    ]
+def _pq_quantizers(coarse: dict, books) -> dict:
+    """A trained IVF-PQ quantizer pair as manifest keys: ``coarse``
+    (``{cid: [i64 components]}``) and ``books`` (``pq_train_codebooks``
+    shape as nested lists, per subspace ``[[cid, [i64 components]],
+    ...]``). Integer-exact: both live on the QUANT_SCALE integer grid,
+    so JSON round-trips them losslessly."""
+    return {
+        "coarse": {
+            str(int(c)): [int(x) for x in v] for c, v in sorted(coarse.items())
+        },
+        "books": [
+            [[int(cid), [int(x) for x in row]] for cid, row in zip(cids.tolist(), C)]
+            for cids, C in books
+        ],
+    }
 
 
 def _books_from_json(js) -> list:
@@ -668,9 +630,9 @@ def build_ivfpq_index_versioned(
     emb: DataFrame,
     base_path: str,
     n_cells: int = IVF_CELLS,
-    m: int | None = None,
-    k: int | None = None,
-    iters: int | None = None,
+    m: int = PQ_M,
+    k: int = PQ_K,
+    iters: int = PQ_ITERS,
     id_col: str = "vec_id",
 ) -> int:
     """Commit version 1 of a manifest-versioned IVF-PQ index: the same
@@ -681,30 +643,16 @@ def build_ivfpq_index_versioned(
     there is no window where lists and quantizers can disagree, the
     exact hazard sidecars re-introduce on every maintenance write."""
     from sressentials_spark.operators import similarity as S
-    from sressentials_spark.operators.cluster import kmeans_fit_centroids
 
-    m = m if m is not None else S.PQ_M
-    k = k if k is not None else S.PQ_K
-    iters = iters if iters is not None else S.PQ_ITERS
-    coarse = kmeans_fit_centroids(emb, k=n_cells, iters=iters, id_col=id_col)
-    books = S.pq_train_codebooks(
-        emb, m, k, iters=iters, id_col=id_col, residual_coarse=coarse
-    )
+    coarse, books = S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
     entries = _commit_lists(
         S._encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col),
         os.path.join(base_path, "data"),
     )
-    _publish_ivf_manifest(
+    publish_manifest(
         base_path,
         1,
-        {
-            "version": 1,
-            "coarse": {
-                str(int(c)): [int(x) for x in v] for c, v in sorted(coarse.items())
-            },
-            "books": _books_to_json(books),
-            "files": entries,
-        },
+        {"version": 1, **_pq_quantizers(coarse, books), "files": entries},
     )
     return 1
 
@@ -725,54 +673,24 @@ def ingest_ivfpq_index_versioned(
     pins exactly which quantizers encoded every visible row. A lost publish race
     retries on top of the new latest, reusing the staged files while
     the winner kept the quantizers (always, between ingests — they are
-    frozen at build) and re-encoding defensively if some future
-    maintenance verb ever swaps them."""
-    fault = fault or (lambda step: None)
+    frozen at build) and re-encoding if a refresh or rebalance swapped
+    them (the shared ingest plan)."""
     from sressentials_spark.operators import similarity as S
 
-    version = ivf_index_versions(base_path)[-1]
-    man = read_ivf_manifest(base_path, version)
-
-    def _encode() -> list[dict]:
-        return _commit_lists(
-            S._encode_ivfpq_lists(
-                emb_batch,
-                man["coarse"],
-                _books_from_json(man["books"]),
-                m=len(man["books"]),
-                id_col=id_col,
-            ),
-            os.path.join(base_path, "data"),
+    def encode(man: dict) -> DataFrame:
+        return S._encode_ivfpq_lists(
+            emb_batch,
+            man["coarse"],
+            _books_from_json(man["books"]),
+            m=len(man["books"]),
+            id_col=id_col,
         )
 
-    entries = _encode()
-    if not entries:
-        return version  # empty batch: nothing to commit
-    fault("staged")
-    for _ in range(retries + 1):
-        try:
-            payload = {
-                "version": version + 1,
-                "coarse": {
-                    str(c): v for c, v in sorted(man["coarse"].items())
-                },
-                "books": man["books"],
-                **_files_payload(base_path, man, man["files"] + entries),
-            }
-            payload.update(manifest_extra or {})
-            _publish_ivf_manifest(
-                base_path, version + 1, _carry_manifest_extra(man, payload)
-            )
-            return version + 1
-        except FileExistsError:
-            prev_coarse, prev_books = man["coarse"], man["books"]
-            version = ivf_index_versions(base_path)[-1]
-            man = read_ivf_manifest(base_path, version)
-            if man["coarse"] != prev_coarse or man["books"] != prev_books:
-                entries = _encode()
-            fault("retrying")
-    raise RuntimeError(
-        f"ingest lost the publish race {retries + 1} times under {base_path}"
+    return publish_next(
+        base_path,
+        _ingest_plan(base_path, encode, fault, manifest_extra),
+        retries=retries,
+        fault=fault,
     )
 
 
@@ -793,7 +711,7 @@ def pq_adc_topk_ivfpq_versioned(
     (shared scoring core: similarity._ivfpq_adc_search)."""
     from sressentials_spark.operators import similarity as S
 
-    version = version or ivf_index_versions(base_path)[-1]
+    version = version or manifest_versions(base_path)[-1]
     man = _read_manifest_raw(base_path, version)  # quantizers ride inline
     books = _books_from_json(man["books"])
     return S._ivfpq_adc_search(
@@ -841,21 +759,22 @@ def compact_ivf_index_versioned(
     Cost: O(fragmented cells' bytes) read+write — the same
     maintenance economics as rebalance, and like it the per-cell loop
     is bounded by how much fragmentation accumulated since the last
-    pass. A lost publish race re-plans against the new latest."""
+    pass. A lost publish race re-plans against the new latest (the
+    winner changed the file set; staged rewrites of the lost attempt
+    are vacuum fodder)."""
     import math
-
-    from sressentials_spark.operators.maintenance import DEFAULT_TARGET_BYTES
 
     fault = fault or (lambda step: None)
     target = int(target_bytes or DEFAULT_TARGET_BYTES)
-    for _ in range(retries + 1):
-        version = ivf_index_versions(base_path)[-1]
-        man = read_ivf_manifest(base_path, version)
+    data_dir = os.path.join(base_path, "data")
+    stats: dict = {}
+
+    def plan(parent: dict | None) -> dict | None:
+        man = _resolved(base_path, parent)
         by_cell: dict[int, list[dict]] = {}
         for e in man["files"]:
             by_cell.setdefault(e["cell"], []).append(e)
-        data_dir = os.path.join(base_path, "data")
-        plan: dict[int, tuple[list[dict], int]] = {}
+        todo: dict[int, tuple[list[dict], int]] = {}
         for cell, es in sorted(by_cell.items()):
             if len(es) < min_files:
                 continue
@@ -864,17 +783,16 @@ def compact_ivf_index_versioned(
             )
             k = max(1, math.ceil(total / target))
             if k < len(es):
-                plan[cell] = (es, k)
-        if not plan:
-            return {
-                "cells_compacted": 0,
-                "files_before": len(man["files"]),
-                "files_after": len(man["files"]),
-                "version": version,
-            }
+                todo[cell] = (es, k)
+        n_files = len(man["files"])
+        stats.update(
+            cells_compacted=len(todo), files_before=n_files, files_after=n_files
+        )
+        if not todo:
+            return None
         replaced: set[str] = set()
         new_entries: list[dict] = []
-        for cell, (es, k) in sorted(plan.items()):
+        for cell, (es, k) in sorted(todo.items()):
             rows = spark.read.parquet(
                 *[os.path.join(data_dir, e["path"]) for e in es]
             )
@@ -889,37 +807,11 @@ def compact_ivf_index_versioned(
             replaced.update(e["path"] for e in es)
             fault(f"staged:{cell}")
         kept = [e for e in man["files"] if e["path"] not in replaced]
-        payload = {
-            "version": version + 1,
-            **_files_payload(base_path, man, kept + new_entries),
-        }
-        for key in ("centroids", "coarse", "books"):
-            if key in man:
-                payload[key] = (
-                    {str(c): v for c, v in sorted(man[key].items())}
-                    if isinstance(man[key], dict)
-                    else man[key]
-                )
-        _carry_manifest_extra(man, payload)
-        fault("prepared")
-        try:
-            _publish_ivf_manifest(base_path, version + 1, payload)
-        except FileExistsError:
-            # The winner changed the file set; the plan is stale —
-            # re-plan against the new latest. Staged rewrites of the
-            # lost attempt are vacuum fodder.
-            fault("retrying")
-            continue
-        fault("published")
-        return {
-            "cells_compacted": len(plan),
-            "files_before": len(man["files"]),
-            "files_after": len(kept) + len(new_entries),
-            "version": version + 1,
-        }
-    raise RuntimeError(
-        f"compact lost the publish race {retries + 1} times under {base_path}"
-    )
+        stats["files_after"] = len(kept) + len(new_entries)
+        return _files_payload(base_path, man, kept + new_entries)
+
+    version = publish_next(base_path, plan, retries=retries, fault=fault)
+    return {**stats, "version": version}
 
 
 def delete_ivf_index_versioned(
@@ -957,7 +849,8 @@ def delete_ivf_index_versioned(
     manifests predating the stats scan unconditionally. Rewrite is
     O(affected files). A lost publish race re-locates against the new
     latest (the winner may have rewritten or split the very files this
-    delete targeted).
+    delete targeted; staged rewrites of the lost attempt are vacuum
+    fodder).
 
     LOCAL-FILESYSTEM CONTRACT (module-wide, explicit here because this
     verb would fail hard first): the hit-mapping below resolves
@@ -983,20 +876,19 @@ def delete_ivf_index_versioned(
         i = bisect.bisect_left(want, int(e["min_id"]))
         return i < len(want) and want[i] <= int(e["max_id"])
 
-    for _ in range(retries + 1):
-        version = ivf_index_versions(base_path)[-1]
-        man = read_ivf_manifest(base_path, version)
+    stats: dict = {}
+
+    def plan(parent: dict | None) -> dict | None:
+        man = _resolved(base_path, parent)
         paths = {
             os.path.join(base_path, "data", e["path"]): e for e in man["files"]
         }
         candidates = [p for p, e in paths.items() if _may_contain(e)]
+        stats.update(
+            deleted_rows=0, files_rewritten=0, files_scanned=len(candidates)
+        )
         if not candidates:
-            return {
-                "deleted_rows": 0,
-                "files_rewritten": 0,
-                "files_scanned": 0,
-                "version": version,
-            }
+            return None
         hits = (
             spark.read.parquet(*candidates)
             .select(F.col(id_col), F.input_file_name().alias("_f"))
@@ -1006,12 +898,7 @@ def delete_ivf_index_versioned(
             .collect()
         )
         if not hits:
-            return {
-                "deleted_rows": 0,
-                "files_rewritten": 0,
-                "files_scanned": len(candidates),
-                "version": version,
-            }
+            return None
         # input_file_name is a file URI; map it back to the MANIFEST's
         # own path strings via the candidate list, comparing realpaths
         # (normpath equality breaks under symlinked scratch dirs or a
@@ -1031,48 +918,23 @@ def delete_ivf_index_versioned(
                 raise RuntimeError(
                     f"delete located victim rows in {r['_f']!r}, which "
                     f"resolves to no manifest entry of {base_path} "
-                    f"v{version} — refusing to publish a delete that "
+                    f"v{man['version']} — refusing to publish a delete that "
                     "would leave victims visible"
                 )
             affected[cand] = int(r["count"])
-        n_deleted = sum(affected.values())
         survivors = spark.read.parquet(*affected).filter(
             ~F.col(id_col).isin(want)
         )
         entries = _commit_lists(survivors, os.path.join(base_path, "data"))
         fault("staged")
         kept = [e for p, e in paths.items() if p not in affected]
-        payload = {
-            "version": version + 1,
-            **_files_payload(base_path, man, kept + entries),
-        }
-        for k in ("centroids", "coarse", "books"):
-            if k in man:
-                payload[k] = (
-                    {str(c): v for c, v in sorted(man[k].items())}
-                    if isinstance(man[k], dict)
-                    else man[k]
-                )
-        _carry_manifest_extra(man, payload)
-        try:
-            _publish_ivf_manifest(base_path, version + 1, payload)
-        except FileExistsError:
-            # The winner may have rewritten/split/vacuumed the very
-            # files this delete targeted: the affected set is stale,
-            # so re-locate against the new latest. Staged rewrites of
-            # the lost attempt are vacuum fodder.
-            fault("retrying")
-            continue
-        fault("published")
-        return {
-            "deleted_rows": n_deleted,
-            "files_rewritten": len(affected),
-            "files_scanned": len(candidates),
-            "version": version + 1,
-        }
-    raise RuntimeError(
-        f"delete lost the publish race {retries + 1} times under {base_path}"
-    )
+        stats.update(
+            deleted_rows=sum(affected.values()), files_rewritten=len(affected)
+        )
+        return _files_payload(base_path, man, kept + entries)
+
+    version = publish_next(base_path, plan, retries=retries, fault=fault)
+    return {**stats, "version": version}
 
 
 #: Child cell ids for IVF-PQ rebalance splits are the seed member's
@@ -1130,126 +992,108 @@ def rebalance_ivfpq_index_versioned(
     from sressentials_spark.operators.linalg import quantize_exact
 
     fault = fault or (lambda step: None)
-    version = ivf_index_versions(base_path)[-1]
-    man = read_ivf_manifest(base_path, version)
-    books = _books_from_json(man["books"])
-    m = len(books)
-    sizes: dict[int, int] = {}
-    for e in man["files"]:
-        sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
-    n_rows = sum(sizes.values())
-    cents = {int(c): list(v) for c, v in man["coarse"].items()}
-    threshold = n_rows * factor_pct // (len(cents) * 100)
-    oversized = sorted(c for c, n in sizes.items() if n > threshold)
+    stats: dict = {}
 
-    data_dir = os.path.join(base_path, "data")
-    # The re-encode can only be as complete as the caller's corpus: if
-    # `emb` is stale (e.g. a concurrent ingest committed rows after the
-    # caller read the corpus — the same hazard on the lost-publish-race
-    # retry, where the re-read manifest is newer than `emb`), the
-    # per-cell inner join below would silently drop those members from
-    # the rewritten child lists — permanent row loss. Verify ONCE, up
-    # front, that every oversized cell's manifest member id resolves in
-    # `emb` — one left_anti pass over the union instead of a
-    # full-corpus join per cell — and abort before any staging; the
-    # caller re-reads the source of truth and retries
-    # (refresh_ivfpq_index_versioned's contract).
-    if oversized:
-        missing = (
-            read_ivf_index_version(spark, base_path, version, cells=oversized)
-            .select(id_col)
-            .join(emb.select(id_col), id_col, "left_anti")
-            .count()
-        )
-        if missing:
-            raise ValueError(
-                f"corpus is stale for cells {oversized}: {missing} member "
-                f"id(s) in manifest v{version} of {base_path} are absent "
-                "from the supplied embeddings — re-read the source-of-truth "
-                "corpus and retry the rebalance"
+    # Same recovery as the cosine tier: a lost publish race re-runs the
+    # whole plan — the winner changed the file set (and maybe the
+    # cells), so the split decision's inputs are stale.
+    def plan(parent: dict | None) -> dict | None:
+        man = _resolved(base_path, parent)
+        version = man["version"]
+        books = _books_from_json(man["books"])
+        m = len(books)
+        sizes: dict[int, int] = {}
+        for e in man["files"]:
+            sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
+        n_rows = sum(sizes.values())
+        cents = {int(c): list(v) for c, v in man["coarse"].items()}
+        threshold = n_rows * factor_pct // (len(cents) * 100)
+        oversized = sorted(c for c, n in sizes.items() if n > threshold)
+
+        data_dir = os.path.join(base_path, "data")
+        # The re-encode can only be as complete as the caller's corpus: if
+        # `emb` is stale (e.g. a concurrent ingest committed rows after the
+        # caller read the corpus — the same hazard on the lost-publish-race
+        # retry, where the re-read manifest is newer than `emb`), the
+        # per-cell inner join below would silently drop those members from
+        # the rewritten child lists — permanent row loss. Verify ONCE, up
+        # front, that every oversized cell's manifest member id resolves in
+        # `emb` — one left_anti pass over the union instead of a
+        # full-corpus join per cell — and abort before any staging; the
+        # caller re-reads the source of truth and retries
+        # (refresh_ivfpq_index_versioned's contract).
+        if oversized:
+            missing = (
+                read_ivf_index_version(spark, base_path, version, cells=oversized)
+                .select(id_col)
+                .join(emb.select(id_col), id_col, "left_anti")
+                .count()
             )
-    new_entries: list[dict] = []
-    for c in oversized:
-        member_ids = read_ivf_index_version(
-            spark, base_path, version, cells=[c]
-        ).select(id_col)
-        members = emb.join(member_ids, id_col).select(id_col, "embedding")
-        h = md5_long(
-            F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
-        )
-        seed_rows = (
-            members.withColumn("_h", h)
-            .orderBy("_h", id_col)
-            .limit(2)
-            .collect()
-        )
-        ch_coarse = {
-            int(r[id_col]) + IVFPQ_CHILD_ID_BASE: [
-                int(x)
-                for x in quantize_exact(
-                    np.asarray(r["embedding"], dtype=np.float64)
+            if missing:
+                raise ValueError(
+                    f"corpus is stale for cells {oversized}: {missing} member "
+                    f"id(s) in manifest v{version} of {base_path} are absent "
+                    "from the supplied embeddings — re-read the source-of-truth "
+                    "corpus and retry the rebalance"
                 )
-            ]
-            for r in seed_rows
-        }
-        new_entries += _commit_lists(
-            S._encode_ivfpq_lists(members, ch_coarse, books, m=m, id_col=id_col),
-            data_dir,
-        )
-        cents.pop(c, None)
-        cents.update(ch_coarse)
-        fault(f"staged:{c}")
+        new_entries: list[dict] = []
+        for c in oversized:
+            member_ids = read_ivf_index_version(
+                spark, base_path, version, cells=[c]
+            ).select(id_col)
+            members = emb.join(member_ids, id_col).select(id_col, "embedding")
+            h = md5_long(
+                F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
+            )
+            seed_rows = (
+                members.withColumn("_h", h)
+                .orderBy("_h", id_col)
+                .limit(2)
+                .collect()
+            )
+            ch_coarse = {
+                int(r[id_col]) + IVFPQ_CHILD_ID_BASE: [
+                    int(x)
+                    for x in quantize_exact(
+                        np.asarray(r["embedding"], dtype=np.float64)
+                    )
+                ]
+                for r in seed_rows
+            }
+            new_entries += _commit_lists(
+                S._encode_ivfpq_lists(members, ch_coarse, books, m=m, id_col=id_col),
+                data_dir,
+            )
+            cents.pop(c, None)
+            cents.update(ch_coarse)
+            fault(f"staged:{c}")
 
-    if oversized:
+        stats.update(
+            cells_split=len(oversized),
+            split_cells=oversized,
+            threshold=int(threshold),
+            n_centroids=len(cents),
+        )
+        if not oversized:
+            return None
         split = set(oversized)
         files = [e for e in man["files"] if e["cell"] not in split]
-        files += new_entries
-        fault("prepared")
-        try:
-            _publish_ivf_manifest(
-                base_path,
-                version + 1,
-                _carry_manifest_extra(man, {
-                    "version": version + 1,
-                    "coarse": {str(c): v for c, v in sorted(cents.items())},
-                    "books": man["books"],
-                    **_files_payload(base_path, man, files),
-                }),
-            )
-        except FileExistsError:
-            # Same recovery as the cosine tier: the winner changed the
-            # file set (and maybe the cells), so the split decision's
-            # inputs are stale — re-run against the new latest.
-            if retries <= 0:
-                raise
-            fault("retrying")
-            return rebalance_ivfpq_index_versioned(
-                spark,
-                emb,
-                base_path,
-                factor_pct=factor_pct,
-                split_seed=split_seed,
-                id_col=id_col,
-                fault=fault,
-                retries=retries - 1,
-            )
-        fault("published")
-    return {
-        "cells_split": len(oversized),
-        "split_cells": oversized,
-        "threshold": int(threshold),
-        "n_centroids": len(cents),
-        "version": version + 1 if oversized else version,
-    }
+        return {
+            "coarse": dict(sorted(cents.items())),
+            **_files_payload(base_path, man, files + new_entries),
+        }
+
+    version = publish_next(base_path, plan, retries=retries, fault=fault)
+    return {**stats, "version": version}
 
 
 def refresh_ivfpq_index_versioned(
     emb: DataFrame,
     base_path: str,
     n_cells: int = IVF_CELLS,
-    m: int | None = None,
-    k: int | None = None,
-    iters: int | None = None,
+    m: int = PQ_M,
+    k: int = PQ_K,
+    iters: int = PQ_ITERS,
     id_col: str = "vec_id",
     fault: Callable[[str], None] | None = None,
 ) -> int:
@@ -1270,39 +1114,26 @@ def refresh_ivfpq_index_versioned(
     a concurrent ingest, whose batch the caller-supplied ``emb`` may
     not contain) raises ``FileExistsError`` to the caller, who
     re-reads the source-of-truth corpus and re-decides — retrying with
-    a stale ``emb`` would silently drop the winner's rows."""
+    a stale ``emb`` would silently drop the winner's rows (hence
+    ``retries=0``)."""
     from sressentials_spark.operators import similarity as S
-    from sressentials_spark.operators.cluster import kmeans_fit_centroids
 
     fault = fault or (lambda step: None)
-    m = m if m is not None else S.PQ_M
-    k = k if k is not None else S.PQ_K
-    iters = iters if iters is not None else S.PQ_ITERS
-    version = ivf_index_versions(base_path)[-1]
-    parent = read_ivf_manifest(base_path, version)
-    coarse = kmeans_fit_centroids(emb, k=n_cells, iters=iters, id_col=id_col)
-    books = S.pq_train_codebooks(
-        emb, m, k, iters=iters, id_col=id_col, residual_coarse=coarse
-    )
-    entries = _commit_lists(
-        S._encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col),
-        os.path.join(base_path, "data"),
-    )
-    fault("staged")
-    _publish_ivf_manifest(
-        base_path,
-        version + 1,
-        _carry_manifest_extra(parent, {
-            "version": version + 1,
-            "coarse": {
-                str(int(c)): [int(x) for x in v] for c, v in sorted(coarse.items())
-            },
-            "books": _books_to_json(books),
-            **_files_payload(base_path, parent, entries),
-        }),
-    )
-    fault("published")
-    return version + 1
+
+    def plan(parent: dict | None) -> dict:
+        man = _resolved(base_path, parent)
+        coarse, books = S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
+        entries = _commit_lists(
+            S._encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col),
+            os.path.join(base_path, "data"),
+        )
+        fault("staged")
+        return {
+            **_pq_quantizers(coarse, books),
+            **_files_payload(base_path, man, entries),
+        }
+
+    return publish_next(base_path, plan, retries=0, fault=fault)
 
 
 IVFPQ_REFRESH_DRIFT_PERMILLE = 1050
@@ -1335,7 +1166,7 @@ def ivfpq_refresh_decision(
     :func:`refresh_ivfpq_index_versioned` instead of a timer."""
     from sressentials_spark.operators import similarity as S
 
-    version = version or ivf_index_versions(base_path)[-1]
+    version = version or manifest_versions(base_path)[-1]
     man = _read_manifest_raw(base_path, version)  # quantizers ride inline
     err = S.ivfpq_quantization_error(
         spark,
@@ -1419,17 +1250,10 @@ def import_ivfpq_index_versioned(
         *[f"code_{i}" for i in range(m)],
     )
     entries = _commit_lists(lists, os.path.join(base_path, "data"))
-    _publish_ivf_manifest(
+    publish_manifest(
         base_path,
         1,
-        {
-            "version": 1,
-            "coarse": {
-                str(int(c)): [int(x) for x in v] for c, v in sorted(coarse.items())
-            },
-            "books": _books_to_json(books),
-            "files": entries,
-        },
+        {"version": 1, **_pq_quantizers(coarse, books), "files": entries},
     )
     return 1
 
@@ -1467,16 +1291,13 @@ def promote_ivf_manifest_list(
     new latest. Idempotent: an already-two-level latest returns
     ``promoted=False`` without writing anything."""
     fault = fault or (lambda step: None)
-    for _ in range(retries + 1):
-        version = ivf_index_versions(base_path)[-1]
-        raw = _read_manifest_raw(base_path, version)
-        if "manifest_list" in raw:
-            return {
-                "promoted": False,
-                "version": version,
-                "n_manifests": len(raw["manifest_list"]),
-            }
-        entries = raw["files"]
+    stats: dict = {}
+
+    def plan(parent: dict | None) -> dict | None:
+        if parent is not None and "manifest_list" in parent:
+            stats.update(promoted=False, n_manifests=len(parent["manifest_list"]))
+            return None
+        entries = _resolved(base_path, parent)["files"]
         by_commit: dict[str, list[dict]] = {}
         for e in entries:
             by_commit.setdefault(e["path"].split("/", 1)[0], []).append(e)
@@ -1484,33 +1305,11 @@ def promote_ivf_manifest_list(
         for commit, block in sorted(by_commit.items()):
             pointers.append(_write_manifest_file(base_path, block))
             fault(f"staged:{commit}")
-        payload: dict = {"version": version + 1, "manifest_list": pointers}
-        for key in ("centroids", "coarse", "books"):
-            if key in raw:
-                payload[key] = (
-                    {str(c): v for c, v in sorted(raw[key].items())}
-                    if isinstance(raw[key], dict)
-                    else raw[key]
-                )
-        _carry_manifest_extra(raw, payload)
-        fault("prepared")
-        try:
-            _publish_ivf_manifest(base_path, version + 1, payload)
-        except FileExistsError:
-            # The winner changed the file set; staged blocks of this
-            # attempt are vacuum fodder — re-plan against the new latest.
-            fault("retrying")
-            continue
-        fault("published")
-        return {
-            "promoted": True,
-            "version": version + 1,
-            "n_manifests": len(pointers),
-            "n_files": len(entries),
-        }
-    raise RuntimeError(
-        f"promotion lost the publish race {retries + 1} times under {base_path}"
-    )
+        stats.update(promoted=True, n_manifests=len(pointers), n_files=len(entries))
+        return {"manifest_list": pointers}
+
+    version = publish_next(base_path, plan, retries=retries, fault=fault)
+    return {**stats, "version": version}
 
 
 def ivf_index_history(spark, base_path: str) -> "DataFrame":
@@ -1530,7 +1329,7 @@ def ivf_index_history(spark, base_path: str) -> "DataFrame":
     sit under the oracle gate; ``n_files`` is physical layout and stays
     a model-tested column."""
     rows = []
-    for v in ivf_index_versions(base_path):
+    for v in manifest_versions(base_path):
         # Raw read: both layouts answer from the version JSON alone —
         # flat manifests list entries inline, two-level ones carry the
         # per-block rollups — so history never loads an entry block.
@@ -1558,144 +1357,3 @@ def ivf_index_history(spark, base_path: str) -> "DataFrame":
         "version bigint, n_files bigint, n_rows bigint, n_cells bigint, "
         "stream_batch_id bigint",
     )
-
-
-def vacuum_ivf_index(
-    base_path: str, *, keep_last: int = 1, orphan_min_age_s: float = 3600.0
-) -> dict:
-    """Reclaim data files unreachable from the ``keep_last`` newest
-    manifests, drop expired manifests, and sweep stray staging
-    manifests (a writer killed inside publish). Surviving versions read
-    exactly as committed — the snapshot tier's vacuum contract,
-    including its in-flight-writer grace window: files referenced by an
-    EXPIRED manifest were durably committed and delete freely, but
-    files no manifest explains may be a live writer's staged commit and
-    delete only once quiesced for ``orphan_min_age_s`` (pass 0 only
-    when no writer can be live). ``keep_last`` must be >= 1: an index
-    with zero versions is unreadable, so "expire everything" is not a
-    vacuum verb (the snapshot tier enforces the same floor)."""
-    import time
-
-    from sressentials_spark.operators.maintenance import _quiesced
-
-    if keep_last < 1:
-        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    versions = ivf_index_versions(base_path)
-    keep = versions[-keep_last:]
-    # Reachability walks BOTH layouts: the transparent read flattens a
-    # two-level version's blocks into entries (data-file liveness),
-    # and the pointer paths themselves are collected as live/committed
-    # MANIFEST files — a block shared between an expired and a kept
-    # version (pointer reuse) stays live.
-    live: set[str] = set()
-    live_manifests: set[str] = set()
-    for v in keep:
-        man = read_ivf_manifest(base_path, v)
-        for e in man["files"]:
-            live.add(os.path.normpath(e["path"]))
-        for p in man.get("manifest_list", []):
-            live_manifests.add(os.path.normpath(p["path"]))
-    committed: set[str] = set()  # referenced by an expired manifest
-    committed_manifests: set[str] = set()
-    for v in versions:
-        if v not in keep:
-            man = read_ivf_manifest(base_path, v)
-            for e in man["files"]:
-                committed.add(os.path.normpath(e["path"]))
-            for p in man.get("manifest_list", []):
-                committed_manifests.add(os.path.normpath(p["path"]))
-    data_dir = os.path.join(base_path, "data")
-    removed_files = 0
-    now = time.time()
-    # ``touched`` = dirs whose mtime THIS vacuum bumps by deleting dead
-    # entries inside them. Commit dirs are writer-unique, so a dir we
-    # emptied held only expired-committed or quiesced-orphan files —
-    # its writer is provably done, and the dir counts as quiesced no
-    # matter what its (our own) fresh mtime says. Without this, the
-    # dir sweeps race vacuum's own pass-1 mutations: the old code's
-    # single entry-time ``now`` made ``_quiesced(d, 0, now)`` see
-    # ``now - mtime < 0`` whenever the unlink landed a clock tick
-    # later, and the explicitly-waived grace window silently held
-    # (flaky test_vacuum_grace_window_protects_inflight_staging).
-    touched: set[str] = set()
-    for f in globmod.glob(os.path.join(data_dir, "commit-*", "*", "*.parquet")):
-        rel = os.path.normpath(os.path.relpath(f, data_dir))
-        if rel in live:
-            continue
-        if rel in committed or _quiesced(f, orphan_min_age_s, now):
-            os.unlink(f)
-            removed_files += 1
-            cell_dir = os.path.dirname(f)
-            touched.add(cell_dir)
-            touched.add(os.path.dirname(cell_dir))
-    # A writer killed mid-Spark-write leaves its parquet under
-    # commit-*/_temporary/... — unreachable by the two-level glob above
-    # and (being parquet) keeping the commit-dir sweep below from ever
-    # reclaiming the dir. A quiesced _temporary means no task attempt
-    # has touched staging within the grace window: the job is dead, so
-    # the subtree reclaims explicitly.
-    for t in globmod.glob(os.path.join(data_dir, "commit-*", "_temporary")):
-        if os.path.isdir(t) and _quiesced(t, orphan_min_age_s, now):
-            shutil.rmtree(t)
-            touched.add(os.path.dirname(t))
-    # Re-capture now so vacuum's own pass-1 mutations are in the past;
-    # with the grace window waived (orphan_min_age_s=0) the sweeps
-    # below are then deterministic.
-    now = time.time()
-    # Drop now-empty cell dirs and parquet-free commit dirs — but only
-    # our own leftovers (``touched``) or quiesced ones: a live writer's
-    # job-commit has momentarily-empty destination cellp= dirs before
-    # task files move in, and sweeping one would fail that writer.
-    for d in globmod.glob(os.path.join(data_dir, "commit-*", "*")):
-        if (
-            os.path.isdir(d)
-            and not os.listdir(d)
-            and (d in touched or _quiesced(d, orphan_min_age_s, now))
-        ):
-            os.rmdir(d)
-            touched.add(os.path.dirname(d))
-    for d in globmod.glob(os.path.join(data_dir, "commit-*")):
-        if (
-            os.path.isdir(d)
-            and not any(
-                globmod.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
-            )
-            and (d in touched or _quiesced(d, orphan_min_age_s, now))
-        ):
-            shutil.rmtree(d)
-    removed_manifests = 0
-    for v in versions:
-        if v not in keep:
-            os.unlink(_manifest_path(base_path, v))
-            removed_manifests += 1
-    for t in globmod.glob(
-        os.path.join(base_path, "index-manifest-v*.json.tmp-*")
-    ):
-        if _quiesced(t, orphan_min_age_s, now):
-            os.unlink(t)
-    # Manifest FILES (two-level blocks), swept AFTER the expired
-    # version JSONs so a crash mid-vacuum can never strand a readable
-    # expired version with missing blocks: blocks referenced only by a
-    # now-unlinked expired version reclaim freely; blocks no version
-    # explains may be a live writer's staging (a promotion or a
-    # layout-preserving publish mid-flight) and honor the grace
-    # window, exactly like orphan commit dirs.
-    removed_manifest_files = 0
-    for f in globmod.glob(os.path.join(base_path, "manifests", "*.json")):
-        rel = os.path.normpath(os.path.relpath(f, base_path))
-        if rel in live_manifests:
-            continue
-        if rel in committed_manifests or _quiesced(f, orphan_min_age_s, now):
-            os.unlink(f)
-            removed_manifest_files += 1
-    for t in globmod.glob(
-        os.path.join(base_path, "manifests", "*.json.tmp-*")
-    ):
-        if _quiesced(t, orphan_min_age_s, now):
-            os.unlink(t)
-    return {
-        "removed_files": removed_files,
-        "removed_manifests": removed_manifests,
-        "removed_manifest_files": removed_manifest_files,
-        "kept_versions": keep,
-    }

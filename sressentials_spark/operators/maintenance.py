@@ -1,4 +1,16 @@
-"""Table maintenance: small-file compaction.
+"""Table maintenance: small-file compaction, and the one commit
+protocol of the manifest-versioned stores.
+
+Both versioned tiers — the snapshot tables here and the ANN indexes in
+operators/ivf_versioned.py — run the same Delta Lake commit protocol
+(Armbrust et al., VLDB 2020), and this module owns it: immutable data
+files under ``data/commit-<id>/``, one JSON ``manifest-v{n}.json`` per
+version (:func:`manifest_versions`, :func:`read_manifest`), an
+exclusive durable link publish (:func:`atomic_publish_json`), one
+optimistic-concurrency publish-and-retry loop that carries the
+parent's keys forward (:func:`publish_next`), and one vacuum with an
+in-flight-writer grace window (:func:`vacuum`). The tiers differ only
+in what a commit stages and what its manifest entries say.
 
 The small-files problem is the quiet killer of 100 TB lakehouse
 tables: a streaming sink or over-parallel batch write lands thousands
@@ -33,8 +45,12 @@ zero shuffles, at the price of one small read job per output file.
 from __future__ import annotations
 
 import glob as globmod
+import json
 import os
+import shutil
+import time
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,8 +120,6 @@ def compact_clustered_files(
     inside an output file may widen (rows of a bin can interleave),
     but file-level pruning — the granularity object-store listing
     cares about — is preserved (pinned by tests)."""
-    import shutil
-
     manifest = file_manifest(src_dir)
     if not manifest:
         raise ValueError(f"no parquet part files under {src_dir}")
@@ -214,16 +228,338 @@ def corrupt_then_rebuild_day(
 
 
 # --------------------------------------------------------------------------
-# Manifest-based snapshots: time travel + vacuum (the Delta/Iceberg
-# pattern rebuilt on bare parquet + JSON manifests)
+# Manifest-versioned stores: the one commit protocol (the Delta/Iceberg
+# pattern rebuilt on bare parquet + JSON manifests) shared by the
+# snapshot tables below and the ANN indexes in operators/ivf_versioned.py
 # --------------------------------------------------------------------------
 
-#: Manifest files live next to the data, one per committed version.
-_MANIFEST_FMT = "manifest-v{version}.json"
+#: Keys a child manifest never inherits from its parent: the version
+#: number and the file listing (flat ``files`` or two-level
+#: ``manifest_list``) are the child's own, and ``_blocks`` is the index
+#: tier's in-memory block cache. Every other key — ``mode``, the index
+#: quantizers, riders a transactional upstream stamped in (the
+#: streaming ingest's ``stream_batch_id``) — carries forward unless the
+#: child restates it: the streaming exactly-once recipe reads its stamp
+#: from the VISIBLE manifests, so a maintenance verb that dropped it
+#: would, after vacuum expires the stamped version, let a redelivered
+#: micro-batch re-ingest its rows (duplicates with no error).
+_STRUCTURAL_KEYS = frozenset({"version", "files", "manifest_list", "_blocks"})
 
 
-def _manifest_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, _MANIFEST_FMT.format(version=version))
+def _manifest_path(store_dir: str, version: int) -> str:
+    return os.path.join(store_dir, f"manifest-v{version}.json")
+
+
+def manifest_versions(store_dir: str) -> list[int]:
+    """Committed versions of a manifest-versioned store, ascending
+    (empty for a fresh store)."""
+    return sorted(
+        int(os.path.basename(p)[len("manifest-v"):-len(".json")])
+        for p in globmod.glob(os.path.join(store_dir, "manifest-v*.json"))
+    )
+
+
+def read_manifest(store_dir: str, version: int) -> dict:
+    """One committed version's manifest exactly as published."""
+    with open(_manifest_path(store_dir, version)) as fh:
+        return json.load(fh)
+
+
+def read_manifest_block(store_dir: str, pointer: dict) -> list[dict]:
+    """The entry block one ``manifest_list`` pointer names (the
+    two-level layout: the version JSON lists pointers, each block file
+    under ``manifests/`` lists entries)."""
+    with open(os.path.join(store_dir, pointer["path"])) as fh:
+        return json.load(fh)["files"]
+
+
+def _manifest_entries(store_dir: str, man: dict) -> list[dict]:
+    """Every file entry a manifest makes visible, in either layout."""
+    if "manifest_list" in man:
+        return [
+            e for p in man["manifest_list"] for e in read_manifest_block(store_dir, p)
+        ]
+    return man["files"]
+
+
+def atomic_publish_json(path: str, payload: dict) -> None:
+    """Exclusive, DURABLE json publish — the one commit idiom behind
+    every version manifest and manifest block:
+
+    * the staging file name is WRITER-UNIQUE (uuid suffix): two racers
+      must never share a staging inode, or the winner's ``os.link``
+      can publish the loser's half-written bytes as a committed
+      version;
+    * the bytes are fsync'd before the link and the DIRECTORY after
+      it: without both, a power loss can leave the committed name
+      durable while its contents are not — "crash-atomic" must mean
+      machine crashes, not just process kills;
+    * ``os.link`` onto the final name is exclusive: exactly one racer
+      wins, the loser raises ``FileExistsError`` and must retry
+      against the new latest (the Delta/Iceberg commit-conflict
+      rule)."""
+    import uuid
+
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
+    fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(payload, fh)
+            fh.flush()
+            os.fsync(fh.fileno())
+        os.link(tmp, path)
+        dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
+        try:
+            os.fsync(dfd)
+        finally:
+            os.close(dfd)
+    finally:
+        os.unlink(tmp)
+
+
+def publish_manifest(store_dir: str, version: int, payload: dict) -> None:
+    """Atomically link-publish ``payload`` as ``version`` of the store
+    (refuses to overwrite: the optimistic-concurrency loser gets
+    ``FileExistsError``, its staged data left orphaned for vacuum)."""
+    atomic_publish_json(_manifest_path(store_dir, version), payload)
+
+
+def publish_next(
+    store_dir: str,
+    plan: Callable[[dict | None], dict | None],
+    *,
+    retries: int,
+    fault: Callable[[str], None] | None = None,
+) -> int:
+    """Commit one child of the store's latest version — the
+    optimistic-concurrency loop every committing verb of both tiers
+    runs. Each attempt:
+
+    1. reads the latest manifest (``None`` for a fresh store);
+    2. calls ``plan(parent)``, which stages the child's data files and
+       returns its files half (``files`` or ``manifest_list``) plus
+       every key it changes — or ``None`` when there is nothing to
+       commit, in which case the parent's version (0 when fresh) is
+       returned and nothing is published;
+    3. carries every other parent key forward (see
+       ``_STRUCTURAL_KEYS``);
+    4. calls ``fault("prepared")``, link-publishes the child as
+       ``parent + 1`` and calls ``fault("published")``.
+
+    A lost publish race calls ``fault("retrying")`` and re-plans
+    against the new latest; the plan decides what of its earlier
+    staging is still valid (staging it abandons is vacuum fodder).
+    After ``retries`` re-plans the ``FileExistsError`` is re-raised —
+    ``retries=0`` is the single-writer contract: a conflict surfaces to
+    the caller instead of being re-planned over a stale input.
+    ``fault`` is the kill-injection seam: a hook that raises simulates
+    a crash at that step. Returns the committed version."""
+    fault = fault or (lambda step: None)
+    attempt = 0
+    while True:
+        versions = manifest_versions(store_dir)
+        head = versions[-1] if versions else 0
+        parent = read_manifest(store_dir, head) if versions else None
+        child = plan(parent)
+        if child is None:
+            return head
+        payload = {
+            "version": head + 1,
+            **{
+                k: v
+                for k, v in (parent or {}).items()
+                if k not in _STRUCTURAL_KEYS
+            },
+            **child,
+        }
+        fault("prepared")
+        try:
+            publish_manifest(store_dir, head + 1, payload)
+        except FileExistsError:
+            if attempt == retries:
+                raise
+            attempt += 1
+            fault("retrying")
+            continue
+        fault("published")
+        return head + 1
+
+
+def _quiesced(path: str, min_age_s: float, now: float) -> bool:
+    """True when nothing under ``path`` (itself, or any entry below a
+    directory) was modified within ``min_age_s`` — the in-flight-writer
+    guard vacuum needs before touching files no manifest explains."""
+    try:
+        if now - os.path.getmtime(path) < min_age_s:
+            return False
+    except FileNotFoundError:
+        return True
+    if os.path.isdir(path):
+        for root, dirs, files in os.walk(path):
+            for name in dirs + files:
+                try:
+                    if now - os.path.getmtime(os.path.join(root, name)) < min_age_s:
+                        return False
+                except FileNotFoundError:
+                    continue
+    return True
+
+
+def vacuum(
+    store_dir: str, *, keep_last: int = 1, orphan_min_age_s: float = 3600.0
+) -> dict:
+    """Reclaim data files unreachable from the ``keep_last`` newest
+    manifests, drop the expired manifests and sweep stray staging
+    files. Surviving versions still read exactly as committed. The
+    100 TB retention job: deletes are manifest-driven unlinks, never a
+    data scan. Works from the on-disk layout alone, so one vacuum
+    serves both tiers: flat ``data/commit-<id>/part-*`` snapshot
+    commits and ``cellp=``-partitioned index commits, flat and
+    two-level (``manifests/`` block) listings.
+
+    Two reclamation classes (the Iceberg split): files referenced by
+    an EXPIRED manifest were durably committed, so they delete freely;
+    files referenced by NO manifest at all may belong to an IN-FLIGHT
+    writer that has staged its commit but not yet published — those
+    delete only once quiesced for ``orphan_min_age_s`` (default 1 h).
+    Without the grace window, a vacuum racing a writer deletes the
+    staged files and the writer's subsequent publish commits a
+    manifest pointing at nothing. Pass ``orphan_min_age_s=0`` only
+    when no writer can be live (tests; single-writer maintenance).
+
+    ``keep_last`` must be >= 1 (a store with zero versions is
+    unreadable, so "expire everything" is not a vacuum verb), and a
+    store with no versions at all raises before deleting anything:
+    with nothing committed, every file would look like an orphan.
+    Returns ``{"files_removed", "files_live", "versions_expired",
+    "versions_kept" (the kept version list), "manifest_files_removed"
+    (two-level blocks)}``."""
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
+    versions = manifest_versions(store_dir)
+    if not versions:
+        raise ValueError(f"no versions under {store_dir}")
+    keep = versions[-keep_last:]
+    expired = versions[:-keep_last]
+    # Reachability covers data files AND two-level blocks: a block
+    # shared between an expired and a kept version (pointer reuse)
+    # stays live.
+    live: set[str] = set()
+    live_blocks: set[str] = set()
+    committed: set[str] = set()  # referenced by an expired manifest
+    committed_blocks: set[str] = set()
+    for v in versions:
+        man = read_manifest(store_dir, v)
+        files, blocks = (
+            (live, live_blocks) if v in keep else (committed, committed_blocks)
+        )
+        files.update(
+            os.path.normpath(e["path"]) for e in _manifest_entries(store_dir, man)
+        )
+        blocks.update(
+            os.path.normpath(p["path"]) for p in man.get("manifest_list", [])
+        )
+    data_dir = os.path.join(store_dir, "data")
+    removed = 0
+    now = time.time()
+    # ``touched`` = dirs whose mtime THIS vacuum bumps by unlinking
+    # dead files inside them. Commit dirs are writer-unique, so a dir
+    # we emptied held only expired-committed or quiesced-orphan files —
+    # its writer is provably done, and the dir counts as quiesced
+    # regardless of its (our own) fresh mtime. Without this the sweeps
+    # below race vacuum's own unlinks: a single entry-time ``now``
+    # makes ``_quiesced(d, 0, now)`` see ``now - mtime < 0`` whenever
+    # an unlink lands a clock tick later, and the explicitly-waived
+    # grace window silently holds.
+    touched: set[str] = set()
+    for f in sorted(
+        globmod.glob(os.path.join(data_dir, "**", "*.parquet"), recursive=True)
+    ):
+        rel = os.path.relpath(f, data_dir)
+        if rel in live:
+            continue
+        if rel in committed or _quiesced(f, orphan_min_age_s, now):
+            os.remove(f)
+            removed += 1
+            # A _temporary file can be one job's long-dead task attempt
+            # while the JOB is still live — unlinking it says nothing
+            # about the commit dir's writer, so only post-commit files
+            # mark their ancestors self-emptied.
+            if "_temporary" not in rel.split(os.sep):
+                d = os.path.dirname(f)
+                while d != data_dir and os.path.dirname(d) != d:
+                    touched.add(d)
+                    d = os.path.dirname(d)
+    # A writer killed mid-Spark-write leaves its staging under
+    # <output>/_temporary/... (the output being a commit dir, or
+    # data/ itself for a bare write). A quiesced _temporary means no
+    # task attempt has touched staging within the grace window: the
+    # job is dead, so the subtree reclaims explicitly.
+    for t in globmod.glob(os.path.join(data_dir, "_temporary")) + globmod.glob(
+        os.path.join(data_dir, "commit-*", "_temporary")
+    ):
+        if os.path.isdir(t) and _quiesced(t, orphan_min_age_s, now):
+            shutil.rmtree(t)
+            touched.add(os.path.dirname(t))
+    # Re-capture now so vacuum's own unlinks are in the past; with the
+    # grace window waived the sweeps below are then deterministic.
+    now = time.time()
+    # Drop empty cell dirs and parquet-free commit dirs (loser-retry or
+    # expired-version leftovers; only marker files may remain) so the
+    # data dir stays list-cheap — but only our own leftovers
+    # (``touched``) or quiesced ones: a live writer's job-commit has
+    # momentarily-empty destination cellp= dirs before task files move
+    # in, and sweeping one would fail that writer.
+    for d in globmod.glob(os.path.join(data_dir, "commit-*", "*")):
+        if (
+            os.path.isdir(d)
+            and not os.listdir(d)
+            and (d in touched or _quiesced(d, orphan_min_age_s, now))
+        ):
+            os.rmdir(d)
+            touched.add(os.path.dirname(d))
+    for d in globmod.glob(os.path.join(data_dir, "commit-*")):
+        if (
+            os.path.isdir(d)
+            and not globmod.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
+            and (d in touched or _quiesced(d, orphan_min_age_s, now))
+        ):
+            shutil.rmtree(d)
+    for v in expired:
+        os.unlink(_manifest_path(store_dir, v))
+    # Blocks are swept AFTER the expired version JSONs so a crash
+    # mid-vacuum can never strand a readable expired version with
+    # missing blocks: blocks referenced only by an unlinked expired
+    # version reclaim freely; blocks no version explains may be a live
+    # writer's staging and honour the grace window.
+    blocks_removed = 0
+    for f in globmod.glob(os.path.join(store_dir, "manifests", "*.json")):
+        rel = os.path.relpath(f, store_dir)
+        if rel in live_blocks:
+            continue
+        if rel in committed_blocks or _quiesced(f, orphan_min_age_s, now):
+            os.unlink(f)
+            blocks_removed += 1
+    # Stray staging manifests (a writer killed inside publish): unique
+    # per writer, so quiesced ones are dead.
+    for t in globmod.glob(
+        os.path.join(store_dir, "manifest-v*.json.tmp-*")
+    ) + globmod.glob(os.path.join(store_dir, "manifests", "*.json.tmp-*")):
+        if _quiesced(t, orphan_min_age_s, now):
+            os.unlink(t)
+    return {
+        "files_removed": removed,
+        "files_live": len(live),
+        "versions_expired": len(expired),
+        "versions_kept": keep,
+        "manifest_files_removed": blocks_removed,
+    }
+
+
+# --------------------------------------------------------------------------
+# Snapshot tables: time travel, manifest file statistics, copy-on-write
+# merge and compaction on the shared commit protocol
+# --------------------------------------------------------------------------
 
 
 def _enc_stat(v):
@@ -308,64 +644,6 @@ def _commit_data(
     return entries
 
 
-def atomic_publish_json(path: str, payload: dict) -> None:
-    """Exclusive, DURABLE json publish — the one commit idiom every
-    manifest tier shares (snapshot tables here; the versioned ANN
-    indexes in operators/ivf_versioned.py):
-
-    * the staging file name is WRITER-UNIQUE (uuid suffix): two racers
-      must never share a staging inode, or the winner's ``os.link``
-      can publish the loser's half-written bytes as a committed
-      version;
-    * the bytes are fsync'd before the link and the DIRECTORY after
-      it: without both, a power loss can leave the committed name
-      durable while its contents are not — "crash-atomic" must mean
-      machine crashes, not just process kills;
-    * ``os.link`` onto the final name is exclusive: exactly one racer
-      wins, the loser raises ``FileExistsError`` and must retry
-      against the new latest (the Delta/Iceberg commit-conflict
-      rule)."""
-    import json
-    import uuid
-
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
-    fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(payload, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.link(tmp, path)
-        dfd = os.open(os.path.dirname(path) or ".", os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    finally:
-        os.unlink(tmp)
-
-
-def _publish_manifest(
-    table_dir: str, version: int, mode: str, files: list
-) -> None:
-    """Write + atomically link-publish one version manifest (refuses
-    to overwrite: the optimistic-concurrency loser gets
-    FileExistsError) — shared by every committing verb."""
-    atomic_publish_json(
-        _manifest_path(table_dir, version),
-        {"version": version, "mode": mode, "files": files},
-    )
-
-
-def snapshot_versions(table_dir: str) -> list[int]:
-    """Committed versions, ascending (empty for a fresh table)."""
-    out = []
-    for p in globmod.glob(os.path.join(table_dir, "manifest-v*.json")):
-        base = os.path.basename(p)
-        out.append(int(base[len("manifest-v"):-len(".json")]))
-    return sorted(out)
-
-
 def snapshot_write(
     spark: SparkSession,
     df: DataFrame,
@@ -383,7 +661,7 @@ def snapshot_write(
     the new files the whole table (a rewrite/overwrite commit);
     ``mode="append"`` makes the new version the parent's file set
     plus the new files. Readers of old versions are never disturbed:
-    nothing is deleted or rewritten until :func:`snapshot_vacuum`.
+    nothing is deleted or rewritten until :func:`vacuum`.
 
     ``stats_cols`` records per-file min/max for those columns in the
     manifest (one extra pass over the FRESH commit only — the
@@ -409,28 +687,18 @@ def snapshot_write(
     job itself, and concurrent readers resolve versions by listing
     tiny JSON files — the same economics as Delta's _delta_log.
     """
-    import json
-
     if mode not in ("replace", "append"):
         raise ValueError(f"mode must be replace|append, got {mode!r}")
-    data_dir = os.path.join(table_dir, "data")
-    entries = _commit_data(spark, df, data_dir, stats_cols)
-    versions = snapshot_versions(table_dir)
-    version = (versions[-1] if versions else 0) + 1
-    visible = list(entries)
-    if mode == "append" and versions:
-        with open(_manifest_path(table_dir, versions[-1])) as fh:
-            visible = [
-                _norm_entry(e) for e in json.load(fh)["files"]
-            ] + visible
-    _publish_manifest(table_dir, version, mode, visible)
-    return version
 
+    def plan(parent: dict | None) -> dict:
+        entries = _commit_data(
+            spark, df, os.path.join(table_dir, "data"), stats_cols
+        )
+        if mode == "append" and parent is not None:
+            entries = parent["files"] + entries
+        return {"mode": mode, "files": entries}
 
-def _norm_entry(e) -> dict:
-    """Manifest entry in the stats shape (pre-stats manifests stored
-    bare path strings)."""
-    return {"path": e, "stats": {}} if isinstance(e, str) else e
+    return publish_next(table_dir, plan, retries=0)
 
 
 def read_snapshot(
@@ -448,12 +716,9 @@ def read_snapshot(
     always read; correctness never depends on pruning, only cost —
     pinned by tests). Returns an empty frame with the table's schema
     when every file prunes away."""
-    import json
-
-    with open(_manifest_path(table_dir, version)) as fh:
-        manifest = json.load(fh)
+    manifest = read_manifest(table_dir, version)
     data_dir = os.path.join(table_dir, "data")
-    entries = [_norm_entry(e) for e in manifest["files"]]
+    entries = manifest["files"]
     if prune is not None:
         col, lo, hi = prune
         entries = [
@@ -468,8 +733,7 @@ def read_snapshot(
         ]
         if not entries:
             all_paths = [
-                os.path.join(data_dir, _norm_entry(e)["path"])
-                for e in manifest["files"]
+                os.path.join(data_dir, e["path"]) for e in manifest["files"]
             ]
             empty = spark.read.parquet(*all_paths).limit(0)
             return empty
@@ -479,137 +743,7 @@ def read_snapshot(
 
 def snapshot_files(table_dir: str, version: int) -> list[str]:
     """The data_dir-relative file paths visible at ``version``."""
-    import json
-
-    with open(_manifest_path(table_dir, version)) as fh:
-        return [_norm_entry(e)["path"] for e in json.load(fh)["files"]]
-
-
-def _quiesced(path: str, min_age_s: float, now: float) -> bool:
-    """True when nothing under ``path`` (itself, or any entry below a
-    directory) was modified within ``min_age_s`` — the in-flight-writer
-    guard vacuum needs before touching files no manifest explains."""
-    try:
-        if now - os.path.getmtime(path) < min_age_s:
-            return False
-    except FileNotFoundError:
-        return True
-    if os.path.isdir(path):
-        for root, dirs, files in os.walk(path):
-            for name in dirs + files:
-                try:
-                    if now - os.path.getmtime(os.path.join(root, name)) < min_age_s:
-                        return False
-                except FileNotFoundError:
-                    continue
-    return True
-
-
-def snapshot_vacuum(
-    table_dir: str, *, keep_last: int = 1, orphan_min_age_s: float = 3600.0
-) -> dict:
-    """Reclaim data files unreachable from the ``keep_last`` newest
-    manifests (and drop the expired manifests). Returns counts; the
-    surviving versions still read exactly as committed. The 100 TB
-    retention job: deletes are manifest-driven file unlinks, never a
-    data scan.
-
-    Two reclamation classes (the Iceberg split): files referenced by
-    an EXPIRED manifest were durably committed, so they delete freely;
-    files referenced by NO manifest at all may belong to an IN-FLIGHT
-    writer that has staged its commit but not yet published — those
-    delete only once quiesced for ``orphan_min_age_s`` (default 1 h).
-    Without the grace window, a vacuum racing a writer deletes the
-    staged files and the writer's subsequent publish commits a
-    manifest pointing at nothing. Pass ``orphan_min_age_s=0`` only
-    when no writer can be live (tests; single-writer maintenance).
-    ``keep_last`` must be >= 1: a table with zero snapshots is
-    unreadable, so "expire everything" is not a vacuum verb (the IVF
-    index tier enforces the same floor)."""
-    import json
-    import time
-
-    if keep_last < 1:
-        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no snapshots under {table_dir}")
-    keep = versions[-keep_last:]
-    expired = [v for v in versions if v not in keep]
-    live: set[str] = set()
-    for v in keep:
-        with open(_manifest_path(table_dir, v)) as fh:
-            live.update(
-                _norm_entry(e)["path"] for e in json.load(fh)["files"]
-            )
-    committed: set[str] = set()  # referenced by an expired manifest
-    for v in expired:
-        with open(_manifest_path(table_dir, v)) as fh:
-            committed.update(
-                _norm_entry(e)["path"] for e in json.load(fh)["files"]
-            )
-    data_dir = os.path.join(table_dir, "data")
-    removed = 0
-    now = time.time()
-    # ``touched`` = commit dirs whose mtime THIS vacuum bumps by
-    # unlinking dead files inside them. Commit dirs are writer-unique,
-    # so a dir we emptied held only expired-committed or
-    # quiesced-orphan files — its writer is provably done, and the dir
-    # counts as quiesced regardless of its (our own) fresh mtime.
-    # Without this the sweep races vacuum's own unlink pass: a single
-    # entry-time ``now`` makes ``_quiesced(d, 0, now)`` see
-    # ``now - mtime < 0`` whenever the unlink lands a clock tick later,
-    # and the explicitly-waived grace window silently holds (the race
-    # that made the IVF twin's grace-window test flaky).
-    touched: set[str] = set()
-    # Manifest paths are data_dir-relative (commit-<id>/part-... for
-    # r8+ commits, bare part-... for pre-r8 flat tables).
-    for f, _ in file_manifest(data_dir):
-        rel = os.path.relpath(f, data_dir)
-        if rel in live:
-            continue
-        if rel in committed or _quiesced(f, orphan_min_age_s, now):
-            os.remove(f)
-            removed += 1
-            # A _temporary file can be one job's long-dead task attempt
-            # while the JOB is still live — unlinking it says nothing
-            # about the commit dir's writer, so only post-commit files
-            # mark their ancestors self-emptied.
-            if "_temporary" not in rel.split(os.sep):
-                d = os.path.dirname(f)
-                while d != data_dir and os.path.dirname(d) != d:
-                    touched.add(d)
-                    d = os.path.dirname(d)
-    # Re-capture now so vacuum's own unlinks are in the past; with the
-    # grace window waived the sweep below is then deterministic.
-    now = time.time()
-    # Drop commit directories with no live part files left (loser-retry
-    # or expired-version leftovers — only marker files like _SUCCESS
-    # remain) so the data dir stays list-cheap. Our own leftovers
-    # (``touched``) or quiesced-only: a live writer's staging
-    # (_temporary/...) must never be swept.
-    import shutil
-
-    for d in globmod.glob(os.path.join(data_dir, "commit-*")):
-        if (
-            os.path.isdir(d)
-            and not globmod.glob(os.path.join(d, "part-*.parquet"))
-            and (d in touched or _quiesced(d, orphan_min_age_s, now))
-        ):
-            shutil.rmtree(d)
-    for v in expired:
-        os.remove(_manifest_path(table_dir, v))
-    # Stray staging manifests (a writer killed inside publish): unique
-    # per writer, so quiesced ones are dead.
-    for t in globmod.glob(os.path.join(table_dir, "manifest-v*.json.tmp-*")):
-        if _quiesced(t, orphan_min_age_s, now):
-            os.unlink(t)
-    return {
-        "files_removed": removed,
-        "files_live": len(live),
-        "versions_expired": len(expired),
-        "versions_kept": len(keep),
-    }
+    return [e["path"] for e in read_manifest(table_dir, version)["files"]]
 
 
 def snapshot_compact(
@@ -624,15 +758,13 @@ def snapshot_compact(
     ceil(total/target) size-targeted files and land them as a new
     manifest version (same rows, fewer files). Nothing is deleted:
     time travel to any pre-compaction version still reads the old
-    files byte-for-byte until :func:`snapshot_vacuum` reclaims them,
+    files byte-for-byte until :func:`vacuum` reclaims them,
     and a crashed compaction leaves only an orphaned commit directory
     (the manifest link lands last). The rewrite plan is shuffle-free
     (``coalesce``); at 100 TB this is the nightly job that keeps the
     file count bounded while readers keep their snapshot isolation.
     Returns the new version number."""
-    import json
-
-    versions = snapshot_versions(table_dir)
+    versions = manifest_versions(table_dir)
     if not versions:
         raise ValueError(f"no snapshots under {table_dir}")
     head = versions[-1]
@@ -669,80 +801,75 @@ def snapshot_merge(
     tests): at 100 TB a point-update batch rewrites a handful of files
     out of a million, which is exactly what the per-file stats exist
     for. Readers keep snapshot isolation — the parent version still
-    reads the pre-merge files until :func:`snapshot_vacuum`.
+    reads the pre-merge files until :func:`vacuum`.
 
     Requires the head commit to carry ``key_col`` stats (written with
     ``stats_cols``); files without stats are conservatively treated as
     affected (correctness never depends on pruning). Returns
     ``{"version", "files_rewritten", "files_carried"}``."""
-    import json
-
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise ValueError(f"no snapshots under {table_dir}")
-    head = versions[-1]
-    with open(_manifest_path(table_dir, head)) as fh:
-        entries = [_norm_entry(e) for e in json.load(fh)["files"]]
-    if updates.limit(1).count() == 0:
-        raise ValueError("empty updates batch")
     data_dir = os.path.join(table_dir, "data")
+    counts: dict = {}
 
-    # Exact file attribution: broadcast the (tiny, manifest-sized)
-    # file-range table against the update keys — one O(|updates|)
-    # pass; a file is affected iff SOME update key falls inside its
-    # recorded [min, max]. Inserted keys beyond every range touch
-    # nothing (a min/max envelope of the batch would smear them over
-    # the whole table). Stats-less files are conservatively rewritten.
-    ranged = [
-        (e["path"], e["stats"][key_col][0], e["stats"][key_col][1])
-        for e in entries
-        if e["stats"].get(key_col) is not None
-        and e["stats"][key_col][0] is not None
-        and e["stats"][key_col][1] is not None
-    ]
-    no_stats = {e["path"] for e in entries} - {p for p, _, _ in ranged}
-    hit: set[str] = set(no_stats)
-    if ranged:
-        # schema inferred from the JSON-round-tripped stat values, so
-        # string/float keys work as well as the common integer case
-        files_df = spark.createDataFrame(ranged, ["path", "mn", "mx"])
-        hits = (
-            updates.select(F.col(key_col).alias("_k"))
-            .join(
-                F.broadcast(files_df),
-                (F.col("_k") >= F.col("mn")) & (F.col("_k") <= F.col("mx")),
+    def plan(parent: dict | None) -> dict:
+        if parent is None:
+            raise ValueError(f"no snapshots under {table_dir}")
+        entries = parent["files"]
+        if updates.limit(1).count() == 0:
+            raise ValueError("empty updates batch")
+
+        # Exact file attribution: broadcast the (tiny, manifest-sized)
+        # file-range table against the update keys — one O(|updates|)
+        # pass; a file is affected iff SOME update key falls inside its
+        # recorded [min, max]. Inserted keys beyond every range touch
+        # nothing (a min/max envelope of the batch would smear them over
+        # the whole table). Stats-less files are conservatively rewritten.
+        ranged = [
+            (e["path"], e["stats"][key_col][0], e["stats"][key_col][1])
+            for e in entries
+            if e["stats"].get(key_col) is not None
+            and e["stats"][key_col][0] is not None
+            and e["stats"][key_col][1] is not None
+        ]
+        no_stats = {e["path"] for e in entries} - {p for p, _, _ in ranged}
+        hit: set[str] = set(no_stats)
+        if ranged:
+            # schema inferred from the JSON-round-tripped stat values, so
+            # string/float keys work as well as the common integer case
+            files_df = spark.createDataFrame(ranged, ["path", "mn", "mx"])
+            hits = (
+                updates.select(F.col(key_col).alias("_k"))
+                .join(
+                    F.broadcast(files_df),
+                    (F.col("_k") >= F.col("mn")) & (F.col("_k") <= F.col("mx")),
+                )
+                .select("path")
+                .distinct()
+                .collect()
             )
-            .select("path")
-            .distinct()
-            .collect()
-        )
-        hit.update(r["path"] for r in hits)
+            hit.update(r["path"] for r in hits)
 
-    touched = [e for e in entries if e["path"] in hit]
-    carried = [e for e in entries if e["path"] not in hit]
+        touched = [e for e in entries if e["path"] in hit]
+        carried = [e for e in entries if e["path"] not in hit]
 
-    cols = (
-        spark.read.parquet(os.path.join(data_dir, entries[0]["path"]))
-        .limit(0)
-        .columns
-    )
-    if touched:
-        base = spark.read.parquet(
-            *[os.path.join(data_dir, e["path"]) for e in touched]
+        cols = (
+            spark.read.parquet(os.path.join(data_dir, entries[0]["path"]))
+            .limit(0)
+            .columns
         )
-        survivors = base.join(
-            updates.select(key_col), key_col, "left_anti"
-        )
-        merged = survivors.unionByName(updates.select(*cols))
-    else:
-        merged = updates.select(*cols)
+        if touched:
+            base = spark.read.parquet(
+                *[os.path.join(data_dir, e["path"]) for e in touched]
+            )
+            survivors = base.join(
+                updates.select(key_col), key_col, "left_anti"
+            )
+            merged = survivors.unionByName(updates.select(*cols))
+        else:
+            merged = updates.select(*cols)
 
-    scols = stats_cols if stats_cols is not None else [key_col]
-    new_entries = _commit_data(spark, merged, data_dir, scols)
-    version = head + 1
-    _publish_manifest(table_dir, version, "merge", carried + new_entries)
-    return {
-        "version": version,
-        "files_rewritten": len(touched),
-        "files_carried": len(carried),
-    }
+        scols = stats_cols if stats_cols is not None else [key_col]
+        new_entries = _commit_data(spark, merged, data_dir, scols)
+        counts.update(files_rewritten=len(touched), files_carried=len(carried))
+        return {"mode": "merge", "files": carried + new_entries}
+
+    return {"version": publish_next(table_dir, plan, retries=0), **counts}

@@ -908,6 +908,30 @@ def _pq_dtable(
     )
 
 
+def train_ivfpq(
+    emb: DataFrame,
+    n_cells: int = IVF_CELLS,
+    m: int = PQ_M,
+    k: int = PQ_K,
+    iters: int = PQ_ITERS,
+    id_col: str = "vec_id",
+):
+    """Train both IVF-PQ quantizers on ``emb``: the coarse k-means
+    cells (``{cid: integer centroid}``, cluster.kmeans_fit_centroids)
+    and the per-subspace codebooks trained on residuals against them
+    (:func:`pq_train_codebooks` shape). Returns ``(coarse, books)``.
+    The one trainer behind the bare build and the versioned build and
+    refresh, so equal inputs give bit-identical artifacts on every
+    path."""
+    from sressentials_spark.operators.cluster import kmeans_fit_centroids
+
+    coarse = kmeans_fit_centroids(emb, k=n_cells, iters=iters, id_col=id_col)
+    books = pq_train_codebooks(
+        emb, m, k, iters=iters, id_col=id_col, residual_coarse=coarse
+    )
+    return coarse, books
+
+
 def build_ivfpq_index(
     emb: DataFrame,
     base_path: str,
@@ -938,22 +962,10 @@ def build_ivfpq_index(
     tier measurably do not shrink residuals, and residual coding then
     HURTS recall — measured in docs/ANN_EVAL.md), and within tight
     cells residual PQ recovers most of the cell ceiling."""
-    import numpy as np
-
     from sressentials_spark import sinks
-    from sressentials_spark.operators.cluster import (
-        QUANT_SCALE,
-        assign_clusters,
-        kmeans_fit_centroids,
-        quantize_vec,
-    )
-    from sressentials_spark.operators.linalg import pq_encode_int_kernel
 
     spark = emb.sparkSession
-    coarse = kmeans_fit_centroids(emb, k=n_cells, iters=iters, id_col=id_col)
-    books = pq_train_codebooks(
-        emb, m, k, iters=iters, id_col=id_col, residual_coarse=coarse
-    )
+    coarse, books = train_ivfpq(emb, n_cells, m, k, iters, id_col)
     lists = _encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col)
     sinks.write_partitioned(lists, base_path, ["cell"])
     local_df(

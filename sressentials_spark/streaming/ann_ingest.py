@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from sressentials_spark.operators import ivf_versioned as V
+from sressentials_spark.operators.maintenance import manifest_versions, read_manifest
 from sressentials_spark.streaming import drain_foreach_batch, file_source
 
 _STAMP = "stream_batch_id"
@@ -46,15 +47,15 @@ def committed_stream_batch(base_path: str) -> int:
     """The newest committed micro-batch id, or -1: scan versions
     descending for the latest manifest carrying the stamp. Every
     descendant publish — ingest, rebalance, refresh, compact, delete —
-    carries riders forward (``ivf_versioned._carry_manifest_extra``),
-    so the LATEST manifest normally holds the high-water mark and the
-    stamp survives maintenance followed by ``vacuum(keep_last=1)``;
-    the descending scan is belt and braces for manifests published
-    before that rule existed. Raw read: the stamp rides in the version
-    JSON itself, so the scan never loads a two-level version's entry
+    carries riders forward (``maintenance.publish_next``), so the
+    LATEST manifest normally holds the high-water mark and the stamp
+    survives maintenance followed by ``vacuum(keep_last=1)``; the
+    descending scan is belt and braces for manifests published before
+    that rule existed. Raw read: the stamp rides in the version JSON
+    itself, so the scan never loads a two-level version's entry
     blocks — O(1) per version regardless of index size."""
-    for v in reversed(V.ivf_index_versions(base_path)):
-        man = V._read_manifest_raw(base_path, v)
+    for v in reversed(manifest_versions(base_path)):
+        man = read_manifest(base_path, v)
         if _STAMP in man:
             return int(man[_STAMP])
     return -1

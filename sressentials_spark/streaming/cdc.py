@@ -197,7 +197,7 @@ def run_latest_state_snapshot_merge(
                     F.col("event_type").alias("last_event_type"),
                 )
             )
-            versions = MT.snapshot_versions(table)
+            versions = MT.manifest_versions(table)
             if not versions:
                 MT.snapshot_write(
                     sess, b, table, mode="replace", stats_cols=["user_id"]
@@ -220,9 +220,9 @@ def run_latest_state_snapshot_merge(
         )
         # One committed version per micro-batch: a genuinely
         # multi-batch replay must leave a multi-version history.
-        if len(MT.snapshot_versions(table)) < 2:
+        if len(MT.manifest_versions(table)) < 2:
             raise ValueError("replay committed fewer than 2 versions")
         return table
 
     table = get_or_build(spark, ("cdc_snapshot_merge", sf_dir), _replay, tier="disk")
-    return MT.read_snapshot(spark, table, MT.snapshot_versions(table)[-1])
+    return MT.read_snapshot(spark, table, MT.manifest_versions(table)[-1])

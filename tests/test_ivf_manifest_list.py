@@ -21,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sressentials_spark.operators import ivf_versioned as V
+from sressentials_spark.operators import maintenance as MT
 from sressentials_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -57,7 +58,7 @@ def _lifecycle_store(spark, tmp_path, name="ver"):
 
 def test_promote_is_bit_equal_and_idempotent(spark, tmp_path):
     base = _lifecycle_store(spark, tmp_path)
-    v_flat = V.ivf_index_versions(base)[-1]
+    v_flat = MT.manifest_versions(base)[-1]
     pre = _topk(spark, base)
     flat_entries = V.read_ivf_manifest(base, v_flat)["files"]
     n_commits = len({e["path"].split("/", 1)[0] for e in flat_entries})
@@ -71,7 +72,7 @@ def test_promote_is_bit_equal_and_idempotent(spark, tmp_path):
     assert "manifest_list" in raw and "files" not in raw
     # Pointer rollups agree with the blocks they summarize.
     for ptr in raw["manifest_list"]:
-        block = V._read_manifest_entries(base, ptr)
+        block = MT.read_manifest_block(base, ptr)
         assert ptr["n_files"] == len(block)
         assert ptr["n_rows"] == sum(e["rows"] for e in block)
         assert ptr["cells"] == sorted({e["cell"] for e in block})
@@ -155,7 +156,7 @@ def test_two_level_maintenance_verbs_preserve_layout_and_values(
     stats = V.rebalance_ivf_index_versioned(spark, base)
     ref_stats = V.rebalance_ivf_index_versioned(spark, ref)
     assert stats["cells_split"] == ref_stats["cells_split"] >= 1
-    v = V.ivf_index_versions(base)[-1]
+    v = MT.manifest_versions(base)[-1]
     raw = V._read_manifest_raw(base, v)
     assert "manifest_list" in raw
     # Here BOTH parent blocks (one build commit, one ingest commit)
@@ -178,7 +179,7 @@ def test_two_level_maintenance_verbs_preserve_layout_and_values(
     out = V.delete_ivf_index_versioned(spark, base, victims)
     ref_out = V.delete_ivf_index_versioned(spark, ref, victims)
     assert out["deleted_rows"] == ref_out["deleted_rows"] == len(victims)
-    v = V.ivf_index_versions(base)[-1]
+    v = MT.manifest_versions(base)[-1]
     assert "manifest_list" in V._read_manifest_raw(base, v)
     # COW delete rewrote only the victim-bearing files; every block
     # with no affected file is re-pointed verbatim.
@@ -194,7 +195,7 @@ def test_two_level_maintenance_verbs_preserve_layout_and_values(
     ref_out = V.compact_ivf_index_versioned(spark, ref)
     assert out["cells_compacted"] >= 1 and ref_out["cells_compacted"] >= 1
     assert "manifest_list" in V._read_manifest_raw(
-        base, V.ivf_index_versions(base)[-1]
+        base, MT.manifest_versions(base)[-1]
     )
     pd.testing.assert_frame_equal(
         _topk(spark, base), _topk(spark, ref), check_exact=True
@@ -206,7 +207,7 @@ def test_promotion_kill_injection_never_partial(spark, tmp_path):
     stays fully live and bit-equal, no version appears, and the staged
     blocks of killed attempts reclaim as vacuum orphans."""
     base = _lifecycle_store(spark, tmp_path)
-    v_flat = V.ivf_index_versions(base)[-1]
+    v_flat = MT.manifest_versions(base)[-1]
     pre = _topk(spark, base)
 
     steps: list[str] = []
@@ -230,7 +231,7 @@ def test_promotion_kill_injection_never_partial(spark, tmp_path):
 
         with pytest.raises(Kill):
             V.promote_ivf_manifest_list(base, fault=fault)
-        assert V.ivf_index_versions(base)[-1] == v_flat
+        assert MT.manifest_versions(base)[-1] == v_flat
         pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
     orphans = set(globmod.glob(os.path.join(base, "manifests", "*.json")))
@@ -238,7 +239,7 @@ def test_promotion_kill_injection_never_partial(spark, tmp_path):
     out = V.promote_ivf_manifest_list(base)
     assert out["promoted"]
     live = {os.path.join(base, p) for p in _pointer_paths(base, v_flat + 1)}
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     left = set(globmod.glob(os.path.join(base, "manifests", "*.json")))
     assert left == live  # orphan blocks reclaimed, live blocks kept
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
@@ -257,9 +258,9 @@ def test_vacuum_across_layouts_keeps_shared_blocks(spark, tmp_path):
 
     # Expiring v1..v3 (flat, flat, two-level) must keep every block the
     # kept v4 re-points — v3's blocks are ALL shared into v4.
-    out = V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert out["kept_versions"] == [4]
-    assert out["removed_manifest_files"] == 0
+    out = MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert out["versions_kept"] == [4]
+    assert out["manifest_files_removed"] == 0
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
     # A delete rewrites the victim's block; vacuuming the pre-delete
@@ -267,8 +268,8 @@ def test_vacuum_across_layouts_keeps_shared_blocks(spark, tmp_path):
     victims = [int(pre["neighbor_id"].iloc[0])]
     V.delete_ivf_index_versioned(spark, base, victims)
     ptrs_v5 = _pointer_paths(base, 5)
-    out = V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert out["removed_manifest_files"] >= 1
+    out = MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert out["manifest_files_removed"] >= 1
     left = {
         os.path.relpath(p, base)
         for p in globmod.glob(os.path.join(base, "manifests", "*.json"))
@@ -310,7 +311,7 @@ def test_streaming_exactly_once_on_promoted_store(spark, tmp_path):
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
     V.promote_ivf_manifest_list(base)  # v2, two-level
     AI.run_versioned_ingest_stream(spark, arrivals, base, str(tmp_path / "c1"))
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4, 5]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4, 5]
     assert AI.committed_stream_batch(base) == 2
     assert "manifest_list" in V._read_manifest_raw(base, 5)
 
@@ -323,7 +324,7 @@ def test_streaming_exactly_once_on_promoted_store(spark, tmp_path):
 
     before = set(globmod.glob(os.path.join(base, "data", "commit-*")))
     AI.run_versioned_ingest_stream(spark, arrivals, base, str(tmp_path / "c2"))
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4, 5]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4, 5]
     assert set(globmod.glob(os.path.join(base, "data", "commit-*"))) == before
 
 
@@ -342,7 +343,7 @@ def test_list_level_pruning_skips_unprobed_blocks(spark, tmp_path, monkeypatch):
     # a compaction produce naturally).
     by_cell: dict[int, list[dict]] = {}
     for ptr in raw["manifest_list"]:
-        for e in V._read_manifest_entries(base, ptr):
+        for e in MT.read_manifest_block(base, ptr):
             by_cell.setdefault(int(e["cell"]), []).append(e)
     assert len(by_cell) > 2
     pointers = [
@@ -353,16 +354,16 @@ def test_list_level_pruning_skips_unprobed_blocks(spark, tmp_path, monkeypatch):
     payload["centroids"] = {
         str(c): v for c, v in sorted(raw["centroids"].items())
     }
-    V._publish_ivf_manifest(base, 3, payload)
+    MT.publish_manifest(base, 3, payload)
 
     loads: list[str] = []
-    real = V._read_manifest_entries
+    real = MT.read_manifest_block
 
     def counting(base_path, pointer):
         loads.append(pointer["path"])
         return real(base_path, pointer)
 
-    monkeypatch.setattr(V, "_read_manifest_entries", counting)
+    monkeypatch.setattr(V, "read_manifest_block", counting)
     want_cells = sorted(by_cell)[:2]
     df = V.read_ivf_index_version(spark, base, 3, cells=want_cells)
     got_cells = {int(r["cell"]) for r in df.select("cell").distinct().collect()}
@@ -438,7 +439,7 @@ def test_random_lifecycle_model_two_level(spark, tmp_path):
         raise Kill(step)
 
     def check() -> int:
-        v = V.ivf_index_versions(base)[-1]
+        v = MT.manifest_versions(base)[-1]
         assert "manifest_list" in V._read_manifest_raw(base, v)
         man = V.read_ivf_manifest(base, v)
         for e in man["files"]:
@@ -509,7 +510,7 @@ def test_random_lifecycle_model_two_level(spark, tmp_path):
             # Idempotent on an already-two-level store.
             assert V.promote_ivf_manifest_list(base)["promoted"] is False
         elif op == "vacuum":
-            V.vacuum_ivf_index(base, keep_last=1)
+            MT.vacuum(base, keep_last=1)
         v_now = check()
         assert v_now >= v_prev
         v_prev = v_now

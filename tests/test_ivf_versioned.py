@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from sressentials_spark.operators import ivf_versioned as V
+from sressentials_spark.operators import maintenance as MT
 from sressentials_spark.operators import similarity as S
 from sressentials_spark.sources.tables import load_table
 
@@ -96,7 +97,7 @@ def test_rebalance_matches_bare_rebalance_and_time_travels(spark, tmp_path):
     sv = V.rebalance_ivf_index_versioned(spark, base)
     assert sv["split_cells"] == split and sv["cells_split"] == len(split) >= 1
     assert sv["threshold"] == threshold
-    assert V.ivf_index_versions(base) == [1, 2]
+    assert MT.manifest_versions(base) == [1, 2]
 
     c1 = V.read_ivf_manifest(base, 1)["centroids"]
     c2 = V.read_ivf_manifest(base, 2)["centroids"]
@@ -182,7 +183,7 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
         if kill_at == "published":
             # Crash after the atomic link: the new version is fully
             # committed and serves the post-split answer.
-            assert V.ivf_index_versions(base) == [1, 2]
+            assert MT.manifest_versions(base) == [1, 2]
             assert _manifest_files_exist(base, 2)
             pd.testing.assert_frame_equal(
                 _topk(spark, base), post, check_exact=True
@@ -190,7 +191,7 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
             continue
         # Crash before the link: v1 is the latest, complete on disk,
         # and serves the exact pre-split answer.
-        assert V.ivf_index_versions(base) == [1]
+        assert MT.manifest_versions(base) == [1]
         assert _manifest_files_exist(base, 1)
         pd.testing.assert_frame_equal(
             _topk(spark, base), pre, check_exact=True
@@ -199,11 +200,11 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
         # the post-split answer serves; orphans then vacuum away
         # without disturbing it.
         V.rebalance_ivf_index_versioned(spark, base)
-        assert V.ivf_index_versions(base) == [1, 2]
+        assert MT.manifest_versions(base) == [1, 2]
         pd.testing.assert_frame_equal(
             _topk(spark, base), post, check_exact=True
         )
-        V.vacuum_ivf_index(base, keep_last=1)
+        MT.vacuum(base, keep_last=1)
         pd.testing.assert_frame_equal(
             _topk(spark, base), post, check_exact=True
         )
@@ -288,7 +289,7 @@ def test_ingest_retries_lost_race_reusing_staged_files(spark, tmp_path):
         )
         == 3
     )
-    assert V.ivf_index_versions(base) == [1, 2, 3]
+    assert MT.manifest_versions(base) == [1, 2, 3]
     got = {
         r["vec_id"]
         for r in V.read_ivf_index_version(spark, base, 3)
@@ -356,7 +357,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
     def racer(step):
         if step == "prepared" and not fired:
             fired.append(step)
-            V._publish_ivf_manifest(
+            MT.publish_manifest(
                 base,
                 2,
                 {
@@ -372,7 +373,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
     # link refuses to clobber; the loser surfaces FileExistsError.
     with pytest.raises(FileExistsError):
         V.rebalance_ivf_index_versioned(spark, base, fault=racer, retries=0)
-    assert V.ivf_index_versions(base) == [1, 2]
+    assert MT.manifest_versions(base) == [1, 2]
     # v2 is the racer's (identical content to v1) — intact, readable.
     pd.testing.assert_frame_equal(
         _topk(spark, base, version=2),
@@ -387,9 +388,9 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
     def racer2(step):
         if step == "prepared" and not fired:
             fired.append(step)
-            v = V.ivf_index_versions(base)[-1]
+            v = MT.manifest_versions(base)[-1]
             m = V.read_ivf_manifest(base, v)
-            V._publish_ivf_manifest(
+            MT.publish_manifest(
                 base,
                 v + 1,
                 {
@@ -403,7 +404,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
 
     stats = V.rebalance_ivf_index_versioned(spark, base, fault=racer2)
     assert stats["version"] == 4 and stats["cells_split"] >= 1
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4]
 
 
 def test_streaming_serve_snapshot_isolation_across_midstream_ingest(
@@ -449,7 +450,7 @@ def test_streaming_serve_snapshot_isolation_across_midstream_ingest(
         qids = sorted(int(r["query_id"]) for r in b.select("query_id").collect())
         if not qids:
             return
-        v = V.ivf_index_versions(base)[-1]
+        v = MT.manifest_versions(base)[-1]
         seen.append((bid, v, tuple(qids)))
         (
             V.cosine_topk_ivf_versioned(spark, base, qids, k=5, version=v)
@@ -530,7 +531,7 @@ def test_random_lifecycle_model(spark, tmp_path):
         raise Kill(step)
 
     def check() -> int:
-        v = V.ivf_index_versions(base)[-1]
+        v = MT.manifest_versions(base)[-1]
         man = V.read_ivf_manifest(base, v)
         for e in man["files"]:
             assert os.path.exists(os.path.join(base, "data", e["path"]))
@@ -594,7 +595,7 @@ def test_random_lifecycle_model(spark, tmp_path):
             except Kill:
                 pass  # a no-op plan never reaches a fault point
         elif op == "vacuum":
-            V.vacuum_ivf_index(base, keep_last=1)
+            MT.vacuum(base, keep_last=1)
         v_now = check()
         assert v_now >= v_prev
         v_prev = v_now
@@ -667,7 +668,7 @@ def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
 
     with pytest.raises(Kill):
         V.ingest_ivfpq_index_versioned(batch, base, fault=killer)
-    assert V.ivf_index_versions(base) == [1]
+    assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), pre, check_exact=True
     )
@@ -697,8 +698,8 @@ def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
     for p, st in stats1.items():
         now = os.stat(os.path.join(base, "data", p))
         assert (now.st_size, now.st_mtime_ns) == (st.st_size, st.st_mtime_ns)
-    V.vacuum_ivf_index(base, keep_last=1)
-    assert V.ivf_index_versions(base) == [2]
+    MT.vacuum(base, keep_last=1)
+    assert MT.manifest_versions(base) == [2]
     pd.testing.assert_frame_equal(_adc_topk(spark, emb, base), want, check_exact=True)
 
 
@@ -714,16 +715,16 @@ def test_empty_ingest_is_a_graceful_noop(spark, tmp_path):
     V.build_ivf_index_versioned(emb, base)
     pre = _topk(spark, base)
     assert V.ingest_ivf_index_versioned(empty, base) == 1
-    assert V.ivf_index_versions(base) == [1]
+    assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
     pq = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb, pq)
     pre_pq = _adc_topk(spark, emb, pq)
     assert V.ingest_ivfpq_index_versioned(empty, pq) == 1
-    assert V.ivf_index_versions(pq) == [1]
+    assert MT.manifest_versions(pq) == [1]
     pd.testing.assert_frame_equal(_adc_topk(spark, emb, pq), pre_pq, check_exact=True)
-    V.vacuum_ivf_index(pq, keep_last=1)
+    MT.vacuum(pq, keep_last=1)
     pd.testing.assert_frame_equal(_adc_topk(spark, emb, pq), pre_pq, check_exact=True)
 
 
@@ -776,11 +777,11 @@ def test_vacuum_grace_window_protects_inflight_staging(spark, tmp_path):
     staged = set(globmod.glob(os.path.join(base, "data", "commit-*"))) - before
     assert len(staged) == 1
     pre = _topk(spark, base)
-    out = V.vacuum_ivf_index(base, keep_last=1)
-    assert out["removed_files"] == 0  # grace window held
+    out = MT.vacuum(base, keep_last=1)
+    assert out["files_removed"] == 0  # grace window held
     assert all(os.path.isdir(d) for d in staged)
-    out = V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert out["removed_files"] > 0
+    out = MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert out["files_removed"] > 0
     assert not any(os.path.isdir(d) for d in staged)
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
@@ -796,27 +797,27 @@ def test_vacuum_reclaims_expired_versions_and_orphans(spark, tmp_path):
         for e in V.read_ivf_manifest(base, 1)["files"]
     } - {e["path"] for e in V.read_ivf_manifest(base, 2)["files"]}
     assert v1_only  # the split cells' original files
-    out = V.vacuum_ivf_index(base, keep_last=1)
-    assert out["kept_versions"] == [2]
-    assert out["removed_manifests"] == 1
-    assert out["removed_files"] >= len(v1_only)
+    out = MT.vacuum(base, keep_last=1)
+    assert out["versions_kept"] == [2]
+    assert out["versions_expired"] == 1
+    assert out["files_removed"] >= len(v1_only)
     for p in v1_only:
         assert not os.path.exists(os.path.join(base, "data", p))
-    assert V.ivf_index_versions(base) == [2]
+    assert MT.manifest_versions(base) == [2]
     pd.testing.assert_frame_equal(_topk(spark, base), post, check_exact=True)
 
 
 def test_vacuum_rejects_keep_last_below_one(spark, tmp_path):
     """keep_last<1 would expire every manifest and leave an unreadable
-    index — both vacuum tiers refuse it up front (same contract as
-    maintenance.snapshot_vacuum, pinned by tests/test_snapshot.py)."""
+    index — the shared vacuum refuses it up front on an index store
+    too (the snapshot-table case is pinned by tests/test_snapshot.py)."""
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(_emb(spark), base)
     with pytest.raises(ValueError, match="keep_last"):
-        V.vacuum_ivf_index(base, keep_last=0)
+        MT.vacuum(base, keep_last=0)
     with pytest.raises(ValueError, match="keep_last"):
-        V.vacuum_ivf_index(base, keep_last=-1)
-    assert V.ivf_index_versions(base) == [1]
+        MT.vacuum(base, keep_last=-1)
+    assert MT.manifest_versions(base) == [1]
 
 
 def test_vacuum_reclaims_quiesced_temporary_subtree(spark, tmp_path):
@@ -839,10 +840,10 @@ def test_vacuum_reclaims_quiesced_temporary_subtree(spark, tmp_path):
     with open(os.path.join(staged, "part-00000.parquet"), "wb") as fh:
         fh.write(b"not really parquet")
     # Default grace: the maybe-live writer's staging survives.
-    V.vacuum_ivf_index(base, keep_last=1)
+    MT.vacuum(base, keep_last=1)
     assert os.path.isdir(staged)
     # Grace waived (writer provably dead): the whole commit dir goes.
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     assert not os.path.isdir(
         os.path.join(base, "data", "commit-deadbeefdeadbeef")
     )
@@ -861,9 +862,9 @@ def test_vacuum_keeps_live_writers_empty_cell_dir(spark, tmp_path):
     V.build_ivf_index_versioned(emb, base)
     fresh = os.path.join(base, "data", "commit-feedfacefeedface", "cellp=9")
     os.makedirs(fresh)
-    V.vacuum_ivf_index(base, keep_last=1)
+    MT.vacuum(base, keep_last=1)
     assert os.path.isdir(fresh)  # grace window held for the live commit
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     assert not os.path.isdir(os.path.dirname(fresh))
 
 
@@ -897,8 +898,8 @@ def test_vacuum_zero_grace_is_deterministic(spark, tmp_path):
             set(globmod.glob(os.path.join(base, "data", "commit-*"))) - before
         )
         assert len(staged) == 1
-        out = V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-        assert out["removed_files"] > 0
+        out = MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+        assert out["files_removed"] > 0
         assert not any(os.path.isdir(d) for d in staged)
 
 
@@ -953,7 +954,7 @@ def test_import_bare_ivfpq_serves_bit_identically(spark, tmp_path):
         "vec_id", F.col("vec_id") + F.lit(1_000_000)
     )
     assert V.ingest_ivfpq_index_versioned(batch, base) == 2
-    assert V.ivf_index_versions(base) == [1, 2]
+    assert MT.manifest_versions(base) == [1, 2]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base, version=1), want, check_exact=True
     )
@@ -975,10 +976,10 @@ def test_import_crash_before_publish_leaves_no_version(spark, tmp_path, monkeypa
     def boom(base_path, version, payload):
         raise Kill("publish")
 
-    monkeypatch.setattr(V, "_publish_ivf_manifest", boom)
+    monkeypatch.setattr(V, "publish_manifest", boom)
     with pytest.raises(Kill):
         V.import_ivfpq_index_versioned(spark, bare, base)
-    assert V.ivf_index_versions(base) == []
+    assert MT.manifest_versions(base) == []
     staged = globmod.glob(os.path.join(base, "data", "commit-*"))
     assert len(staged) == 1  # orphaned, reclaimed by vacuum once quiesced
     monkeypatch.undo()
@@ -1012,7 +1013,7 @@ def test_refresh_retrains_and_swaps_quantizers_atomically(spark, tmp_path):
 
     with pytest.raises(Kill):
         V.refresh_ivfpq_index_versioned(emb, base, fault=killer)
-    assert V.ivf_index_versions(base) == [1, 2]  # old quantizers live
+    assert MT.manifest_versions(base) == [1, 2]  # old quantizers live
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), pre, check_exact=True
     )
@@ -1079,7 +1080,7 @@ def test_ivfpq_rebalance_splits_reencode_and_commit_atomically(spark, tmp_path):
 
     stats = V.rebalance_ivfpq_index_versioned(spark, emb, base)
     assert stats["cells_split"] >= 1
-    assert V.ivf_index_versions(base) == [1, 2]
+    assert MT.manifest_versions(base) == [1, 2]
     man2 = V.read_ivf_manifest(base, 2)
     assert man2["books"] == man1["books"]  # books never retrain here
     split = set(stats["split_cells"])
@@ -1173,7 +1174,7 @@ def test_ivfpq_rebalance_kill_between_steps_never_partial(spark, tmp_path):
 
         with pytest.raises(Kill):
             V.rebalance_ivfpq_index_versioned(spark, emb, base, fault=killer)
-        assert V.ivf_index_versions(base) == [1]
+        assert MT.manifest_versions(base) == [1]
         pd.testing.assert_frame_equal(
             _adc_topk(spark, emb, base), pre, check_exact=True
         )
@@ -1236,7 +1237,7 @@ def test_random_lifecycle_model_ivfpq(spark, tmp_path):
         return emb.filter(F.col("vec_id").isin(sorted(model_ids)))
 
     def check() -> int:
-        v = V.ivf_index_versions(base)[-1]
+        v = MT.manifest_versions(base)[-1]
         man = V.read_ivf_manifest(base, v)
         cells = {int(c) for c in man["coarse"]}
         for e in man["files"]:
@@ -1314,7 +1315,7 @@ def test_random_lifecycle_model_ivfpq(spark, tmp_path):
             except Kill:
                 pass  # a no-op plan never reaches a fault point
         elif op == "vacuum":
-            V.vacuum_ivf_index(base, keep_last=1)
+            MT.vacuum(base, keep_last=1)
         v_now = check()
         assert v_now >= v_prev
         v_prev = v_now
@@ -1370,8 +1371,8 @@ def test_delete_rewrites_only_affected_files_both_tiers(spark, tmp_path):
     assert (out2["deleted_rows"], out2["files_rewritten"], out2["version"]) == (0, 0, 2)
     assert out2["files_scanned"] == 0  # stats-pruned: no file can hold the id
     # Vacuum expires the pre-delete version; serving is undisturbed.
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert V.ivf_index_versions(base) == [2]
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert MT.manifest_versions(base) == [2]
     pd.testing.assert_frame_equal(_topk(spark, base), post, check_exact=True)
 
     # --- PQ tier ---
@@ -1409,7 +1410,7 @@ def test_delete_crash_before_publish_changes_nothing(spark, tmp_path):
     victims = [int(pre["neighbor_id"].iloc[0])]
     with pytest.raises(Kill):
         V.delete_ivf_index_versioned(spark, base, victims, fault=killer)
-    assert V.ivf_index_versions(base) == [1]
+    assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
     out = V.delete_ivf_index_versioned(spark, base, victims)
     assert out["version"] == 2
@@ -1462,7 +1463,7 @@ def test_compact_merges_fragmented_cells_bit_equal_serving(spark, tmp_path):
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 10)),
             base,
         )
-    man = V.read_ivf_manifest(base, V.ivf_index_versions(base)[-1])
+    man = V.read_ivf_manifest(base, MT.manifest_versions(base)[-1])
     assert len(man["files"]) > len({e["cell"] for e in man["files"]})
     pre = _topk(spark, base)
     pre_rows = sum(e["rows"] for e in man["files"])
@@ -1492,7 +1493,7 @@ def test_compact_merges_fragmented_cells_bit_equal_serving(spark, tmp_path):
     V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= 40), pq)
     sub = emb.filter(F.col("vec_id") >= 0)
     pre_pq = _adc_topk(spark, sub, pq)
-    man_pq = V.read_ivf_manifest(pq, V.ivf_index_versions(pq)[-1])
+    man_pq = V.read_ivf_manifest(pq, MT.manifest_versions(pq)[-1])
     out = V.compact_ivf_index_versioned(spark, pq)
     assert out["cells_compacted"] >= 1 and out["files_after"] < out["files_before"]
     man_pq2 = V.read_ivf_manifest(pq, out["version"])
@@ -1513,7 +1514,7 @@ def test_compact_crash_before_publish_changes_nothing(spark, tmp_path):
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
     V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
     pre = _topk(spark, base)
-    v0 = V.ivf_index_versions(base)[-1]
+    v0 = MT.manifest_versions(base)[-1]
 
     class Kill(RuntimeError):
         pass
@@ -1524,12 +1525,12 @@ def test_compact_crash_before_publish_changes_nothing(spark, tmp_path):
 
     with pytest.raises(Kill):
         V.compact_ivf_index_versioned(spark, base, fault=killer)
-    assert V.ivf_index_versions(base)[-1] == v0
+    assert MT.manifest_versions(base)[-1] == v0
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
     out = V.compact_ivf_index_versioned(spark, base)
     assert out["version"] == v0 + 1
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
 
@@ -1574,8 +1575,8 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
         )
     # After maintenance + vacuum(keep_last=1) the mark MUST survive
     # (the exactly-once guarantee's failure mode otherwise).
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert len(V.ivf_index_versions(base)) == 1
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert len(MT.manifest_versions(base)) == 1
     assert committed_stream_batch(base) == 7
     # A newer ingest stamp overrides the carried one.
     V.ingest_ivf_index_versioned(
@@ -1603,7 +1604,7 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
         )
     v = V.refresh_ivfpq_index_versioned(emb, pq)
     assert V.read_ivf_manifest(pq, v)["stream_batch_id"] == 3
-    V.vacuum_ivf_index(pq, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(pq, keep_last=1, orphan_min_age_s=0)
     assert committed_stream_batch(pq) == 3
 
 
@@ -1624,7 +1625,7 @@ def test_ivfpq_rebalance_refuses_stale_corpus(spark, tmp_path):
         V.rebalance_ivfpq_index_versioned(
             spark, emb.filter(F.col("vec_id") % 2 == 0), base
         )
-    assert V.ivf_index_versions(base) == [1]
+    assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), pre, check_exact=True
     )
@@ -1650,7 +1651,7 @@ def test_compacted_files_stay_id_clustered_for_pruning(spark, tmp_path):
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 10)),
             base,
         )
-    man = V.read_ivf_manifest(base, V.ivf_index_versions(base)[-1])
+    man = V.read_ivf_manifest(base, MT.manifest_versions(base)[-1])
     by_cell: dict[int, list[dict]] = {}
     for e in man["files"]:
         by_cell.setdefault(e["cell"], []).append(e)
@@ -1745,7 +1746,7 @@ def test_ivf_index_history_catalog(spark, tmp_path):
     # the call's plan-free shape (bounded local rows).
     assert V.ivf_index_history(spark, base).count() == 4
     # Vacuum shrinks the catalog to the survivors.
-    V.vacuum_ivf_index(base, keep_last=2, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=2, orphan_min_age_s=0)
     assert [
         r["version"] for r in V.ivf_index_history(spark, base).collect()
     ] == [3, 4]

@@ -35,7 +35,7 @@ def test_append_and_replace_commits(spark, table):
     v2 = MT.snapshot_write(spark, _df(spark, 10, 15), table, mode="append")
     v3 = MT.snapshot_write(spark, _df(spark, 100, 103), table, mode="replace")
     assert (v1, v2, v3) == (1, 2, 3)
-    assert MT.snapshot_versions(table) == [1, 2, 3]
+    assert MT.manifest_versions(table) == [1, 2, 3]
     assert MT.read_snapshot(spark, table, 1).count() == 10
     # Append sees parent + new rows.
     assert MT.read_snapshot(spark, table, 2).count() == 15
@@ -55,12 +55,12 @@ def test_vacuum_removes_only_unreachable(spark, table):
     MT.snapshot_write(spark, _df(spark, 10, 20), table, mode="replace")
     data_dir = os.path.join(table, "data")
     files_before = len(MT.file_manifest(data_dir))
-    stats = MT.snapshot_vacuum(table, keep_last=1)
-    assert stats["versions_expired"] == 1 and stats["versions_kept"] == 1
+    stats = MT.vacuum(table, keep_last=1)
+    assert stats["versions_expired"] == 1 and stats["versions_kept"] == [2]
     assert stats["files_removed"] == files_before - stats["files_live"]
     assert len(MT.file_manifest(data_dir)) == stats["files_live"]
     # The kept version still reads exactly.
-    assert MT.snapshot_versions(table) == [2]
+    assert MT.manifest_versions(table) == [2]
     assert sorted(
         r["id"] for r in MT.read_snapshot(spark, table, 2).collect()
     ) == list(range(10, 20))
@@ -73,7 +73,7 @@ def test_vacuum_keeps_multiple_versions(spark, table):
     MT.snapshot_write(spark, _df(spark, 0, 5), table, mode="replace")
     MT.snapshot_write(spark, _df(spark, 5, 9), table, mode="append")
     MT.snapshot_write(spark, _df(spark, 9, 12), table, mode="replace")
-    stats = MT.snapshot_vacuum(table, keep_last=2)
+    stats = MT.vacuum(table, keep_last=2)
     assert stats["versions_expired"] == 1
     # v2 (append) keeps v1's files alive through its manifest even
     # though v1's manifest is expired.
@@ -90,9 +90,9 @@ def test_uncommitted_data_files_are_invisible_and_reclaimed(spark, table):
     assert MT.read_snapshot(spark, table, 1).count() == 10
     # Default vacuum protects the unexplained files (grace window —
     # the writer might be live and mid-commit); waiving it reclaims.
-    stats = MT.snapshot_vacuum(table, keep_last=1)
+    stats = MT.vacuum(table, keep_last=1)
     assert stats["files_removed"] == 0
-    stats = MT.snapshot_vacuum(table, keep_last=1, orphan_min_age_s=0)
+    stats = MT.vacuum(table, keep_last=1, orphan_min_age_s=0)
     assert stats["files_removed"] > 0
     assert MT.read_snapshot(spark, table, 1).count() == 10
 
@@ -114,7 +114,7 @@ def test_late_published_version_is_observed_not_clobbered(spark, table):
         json.dump({"version": 2, "mode": "replace", "files": []}, fh)
     v = MT.snapshot_write(spark, _df(spark, 5, 8), table, mode="replace")
     assert v == 3
-    assert MT.snapshot_versions(table) == [1, 2, 3]
+    assert MT.manifest_versions(table) == [1, 2, 3]
 
 
 def test_concurrent_commit_loses_race(spark, table, monkeypatch):
@@ -131,7 +131,7 @@ def test_concurrent_commit_loses_race(spark, table, monkeypatch):
     with open(os.path.join(table, "manifest-v2.json"), "w") as fh:
         json.dump({"version": 2, "mode": "replace", "files": []}, fh)
     before = set(globmod.glob(os.path.join(table, "data", "commit-*")))
-    monkeypatch.setattr(MT, "snapshot_versions", lambda d: [1])
+    monkeypatch.setattr(MT, "manifest_versions", lambda d: [1])
     with pytest.raises(FileExistsError):
         MT.snapshot_write(spark, _df(spark, 5, 8), table, mode="replace")
     monkeypatch.undo()
@@ -144,12 +144,12 @@ def test_concurrent_commit_loses_race(spark, table, monkeypatch):
         assert json.load(fh)["files"] == []
     loser = set(globmod.glob(os.path.join(table, "data", "commit-*"))) - before
     assert len(loser) == 1
-    MT.snapshot_vacuum(table, keep_last=1)
+    MT.vacuum(table, keep_last=1)
     assert all(os.path.isdir(d) for d in loser)  # grace window held
-    stats = MT.snapshot_vacuum(table, keep_last=1, orphan_min_age_s=0)
+    stats = MT.vacuum(table, keep_last=1, orphan_min_age_s=0)
     assert stats["files_removed"] > 0
     assert not any(os.path.isdir(d) for d in loser)
-    assert MT.snapshot_versions(table) == [2]
+    assert MT.manifest_versions(table) == [2]
 
 
 def test_atomic_publish_many_racers_one_intact_winner(tmp_path):
@@ -214,9 +214,9 @@ def test_random_commit_model(spark, table):
         got = {r["id"] for r in MT.read_snapshot(spark, table, v).collect()}
         assert got == want, f"v{v}"
     keep = rng.randint(1, 3)
-    MT.snapshot_vacuum(table, keep_last=keep)
+    MT.vacuum(table, keep_last=keep)
     kept = sorted(model)[-keep:]
-    assert MT.snapshot_versions(table) == kept
+    assert MT.manifest_versions(table) == kept
     for v in kept:
         got = {r["id"] for r in MT.read_snapshot(spark, table, v).collect()}
         assert got == model[v], f"post-vacuum v{v}"
@@ -246,9 +246,9 @@ def test_racing_writers_files_never_cross_attributed(spark, table):
     # The stray is referenced by NO manifest, so the default vacuum
     # protects it (could be a live writer's staging); waiving the
     # grace window reclaims it and clears emptied commit dirs.
-    MT.snapshot_vacuum(table, keep_last=1)
+    MT.vacuum(table, keep_last=1)
     assert os.path.exists(stray)
-    MT.snapshot_vacuum(table, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(table, keep_last=1, orphan_min_age_s=0)
     assert not os.path.exists(stray)
 
 
@@ -286,9 +286,9 @@ def test_compaction_commits_as_snapshot_version(spark, table):
         r["id"] for r in MT.read_snapshot(spark, table, 2).collect()
     ) == list(range(60))
     # Vacuum reclaims every pre-compaction file; the head still reads.
-    stats = MT.snapshot_vacuum(table, keep_last=1)
+    stats = MT.vacuum(table, keep_last=1)
     assert stats["files_removed"] == len(files_before)
-    assert MT.snapshot_versions(table) == [3]
+    assert MT.manifest_versions(table) == [3]
     assert sorted(
         r["id"] for r in MT.read_snapshot(spark, table, 3).collect()
     ) == list(range(60))
@@ -437,9 +437,9 @@ def test_random_lifecycle_model_with_merge_and_compact(spark, table):
         }
         assert got == want, f"v{v}"
     keep = rng.randint(1, 3)
-    MT.snapshot_vacuum(table, keep_last=keep)
+    MT.vacuum(table, keep_last=keep)
     kept = sorted(model)[-keep:]
-    assert MT.snapshot_versions(table) == kept
+    assert MT.manifest_versions(table) == kept
     for v in kept:
         got = {
             r["id"]: r["v"]
@@ -481,11 +481,11 @@ def test_stats_cols_timestamp_roundtrip_and_bad_type_fails_fast(spark, table):
 
 def test_snapshot_vacuum_rejects_keep_last_below_one(spark, table):
     """keep_last<1 would expire every manifest and leave an unreadable
-    table — refused up front, matching vacuum_ivf_index's floor (the
-    two tiers share one vacuum contract)."""
+    table — refused up front (the index tier runs the same vacuum,
+    pinned by tests/test_ivf_versioned.py)."""
     MT.snapshot_write(spark, _df(spark, 0, 5), table, mode="replace")
     with pytest.raises(ValueError, match="keep_last"):
-        MT.snapshot_vacuum(table, keep_last=0)
+        MT.vacuum(table, keep_last=0)
     with pytest.raises(ValueError, match="keep_last"):
-        MT.snapshot_vacuum(table, keep_last=-2)
-    assert MT.snapshot_versions(table) == [1]
+        MT.vacuum(table, keep_last=-2)
+    assert MT.manifest_versions(table) == [1]

@@ -16,6 +16,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from sressentials_spark.operators import ivf_versioned as V
+from sressentials_spark.operators import maintenance as MT
 from sressentials_spark.sources.tables import load_table
 from sressentials_spark.streaming import ann_ingest as AI
 from sressentials_spark.streaming import stage_arrivals
@@ -53,7 +54,7 @@ def test_streamed_ingest_is_exactly_once_and_batch_invariant(spark, tmp_path):
         spark, arrivals, base, str(tmp_path / "ckpt1")
     )
     # One stamped version per non-empty micro-batch, in order.
-    versions = V.ivf_index_versions(base)
+    versions = MT.manifest_versions(base)
     assert versions == [1, 2, 3, 4]
     assert AI.committed_stream_batch(base) == 2
     ids = {
@@ -76,7 +77,7 @@ def test_streamed_ingest_is_exactly_once_and_batch_invariant(spark, tmp_path):
     AI.run_versioned_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt2")
     )
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4]
     assert set(globmod.glob(os.path.join(base, "data", "commit-*"))) == before
 
     # A maintenance commit in between must not reset the high-water
@@ -86,16 +87,16 @@ def test_streamed_ingest_is_exactly_once_and_batch_invariant(spark, tmp_path):
     # where a dropped stamp would re-open double-ingest on a
     # redelivered in-flight batch.
     V.delete_ivf_index_versioned(spark, base, [int(min(ids - set(QIDS)))])
-    assert V.ivf_index_versions(base)[-1] == 5
+    assert MT.manifest_versions(base)[-1] == 5
     assert V.read_ivf_manifest(base, 5)["stream_batch_id"] == 2
     assert AI.committed_stream_batch(base) == 2
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
-    assert V.ivf_index_versions(base) == [5]
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
+    assert MT.manifest_versions(base) == [5]
     assert AI.committed_stream_batch(base) == 2
     AI.run_versioned_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt3")
     )
-    assert V.ivf_index_versions(base)[-1] == 5  # still nothing to redo
+    assert MT.manifest_versions(base)[-1] == 5  # still nothing to redo
 
 
 def test_empty_batch_skips_stamp_and_redelivery_is_noop(spark, tmp_path):
@@ -127,7 +128,7 @@ def test_empty_batch_skips_stamp_and_redelivery_is_noop(spark, tmp_path):
     AI.run_versioned_ingest_stream(spark, arrivals, base, str(tmp_path / "c1"))
     # Two non-empty batches committed; the trailing empty batch (id 2)
     # left no version and no stamp.
-    assert V.ivf_index_versions(base) == [1, 2, 3]
+    assert MT.manifest_versions(base) == [1, 2, 3]
     assert AI.committed_stream_batch(base) == 1
     ids = {
         r["vec_id"]
@@ -149,11 +150,11 @@ def test_empty_batch_skips_stamp_and_redelivery_is_noop(spark, tmp_path):
 
     before = _files()
     AI.run_versioned_ingest_stream(spark, arrivals, base, str(tmp_path / "c2"))
-    assert V.ivf_index_versions(base) == [1, 2, 3]
+    assert MT.manifest_versions(base) == [1, 2, 3]
     assert AI.committed_stream_batch(base) == 1
     assert _files() == before
     # And vacuum reclaims the quiesced empty staging dir residue.
-    V.vacuum_ivf_index(base, keep_last=1, orphan_min_age_s=0)
+    MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     assert _files() == before
 
 
@@ -174,7 +175,7 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
     AI.run_versioned_ivfpq_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt1")
     )
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4]
     assert AI.committed_stream_batch(base) == 2
     man = V.read_ivf_manifest(base, 4)
     man1 = V.read_ivf_manifest(base, 1)
@@ -203,5 +204,5 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
     AI.run_versioned_ivfpq_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt2")
     )
-    assert V.ivf_index_versions(base) == [1, 2, 3, 4]
+    assert MT.manifest_versions(base) == [1, 2, 3, 4]
     assert set(globmod.glob(os.path.join(base, "data", "commit-*"))) == before

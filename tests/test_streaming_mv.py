@@ -112,7 +112,7 @@ def test_cdc_snapshot_merge_commits_versioned_history(spark):
         for k, (v, _frames) in _DISK.items()
         if "cdc_snapshot_merge" in str(k)
     )
-    versions = MT.snapshot_versions(table)
+    versions = MT.manifest_versions(table)
     assert len(versions) == MULTIBATCH_FILES
     # every intermediate version still reads (snapshot isolation)
     sizes = [MT.read_snapshot(spark, table, v).count() for v in versions]
