@@ -88,11 +88,11 @@ def main(argv: list[str] | None = None) -> int:
         for row in sheets[diag_key].limit(args.max_errors).collect():
             print(f"Warning: {row['message']}", file=sys.stderr)
 
-    fmt, path = save_report(
+    fmt, path, rows = save_report(
         sheets, order, args.output, parquet_mirror=args.parquet_mirror
     )
     for key, title in order:
-        print(f"{title}: {sheets[key].count()} rows")
+        print(f"{title}: {rows[key]} rows")
     print(f"Report saved ({fmt}): {path}")
     sheets.unpersist_base()
     return 0

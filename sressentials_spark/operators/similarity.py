@@ -936,7 +936,6 @@ def build_ivfpq_index(
     emb: DataFrame,
     base_path: str,
     n_cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
     m: int = PQ_M,
     k: int = PQ_K,
     iters: int = PQ_ITERS,
@@ -955,13 +954,15 @@ def build_ivfpq_index(
     This is THE billion-scale serving artifact: the per-vector payload
     is M small ints (~32x smaller than the raw floats, which stay in
     cold storage), and a query batch's scan is pruned to its probed
-    cells at the PARTITION level — nprobe/n_cells of an already-32x-
-    compressed table is what makes exhaustive-within-cell search
-    affordable at 100 TB. BOTH quantizers are trained on purpose:
-    k-means cells are tight (the hash-seeded cells of the cosine-IVF
-    tier measurably do not shrink residuals, and residual coding then
-    HURTS recall — measured in docs/ANN_EVAL.md), and within tight
-    cells residual PQ recovers most of the cell ceiling."""
+    cells at the PARTITION level — the probed fraction of an already-
+    32x-compressed table is what makes exhaustive-within-cell search
+    affordable at 100 TB. The probe width is a serve-time choice
+    (:func:`pq_adc_topk_ivf_from_index`), not part of the artifact.
+    BOTH quantizers are trained on purpose: k-means cells are tight
+    (the hash-seeded cells of the cosine-IVF tier measurably do not
+    shrink residuals, and residual coding then HURTS recall — measured
+    in docs/ANN_EVAL.md), and within tight cells residual PQ recovers
+    most of the cell ceiling."""
     from sressentials_spark import sinks
 
     spark = emb.sparkSession

@@ -47,11 +47,14 @@ def save_report(
     output_path: str,
     row_cap: int = EXCEL_ROW_CAP,
     parquet_mirror: str | None = None,
-) -> tuple[str, str]:
-    """Write the named sheets; returns ``(format, path_written)``.
+) -> tuple[str, str, dict[str, int]]:
+    """Write the named sheets; returns ``(format, path_written, rows)``.
 
     ``format`` is ``xlsx`` when an Excel engine is available, else
     ``csv`` (a ``<output>.sheets/`` directory, one CSV per sheet).
+    ``rows`` maps each sheet key to its full row count: the length of
+    the collected frame, counted through Spark only for a sheet
+    truncated at ``row_cap``.
     ``parquet_mirror`` additionally writes each *uncapped* DataFrame as
     parquet under the given directory — the scale-safe output.
     """
@@ -63,22 +66,26 @@ def save_report(
                 os.path.join(parquet_mirror, key)
             )
 
-    pdfs: dict[str, pd.DataFrame] = {
-        title: sheets[key].limit(row_cap).toPandas() for key, title in sheet_order
-    }
+    # One row past the cap tells a truncated sheet from a full one.
+    pdfs: dict[str, pd.DataFrame] = {}
+    rows: dict[str, int] = {}
+    for key, title in sheet_order:
+        pdf = sheets[key].limit(row_cap + 1).toPandas()
+        rows[key] = len(pdf) if len(pdf) <= row_cap else sheets[key].count()
+        pdfs[title] = pdf.iloc[:row_cap]
 
     engine = _excel_engine()
     if engine is not None:
         with pd.ExcelWriter(output_path, engine=engine) as writer:
             for title, pdf in pdfs.items():
                 pdf.to_excel(writer, sheet_name=title[:31], index=False)
-        return "xlsx", output_path
+        return "xlsx", output_path, rows
 
     out_dir = output_path + ".sheets"
     os.makedirs(out_dir, exist_ok=True)
     for title, pdf in pdfs.items():
         pdf.to_csv(os.path.join(out_dir, title.replace(" ", "_") + ".csv"), index=False)
-    return "csv", out_dir
+    return "csv", out_dir, rows
 
 
 def save_report_bytes(

@@ -13,15 +13,22 @@ between source and sink.
 Shared sizing rule: a streaming STATE partition count is baked into
 the query at planning time from ``spark.sql.shuffle.partitions``, and
 every state store instance pays fixed per-micro-batch maintenance
-(snapshot, commit, file I/O) regardless of how little state it holds.
-Unlike batch shuffles — where AQE coalesces over-partitioning away —
-streaming state cannot coalesce after the fact, so the right count
-tracks STATE SIZE (≈ state_bytes / 200 MB at production scale), not
-cluster cores. Measured here: the stream-stream attribution replay
-runs 8.8 s with 32 one-core-box state partitions and 2.9 s with 8 —
-pure fixed-cost multiplication. The stateful drains pin
-:data:`DEFAULT_STATE_PARTITIONS` around a query's planning + execution
-(:func:`state_partitions`) and restore the batch default afterwards.
+(load, commit, delta file, output part file) regardless of how little
+state it holds. Unlike batch shuffles — where AQE coalesces
+over-partitioning away — streaming state cannot coalesce after the
+fact, so the count must be right at planning. The replays here hold
+KBs of state, so the rule is ONE WAVE of task slots: every stateful
+drain plans with ``min(DEFAULT_STATE_PARTITIONS, defaultParallelism)``
+state partitions (:func:`state_partitions`) and restores the batch
+default afterwards. More partitions than task slots run each
+micro-batch's state tasks in several waves, each paying the fixed cost
+again: on ``local[2]`` (4-core box, warm, median of 3) the sessionize
+replay took 10.0 s with 8 state partitions and 4.75 s with 2, with
+identical output. The cap of 8 keeps a many-core box from multiplying
+the same fixed cost (the stream-stream attribution replay runs 8.8 s
+with 32 state partitions and 2.9 s with 8). Production-scale state
+would size the count from state bytes (≈ state_bytes / 200 MB)
+instead; see SCALING.md.
 """
 
 from __future__ import annotations
@@ -39,15 +46,19 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from sressentials_spark.scratch import scratch_dir
 
-#: Default state partition count for the availableNow replays in this
-#: engine: test-scale state is KBs, so a handful of stores suffices.
+#: Ceiling on the state partition count of the availableNow replays in
+#: this engine: test-scale state is KBs, so one wave of at most this
+#: many task slots suffices (:func:`state_partitions`).
 DEFAULT_STATE_PARTITIONS = 8
 
 
 @contextmanager
-def state_partitions(spark: SparkSession, n: int):
+def state_partitions(spark: SparkSession):
     """Temporarily pin ``spark.sql.shuffle.partitions`` (which fixes
-    the streaming state partition count at query planning) to ``n``."""
+    the streaming state partition count at query planning) to one wave
+    of the session's task slots, capped at
+    :data:`DEFAULT_STATE_PARTITIONS`."""
+    n = min(DEFAULT_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -171,7 +182,7 @@ def drain_to_memory(stream: DataFrame, prefix: str, run_key: str) -> DataFrame:
     sink keeps every output row on the driver."""
     spark = stream.sparkSession
     name = prefix + hashlib.md5(run_key.encode()).hexdigest()[:10]
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
+    with state_partitions(spark):
         _run(
             stream.writeStream.format("memory")
             .queryName(name)
@@ -223,7 +234,7 @@ def replay_to_parquet(
     out = scratch_dir(f"sressentials_replay_{name}_")
     data_dir = os.path.join(out, "data")
     os.makedirs(data_dir, exist_ok=True)
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
+    with state_partitions(spark):
         progress = _run(
             stream_df.writeStream.format("parquet")
             .option("path", data_dir)

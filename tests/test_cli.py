@@ -131,3 +131,51 @@ def test_ui_diagnostics_unbounded_toggle(tmp_path, spark):
     assert shown == total
     assert len(full.warnings) == total
     assert not any("suppressed" in w for w in full.warnings)
+
+
+def test_cli_prints_the_row_counts_save_report_collected(
+    tmp_path, spark, monkeypatch, capsys
+):
+    """The per-sheet counts the CLI prints are the ones ``save_report``
+    collected: a sheet under ``row_cap`` is not counted again through
+    Spark, and a sheet truncated at ``row_cap`` prints its full count,
+    not the cap."""
+    from functools import partial
+
+    import pandas as pd
+    from sressentials_spark import cli
+    from sressentials_spark.plans.mysql import analyze_mysql_log
+    from sressentials_spark.report import MYSQL_SHEETS
+
+    log = tmp_path / "slow.log"
+    log.write_text(MYSQL_LOG)
+    full = analyze_mysql_log(spark, str(log), cache=False)
+    expected = {title: full[key].count() for key, title in MYSQL_SHEETS}
+    cap = min(expected.values())
+    truncated = [t for t, n in expected.items() if n > cap]
+    assert truncated, expected  # the fixture's sheets differ in size
+
+    frame_cls = type(full["detailed"])  # the session's concrete DataFrame
+    counted = []
+    count = frame_cls.count
+
+    def spy(df):
+        counted.append(df)
+        return count(df)
+
+    monkeypatch.setattr(cli, "get_spark", lambda app_name: spark)
+    monkeypatch.setattr(cli, "save_report", partial(cli.save_report, row_cap=cap))
+    monkeypatch.setattr(frame_cls, "count", spy)
+    out = tmp_path / "report.xlsx"
+    assert cli.main(["mysql", "-i", str(log), "-o", str(out)]) == 0
+
+    printed = dict(
+        line.rsplit(": ", 1)
+        for line in capsys.readouterr().out.splitlines()
+        if line.endswith(" rows")
+    )
+    assert printed == {title: f"{n} rows" for title, n in expected.items()}
+    assert len(counted) == len(truncated)
+    for title in truncated:
+        sheet = tmp_path / "report.xlsx.sheets" / (title.replace(" ", "_") + ".csv")
+        assert len(pd.read_csv(sheet)) == cap

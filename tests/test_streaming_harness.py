@@ -1,14 +1,17 @@
 """The replay harness every streaming module shares
 (``sressentials_spark/streaming/__init__.py``): staged arrivals replay
 one file per trigger in key-range order with the tails last, and the
-stateful drains plan with ``DEFAULT_STATE_PARTITIONS`` whatever the
-session's shuffle setting, restoring it afterwards."""
+stateful drains plan one wave of task slots, capped at
+``DEFAULT_STATE_PARTITIONS``, whatever the session's shuffle setting,
+restoring it afterwards."""
 
 from __future__ import annotations
 
 import glob
 import os
+from types import SimpleNamespace
 
+import pytest
 import sressentials_spark.streaming as H
 from pyspark.sql import functions as F
 
@@ -91,4 +94,32 @@ def test_stateful_drains_plan_default_state_partitions(spark, tmp_path, monkeypa
             for op in p.get("stateOperators", [])
         ]
         assert len(instances) == 4, instances  # one stateful op, four batches
-        assert set(instances) == {H.DEFAULT_STATE_PARTITIONS}
+        assert set(instances) == {
+            min(H.DEFAULT_STATE_PARTITIONS, spark.sparkContext.defaultParallelism)
+        }
+
+
+def _stub_session(slots: int) -> tuple[SimpleNamespace, dict[str, str]]:
+    """Just what :func:`state_partitions` reads: a runtime conf (backed
+    by the returned dict) and the context's task-slot count."""
+    conf = {"spark.sql.shuffle.partitions": "200"}
+    session = SimpleNamespace(
+        conf=SimpleNamespace(get=conf.__getitem__, set=conf.__setitem__),
+        sparkContext=SimpleNamespace(defaultParallelism=slots),
+    )
+    return session, conf
+
+
+def test_state_partitions_fill_one_wave_capped_and_restore():
+    key = "spark.sql.shuffle.partitions"
+    few, conf = _stub_session(2)
+    with H.state_partitions(few):
+        assert conf[key] == "2"
+    assert conf[key] == "200"
+
+    many, conf = _stub_session(32)
+    with pytest.raises(RuntimeError, match="body failed"):
+        with H.state_partitions(many):
+            assert conf[key] == "8"
+            raise RuntimeError("body failed")
+    assert conf[key] == "200"

@@ -43,12 +43,9 @@ def _expected_sessions(df: pd.DataFrame) -> pd.DataFrame:
 def _run_to_completion(spark, src_dir: str, out: str, ckpt: str):
     """One bounded run of the sessionizer against whatever files exist
     in ``src_dir`` right now, resuming from ``ckpt`` if present."""
-    from sressentials_spark.streaming import (
-        DEFAULT_STATE_PARTITIONS,
-        state_partitions,
-    )
+    from sressentials_spark.streaming import state_partitions
 
-    with state_partitions(spark, DEFAULT_STATE_PARTITIONS):
+    with state_partitions(spark):
         src = sessionize_stream(spark, src_dir, glob="*.parquet")
         q = (
             src.writeStream.format("parquet")
