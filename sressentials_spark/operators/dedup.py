@@ -35,7 +35,7 @@ common ones; production runs cap shingle DF (``max_df`` — drop shingles
 appearing in > N docs; they contribute only to already-similar pairs)
 and lean on MinHash-LSH, which replaces the all-pairs explosion with
 ``bands × (docs sharing a band bucket)``. Band buckets are themselves
-capped (``max_bucket``) so a degenerate bucket (e.g. the empty-ish
+capped (``DEFAULT_MAX_BUCKET``) so a degenerate bucket (e.g. the empty-ish
 document cluster) cannot go quadratic. All groupBys key on hashes or
 (doc, shingle) composites → uniformly distributed shuffles.
 """
@@ -45,16 +45,18 @@ from __future__ import annotations
 import os
 import re
 from dataclasses import dataclass
+from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sressentials_spark.artifacts import (  # noqa: F401 (re-exported)
     ARTIFACT_EVENTS,
+    free,
     get_or_build,
     release_persisted,
     tracked_persist,
+    tracking,
 )
 from sressentials_spark.operators.text import tokens
 from sressentials_spark.scratch import register_scratch
@@ -90,6 +92,15 @@ MINHASH_ROWS = MINHASH_HASHES // MINHASH_BANDS
 #: probability ~1-(1-J^rows)^(bands-1).
 DEFAULT_MAX_BUCKET = 10_000
 
+#: Shingle width, verification threshold and id column of the MinHash
+#: pipeline (batch pairs, dedup index, both ingest triages).
+MINHASH_N = 3
+MINHASH_THRESHOLD = 0.8
+MINHASH_ID = "doc_id"
+#: A flat band row's key: the band join's equi-join key and the
+#: bucketed index's bucket key.
+BAND_KEYS = ["band"] + [f"r{r}" for r in range(MINHASH_ROWS)]
+
 
 def minhash_params(num_hashes: int = MINHASH_HASHES) -> list[tuple[int, int]]:
     """Deterministic (a, b) coefficients for h_i(x) = (a*x + b) mod p."""
@@ -99,32 +110,15 @@ def minhash_params(num_hashes: int = MINHASH_HASHES) -> list[tuple[int, int]]:
     ]
 
 
-def shingles(text_col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles as an array column.
-
-    Array-valued convenience form (HOF-based, interpreted — fine for
-    small/interactive use). The distributed operators below use
-    :func:`shingle_rows` instead, which produces the same shingle set
-    as codegen-friendly exploded rows.
-    """
-    t = tokens(text_col)
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(t) - n),
-        lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-    )
-    return F.array_distinct(F.when(F.size(t) >= n, grams).otherwise(F.array()))
-
-
 def shingle_rows(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct (id, shingle) rows — the exploded twin of :func:`shingles`.
+    """Distinct (id, shingle) rows: word n-grams of ``text_col``.
 
     ``posexplode`` + direct array indexing keeps n-gram assembly inside
     whole-stage codegen (no per-element lambda interpretation); the
     ``distinct`` shuffles on the uniform (id, shingle) composite key.
-    Documents with fewer than ``n`` tokens contribute no rows, matching
-    the empty array from :func:`shingles`.
+    Documents with fewer than ``n`` tokens contribute no rows.
     """
     t = docs.select(F.col(id_col), tokens(text_col).alias("_tk"))
     pos = t.select(
@@ -138,6 +132,31 @@ def shingle_rows(
         *[F.col("_tk")[F.col("_pos") + i] for i in range(1, n)],
     )
     return pos.select(F.col(id_col), gram.alias("g")).distinct()
+
+
+def _jaccard(
+    inter: DataFrame, sizes_a: DataFrame, sizes_b: DataFrame, id_col: str = MINHASH_ID
+) -> DataFrame:
+    """The ``intersection_size`` / ``union_size`` / ``jaccard``
+    projection of ``(doc_a, doc_b, ..., intersection_size)`` rows, with
+    each side's shingle-set size looked up in its ``(id, n_sh)``
+    table; the other ``inter`` columns are kept."""
+    union = F.col("n_a") + F.col("n_b") - F.col("intersection_size")
+    keys = [c for c in inter.columns if c != "intersection_size"]
+    return (
+        inter.join(
+            sizes_a.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a"
+        )
+        .join(
+            sizes_b.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b"
+        )
+        .select(
+            *keys,
+            "intersection_size",
+            union.alias("union_size"),
+            (F.col("intersection_size").cast("double") / union).alias("jaccard"),
+        )
+    )
 
 
 def _pair_jaccard(ex: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -155,24 +174,7 @@ def _pair_jaccard(ex: DataFrame, id_col: str = "doc_id") -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("intersection_size"))
     )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "doc_a"), "doc_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(sizes.withColumnRenamed(id_col, "doc_b"), "doc_b")
-        .withColumnRenamed("n_sh", "n_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "intersection_size",
-            (F.col("n_a") + F.col("n_b") - F.col("intersection_size")).alias(
-                "union_size"
-            ),
-            (
-                F.col("intersection_size").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("intersection_size"))
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard(inter, sizes, sizes, id_col)
 
 
 def ngram_jaccard_pairs(
@@ -319,22 +321,17 @@ def simhash_pairs(
 # MinHash + LSH
 # --------------------------------------------------------------------------
 
-def signatures_from_shingles(
-    ex: DataFrame, id_col: str = "doc_id", extra_aggs: list[Column] | None = None
-) -> DataFrame:
-    """Minhash signatures ``s1..s{k}`` from a prebuilt (id, g) shingle
-    table — the shared core of :func:`minhash_signatures` and
-    :func:`minhash_lsh_pairs` (which reuses one persisted shingle table
-    across signature building and exact verification).
+def signatures_from_shingles(ex: DataFrame, id_col: str = MINHASH_ID) -> DataFrame:
+    """Minhash signatures ``s1..s{k}`` plus the shingle-set size
+    ``n_sh`` from a prebuilt (id, g) shingle table.
 
     One hashed-shingle projection, then a single groupBy with 24
     ``min()`` buffers — each buffer's update is three integer ops, all
     codegen, all map-side combinable. (Round 1 computed 24
     ``array_min(transform(...))`` lambdas per row: interpreted,
-    per-element, and re-evaluating the shingle hash 24×.)
-    ``extra_aggs`` lets a caller ride additional per-document buffers
-    (e.g. the shingle-set size) on the same shuffle instead of paying a
-    second aggregation over ``ex``.
+    per-element, and re-evaluating the shingle hash 24×.) The set size
+    rides the same shuffle as a 25th buffer instead of paying a second
+    aggregation over ``ex``; exact verification reads it.
     """
     hv = ex.select(
         F.col(id_col),
@@ -346,249 +343,205 @@ def signatures_from_shingles(
         ).alias(f"s{i}")
         for i, (a, b) in enumerate(minhash_params(), start=1)
     ]
-    return hv.groupBy(id_col).agg(*sigs, *(extra_aggs or []))
+    return hv.groupBy(id_col).agg(*sigs, F.count(F.lit(1)).alias("n_sh"))
+
+
+def _minhash_frames(
+    docs: DataFrame, n: int = MINHASH_N, id_col: str = MINHASH_ID
+) -> tuple[DataFrame, DataFrame]:
+    """The (id, shingle) table and its signatures, both persisted and
+    tracked: the shingle table feeds the signature build and both sides
+    of the intersection join, the one-row-per-document signature table
+    feeds the band rows, the bucket cap and both size lookups, and
+    per-consumer column pruning defeats exchange reuse — unpersisted,
+    each consumer would re-run the tokenize+explode+distinct pipeline."""
+    ex = tracked_persist(shingle_rows(docs, n, id_col))
+    return ex, tracked_persist(signatures_from_shingles(ex, id_col))
 
 
 def minhash_tables(
     docs: DataFrame, n: int = 3, id_col: str = "doc_id"
 ) -> tuple[DataFrame, DataFrame]:
-    """The persisted (id, shingle) table and its signatures (with the
-    shingle-set size ``n_sh``) as one session artifact per corpus plan:
-    the MinHash family (batch pairs and incremental ingest) shares them
-    exactly, the way the log pipelines share one parse."""
+    """:func:`_minhash_frames` as one session artifact per corpus plan:
+    the batch pairs and every consumer of them share the shingle and
+    signature tables exactly, the way the log pipelines share one
+    parse."""
+    return get_or_build(
+        docs.sparkSession,
+        ("minhash", docs, n, id_col),
+        lambda: _minhash_frames(docs, n, id_col),
+    )
 
-    def build() -> tuple[DataFrame, DataFrame]:
-        ex = tracked_persist(shingle_rows(docs, n, id_col))
-        sig = tracked_persist(
-            signatures_from_shingles(
-                ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
-            )
+
+def band_rows_flat(sig: DataFrame) -> DataFrame:
+    """One (id, band, r0, r1) row per band of a signature table — the
+    band join's native key layout, and (unlike a struct column)
+    directly bucketable by ``write_bucketed``."""
+    band_structs = [
+        F.struct(
+            F.lit(bi).alias("band"),
+            *[
+                F.col(f"s{bi * MINHASH_ROWS + r + 1}").alias(f"r{r}")
+                for r in range(MINHASH_ROWS)
+            ],
         )
-        return ex, sig
-
-    return get_or_build(docs.sparkSession, ("minhash", docs, n, id_col), build)
-
-
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document minhash signature columns ``s1..s{k}`` over shingles."""
-    return signatures_from_shingles(shingle_rows(docs, n, id_col), id_col)
+        for bi in range(MINHASH_BANDS)
+    ]
+    return sig.select(F.col(MINHASH_ID), F.inline(F.array(*band_structs)))
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
+@dataclass(frozen=True)
+class MinhashSide:
+    """One side of the MinHash band join, keyed on :data:`MINHASH_ID`:
+    (id, g) shingle rows, (id, s1..s24, n_sh) signatures and their flat
+    (id, band, r0, r1) band rows — in-memory frames
+    (:func:`minhash_side`) or the bucketed index tables
+    (:meth:`DedupIndexTables.side`)."""
+
+    shingles: DataFrame
+    signatures: DataFrame
+    bands: DataFrame
+
+    @classmethod
+    def of(cls, shingles: DataFrame, signatures: DataFrame) -> "MinhashSide":
+        return cls(shingles, signatures, band_rows_flat(signatures))
+
+    def union(self, other: "MinhashSide") -> "MinhashSide":
+        return MinhashSide(
+            self.shingles.unionByName(other.shingles),
+            self.signatures.unionByName(other.signatures),
+            self.bands.unionByName(other.bands),
+        )
+
+
+def minhash_side(docs: DataFrame) -> MinhashSide:
+    """An in-memory side over ``docs``; its persisted frames are freed
+    by the caller's :func:`~sressentials_spark.artifacts.tracking`
+    scope or by the release."""
+    return MinhashSide.of(*_minhash_frames(docs))
+
+
+def _cap_buckets(*bands: DataFrame) -> list[DataFrame]:
+    """Each band table of one band join without the buckets that hold
+    more than :data:`DEFAULT_MAX_BUCKET` members over all of them
+    together (read at call time). Broadcast anti-joins keep a bucketed
+    side's distribution: no exchange is inserted above its scan."""
+    over = (
+        reduce(DataFrame.unionByName, [b.select(*BAND_KEYS) for b in bands])
+        .groupBy(*BAND_KEYS)
+        .agg(F.count(F.lit(1)).alias("_n"))
+        .filter(F.col("_n") > DEFAULT_MAX_BUCKET)
+        .select(*BAND_KEYS)
+    )
+    return [b.join(F.broadcast(over), BAND_KEYS, "left_anti") for b in bands]
+
+
+def _band_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Candidate ``(doc_a, doc_b)`` pairs, ``doc_a < doc_b``, sharing a
+    full band bucket (one row per shared band). Candidates travel as
+    bare id pairs — signatures and shingles never ride the band
+    join."""
+    return (
+        a.select(*BAND_KEYS, F.col(MINHASH_ID).alias("doc_a"))
+        .join(b.select(*BAND_KEYS, F.col(MINHASH_ID).alias("doc_b")), BAND_KEYS)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+    )
+
+
+def _verify(cand: DataFrame, a: MinhashSide, b: MinhashSide) -> DataFrame:
+    """Exact-Jaccard verification of distinct candidates whose ``doc_a``
+    is on side ``a`` and ``doc_b`` on side ``b``, keeping
+    ``jaccard >= MINHASH_THRESHOLD``. Relational: the candidates are
+    intersected against the shingle rows (two joins + one count), so no
+    shingle array ever travels through a shuffle; set sizes come from
+    the signatures' ``n_sh``. Other candidate columns ride along."""
+    inter = (
+        cand.join(a.shingles.select(F.col(MINHASH_ID).alias("doc_a"), "g"), "doc_a")
+        .join(b.shingles.select(F.col(MINHASH_ID).alias("doc_b"), "g"), ["doc_b", "g"])
+        .groupBy(*cand.columns)
+        .agg(F.count(F.lit(1)).alias("intersection_size"))
+    )
+    return _jaccard(inter, a.signatures, b.signatures).filter(
+        F.col("jaccard") >= MINHASH_THRESHOLD
+    )
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """MinHash-LSH candidate pairs verified with exact Jaccard.
 
     Signatures are banded (``MINHASH_BANDS`` bands × ``MINHASH_ROWS``
     rows); documents sharing any full band bucket become candidates —
     the at-scale replacement for the all-pairs shingle join — and only
-    candidates pay the exact verification. Verification is relational:
-    candidate pairs are intersected against the (id, shingle) table
-    (two joins + one count), so no shingle arrays ever travel through
-    a shuffle. Band buckets larger than ``max_bucket`` are dropped from
-    candidate generation (see :data:`DEFAULT_MAX_BUCKET` for the recall
-    argument).
-
-    Materialization discipline (per-consumer column pruning defeats
-    Spark's exchange reuse, so every extra consumer of an unpersisted
-    plan is a full recompute):
-
-    * the (id, shingle) table feeds three consumers (signature build
-      and both sides of the intersection join) — persisted
-      memory-and-disk so the tokenize+explode+distinct pipeline and its
-      shuffle run once;
-    * the per-document signature table (one row per doc, 24 ints — tiny)
-      feeds five (both sides of the band join, the bucket-cap probe,
-      and both size lookups) — persisted, and the shingle-set size
-      rides the same groupBy as a 25th buffer instead of paying a
-      second aggregation over the shingle table.
+    candidates pay the exact verification. Band buckets larger than
+    :data:`DEFAULT_MAX_BUCKET` are dropped from candidate generation
+    (see there for the recall argument). The shingle and signature
+    tables are the session-shared :func:`minhash_tables`.
     """
-    ex, sig = minhash_tables(docs, n, id_col)
-
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            *[
-                F.col(f"s{bi * MINHASH_ROWS + r + 1}").alias(f"r{r}")
-                for r in range(MINHASH_ROWS)
-            ],
-        )
-        for bi in range(MINHASH_BANDS)
-    ]
-    # Candidates travel as bare id pairs — signatures and shingles never
-    # ride through the band join/distinct.
-    bands = sig.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bv"))
-    if max_bucket is not None:
-        over = (
-            bands.groupBy("bv")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("bv")
-        )
-        bands = bands.join(F.broadcast(over), "bv", "left_anti")
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.bv") == F.col("b.bv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
-    )
-
-    # Relational exact-Jaccard verification over the shingle rows; set
-    # sizes come from the persisted signature table (free 25th buffer).
-    sizes = sig.select(id_col, "n_sh")
-    inter = (
-        cand.join(
-            ex.select(F.col(id_col).alias("doc_a"), "g"), "doc_a"
-        )
-        .join(ex.select(F.col(id_col).alias("doc_b"), "g"), ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("intersection_size"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed(id_col, "doc_a"), "doc_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(sizes.withColumnRenamed(id_col, "doc_b"), "doc_b")
-        .withColumnRenamed("n_sh", "n_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.col("intersection_size").cast("long").alias("intersection_size"),
-            (F.col("n_a") + F.col("n_b") - F.col("intersection_size"))
-            .cast("long")
-            .alias("union_size"),
-            (
-                F.col("intersection_size").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("intersection_size"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    side = MinhashSide.of(*minhash_tables(docs))
+    (bands,) = _cap_buckets(side.bands)
+    return _verify(_band_pairs(bands, bands).distinct(), side, side)
 
 
-def minhash_incremental(
-    docs: DataFrame,
-    split_id: int,
-    n: int = 3,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+def minhash_triage(
+    history: MinhashSide, batch_docs: DataFrame, *, batch_quadrant: bool
 ) -> DataFrame:
-    """Incremental-ingest near-dup triage: route each NEW document
-    (``id >= split_id``) against the already-ingested history
-    (``id < split_id``) and against earlier rows of its own batch.
+    """Incremental-ingest near-dup triage: route each document of
+    ``batch_docs`` against the already-ingested ``history`` side (every
+    history id below every batch id) and, with ``batch_quadrant``,
+    against earlier (smaller-id) rows of its own batch — the
+    deterministic arrival order that makes the in-batch decision
+    reproducible regardless of partitioning.
 
-    Output, one row per new document: ``n_hist_matches`` /
-    ``n_batch_matches`` (verified-Jaccard ≥ ``threshold`` partners in
-    history / earlier in the batch) and ``status`` —
-    ``'dup_of_history'`` > ``'dup_in_batch'`` > ``'kept'``. "Earlier"
-    means smaller id: the deterministic arrival order that makes the
-    in-batch decision reproducible regardless of partitioning.
+    One row per batch document: ``n_hist_matches`` (verified partners
+    in history), with ``batch_quadrant`` also ``n_batch_matches``, and
+    ``status`` — ``'dup_of_history'`` > ``'dup_in_batch'`` >
+    ``'kept'``. Candidate generation is the banded join restricted to
+    pairs whose larger side is a batch document, so the
+    history×history quadrant (the quadratic bulk a full-corpus dedup
+    would re-pay on every ingest) never materializes, and ``doc_b`` of
+    every pair is a batch document: its shingle join and size lookup
+    touch only the batch frames. Per batch the cost is its own shingles
+    and signatures plus one band join; against the bucketed index side
+    that join's history input is pre-hashed on the band key (zero
+    shuffle, pinned by tests/test_sinks.py), so ingest cost scales with
+    the batch, not the corpus. The bucket cap counts history ∪ batch.
 
-    This is the production ingest shape: candidate generation is the
-    banded MinHash join *restricted to pairs whose larger side is a new
-    document* — history×history pairs (the quadratic bulk a full-corpus
-    dedup would re-pay on every ingest) never leave the band join,
-    because the probe side of the join is pre-filtered to the new
-    batch. At scale the history band table and shingle table are
-    precomputed artifacts (see ``sinks.write_bucketed``) keyed by
-    bucket/shingle, so an ingest only pays signatures for the batch
-    plus bucket-local joins; here both sides derive from one corpus
-    scan to stay self-contained. Verification stays relational (shingle
-    intersection counts), and candidates travel as bare id pairs.
+    Without ``batch_quadrant`` (the streaming consumer, one call per
+    micro-batch) each verdict depends only on (document, history), so
+    the triage is BATCHING-INVARIANT: the union of verdicts over any
+    partitioning of the arrivals equals the one-shot triage of the
+    whole split. Smaller batches only make buckets colder, so
+    per-micro-batch capping never drops a candidate the one-shot would
+    keep. New-vs-new duplicates are then the periodic compaction's
+    job, which runs with ``batch_quadrant``.
     """
-    ex, sig = minhash_tables(docs, n, id_col)
-
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            *[
-                F.col(f"s{bi * MINHASH_ROWS + r + 1}").alias(f"r{r}")
-                for r in range(MINHASH_ROWS)
-            ],
+    batch = minhash_side(batch_docs)
+    hist_bands, batch_bands = _cap_buckets(history.bands, batch.bands)
+    cand, a, hist = _band_pairs(hist_bands, batch_bands), history, F.lit(True)
+    if batch_quadrant:
+        # Tag each pair with its quadrant; a constant tag on the
+        # history-only pairs would become a group key of its own.
+        cand = cand.withColumn("hist", F.lit(True)).unionByName(
+            _band_pairs(batch_bands, batch_bands).withColumn("hist", F.lit(False))
         )
-        for bi in range(MINHASH_BANDS)
-    ]
-    bands = sig.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("bv"))
-    if max_bucket is not None:
-        over = (
-            bands.groupBy("bv")
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select("bv")
-        )
-        bands = bands.join(F.broadcast(over), "bv", "left_anti")
-    # Probe side = new batch only; build side = everything older than
-    # the probe row. The history×history quadrant never materializes.
-    new_bands = bands.filter(F.col(id_col) >= split_id)
-    cand = (
-        bands.alias("a")
-        .join(
-            new_bands.alias("b"),
-            (F.col("a.bv") == F.col("b.bv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-        )
-        .distinct()
+        a, hist = history.union(batch), F.col("hist")
+    per_doc = (
+        _verify(cand.distinct(), a, batch)
+        .groupBy(F.col("doc_b").alias(MINHASH_ID))
+        .agg(F.count_if(hist).alias("n_hist"), F.count_if(~hist).alias("n_batch"))
     )
-
-    sizes = sig.select(id_col, "n_sh")
-    # doc_b is always a NEW document (the probe side was batch-filtered),
-    # so the (doc_b, g) join and its size lookup scan only the batch
-    # slice — no history shingles ride that shuffle.
-    ex_b = ex.filter(F.col(id_col) >= split_id)
-    sizes_b = sizes.filter(F.col(id_col) >= split_id)
-    inter = (
-        cand.join(ex.select(F.col(id_col).alias("doc_a"), "g"), "doc_a")
-        .join(ex_b.select(F.col(id_col).alias("doc_b"), "g"), ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        inter.join(sizes.withColumnRenamed(id_col, "doc_a"), "doc_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(sizes_b.withColumnRenamed(id_col, "doc_b"), "doc_b")
-        .withColumnRenamed("n_sh", "n_b")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            >= threshold
-        )
-        .select("doc_a", "doc_b")
-    )
-
-    per_doc = verified.groupBy(F.col("doc_b").alias(id_col)).agg(
-        F.sum(F.when(F.col("doc_a") < split_id, 1).otherwise(0))
-        .cast("long")
-        .alias("n_hist_matches"),
-        F.sum(F.when(F.col("doc_a") >= split_id, 1).otherwise(0))
-        .cast("long")
-        .alias("n_batch_matches"),
-    )
-    new_docs = docs.filter(F.col(id_col) >= split_id).select(id_col)
-    return new_docs.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_hist_matches", F.lit(0)).cast("long").alias("n_hist_matches"),
-        F.coalesce("n_batch_matches", F.lit(0)).cast("long").alias("n_batch_matches"),
-        F.when(F.coalesce("n_hist_matches", F.lit(0)) > 0, F.lit("dup_of_history"))
-        .when(F.coalesce("n_batch_matches", F.lit(0)) > 0, F.lit("dup_in_batch"))
-        .otherwise(F.lit("kept"))
-        .alias("status"),
+    n_hist = F.coalesce("n_hist", F.lit(0)).cast("long")
+    n_batch = F.coalesce("n_batch", F.lit(0)).cast("long")
+    counts = [n_hist.alias("n_hist_matches")]
+    status = F.when(n_hist > 0, F.lit("dup_of_history"))
+    if batch_quadrant:
+        counts.append(n_batch.alias("n_batch_matches"))
+        status = status.when(n_batch > 0, F.lit("dup_in_batch"))
+    return (
+        batch_docs.select(MINHASH_ID)
+        .join(per_doc, MINHASH_ID, "left")
+        .select(MINHASH_ID, *counts, status.otherwise(F.lit("kept")).alias("status"))
     )
 
 
@@ -996,37 +949,17 @@ class DedupIndexTables:
     signatures: str  # (id, s1..s24, n_sh)   bucketed+sorted on id
     bands: str       # (id, band, r0, r1)    bucketed+sorted on (band, r0, r1)
 
+    def side(self, spark) -> MinhashSide:
+        """The index as the history side of :func:`minhash_triage`."""
+        from sressentials_spark import sinks
 
-def band_rows_flat(sig: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Flatten a signature table to one (id, band, r0, r1) row per
-    band — the band join's native key layout, and (unlike a struct
-    column) directly bucketable by ``write_bucketed``."""
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            *[
-                F.col(f"s{bi * MINHASH_ROWS + r + 1}").alias(f"r{r}")
-                for r in range(MINHASH_ROWS)
-            ],
+        return MinhashSide(
+            *(sinks.read_bucketed(spark, t) for t in (self.shingles, self.signatures, self.bands))
         )
-        for bi in range(MINHASH_BANDS)
-    ]
-    return sig.select(
-        F.col(id_col), F.explode(F.array(*band_structs)).alias("bv")
-    ).select(
-        id_col,
-        F.col("bv.band").alias("band"),
-        *[F.col(f"bv.r{r}").alias(f"r{r}") for r in range(MINHASH_ROWS)],
-    )
 
 
 def build_dedup_index(
-    docs: DataFrame,
-    base_path: str,
-    table_prefix: str,
-    n: int = 3,
-    id_col: str = "doc_id",
-    num_buckets: int = 8,
+    docs: DataFrame, base_path: str, table_prefix: str, num_buckets: int = 8
 ) -> DedupIndexTables:
     """Materialize the MinHash dedup index over an ingested corpus as
     three BUCKETED parquet tables (``sinks.write_bucketed``):
@@ -1049,32 +982,22 @@ def build_dedup_index(
     """
     from sressentials_spark import sinks
 
-    ex = shingle_rows(docs, n, id_col).persist(StorageLevel.MEMORY_AND_DISK)
-    sig = signatures_from_shingles(
-        ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
     t = DedupIndexTables(
         shingles=f"{table_prefix}_shingles",
         signatures=f"{table_prefix}_signatures",
         bands=f"{table_prefix}_bands",
     )
-    try:
-        sinks.write_bucketed(
-            ex, t.shingles, f"{base_path}/shingles", [id_col], num_buckets
-        )
-        sinks.write_bucketed(
-            sig, t.signatures, f"{base_path}/signatures", [id_col], num_buckets
-        )
-        sinks.write_bucketed(
-            band_rows_flat(sig, id_col),
-            t.bands,
-            f"{base_path}/bands",
-            ["band", "r0", "r1"],
-            num_buckets,
-        )
-    finally:
-        ex.unpersist()
-        sig.unpersist()
+    with tracking() as frames:
+        try:
+            side = minhash_side(docs)
+            for frame, table, sub, keys in (
+                (side.shingles, t.shingles, "shingles", [MINHASH_ID]),
+                (side.signatures, t.signatures, "signatures", [MINHASH_ID]),
+                (side.bands, t.bands, "bands", BAND_KEYS),
+            ):
+                sinks.write_bucketed(frame, table, f"{base_path}/{sub}", keys, num_buckets)
+        finally:
+            free(frames)
     return t
 
 
@@ -1101,212 +1024,3 @@ def dedup_index_tables(
         )
 
     return get_or_build(spark, ("dedup_index", sf_dir, split), _build, tier="disk")
-
-
-def minhash_incremental_from_index(
-    spark,
-    batch_docs: DataFrame,
-    index: DedupIndexTables,
-    split_id: int,
-    n: int = 3,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """:func:`minhash_incremental`, but the history side LOADS the
-    persisted bucketed index instead of recomputing shingles and
-    signatures from the corpus — the production ingest shape promised
-    by the index docstring. Per-batch cost: shingle + signature the
-    BATCH only, one bucket-aligned band join (history side shuffle-free
-    — its table is pre-hashed on the band key), and relational
-    verification whose history shingles stream from the bucketed
-    table. Semantics are identical to :func:`minhash_incremental` on
-    ``history ∪ batch`` (same banding, same bucket cap over the
-    combined band population, same exact-Jaccard verification);
-    ``batch_docs`` must hold exactly the ids ``>= split_id``.
-    """
-    from sressentials_spark import sinks
-
-    hist_ex = sinks.read_bucketed(spark, index.shingles)
-    hist_sig = sinks.read_bucketed(spark, index.signatures)
-    hist_bands = sinks.read_bucketed(spark, index.bands)
-
-    batch_ex = tracked_persist(shingle_rows(batch_docs, n, id_col))
-    batch_sig = tracked_persist(
-        signatures_from_shingles(
-            batch_ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
-        )
-    )
-    batch_bands = band_rows_flat(batch_sig, id_col)
-
-    keys = ["band"] + [f"r{r}" for r in range(MINHASH_ROWS)]
-    if max_bucket is not None:
-        over = (
-            hist_bands.select(*keys)
-            .unionByName(batch_bands.select(*keys))
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select(*keys)
-        )
-        # broadcast anti-joins preserve the history side's bucket
-        # distribution (no exchange is inserted above the bucketed scan)
-        hist_bands = hist_bands.join(F.broadcast(over), keys, "left_anti")
-        batch_bands = batch_bands.join(F.broadcast(over), keys, "left_anti")
-
-    ha = hist_bands.select(*keys, F.col(id_col).alias("doc_a"))
-    bb = batch_bands.select(*keys, F.col(id_col).alias("doc_b"))
-    # history×batch: every history id < split_id <= every batch id, so
-    # the usual a.id < b.id predicate is implied by construction.
-    hist_cand = ha.join(bb, keys).select("doc_a", "doc_b")
-    ba = batch_bands.select(*keys, F.col(id_col).alias("doc_a"))
-    batch_cand = (
-        ba.join(bb, keys)
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
-    cand = hist_cand.unionByName(batch_cand).distinct()
-
-    # doc_a may be history or batch (union); doc_b is ALWAYS a batch
-    # document, so its shingle join and size lookup touch only the
-    # batch-side frames — the history shingle table is scanned once
-    # (doc_a side), not twice.
-    ex_all = hist_ex.unionByName(batch_ex)
-    sizes = hist_sig.select(id_col, "n_sh").unionByName(
-        batch_sig.select(id_col, "n_sh")
-    )
-    sizes_b = batch_sig.select(id_col, "n_sh")
-    inter = (
-        cand.join(ex_all.select(F.col(id_col).alias("doc_a"), "g"), "doc_a")
-        .join(batch_ex.select(F.col(id_col).alias("doc_b"), "g"), ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        inter.join(sizes.withColumnRenamed(id_col, "doc_a"), "doc_a")
-        .withColumnRenamed("n_sh", "n_a")
-        .join(sizes_b.withColumnRenamed(id_col, "doc_b"), "doc_b")
-        .withColumnRenamed("n_sh", "n_b")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            >= threshold
-        )
-        .select("doc_a", "doc_b")
-    )
-    per_doc = verified.groupBy(F.col("doc_b").alias(id_col)).agg(
-        F.sum(F.when(F.col("doc_a") < split_id, 1).otherwise(0))
-        .cast("long")
-        .alias("n_hist_matches"),
-        F.sum(F.when(F.col("doc_a") >= split_id, 1).otherwise(0))
-        .cast("long")
-        .alias("n_batch_matches"),
-    )
-    new_docs = batch_docs.select(id_col)
-    return new_docs.join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_hist_matches", F.lit(0)).cast("long").alias("n_hist_matches"),
-        F.coalesce("n_batch_matches", F.lit(0)).cast("long").alias("n_batch_matches"),
-        F.when(F.coalesce("n_hist_matches", F.lit(0)) > 0, F.lit("dup_of_history"))
-        .when(F.coalesce("n_batch_matches", F.lit(0)) > 0, F.lit("dup_in_batch"))
-        .otherwise(F.lit("kept"))
-        .alias("status"),
-    )
-
-
-def minhash_history_triage(
-    spark,
-    batch_docs: DataFrame,
-    index: DedupIndexTables,
-    split_id: int,
-    n: int = 3,
-    threshold: float = 0.8,
-    id_col: str = "doc_id",
-    max_bucket: int | None = DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """History-only triage of an arriving batch against the persisted
-    index: ``dup_of_history`` / ``kept`` per new document, with NO
-    batch-internal quadrant.
-
-    This is the synchronous-at-ingest half of the production dedup
-    story (the streaming ``foreachBatch`` consumer calls this per
-    micro-batch): each document's verdict depends only on (document,
-    index), so it is BATCHING-INVARIANT — the union of verdicts over
-    any partitioning of the arrivals equals the one-shot triage of the
-    whole split, which is what lets the streaming twin share the
-    one-shot's exact-Jaccard oracle. New-vs-new duplicates within the
-    arrival window are deliberately out of scope here; they belong to
-    the periodic batch compaction (:func:`minhash_incremental_from_index`
-    covers that quadrant).
-
-    Same banding and exact-Jaccard verification as the one-shot; the
-    bucket cap sees history ∪ current batch, and because smaller
-    batches only make buckets colder, per-micro-batch capping never
-    drops a candidate the one-shot would keep (precision is exact
-    either way).
-    """
-    from sressentials_spark import sinks
-
-    hist_ex = sinks.read_bucketed(spark, index.shingles)
-    hist_sig = sinks.read_bucketed(spark, index.signatures)
-    hist_bands = sinks.read_bucketed(spark, index.bands)
-
-    batch_ex = tracked_persist(shingle_rows(batch_docs, n, id_col))
-    batch_sig = tracked_persist(
-        signatures_from_shingles(
-            batch_ex, id_col, extra_aggs=[F.count(F.lit(1)).alias("n_sh")]
-        )
-    )
-    batch_bands = band_rows_flat(batch_sig, id_col)
-
-    keys = ["band"] + [f"r{r}" for r in range(MINHASH_ROWS)]
-    if max_bucket is not None:
-        over = (
-            hist_bands.select(*keys)
-            .unionByName(batch_bands.select(*keys))
-            .groupBy(*keys)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > max_bucket)
-            .select(*keys)
-        )
-        hist_bands = hist_bands.join(F.broadcast(over), keys, "left_anti")
-        batch_bands = batch_bands.join(F.broadcast(over), keys, "left_anti")
-
-    ha = hist_bands.select(*keys, F.col(id_col).alias("doc_a"))
-    bb = batch_bands.select(*keys, F.col(id_col).alias("doc_b"))
-    cand = ha.join(bb, keys).select("doc_a", "doc_b").distinct()
-
-    inter = (
-        cand.join(hist_ex.select(F.col(id_col).alias("doc_a"), "g"), "doc_a")
-        .join(batch_ex.select(F.col(id_col).alias("doc_b"), "g"), ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    verified = (
-        inter.join(
-            hist_sig.select(F.col(id_col).alias("doc_a"), "n_sh"), "doc_a"
-        )
-        .withColumnRenamed("n_sh", "n_a")
-        .join(
-            batch_sig.select(F.col(id_col).alias("doc_b"), "n_sh"), "doc_b"
-        )
-        .withColumnRenamed("n_sh", "n_b")
-        .filter(
-            F.col("inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("inter"))
-            >= threshold
-        )
-        .select("doc_a", "doc_b")
-    )
-    per_doc = verified.groupBy(F.col("doc_b").alias(id_col)).agg(
-        F.count(F.lit(1)).cast("long").alias("n_hist_matches")
-    )
-    return batch_docs.select(id_col).join(per_doc, id_col, "left").select(
-        id_col,
-        F.coalesce("n_hist_matches", F.lit(0)).cast("long").alias(
-            "n_hist_matches"
-        ),
-        F.when(F.coalesce("n_hist_matches", F.lit(0)) > 0, "dup_of_history")
-        .otherwise("kept")
-        .alias("status"),
-    )

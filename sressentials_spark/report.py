@@ -41,6 +41,25 @@ def _excel_engine() -> str | None:
     return None
 
 
+#: Lets the adaptive planner coalesce a cached plan's shuffle
+#: partitions, as it does an uncached plan's.
+_CACHED_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _persist_coalesced(df: DataFrame) -> None:
+    """Persist ``df`` with the partitions its uncached plan would run
+    with: a mirror written from the cache then has the same files as
+    one written from the plan. The cached plan is fixed by the
+    ``persist`` call, so the setting is restored right after it."""
+    conf = df.sparkSession.conf
+    old = conf.get(_CACHED_AQE)
+    conf.set(_CACHED_AQE, "true")
+    try:
+        df.persist()
+    finally:
+        conf.set(_CACHED_AQE, old)
+
+
 def save_report(
     sheets: dict[str, DataFrame],
     sheet_order: list[tuple[str, str]],
@@ -56,22 +75,29 @@ def save_report(
     the collected frame, counted through Spark only for a sheet
     truncated at ``row_cap``.
     ``parquet_mirror`` additionally writes each *uncapped* DataFrame as
-    parquet under the given directory — the scale-safe output.
+    parquet under the given directory — the scale-safe output; each
+    mirrored sheet is persisted until it is written and collected.
     """
     import pandas as pd
 
-    if parquet_mirror:
-        for key, _ in sheet_order:
-            sheets[key].write.mode("overwrite").parquet(
-                os.path.join(parquet_mirror, key)
-            )
-
-    # One row past the cap tells a truncated sheet from a full one.
     pdfs: dict[str, pd.DataFrame] = {}
     rows: dict[str, int] = {}
     for key, title in sheet_order:
-        pdf = sheets[key].limit(row_cap + 1).toPandas()
-        rows[key] = len(pdf) if len(pdf) <= row_cap else sheets[key].count()
+        sheet = sheets[key]
+        # A mirrored sheet is read by the write and the capped collect:
+        # persisted around both, its plan runs once.
+        persist = bool(parquet_mirror) and not sheet.is_cached
+        if persist:
+            _persist_coalesced(sheet)
+        try:
+            if parquet_mirror:
+                sheet.write.mode("overwrite").parquet(os.path.join(parquet_mirror, key))
+            # One row past the cap tells a truncated sheet from a full one.
+            pdf = sheet.limit(row_cap + 1).toPandas()
+            rows[key] = len(pdf) if len(pdf) <= row_cap else sheet.count()
+        finally:
+            if persist:
+                sheet.unpersist()
         pdfs[title] = pdf.iloc[:row_cap]
 
     engine = _excel_engine()

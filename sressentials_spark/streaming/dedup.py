@@ -128,7 +128,7 @@ def run_minhash_ingest_stream(
     each micro-batch is MinHash-triaged against the PERSISTED bucketed
     dedup index inside ``foreachBatch`` (history-only verdicts —
     batching-invariant by construction, see
-    ``operators.dedup.minhash_history_triage``), and verdicts append
+    ``operators.dedup.minhash_triage``), and verdicts append
     to a parquet sink (executors write their own files; the driver
     tracks only the commit log). Per micro-batch the cost is the
     batch's own shingles/signatures plus one bucket-aligned band join
@@ -160,8 +160,8 @@ def run_minhash_ingest_stream(
             # shared frames mid-pass.
             with tracking() as frames:
                 try:
-                    D.minhash_history_triage(
-                        batch.sparkSession, batch, index, split
+                    D.minhash_triage(
+                        index.side(batch.sparkSession), batch, batch_quadrant=False
                     ).write.mode("append").parquet(out)
                 finally:
                     free(frames, blocking=True)

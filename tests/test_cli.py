@@ -179,3 +179,33 @@ def test_cli_prints_the_row_counts_save_report_collected(
     for title in truncated:
         sheet = tmp_path / "report.xlsx.sheets" / (title.replace(" ", "_") + ".csv")
         assert len(pd.read_csv(sheet)) == cap
+
+
+def test_parquet_mirror_evaluates_each_sheet_row_once(tmp_path, spark):
+    """With the parquet mirror, ``save_report`` writes each sheet in
+    full and collects it up to the cap from ONE evaluation of its
+    plan: a sheet whose rows each bump an accumulator reads exactly
+    its row count, and the sheet is left unpersisted."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from sressentials_spark.report import save_report
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def bump(x):
+        evaluated.add(1)
+        return x
+
+    sheet = spark.range(0, 40, 1, 2).select(bump("id").alias("id"))
+    mirror = tmp_path / "mirror"
+    fmt, path, rows = save_report(
+        {"s": sheet}, [("s", "Sheet")], str(tmp_path / "r.xlsx"), parquet_mirror=str(mirror)
+    )
+    assert rows == {"s": 40}
+    assert evaluated.value == 40
+    assert not sheet.is_cached
+    assert spark.read.parquet(str(mirror / "s")).count() == 40
+    if fmt == "csv":
+        assert len(pd.read_csv(f"{path}/Sheet.csv")) == 40

@@ -210,8 +210,8 @@ def test_streaming_dedup_ingest_matches_oneshot_triage(spark, tmp_path):
         ),
         tier="disk",
     )
-    oneshot = D.minhash_history_triage(
-        spark, docs.filter(F.col("doc_id") >= split), index, split
+    oneshot = D.minhash_triage(
+        index.side(spark), docs.filter(F.col("doc_id") >= split), batch_quadrant=False
     ).toPandas()
     D.release_persisted()
     key = lambda df: df.sort_values("doc_id").reset_index(drop=True)  # noqa: E731

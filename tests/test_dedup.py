@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from sressentials_spark.operators import dedup as D
 from sressentials_spark.sources.tables import load_table
@@ -24,7 +25,7 @@ def test_minhash_lsh_recall_equals_exact(spark, docs):
     }
     lsh = {
         (r["doc_a"], r["doc_b"])
-        for r in D.minhash_lsh_pairs(docs, threshold=0.8).collect()
+        for r in D.minhash_lsh_pairs(docs).collect()
     }
     assert exact, "fixture should contain planted near-duplicates"
     assert lsh == exact
@@ -109,7 +110,11 @@ def test_release_persisted_frees_cached_intermediates(spark, docs):
 class TestMinhashIncremental:
     def _run(self, spark, rows, split):
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        out = D.minhash_incremental(df, split, threshold=0.8)
+        out = D.minhash_triage(
+            D.minhash_side(df.filter(F.col("doc_id") < split)),
+            df.filter(F.col("doc_id") >= split),
+            batch_quadrant=True,
+        )
         return {r["doc_id"]: r.asDict() for r in out.collect()}
 
     def test_statuses_and_priority(self, spark):
@@ -140,6 +145,33 @@ class TestMinhashIncremental:
         out = self._run(spark, rows, split=5)
         assert set(out) == {5}
         assert out[5]["status"] == "kept"
+
+
+@pytest.mark.parametrize("cap, n_pairs, verdict", [(2, 0, "kept"), (3, 3, "dup_of_history")])
+def test_bucket_cap_counts_history_and_batch(spark, tmp_path, monkeypatch, cap, n_pairs, verdict):
+    """Three identical documents, two in history and one in the batch,
+    share every band bucket. A cap of 2 drops all of them — though
+    history alone holds only 2 — so the cap counts history ∪ batch; a
+    cap of 3 keeps them. Both history sides and both triage modes see
+    the same cap."""
+    monkeypatch.setattr(D, "DEFAULT_MAX_BUCKET", cap)
+    text = " ".join(f"w{i}" for i in range(30))
+    docs = spark.createDataFrame(
+        [(0, text), (1, text), (2, text)], "doc_id long, text string"
+    )
+    hist, batch = docs.filter(F.col("doc_id") < 2), docs.filter(F.col("doc_id") >= 2)
+    tag = f"t{abs(hash(str(tmp_path))) % 10**9}"
+    idx = D.build_dedup_index(hist, str(tmp_path / "idx"), f"cap_idx_{tag}", num_buckets=2)
+    try:
+        assert D.minhash_lsh_pairs(docs).count() == n_pairs
+        for side in (D.minhash_side(hist), idx.side(spark)):
+            for batch_quadrant in (False, True):
+                out = D.minhash_triage(side, batch, batch_quadrant=batch_quadrant)
+                assert [(r["doc_id"], r["status"]) for r in out.collect()] == [(2, verdict)]
+    finally:
+        D.release_persisted()
+        for t in (idx.shingles, idx.signatures, idx.bands):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 class TestMinhashArtifactCache:

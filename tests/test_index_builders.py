@@ -25,7 +25,6 @@ def test_registry_names() -> None:
         "ivf_rebalance_index_build",
         "ivfpq_index_build",
         "ivfpq_rerank_index_build",
-        "ivfpq_versioned_index_build",
         "ivf_versioned_index_build",
         "ivf_versioned_delete_index_build",
         "ivfpq_rebalanced_index_build",

@@ -120,7 +120,7 @@ def test_dedup_index_band_join_history_side_shuffle_free(spark, tmp_path):
     """The persisted dedup index's contract: the band join's HISTORY
     side reads the bucketed table pre-hashed on (band, r0, r1) — only
     the batch side pays an Exchange. Also checks the index-backed
-    ingest matches the self-contained variant row-for-row."""
+    triage matches the in-memory history side row-for-row."""
     from sressentials_spark.operators import dedup as D
 
     tag = f"t{abs(hash(str(tmp_path))) % 10**9}"
@@ -160,11 +160,15 @@ def test_dedup_index_band_join_history_side_shuffle_free(spark, tmp_path):
         ]
         assert len(band_exchanges) == 1, plan  # batch side only
 
-        # Semantics: index-backed ingest == self-contained ingest.
-        from_index = D.minhash_incremental_from_index(
-            spark, docs.filter(F.col("doc_id") >= split), idx, split
+        # Semantics: the index-backed history side triages exactly like
+        # the in-memory one.
+        batch = docs.filter(F.col("doc_id") >= split)
+        from_index = D.minhash_triage(idx.side(spark), batch, batch_quadrant=True)
+        self_contained = D.minhash_triage(
+            D.minhash_side(docs.filter(F.col("doc_id") < split)),
+            batch,
+            batch_quadrant=True,
         )
-        self_contained = D.minhash_incremental(docs, split)
         a = from_index.toPandas().sort_values("doc_id").reset_index(drop=True)
         b = self_contained.toPandas().sort_values("doc_id").reset_index(drop=True)
         release_persisted()
