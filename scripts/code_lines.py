@@ -9,7 +9,8 @@ string that is not a docstring counts every line it spans.
 
 Prints the total over every ``*.py`` under ``sressentials_spark/``,
 then one count per path given (a file, or a directory summed over its
-``*.py`` files)::
+``*.py`` files); a path that does not exist (``--help`` included)
+prints the usage line and exits 2::
 
     python scripts/code_lines.py
     python scripts/code_lines.py sressentials_spark/operators/maintenance.py
@@ -79,6 +80,11 @@ def count_path(path: str) -> int:
 
 
 def main(argv: list[str]) -> int:
+    missing = [p for p in argv if not os.path.exists(p)]
+    if missing:
+        print("usage: python scripts/code_lines.py [path ...]", file=sys.stderr)
+        print(f"no such file or directory: {', '.join(missing)}", file=sys.stderr)
+        return 2
     print(f"sressentials_spark/ {count_path(PACKAGE):,}")
     for p in argv:
         print(f"{p} {count_path(p):,}")

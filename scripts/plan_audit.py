@@ -6,7 +6,12 @@ jobs — ``Expand`` (multi-count_distinct row blow-up),
 ``CartesianProduct`` and ``BroadcastNestedLoopJoin`` (non-equi joins
 over big sides) — and fails unless every occurrence is on the explicit
 allowlist below (each entry documents WHY the shape is intentional).
-Also reports per-query counts of shuffle exchanges as a cost map.
+Also reports per-query counts of shuffle exchanges as a cost map. Both
+read one walk of the physical plan's nodes (:func:`plan_nodes`): the
+shapes are looked for in every node, cached subplans and subqueries
+included; the count takes only the query's own shuffle exchanges, so a
+broadcast or reused exchange is not a shuffle and a cached frame's
+shuffles are not counted again in every query that scans it.
 
 Usage::
 
@@ -183,6 +188,32 @@ ALLOWED: dict[str, dict[str, str]] = {
 }
 
 
+def plan_nodes(df) -> list[tuple[str, bool]]:
+    """``(class name, own)`` of every node in ``df``'s executed physical
+    plan, descending through ``AdaptiveSparkPlanExec`` and AQE query
+    stages. ``own`` marks the nodes reached through children alone: the
+    plan the query runs itself. Inner plans — a cached frame's subplan
+    under an in-memory scan, a subquery — are walked too, with ``own``
+    false, so an expensive shape is seen wherever it sits but a
+    cached frame's shuffles are not counted again in every query that
+    scans it."""
+    nodes: list[tuple[str, bool]] = []
+    stack = [(df._jdf.queryExecution().executedPlan(), True)]
+    while stack:
+        node, own = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append((node.executedPlan(), own))
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append((node.plan(), own))
+            continue
+        nodes.append((name, own))
+        for seq, inner_own in ((node.children(), own), (node.innerChildren(), False)):
+            stack.extend((seq.apply(i), inner_own) for i in range(seq.size()))
+    return nodes
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -202,12 +233,12 @@ def main() -> int:
     for name, fn in sorted(QUERIES.items()):
         try:
             df = fn(spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            nodes = plan_nodes(df)
         except Exception as exc:  # plan-time failure is itself a finding
             violations.append(f"{name}: PLAN FAILURE {type(exc).__name__}: {exc}")
             continue
-        n_exchange = plan.count("Exchange")
-        flagged = [s for s in shapes if s in plan]
+        n_exchange = nodes.count(("ShuffleExchangeExec", True))
+        flagged = [s for s in shapes if any(n == f"{s}Exec" for n, _ in nodes)]
         allowed = ALLOWED.get(name, {})
         bad = [s for s in flagged if s not in allowed]
         note = ",".join(

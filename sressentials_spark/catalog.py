@@ -1192,15 +1192,26 @@ scored AS (SELECT p.query_id, c.vec_id AS neighbor_id,
 """
 
 
-#: The rebalance split decision over ``cells``: a cell holding more
-#: than IVF_REBALANCE_PCT% of the uniform share is oversized.
-_IVF_OVERSIZED_CTES = f"""
+def _ivf_oversized_ctes(cells: str) -> str:
+    """The rebalance split decision over a ``(vec_id, cell)`` relation
+    named ``cells``: a cell holding more than IVF_REBALANCE_PCT% of the
+    uniform share is oversized. Both tiers' rebalance oracles use it."""
+    return f"""
 thresh AS (SELECT CAST(COUNT(*) * {IV.IVF_REBALANCE_PCT}
                        // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
            FROM embeddings),
 oversized AS (
-  SELECT cell FROM cells, thresh GROUP BY cell, t HAVING COUNT(*) > t
+  SELECT cell FROM {cells}, thresh GROUP BY cell, t HAVING COUNT(*) > t
 )"""
+
+
+#: The split's child-seed rank of a member ``c`` of an oversized cell:
+#: the ``IVF_SPLIT_SEED`` md5 of its id (ties by id; the two lowest
+#: seed the children).
+_SPLIT_RANK_SQL = (
+    f"('0x' || substring(md5('{IV.IVF_SPLIT_SEED}:' || "
+    "CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT"
+)
 
 
 def _ivf_rebalanced_topk_sql(history_split: bool) -> str:
@@ -1211,12 +1222,12 @@ def _ivf_rebalanced_topk_sql(history_split: bool) -> str:
     cells. ``history_split`` restates the full versioned lifecycle
     (build 70% -> ingest 30% under frozen seeds -> rebalance)."""
     return f"""
-WITH {_ivf_cells_ctes(history_split)},{_IVF_OVERSIZED_CTES},
+WITH {_ivf_cells_ctes(history_split)},{_ivf_oversized_ctes("cells")},
 chseeds AS (
   SELECT cell AS parent, vec_id AS cid, embedding AS cv FROM (
     SELECT c.cell, c.vec_id, c.embedding,
            ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{IV.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
+             {_SPLIT_RANK_SQL},
              c.vec_id) AS rn
     FROM cells c JOIN oversized o ON o.cell = c.cell)
   WHERE rn <= 2
@@ -1477,7 +1488,7 @@ def sim_ivf_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) builds the manifest-versioned index (v1), the newest 30%
     arrives as an ingest batch and is APPENDED as one committed
     version (v2) under the centroids FROZEN at build time
-    (:func:`ivf_versioned.ingest_ivf_index_versioned` — assign the
+    (:func:`ivf_versioned.ingest_index_versioned` — assign the
     batch, commit its lists; no v1 file is read or rewritten, pinned in
     tests/test_ivf_versioned.py). Served as a TIME-TRAVEL read of v2
     while the lifecycle store's later versions (rebalance v3, compact
@@ -1500,7 +1511,7 @@ def _ivf_rebalance_index_path(spark: SparkSession, sf_dir: str) -> str:
 
         base = scratch_dir("sressentials_ivf_rebal_")
         IV.build_ivf_index_versioned(load_table(spark, sf_dir, "embeddings"), base)
-        stats = IV.rebalance_ivf_index_versioned(spark, base)
+        stats = IV.rebalance_index_versioned(spark, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         if manifest_versions(base) != [1, 2]:
@@ -1542,7 +1553,7 @@ def sim_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell whose inverted list outgrew 115% of the uniform share splits
     into two hash-seeded children, its members re-pointed to the
     nearer child, and the split publishes as ONE crash-atomic manifest
-    version (:func:`ivf_versioned.rebalance_ivf_index_versioned`; the
+    version (:func:`ivf_versioned.rebalance_index_versioned`; the
     rest of the index is neither read nor rewritten, pinned in
     tests/test_ivf_versioned.py via file sizes + mtimes). Queries probe
     the post-split centroid set that rides in the same manifest.
@@ -1577,8 +1588,8 @@ def _ivf_versioned_index_path(spark: SparkSession, sf_dir: str) -> str:
 
         base = scratch_dir("sressentials_ivf_versioned_")
         IV.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
-        IV.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= split), base)
-        stats = IV.rebalance_ivf_index_versioned(spark, base)
+        IV.ingest_index_versioned(emb.filter(F.col("vec_id") >= split), base)
+        stats = IV.rebalance_index_versioned(spark, base)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         out = IV.compact_ivf_index_versioned(spark, base)
@@ -1657,7 +1668,7 @@ def _ivf_version_history_sql() -> str:
     physical/ledger surface outside the relational statement
     (model-tested instead)."""
     return f"""
-WITH {_ivf_cells_ctes(history_split=True)},{_IVF_OVERSIZED_CTES}
+WITH {_ivf_cells_ctes(history_split=True)},{_ivf_oversized_ctes("cells")}
 SELECT * FROM (
   SELECT CAST(1 AS BIGINT) AS version,
          (SELECT COUNT(*) FROM embeddings
@@ -1916,19 +1927,13 @@ WITH {_km_ctes(k=S.IVF_CELLS, iters=S.PQ_ITERS, dim=64)},
 tcents AS (SELECT cid, cq FROM c{S.PQ_ITERS}),
 allq AS (SELECT vec_id, q FROM emb),
 icells AS (SELECT vec_id, cluster AS cell FROM afin),"""
-    return f"""{head}
-thresh AS (SELECT CAST(COUNT(*) * {IV.IVF_REBALANCE_PCT}
-                       // ({S.IVF_CELLS} * 100) AS BIGINT) AS t
-           FROM embeddings),
-oversized AS (
-  SELECT cell FROM icells, thresh GROUP BY cell, t HAVING COUNT(*) > t
-),
+    return f"""{head}{_ivf_oversized_ctes("icells")},
 chseeds AS (
   SELECT cell AS parent,
          vec_id + {IV.IVFPQ_CHILD_ID_BASE} AS cid, q AS cq FROM (
     SELECT c.cell, c.vec_id, e.q,
            ROW_NUMBER() OVER (PARTITION BY c.cell ORDER BY
-             ('0x' || substring(md5('{IV.IVF_SPLIT_SEED}:' || CAST(c.vec_id AS VARCHAR)), 1, 15))::BIGINT,
+             {_SPLIT_RANK_SQL},
              c.vec_id) AS rn
     FROM icells c JOIN oversized o ON o.cell = c.cell
     JOIN allq e ON e.vec_id = c.vec_id)
@@ -2142,7 +2147,7 @@ def sim_ivfpq_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the versioned PQ lifecycle store (import, v1); the newest 30%
     arrives as an ingest batch, is encoded under those FROZEN
     artifacts and committed as one version
-    (:func:`ivf_versioned.ingest_ivfpq_index_versioned` — one assign +
+    (:func:`ivf_versioned.ingest_index_versioned` — one assign +
     encode pass over the batch; no v1 file is rewritten and the
     quantizers stay frozen, pinned in tests/test_ivf_versioned.py).
     Served as a TIME-TRAVEL read of v2 while the rebalance (v3) and
@@ -2320,7 +2325,7 @@ def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
         IV.import_ivfpq_index_versioned(
             spark, _ivfpq_index_path(spark, sf_dir), base
         )
-        stats = IV.rebalance_ivfpq_index_versioned(spark, emb, base)
+        stats = IV.rebalance_index_versioned(spark, base, emb)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         if manifest_versions(base) != [1, 2]:
@@ -2381,10 +2386,10 @@ def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
         )
         base = scratch_dir("sressentials_ivfpq_lifecycle_")
         IV.import_ivfpq_index_versioned(spark, bare, base)
-        IV.ingest_ivfpq_index_versioned(
+        IV.ingest_index_versioned(
             emb.filter(F.col("vec_id") >= split), base
         )
-        stats = IV.rebalance_ivfpq_index_versioned(spark, emb, base)
+        stats = IV.rebalance_index_versioned(spark, base, emb)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
         IV.refresh_ivfpq_index_versioned(emb, base)

@@ -33,6 +33,13 @@ query batch plans only its probed cells' files, the same
 whole-directories-skipped effect as partition pruning but decided
 driver-side from the manifest.
 
+Both index tiers share every verb past the build. The manifest names
+its tier — ``centroids`` for cosine-IVF, ``coarse`` + ``books`` for
+IVF-PQ — so :func:`ingest_index_versioned` and
+:func:`rebalance_index_versioned` read it from the latest version;
+one encoder (:func:`_encode`) is the only code that knows the two list
+formats, and the tier is chosen once, by the build (or the import).
+
 Kill-between-steps model test: tests/test_ivf_versioned.py injects a
 crash after every mutation step and asserts readers always see exactly
 the pre-split or the post-split index, never a mix.
@@ -260,11 +267,67 @@ def _commit_lists(
     return entries
 
 
+def _pq_quantizers(coarse: dict, books) -> dict:
+    """A trained IVF-PQ quantizer pair as manifest keys: ``coarse``
+    (``{cid: [i64 components]}``) and ``books`` (``pq_train_codebooks``
+    shape as nested lists, per subspace ``[[cid, [i64 components]],
+    ...]``). Integer-exact: both live on the QUANT_SCALE integer grid,
+    so JSON round-trips them losslessly."""
+    return {
+        "coarse": {
+            int(c): [int(x) for x in v] for c, v in sorted(coarse.items())
+        },
+        "books": [
+            [[int(cid), [int(x) for x in row]] for cid, row in zip(cids.tolist(), C)]
+            for cids, C in books
+        ],
+    }
+
+
+def _books_from_json(js) -> list:
+    import numpy as np
+
+    out = []
+    for sub in js:
+        cids = np.array([c for c, _ in sub], dtype=np.int64)
+        C = np.stack([np.asarray(v, dtype=np.int64) for _, v in sub])
+        out.append((cids, C))
+    return out
+
+
+def _encode(quantizer: dict, rows: DataFrame, id_col: str = "vec_id") -> DataFrame:
+    """List rows of ``rows`` (carrying ``id_col`` and ``embedding``)
+    under a manifest quantizer with int cell keys — the one place that
+    knows both list formats. The manifest names its tier: ``coarse`` +
+    ``books`` encode IVF-PQ codes (integer-L2 home cell, residual PQ
+    codes), ``centroids`` assign the cosine home cell and keep the
+    vectors. Every build, refresh, ingest and rebalance encodes
+    through here."""
+    from sressentials_spark.operators import similarity as S
+
+    if "coarse" in quantizer:
+        books = _books_from_json(quantizer["books"])
+        return S._encode_ivfpq_lists(
+            rows, quantizer["coarse"], books, m=len(books), id_col=id_col
+        )
+    ids, mat = _load_centroids(quantizer)
+    return ivf_annotate_frozen(rows, ids, mat, IVF_NPROBE).drop("cells")
+
+
+def _publish_v1(base_path: str, quantizer: dict, lists: DataFrame) -> int:
+    """Commit ``lists`` and ``quantizer`` as version 1 of a fresh
+    store: the one first publish behind both builds and the import."""
+    entries = _commit_lists(lists, os.path.join(base_path, "data"))
+    publish_manifest(
+        base_path, 1, {"version": 1, **quantizer, "files": entries}
+    )
+    return 1
+
+
 def build_ivf_index_versioned(
     emb: DataFrame,
     base_path: str,
     n_cells: int = IVF_CELLS,
-    nprobe: int = IVF_NPROBE,
     id_col: str = "vec_id",
 ) -> int:
     """Commit version 1 of a manifest-versioned IVF index: the same
@@ -275,20 +338,12 @@ def build_ivf_index_versioned(
     — the manifest centroids are the single probe truth, so a split
     can never leave a row pointing at a retired cell."""
     ids, mat = ivf_seed_centroids(emb, n_cells, id_col=id_col)
-    annotated = ivf_annotate_frozen(emb, ids, mat, nprobe).drop("cells")
-    entries = _commit_lists(annotated, os.path.join(base_path, "data"))
-    publish_manifest(
-        base_path,
-        1,
-        {
-            "version": 1,
-            "centroids": {
-                str(int(i)): [float(x) for x in row] for i, row in zip(ids, mat)
-            },
-            "files": entries,
-        },
-    )
-    return 1
+    quantizer = {
+        "centroids": {
+            int(i): [float(x) for x in row] for i, row in zip(ids, mat)
+        }
+    }
+    return _publish_v1(base_path, quantizer, _encode(quantizer, emb, id_col))
 
 
 def _load_centroids(man: dict):
@@ -397,21 +452,47 @@ def cosine_topk_ivf_versioned(
     )
 
 
-def _ingest_plan(
+def ingest_index_versioned(
+    emb_batch: DataFrame,
     base_path: str,
-    encode: Callable[[dict], DataFrame],
-    fault: Callable[[str], None] | None,
-    manifest_extra: dict | None,
-) -> Callable[[dict | None], dict | None]:
-    """The append plan both ingest verbs publish through: ``encode(man)``
-    turns the batch into list rows under the parent manifest's frozen
-    quantizers, and the child lists parent files + the batch's fresh
-    commit, plus ``manifest_extra``. The staged commit is reused across
-    lost publish races while the latest quantizers equal the ones it
-    was encoded under, and re-encoded when they differ (the retry rule
-    :func:`ingest_ivf_index_versioned` documents). ``fault("staged")``
-    fires once, after the first staging; an empty batch commits
-    nothing."""
+    id_col: str = "vec_id",
+    fault: Callable[[str], None] | None = None,
+    retries: int = 5,
+    manifest_extra: dict | None = None,
+) -> int:
+    """Append a batch as a new committed version of either tier: the
+    batch is encoded (:func:`_encode`) under the LATEST manifest's
+    FROZEN quantizers — centroids for the cosine tier, coarse centroids
+    and residual codebooks for IVF-PQ — its lists land as a fresh
+    immutable commit, and the new manifest = parent's files + the
+    batch's files, quantizers unchanged, published by one atomic link.
+    A crashed ingest leaves orphan commit files and the parent version
+    fully intact (same warranty as the rebalance); concurrent readers
+    of the parent version are never disturbed. Cost O(batch), never
+    O(index). The trade is quantizer drift (frozen artifacts age as the
+    data moves; :func:`ivfpq_refresh_decision` gauges it for IVF-PQ),
+    and the manifest pins exactly which quantizers encoded every
+    visible row.
+
+    Losing a publish race is RECOVERED here, not documented away (the
+    Iceberg fast-append retry): on ``FileExistsError`` the ingest
+    re-reads the new latest and re-publishes on top of it — reusing its
+    already-staged commit files when the winner left the quantizers
+    unchanged (another ingest: the encode is quantizer-determined, so
+    the staged rows are still exactly right), and RE-ENCODING the batch
+    when the winner was a rebalance or refresh (a split retires cells;
+    appending rows under a retired cell id would make them invisible to
+    every probe). ``retries`` bounds pathological contention (past it
+    the ``FileExistsError`` re-raises); the staged files of abandoned
+    attempts are vacuum fodder. ``fault("staged")`` fires once, after
+    the first staging; an empty batch commits nothing.
+
+    ``manifest_extra`` rides verbatim in the published manifest —
+    the hook a transactional upstream uses to make ingest IDEMPOTENT:
+    a streaming writer stamps its micro-batch id and skips redelivered
+    batches whose stamp is already committed (streaming/ann_ingest.py:
+    the Structured-Streaming foreachBatch exactly-once recipe, the
+    manifest doubling as the transaction log)."""
     fault = fault or (lambda step: None)
     staged: dict = {}
 
@@ -422,7 +503,7 @@ def _ingest_plan(
             first = not staged
             staged["under"] = under
             staged["entries"] = _commit_lists(
-                encode(man), os.path.join(base_path, "data")
+                _encode(man, emb_batch, id_col), os.path.join(base_path, "data")
             )
             if first and staged["entries"]:
                 fault("staged")
@@ -433,83 +514,56 @@ def _ingest_plan(
             **(manifest_extra or {}),
         }
 
-    return plan
+    return publish_next(base_path, plan, retries=retries, fault=fault)
 
 
-def ingest_ivf_index_versioned(
-    emb_batch: DataFrame,
-    base_path: str,
-    nprobe: int = IVF_NPROBE,
-    id_col: str = "vec_id",
-    fault: Callable[[str], None] | None = None,
-    retries: int = 5,
-    manifest_extra: dict | None = None,
-) -> int:
-    """Append a batch as a new committed version: the batch is assigned
-    under the LATEST manifest's centroids (frozen — one Arrow pass over
-    the batch only), its lists land as a fresh immutable commit, and
-    the new manifest = parent's files + the batch's files, centroids
-    unchanged, published by one atomic link. A crashed ingest leaves
-    orphan commit files and the parent version fully intact (same
-    warranty as the rebalance); concurrent readers of the parent
-    version are never disturbed. Cost O(batch), never O(index).
-
-    Losing a publish race is RECOVERED here, not documented away (the
-    Iceberg fast-append retry): on ``FileExistsError`` the ingest
-    re-reads the new latest and re-publishes on top of it — reusing its
-    already-staged commit files when the winner left the centroid set
-    unchanged (another ingest: the encode is centroid-determined, so
-    the staged rows are still exactly right), and RE-ENCODING the batch
-    when the winner was a rebalance (its split retired cells; appending
-    rows under a retired cell id would make them invisible to every
-    probe). ``retries`` bounds pathological contention (past it the
-    ``FileExistsError`` re-raises); the staged files of abandoned
-    attempts are vacuum fodder.
-
-    ``manifest_extra`` rides verbatim in the published manifest —
-    the hook a transactional upstream uses to make ingest IDEMPOTENT:
-    a streaming writer stamps its micro-batch id and skips redelivered
-    batches whose stamp is already committed (streaming/ann_ingest.py:
-    the Structured-Streaming foreachBatch exactly-once recipe, the
-    manifest doubling as the transaction log)."""
-
-    def encode(man: dict) -> DataFrame:
-        ids, mat = _load_centroids(man)
-        return ivf_annotate_frozen(emb_batch, ids, mat, nprobe).drop("cells")
-
-    return publish_next(
-        base_path,
-        _ingest_plan(base_path, encode, fault, manifest_extra),
-        retries=retries,
-        fault=fault,
-    )
+#: Child cell ids for IVF-PQ rebalance splits are the seed member's
+#: vec_id shifted past any kmeans-born cid (those are < n_cells) and
+#: any plain vec_id, so a split can never collide with a live cell id
+#: (a vector lives in exactly one cell, so at most one live child can
+#: derive from a given vec_id at a time).
+IVFPQ_CHILD_ID_BASE = 1 << 32
 
 
-def rebalance_ivf_index_versioned(
+def rebalance_index_versioned(
     spark,
     base_path: str,
+    emb: DataFrame | None = None,
     *,
-    factor_pct: int = IVF_REBALANCE_PCT,
-    split_seed: str = IVF_SPLIT_SEED,
-    nprobe: int = IVF_NPROBE,
     id_col: str = "vec_id",
     fault: Callable[[str], None] | None = None,
     retries: int = 5,
 ) -> dict:
-    """CRASH-ATOMIC rebalance: cells over
-    ``rows * factor_pct // (n_centroids * 100)`` split into two
-    hash-picked child seeds, members re-pointed to the nearer child by
-    the build's own kernel, committed as one manifest version.
+    """CRASH-ATOMIC rebalance of either tier: cells over
+    ``rows * IVF_REBALANCE_PCT // (n_centroids * 100)`` split into two
+    hash-picked child seeds (``IVF_SPLIT_SEED`` md5, then the id), the
+    members re-encoded (:func:`_encode`) under the two children,
+    committed as one manifest version.
+
+    The latest manifest names the tier, and only two steps depend on
+    it. Member vectors: the cosine tier's lists hold them (``emb`` must
+    be omitted); IVF-PQ lists store CODES, residuals against the cell
+    centroid, so moving a member changes its residual basis and its
+    raw vector is fetched from ``emb`` by id (required; an id-pushdown
+    read of O(oversized cells' rows) — the raw corpus is cold storage)
+    and re-encoded under the FROZEN codebooks (global, not per-cell, so
+    a split does not retrain them; the refresh verb owns that). Child
+    quantizer entries: the cosine tier keys the seed's float embedding
+    by its ``vec_id``; IVF-PQ keys the seed on the QUANT_SCALE integer
+    grid (``quantize_exact``, the half-up grid every probe ranks
+    against) by ``vec_id + IVFPQ_CHILD_ID_BASE``. A tier / ``emb``
+    mismatch raises ``ValueError`` before anything is staged.
 
     Ordering: every split's child lists land as immutable commit files
     first; the new manifest (old entries minus split cells' files, plus
-    child files, centroids swapped) publishes LAST via one atomic
-    exclusive link. A crash anywhere before the link leaves the
-    previous version fully intact and readable — orphan commit dirs are
-    reclaimed by :func:`maintenance.vacuum`; there is no window where a
-    reader can observe retired lists, missing rows, or a centroid set
-    that disagrees with the lists (the model test kills the job after
-    every step and checks exactly this).
+    child files, quantizer cells swapped, codebooks byte-identical)
+    publishes LAST via one atomic exclusive link. A crash anywhere
+    before the link leaves the previous version fully intact and
+    readable — orphan commit dirs are reclaimed by
+    :func:`maintenance.vacuum`; there is no window where a reader can
+    observe retired lists, missing rows, or a quantizer that disagrees
+    with the lists (the model tests kill the job after every step and
+    check exactly this).
 
     The split DECISION reads only the manifest (per-file row counts):
     at 100 TB, deciding costs one JSON read; the job itself costs
@@ -529,51 +583,93 @@ def rebalance_ivf_index_versioned(
     """
     import numpy as np
 
+    from sressentials_spark.operators.linalg import quantize_exact
+
     fault = fault or (lambda step: None)
     stats: dict = {}
+    rank = md5_long(
+        F.concat(F.lit(IVF_SPLIT_SEED + ":"), F.col(id_col).cast("string"))
+    )
 
     # A lost publish race re-runs the whole plan: unlike ingest, the
     # staged work is NOT reusable — the winner changed the file set
-    # (and maybe the centroids), so the split decision's inputs are
+    # (and maybe the quantizer), so the split decision's inputs are
     # stale. Abandoned stages are vacuum fodder.
     def plan(parent: dict | None) -> dict | None:
         man = _resolved(base_path, parent)
+        pq = "coarse" in man
+        if pq != (emb is not None):
+            raise ValueError(
+                f"{base_path} is an IVF-PQ store: its rebalance re-encodes "
+                "from the raw corpus, pass emb"
+                if pq
+                else f"{base_path} is a cosine-IVF store: its lists hold "
+                "the vectors, pass no emb"
+            )
         version = man["version"]
+        key = "coarse" if pq else "centroids"
         sizes: dict[int, int] = {}
         for e in man["files"]:
             sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
         n_rows = sum(sizes.values())
-        cents = dict(man["centroids"])
-        threshold = n_rows * factor_pct // (len(cents) * 100)
+        cents = dict(man[key])
+        threshold = n_rows * IVF_REBALANCE_PCT // (len(cents) * 100)
         oversized = sorted(c for c, n in sizes.items() if n > threshold)
+
+        # The PQ re-encode can only be as complete as the caller's
+        # corpus: if `emb` is stale (e.g. a concurrent ingest committed
+        # rows after the caller read the corpus — the same hazard on the
+        # lost-publish-race retry, where the re-read manifest is newer
+        # than `emb`), the per-cell inner join below would silently drop
+        # those members from the rewritten child lists — permanent row
+        # loss. Verify ONCE, up front, that every oversized cell's
+        # manifest member id resolves in `emb` — one left_anti pass over
+        # the union instead of a full-corpus join per cell — and abort
+        # before any staging; the caller re-reads the source of truth
+        # and retries (refresh_ivfpq_index_versioned's contract).
+        if pq and oversized:
+            missing = (
+                read_ivf_index_version(spark, base_path, version, cells=oversized)
+                .select(id_col)
+                .join(emb.select(id_col), id_col, "left_anti")
+                .count()
+            )
+            if missing:
+                raise ValueError(
+                    f"corpus is stale for cells {oversized}: {missing} member "
+                    f"id(s) in manifest v{version} of {base_path} are absent "
+                    "from the supplied embeddings — re-read the source-of-truth "
+                    "corpus and retry the rebalance"
+                )
+
+        def child(r) -> tuple[int, list]:
+            if pq:
+                vec = quantize_exact(np.asarray(r["embedding"], dtype=np.float64))
+                return int(r[id_col]) + IVFPQ_CHILD_ID_BASE, [int(x) for x in vec]
+            return int(r[id_col]), [float(x) for x in r["embedding"]]
 
         data_dir = os.path.join(base_path, "data")
         new_entries: list[dict] = []
         for c in oversized:
-            members = read_ivf_index_version(
-                spark, base_path, version, cells=[c]
-            ).drop("norm", "cell")
-            h = md5_long(
-                F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
+            lists = read_ivf_index_version(spark, base_path, version, cells=[c])
+            members = (
+                emb.join(lists.select(id_col), id_col).select(id_col, "embedding")
+                if pq
+                else lists.drop("norm", "cell")
             )
-            seed_rows = (
-                members.withColumn("_h", h)
+            seeds = (
+                members.withColumn("_h", rank)
                 .orderBy("_h", id_col)
                 .limit(2)
                 .select(id_col, "embedding")
                 .collect()
             )
-            ch_ids = [int(r[id_col]) for r in seed_rows]
-            ch_mat = np.stack(
-                [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-            )
+            children = dict(child(r) for r in seeds)
             new_entries += _commit_lists(
-                ivf_annotate_frozen(members, ch_ids, ch_mat, nprobe).drop("cells"),
-                data_dir,
+                _encode({**man, key: children}, members, id_col), data_dir
             )
             cents.pop(c, None)
-            for cid, row in zip(ch_ids, ch_mat):
-                cents[int(cid)] = [float(x) for x in row]
+            cents.update(children)
             fault(f"staged:{c}")
 
         stats.update(
@@ -587,7 +683,7 @@ def rebalance_ivf_index_versioned(
         split = set(oversized)
         files = [e for e in man["files"] if e["cell"] not in split]
         return {
-            "centroids": dict(sorted(cents.items())),
+            key: dict(sorted(cents.items())),
             **_files_payload(base_path, man, files + new_entries),
         }
 
@@ -596,34 +692,6 @@ def rebalance_ivf_index_versioned(
 
 
 # ---- IVF-PQ on the same commit discipline --------------------------------
-
-
-def _pq_quantizers(coarse: dict, books) -> dict:
-    """A trained IVF-PQ quantizer pair as manifest keys: ``coarse``
-    (``{cid: [i64 components]}``) and ``books`` (``pq_train_codebooks``
-    shape as nested lists, per subspace ``[[cid, [i64 components]],
-    ...]``). Integer-exact: both live on the QUANT_SCALE integer grid,
-    so JSON round-trips them losslessly."""
-    return {
-        "coarse": {
-            str(int(c)): [int(x) for x in v] for c, v in sorted(coarse.items())
-        },
-        "books": [
-            [[int(cid), [int(x) for x in row]] for cid, row in zip(cids.tolist(), C)]
-            for cids, C in books
-        ],
-    }
-
-
-def _books_from_json(js) -> list:
-    import numpy as np
-
-    out = []
-    for sub in js:
-        cids = np.array([c for c, _ in sub], dtype=np.int64)
-        C = np.stack([np.asarray(v, dtype=np.int64) for _, v in sub])
-        out.append((cids, C))
-    return out
 
 
 def build_ivfpq_index_versioned(
@@ -644,54 +712,8 @@ def build_ivfpq_index_versioned(
     exact hazard sidecars re-introduce on every maintenance write."""
     from sressentials_spark.operators import similarity as S
 
-    coarse, books = S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
-    entries = _commit_lists(
-        S._encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col),
-        os.path.join(base_path, "data"),
-    )
-    publish_manifest(
-        base_path,
-        1,
-        {"version": 1, **_pq_quantizers(coarse, books), "files": entries},
-    )
-    return 1
-
-
-def ingest_ivfpq_index_versioned(
-    emb_batch: DataFrame,
-    base_path: str,
-    id_col: str = "vec_id",
-    fault: Callable[[str], None] | None = None,
-    retries: int = 5,
-    manifest_extra: dict | None = None,
-) -> int:
-    """Append a batch under the latest manifest's FROZEN coarse
-    centroids and residual codebooks as one committed version (encode
-    the batch only; parent files untouched; publish last, atomically).
-    The trade is quantizer drift (frozen artifacts age as the data
-    moves; :func:`ivfpq_refresh_decision` gauges it), and the manifest
-    pins exactly which quantizers encoded every visible row. A lost publish race
-    retries on top of the new latest, reusing the staged files while
-    the winner kept the quantizers (always, between ingests — they are
-    frozen at build) and re-encoding if a refresh or rebalance swapped
-    them (the shared ingest plan)."""
-    from sressentials_spark.operators import similarity as S
-
-    def encode(man: dict) -> DataFrame:
-        return S._encode_ivfpq_lists(
-            emb_batch,
-            man["coarse"],
-            _books_from_json(man["books"]),
-            m=len(man["books"]),
-            id_col=id_col,
-        )
-
-    return publish_next(
-        base_path,
-        _ingest_plan(base_path, encode, fault, manifest_extra),
-        retries=retries,
-        fault=fault,
-    )
+    quantizer = _pq_quantizers(*S.train_ivfpq(emb, n_cells, m, k, iters, id_col))
+    return _publish_v1(base_path, quantizer, _encode(quantizer, emb, id_col))
 
 
 def pq_adc_topk_ivfpq_versioned(
@@ -937,156 +959,6 @@ def delete_ivf_index_versioned(
     return {**stats, "version": version}
 
 
-#: Child cell ids for IVF-PQ rebalance splits are the seed member's
-#: vec_id shifted past any kmeans-born cid (those are < n_cells) and
-#: any plain vec_id, so a split can never collide with a live cell id
-#: (a vector lives in exactly one cell, so at most one live child can
-#: derive from a given vec_id at a time).
-IVFPQ_CHILD_ID_BASE = 1 << 32
-
-
-def rebalance_ivfpq_index_versioned(
-    spark,
-    emb: DataFrame,
-    base_path: str,
-    *,
-    factor_pct: int = IVF_REBALANCE_PCT,
-    split_seed: str = IVF_SPLIT_SEED,
-    id_col: str = "vec_id",
-    fault: Callable[[str], None] | None = None,
-    retries: int = 5,
-) -> dict:
-    """CRASH-ATOMIC rebalance for the IVF-PQ tier — the verb that
-    completes the compressed index's lifecycle symmetry with the
-    cosine tier (build / ingest / REBALANCE / refresh / import /
-    vacuum): cells whose manifest row count exceeds
-    ``rows * factor_pct // (n_centroids * 100)`` split into two
-    hash-picked child seeds, exactly the cosine-tier split rule.
-
-    What differs under PQ is that the lists store CODES, not vectors,
-    and codes are residuals against the cell centroid — so moving a
-    member to a child cell changes its residual basis and its codes
-    must be RE-ENCODED. The split therefore fetches the oversized
-    cells' raw vectors from ``emb`` by id (an id-pushdown read of
-    O(oversized cells' rows) — the raw corpus is cold storage, touched
-    only for the rows that move) and re-encodes them against the new
-    child centroids under the FROZEN codebooks (the subspace books are
-    global, not per-cell, so a cell split does not retrain them; the
-    drift gauge / refresh verb owns that decision). Child centroids
-    are the seeds' own embeddings on the QUANT_SCALE integer grid
-    (quantize_exact — the same half-up grid every probe ranks
-    against); child cell ids are ``vec_id + IVFPQ_CHILD_ID_BASE``.
-
-    Commit discipline is the cosine rebalance's verbatim: child lists
-    land first as immutable commit files, the new manifest (old files
-    minus split cells', plus child files; coarse swapped; books
-    byte-identical) publishes LAST via one atomic exclusive link, a
-    crash anywhere leaves the previous version intact, and a lost
-    publish race re-runs the whole decision against the new latest
-    (stale staging is vacuum fodder). The split decision itself reads
-    only manifest row counts — at 100 TB deciding costs one JSON
-    read."""
-    import numpy as np
-
-    from sressentials_spark.operators import similarity as S
-    from sressentials_spark.operators.linalg import quantize_exact
-
-    fault = fault or (lambda step: None)
-    stats: dict = {}
-
-    # Same recovery as the cosine tier: a lost publish race re-runs the
-    # whole plan — the winner changed the file set (and maybe the
-    # cells), so the split decision's inputs are stale.
-    def plan(parent: dict | None) -> dict | None:
-        man = _resolved(base_path, parent)
-        version = man["version"]
-        books = _books_from_json(man["books"])
-        m = len(books)
-        sizes: dict[int, int] = {}
-        for e in man["files"]:
-            sizes[e["cell"]] = sizes.get(e["cell"], 0) + e["rows"]
-        n_rows = sum(sizes.values())
-        cents = {int(c): list(v) for c, v in man["coarse"].items()}
-        threshold = n_rows * factor_pct // (len(cents) * 100)
-        oversized = sorted(c for c, n in sizes.items() if n > threshold)
-
-        data_dir = os.path.join(base_path, "data")
-        # The re-encode can only be as complete as the caller's corpus: if
-        # `emb` is stale (e.g. a concurrent ingest committed rows after the
-        # caller read the corpus — the same hazard on the lost-publish-race
-        # retry, where the re-read manifest is newer than `emb`), the
-        # per-cell inner join below would silently drop those members from
-        # the rewritten child lists — permanent row loss. Verify ONCE, up
-        # front, that every oversized cell's manifest member id resolves in
-        # `emb` — one left_anti pass over the union instead of a
-        # full-corpus join per cell — and abort before any staging; the
-        # caller re-reads the source of truth and retries
-        # (refresh_ivfpq_index_versioned's contract).
-        if oversized:
-            missing = (
-                read_ivf_index_version(spark, base_path, version, cells=oversized)
-                .select(id_col)
-                .join(emb.select(id_col), id_col, "left_anti")
-                .count()
-            )
-            if missing:
-                raise ValueError(
-                    f"corpus is stale for cells {oversized}: {missing} member "
-                    f"id(s) in manifest v{version} of {base_path} are absent "
-                    "from the supplied embeddings — re-read the source-of-truth "
-                    "corpus and retry the rebalance"
-                )
-        new_entries: list[dict] = []
-        for c in oversized:
-            member_ids = read_ivf_index_version(
-                spark, base_path, version, cells=[c]
-            ).select(id_col)
-            members = emb.join(member_ids, id_col).select(id_col, "embedding")
-            h = md5_long(
-                F.concat(F.lit(split_seed + ":"), F.col(id_col).cast("string"))
-            )
-            seed_rows = (
-                members.withColumn("_h", h)
-                .orderBy("_h", id_col)
-                .limit(2)
-                .collect()
-            )
-            ch_coarse = {
-                int(r[id_col]) + IVFPQ_CHILD_ID_BASE: [
-                    int(x)
-                    for x in quantize_exact(
-                        np.asarray(r["embedding"], dtype=np.float64)
-                    )
-                ]
-                for r in seed_rows
-            }
-            new_entries += _commit_lists(
-                S._encode_ivfpq_lists(members, ch_coarse, books, m=m, id_col=id_col),
-                data_dir,
-            )
-            cents.pop(c, None)
-            cents.update(ch_coarse)
-            fault(f"staged:{c}")
-
-        stats.update(
-            cells_split=len(oversized),
-            split_cells=oversized,
-            threshold=int(threshold),
-            n_centroids=len(cents),
-        )
-        if not oversized:
-            return None
-        split = set(oversized)
-        files = [e for e in man["files"] if e["cell"] not in split]
-        return {
-            "coarse": dict(sorted(cents.items())),
-            **_files_payload(base_path, man, files + new_entries),
-        }
-
-    version = publish_next(base_path, plan, retries=retries, fault=fault)
-    return {**stats, "version": version}
-
-
 def refresh_ivfpq_index_versioned(
     emb: DataFrame,
     base_path: str,
@@ -1122,16 +994,14 @@ def refresh_ivfpq_index_versioned(
 
     def plan(parent: dict | None) -> dict:
         man = _resolved(base_path, parent)
-        coarse, books = S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
+        quantizer = _pq_quantizers(
+            *S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
+        )
         entries = _commit_lists(
-            S._encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col),
-            os.path.join(base_path, "data"),
+            _encode(quantizer, emb, id_col), os.path.join(base_path, "data")
         )
         fault("staged")
-        return {
-            **_pq_quantizers(coarse, books),
-            **_files_payload(base_path, man, entries),
-        }
+        return {**quantizer, **_files_payload(base_path, man, entries)}
 
     return publish_next(base_path, plan, retries=0, fault=fault)
 
@@ -1249,13 +1119,7 @@ def import_ivfpq_index_versioned(
         F.col("cell").cast("long").alias("cell"),
         *[f"code_{i}" for i in range(m)],
     )
-    entries = _commit_lists(lists, os.path.join(base_path, "data"))
-    publish_manifest(
-        base_path,
-        1,
-        {"version": 1, **_pq_quantizers(coarse, books), "files": entries},
-    )
-    return 1
+    return _publish_v1(base_path, _pq_quantizers(coarse, books), lists)
 
 
 def promote_ivf_manifest_list(

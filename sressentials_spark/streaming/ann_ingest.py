@@ -19,11 +19,11 @@ land in ONE atomic manifest publish, there is no window where the
 rows committed but the stamp did not (or vice versa): the manifest IS
 the transaction log, and ingest becomes exactly-once end to end.
 
-Frozen-centroid encoding is batch-invariant (each batch is assigned
-under the same v1 centroids), so the streamed index's final state is
-bit-equal to a one-shot build-then-ingest over the same rows — which
-is what lets the composition share the batch ingest oracle when it
-registers. Pinned row-for-row in tests/test_streaming_ann_ingest.py,
+Frozen-quantizer encoding is batch-invariant (each batch is encoded
+under the same v1 quantizers, on either tier), so the streamed
+index's final state is bit-equal to a one-shot build-then-ingest over
+the same rows — which is what lets ``streaming_ann_ingest_recall``
+share the batch ingest oracle. Pinned row-for-row in tests/test_streaming_ann_ingest.py,
 including a full-redelivery replay (fresh checkpoint, same files)
 committing nothing.
 
@@ -61,21 +61,30 @@ def committed_stream_batch(base_path: str) -> int:
     return -1
 
 
-def _run_ingest_stream(
+def run_versioned_ingest_stream(
     spark: SparkSession,
     arrivals_dir: str,
     base_path: str,
-    checkpoint_dir: str | None,
-    ingest_verb,
-    id_col: str,
+    checkpoint_dir: str | None = None,
+    id_col: str = "vec_id",
 ) -> None:
-    """Shared exactly-once micro-batch loop: each arrival file is one
-    trigger; a batch whose id is already stamped is skipped driver-side
-    before any staging; otherwise ``ingest_verb`` commits the batch's
-    rows and the stamp in ONE atomic manifest publish.
+    """Replay the staged embedding arrivals (one file per trigger)
+    through exactly-once versioned ingest into either tier: each
+    micro-batch whose id is not yet stamped is encoded under the latest
+    manifest's frozen quantizers (:func:`ivf_versioned.ingest_index_versioned`
+    — centroids for cosine-IVF, coarse centroids + residual codebooks
+    for IVF-PQ; O(batch), quantizer drift is the refresh gauge's
+    business) and committed with its stamp in ONE atomic manifest
+    publish; a redelivered batch whose id is already stamped is skipped
+    driver-side before any staging. ``checkpoint_dir`` defaults to a
+    fresh checkpoint; a fresh one over the same files re-delivers the
+    whole stream. Frozen-quantizer encoding is batch-invariant, so on
+    both tiers the streamed store's final state is bit-equal to the
+    one-shot build-then-ingest over the same rows (pinned in
+    tests/test_streaming_ann_ingest.py).
 
     An EMPTY arrival micro-batch never publishes its stamp (the ingest
-    verbs early-return before staging when the encode yields no
+    verb early-returns before staging when the encode yields no
     entries), so ``committed_stream_batch`` does not advance past it.
     That is harmless BY the exactly-once argument, not by accident:
     redelivering an unstamped empty batch re-ingests zero rows (a
@@ -83,13 +92,13 @@ def _run_ingest_stream(
     holds even though "stamp == highest delivered batch id" does not.
     Pinned by tests/test_streaming_ann_ingest.py::
     test_empty_batch_skips_stamp_and_redelivery_is_noop; if the
-    early-return in the ingest verbs ever changes, that test is the
+    early-return in the ingest verb ever changes, that test is the
     tripwire."""
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
         if batch_id <= committed_stream_batch(base_path):
             return  # redelivered: its rows are already committed
-        ingest_verb(
+        V.ingest_index_versioned(
             batch,
             base_path,
             id_col=id_col,
@@ -105,53 +114,4 @@ def _run_ingest_stream(
         ),
         ingest,
         checkpoint_dir,
-    )
-
-
-def run_versioned_ingest_stream(
-    spark: SparkSession,
-    arrivals_dir: str,
-    base_path: str,
-    checkpoint_dir: str | None = None,
-    id_col: str = "vec_id",
-) -> None:
-    """Replay the staged embedding arrivals (one file per trigger)
-    through exactly-once versioned ingest: each micro-batch whose id
-    is not yet stamped commits one manifest version; redelivered
-    batches are skipped driver-side before any staging.
-    ``checkpoint_dir`` defaults to a fresh checkpoint; a fresh one
-    over the same files re-delivers the whole stream."""
-    _run_ingest_stream(
-        spark,
-        arrivals_dir,
-        base_path,
-        checkpoint_dir,
-        V.ingest_ivf_index_versioned,
-        id_col,
-    )
-
-
-def run_versioned_ivfpq_ingest_stream(
-    spark: SparkSession,
-    arrivals_dir: str,
-    base_path: str,
-    checkpoint_dir: str | None = None,
-    id_col: str = "vec_id",
-) -> None:
-    """The PQ-tier twin: arrival batches are ENCODED under the latest
-    manifest's frozen coarse centroids and residual codebooks (one
-    assign + encode pass per batch, O(batch) — quantizer drift is the
-    refresh gauge's business) and committed with the same exactly-once
-    stamp discipline. Frozen-artifact encoding is batch-invariant, so
-    the streamed store's final state is bit-equal to the one-shot
-    build-then-ingest over the same rows — pinned in
-    tests/test_streaming_ann_ingest.py, which is what lets a future
-    registration share the batch PQ-ingest oracle."""
-    _run_ingest_stream(
-        spark,
-        arrivals_dir,
-        base_path,
-        checkpoint_dir,
-        V.ingest_ivfpq_index_versioned,
-        id_col,
     )

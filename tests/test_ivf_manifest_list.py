@@ -50,8 +50,8 @@ def _lifecycle_store(spark, tmp_path, name="ver"):
     emb = _emb(spark)
     base = str(tmp_path / name)
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
-    stats = V.rebalance_ivf_index_versioned(spark, base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
+    stats = V.rebalance_index_versioned(spark, base)
     assert stats["cells_split"] >= 1
     return base
 
@@ -115,23 +115,23 @@ def test_two_level_ingest_reuses_parent_blocks(spark, tmp_path):
     V.promote_ivf_manifest_list(base)
     ptrs_v2 = _pointer_paths(base, 2)
 
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 35)), base
     )
     ptrs_v3 = _pointer_paths(base, 3)
     assert ptrs_v2 < ptrs_v3 and len(ptrs_v3) == len(ptrs_v2) + 1
 
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 35), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 35), base)
     ptrs_v4 = _pointer_paths(base, 4)
     assert ptrs_v3 < ptrs_v4 and len(ptrs_v4) == len(ptrs_v3) + 1
 
     # Bit-equal to the never-promoted twin of the same lifecycle.
     ref = str(tmp_path / "ref")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 20), ref)
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 35)), ref
     )
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 35), ref)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 35), ref)
     pd.testing.assert_frame_equal(
         _topk(spark, base), _topk(spark, ref), check_exact=True
     )
@@ -149,12 +149,12 @@ def test_two_level_maintenance_verbs_preserve_layout_and_values(
     ref = str(tmp_path / "ref")
     for p in (base, ref):
         V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), p)
-        V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), p)
+        V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), p)
     V.promote_ivf_manifest_list(base)  # base: v3 two-level; ref: v2 flat
     parent_ptrs = _pointer_paths(base, 3)
 
-    stats = V.rebalance_ivf_index_versioned(spark, base)
-    ref_stats = V.rebalance_ivf_index_versioned(spark, ref)
+    stats = V.rebalance_index_versioned(spark, base)
+    ref_stats = V.rebalance_index_versioned(spark, ref)
     assert stats["cells_split"] == ref_stats["cells_split"] >= 1
     v = MT.manifest_versions(base)[-1]
     raw = V._read_manifest_raw(base, v)
@@ -249,11 +249,11 @@ def test_vacuum_across_layouts_keeps_shared_blocks(spark, tmp_path):
     emb = _emb(spark)
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         emb.filter((F.col("vec_id") >= 25) & (F.col("vec_id") < 40)), base
     )
     V.promote_ivf_manifest_list(base)  # v3
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 40), base)  # v4
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 40), base)  # v4
     pre = _topk(spark, base)
 
     # Expiring v1..v3 (flat, flat, two-level) must keep every block the
@@ -317,7 +317,7 @@ def test_streaming_exactly_once_on_promoted_store(spark, tmp_path):
 
     ref = str(tmp_path / "ref")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), ref)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
     pd.testing.assert_frame_equal(
         _topk(spark, base), _topk(spark, ref), check_exact=True
     )
@@ -380,7 +380,7 @@ def test_pq_tier_promotes_bit_equal(spark, tmp_path):
     emb = _emb(spark)
     base = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
 
     def _serve():
         return (
@@ -399,7 +399,7 @@ def test_pq_tier_promotes_bit_equal(spark, tmp_path):
     assert man["books"] == man_flat["books"]
     pd.testing.assert_frame_equal(_serve(), pre, check_exact=True)
     # And the PQ ingest stays layout-preserving on top of it.
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 5), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") < 5), base)
     assert "manifest_list" in V._read_manifest_raw(base, 4)
 
 
@@ -473,19 +473,19 @@ def test_random_lifecycle_model_two_level(spark, tmp_path):
             stamp = {"stream_batch_id": next_batch}
             if op == "ingest_kill":
                 with pytest.raises(Kill):
-                    V.ingest_ivf_index_versioned(
+                    V.ingest_index_versioned(
                         batch, base, fault=killer, manifest_extra=stamp
                     )
             else:
-                V.ingest_ivf_index_versioned(batch, base, manifest_extra=stamp)
+                V.ingest_index_versioned(batch, base, manifest_extra=stamp)
                 model_ids |= set(slices[next_batch])
                 model_stamp = next_batch
                 next_batch += 1
         elif op == "rebalance":
-            V.rebalance_ivf_index_versioned(spark, base)
+            V.rebalance_index_versioned(spark, base)
         elif op == "rebalance_kill":
             try:
-                V.rebalance_ivf_index_versioned(spark, base, fault=killer)
+                V.rebalance_index_versioned(spark, base, fault=killer)
             except Kill:
                 pass
         elif op.startswith("delete"):

@@ -94,7 +94,7 @@ def test_rebalance_matches_bare_rebalance_and_time_travels(spark, tmp_path):
     cells1 = _cells(spark, base, 1)
     threshold = len(cells1) * V.IVF_REBALANCE_PCT // (S.IVF_CELLS * 100)
     split = sorted(c for c, n in Counter(cells1.values()).items() if n > threshold)
-    sv = V.rebalance_ivf_index_versioned(spark, base)
+    sv = V.rebalance_index_versioned(spark, base)
     assert sv["split_cells"] == split and sv["cells_split"] == len(split) >= 1
     assert sv["threshold"] == threshold
     assert MT.manifest_versions(base) == [1, 2]
@@ -132,7 +132,7 @@ def test_untouched_cells_files_never_rewritten(spark, tmp_path):
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb, base)
     man = V.read_ivf_manifest(base, 1)
-    stats = V.rebalance_ivf_index_versioned(spark, base)
+    stats = V.rebalance_index_versioned(spark, base)
     split = set(stats["split_cells"])
     assert split
     before = {
@@ -163,7 +163,7 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
     V.build_ivf_index_versioned(emb, ref)
     pre = _topk(spark, ref)
     steps: list[str] = []
-    V.rebalance_ivf_index_versioned(spark, ref, fault=steps.append)
+    V.rebalance_index_versioned(spark, ref, fault=steps.append)
     post = _topk(spark, ref)
     assert steps and steps[-1] == "published" and "prepared" in steps
 
@@ -179,7 +179,7 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
                 raise Kill(step)
 
         with pytest.raises(Kill):
-            V.rebalance_ivf_index_versioned(spark, base, fault=fault)
+            V.rebalance_index_versioned(spark, base, fault=fault)
         if kill_at == "published":
             # Crash after the atomic link: the new version is fully
             # committed and serves the post-split answer.
@@ -199,7 +199,7 @@ def test_kill_between_steps_never_exposes_half_split(spark, tmp_path):
         # Recovery is a plain re-run (idempotent decision), after which
         # the post-split answer serves; orphans then vacuum away
         # without disturbing it.
-        V.rebalance_ivf_index_versioned(spark, base)
+        V.rebalance_index_versioned(spark, base)
         assert MT.manifest_versions(base) == [1, 2]
         pd.testing.assert_frame_equal(
             _topk(spark, base), post, check_exact=True
@@ -232,7 +232,7 @@ def test_ingest_commits_a_version_matching_the_bare_twin(spark, tmp_path):
         e["path"]: os.stat(os.path.join(base, "data", e["path"]))
         for e in man1["files"]
     }
-    assert V.ingest_ivf_index_versioned(batch, base) == 2
+    assert V.ingest_index_versioned(batch, base) == 2
     ids, mat = V._load_centroids(man1)
     want = (
         S.ivf_annotate_frozen(emb, ids, mat)
@@ -279,12 +279,12 @@ def test_ingest_retries_lost_race_reusing_staged_files(spark, tmp_path):
 
     def racer(step):
         if step == "staged":
-            V.ingest_ivf_index_versioned(
+            V.ingest_index_versioned(
                 emb.filter(F.col("vec_id").isin(c)), base
             )
 
     assert (
-        V.ingest_ivf_index_versioned(
+        V.ingest_index_versioned(
             emb.filter(F.col("vec_id").isin(b)), base, fault=racer
         )
         == 3
@@ -318,9 +318,9 @@ def test_ingest_retry_reencodes_when_a_rebalance_wins(spark, tmp_path):
 
     def racer(step):
         if step == "staged":
-            stats.update(V.rebalance_ivf_index_versioned(spark, base))
+            stats.update(V.rebalance_index_versioned(spark, base))
 
-    v = V.ingest_ivf_index_versioned(
+    v = V.ingest_index_versioned(
         emb.filter(F.col("vec_id") >= split), base, fault=racer
     )
     assert stats["cells_split"] >= 1 and v == 3
@@ -372,7 +372,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
     # retries=0 pins the raw conflict semantics: the atomic exclusive
     # link refuses to clobber; the loser surfaces FileExistsError.
     with pytest.raises(FileExistsError):
-        V.rebalance_ivf_index_versioned(spark, base, fault=racer, retries=0)
+        V.rebalance_index_versioned(spark, base, fault=racer, retries=0)
     assert MT.manifest_versions(base) == [1, 2]
     # v2 is the racer's (identical content to v1) — intact, readable.
     pd.testing.assert_frame_equal(
@@ -402,7 +402,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
                 },
             )
 
-    stats = V.rebalance_ivf_index_versioned(spark, base, fault=racer2)
+    stats = V.rebalance_index_versioned(spark, base, fault=racer2)
     assert stats["version"] == 4 and stats["cells_split"] >= 1
     assert MT.manifest_versions(base) == [1, 2, 3, 4]
 
@@ -461,7 +461,7 @@ def test_streaming_serve_snapshot_isolation_across_midstream_ingest(
         if bid == 0:
             # The concurrent writer: an ingest commit lands between
             # micro-batches, with zero coordination with the reader.
-            V.ingest_ivf_index_versioned(batch_df, base)
+            V.ingest_index_versioned(batch_df, base)
 
     q = (
         spark.readStream.schema("query_id long")
@@ -561,19 +561,19 @@ def test_random_lifecycle_model(spark, tmp_path):
             stamp = {"stream_batch_id": next_batch}
             if op == "ingest_kill":
                 with pytest.raises(Kill):
-                    V.ingest_ivf_index_versioned(
+                    V.ingest_index_versioned(
                         batch, base, fault=killer, manifest_extra=stamp
                     )
             else:
-                V.ingest_ivf_index_versioned(batch, base, manifest_extra=stamp)
+                V.ingest_index_versioned(batch, base, manifest_extra=stamp)
                 model_ids |= set(slices[next_batch])
                 model_stamp = next_batch
                 next_batch += 1
         elif op == "rebalance":
-            V.rebalance_ivf_index_versioned(spark, base)
+            V.rebalance_index_versioned(spark, base)
         elif op == "rebalance_kill":
             try:
-                V.rebalance_ivf_index_versioned(spark, base, fault=killer)
+                V.rebalance_index_versioned(spark, base, fault=killer)
             except Kill:
                 pass  # killed mid-flight: the check proves nothing leaked
         elif op.startswith("delete"):
@@ -667,13 +667,13 @@ def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
         raise Kill(step)
 
     with pytest.raises(Kill):
-        V.ingest_ivfpq_index_versioned(batch, base, fault=killer)
+        V.ingest_index_versioned(batch, base, fault=killer)
     assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), pre, check_exact=True
     )
 
-    assert V.ingest_ivfpq_index_versioned(batch, base) == 2
+    assert V.ingest_index_versioned(batch, base) == 2
     expect = (
         S._encode_ivfpq_lists(emb, man1["coarse"], V._books_from_json(man1["books"]))
         .toPandas()
@@ -714,14 +714,14 @@ def test_empty_ingest_is_a_graceful_noop(spark, tmp_path):
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb, base)
     pre = _topk(spark, base)
-    assert V.ingest_ivf_index_versioned(empty, base) == 1
+    assert V.ingest_index_versioned(empty, base) == 1
     assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(_topk(spark, base), pre, check_exact=True)
 
     pq = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb, pq)
     pre_pq = _adc_topk(spark, emb, pq)
-    assert V.ingest_ivfpq_index_versioned(empty, pq) == 1
+    assert V.ingest_index_versioned(empty, pq) == 1
     assert MT.manifest_versions(pq) == [1]
     pd.testing.assert_frame_equal(_adc_topk(spark, emb, pq), pre_pq, check_exact=True)
     MT.vacuum(pq, keep_last=1)
@@ -771,7 +771,7 @@ def test_vacuum_grace_window_protects_inflight_staging(spark, tmp_path):
         raise Kill(step)
 
     with pytest.raises(Kill):
-        V.ingest_ivf_index_versioned(
+        V.ingest_index_versioned(
             emb.filter(F.col("vec_id") >= 25), base, fault=killer
         )
     staged = set(globmod.glob(os.path.join(base, "data", "commit-*"))) - before
@@ -790,7 +790,7 @@ def test_vacuum_reclaims_expired_versions_and_orphans(spark, tmp_path):
     emb = _emb(spark)
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb, base)
-    V.rebalance_ivf_index_versioned(spark, base)
+    V.rebalance_index_versioned(spark, base)
     post = _topk(spark, base)
     v1_only = {
         e["path"]
@@ -891,7 +891,7 @@ def test_vacuum_zero_grace_is_deterministic(spark, tmp_path):
     for _ in range(10):
         before = set(globmod.glob(os.path.join(base, "data", "commit-*")))
         with pytest.raises(Kill):
-            V.ingest_ivf_index_versioned(
+            V.ingest_index_versioned(
                 emb.filter(F.col("vec_id") >= 25), base, fault=killer
             )
         staged = (
@@ -953,7 +953,7 @@ def test_import_bare_ivfpq_serves_bit_identically(spark, tmp_path):
     batch = emb.limit(5).withColumn(
         "vec_id", F.col("vec_id") + F.lit(1_000_000)
     )
-    assert V.ingest_ivfpq_index_versioned(batch, base) == 2
+    assert V.ingest_index_versioned(batch, base) == 2
     assert MT.manifest_versions(base) == [1, 2]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base, version=1), want, check_exact=True
@@ -1001,7 +1001,7 @@ def test_refresh_retrains_and_swaps_quantizers_atomically(spark, tmp_path):
     batch = emb.filter(F.col("vec_id") >= 25)
     base = str(tmp_path / "ver")
     V.build_ivfpq_index_versioned(hist, base)
-    V.ingest_ivfpq_index_versioned(batch, base)
+    V.ingest_index_versioned(batch, base)
     pre = _adc_topk(spark, emb, base)  # stale-artifact serving (v2)
 
     class Kill(RuntimeError):
@@ -1048,7 +1048,7 @@ def test_refresh_decision_gauge_is_exact_and_scale_free(spark, tmp_path):
     split = (max_id + 1) * 7 // 10
     base = str(tmp_path / "ver")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < split), base)
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= split), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= split), base)
     row = V.ivfpq_refresh_decision(spark, emb, base, split).first()
     n = emb.count()
     assert row["hist_n"] + row["batch_n"] == n
@@ -1078,7 +1078,7 @@ def test_ivfpq_rebalance_splits_reencode_and_commit_atomically(spark, tmp_path):
     man1 = V.read_ivf_manifest(base, 1)
     pre = _adc_topk(spark, emb, base)
 
-    stats = V.rebalance_ivfpq_index_versioned(spark, emb, base)
+    stats = V.rebalance_index_versioned(spark, base, emb)
     assert stats["cells_split"] >= 1
     assert MT.manifest_versions(base) == [1, 2]
     man2 = V.read_ivf_manifest(base, 2)
@@ -1162,7 +1162,7 @@ def test_ivfpq_rebalance_kill_between_steps_never_partial(spark, tmp_path):
 
     ref = str(tmp_path / "ref")
     V.build_ivfpq_index_versioned(emb, ref)
-    V.rebalance_ivfpq_index_versioned(spark, emb, ref, fault=count_steps)
+    V.rebalance_index_versioned(spark, ref, emb, fault=count_steps)
     assert steps and steps[-1] == "published"
 
     for k in range(len(steps) - 1):  # kill at every pre-publish step
@@ -1173,12 +1173,12 @@ def test_ivfpq_rebalance_kill_between_steps_never_partial(spark, tmp_path):
                 raise Kill(step)
 
         with pytest.raises(Kill):
-            V.rebalance_ivfpq_index_versioned(spark, emb, base, fault=killer)
+            V.rebalance_index_versioned(spark, base, emb, fault=killer)
         assert MT.manifest_versions(base) == [1]
         pd.testing.assert_frame_equal(
             _adc_topk(spark, emb, base), pre, check_exact=True
         )
-    out = V.rebalance_ivfpq_index_versioned(spark, emb, base)
+    out = V.rebalance_index_versioned(spark, base, emb)
     assert out["version"] == 2
     man = V.read_ivf_manifest(base, 2)
     man_ref = V.read_ivf_manifest(ref, 2)
@@ -1272,22 +1272,22 @@ def test_random_lifecycle_model_ivfpq(spark, tmp_path):
             stamp = {"stream_batch_id": next_batch}
             if op == "ingest_kill":
                 with pytest.raises(Kill):
-                    V.ingest_ivfpq_index_versioned(
+                    V.ingest_index_versioned(
                         batch, base, fault=killer, manifest_extra=stamp
                     )
             else:
-                V.ingest_ivfpq_index_versioned(
+                V.ingest_index_versioned(
                     batch, base, manifest_extra=stamp
                 )
                 model_ids |= set(slices[next_batch])
                 model_stamp = next_batch
                 next_batch += 1
         elif op == "rebalance":
-            V.rebalance_ivfpq_index_versioned(spark, corpus(), base)
+            V.rebalance_index_versioned(spark, base, corpus())
         elif op == "rebalance_kill":
             try:
-                V.rebalance_ivfpq_index_versioned(
-                    spark, corpus(), base, fault=killer
+                V.rebalance_index_versioned(
+                    spark, base, corpus(), fault=killer
                 )
             except Kill:
                 pass
@@ -1429,7 +1429,7 @@ def test_delete_locate_prunes_on_manifest_id_stats(spark, tmp_path):
     emb = _emb(spark)
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 30), base)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 30), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 30), base)
     man = V.read_ivf_manifest(base, 2)
     assert all("min_id" in e and "max_id" in e for e in man["files"])
     assert all(e["min_id"] <= e["max_id"] for e in man["files"])
@@ -1459,7 +1459,7 @@ def test_compact_merges_fragmented_cells_bit_equal_serving(spark, tmp_path):
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 20), base)
     for lo in range(20, 50, 10):
-        V.ingest_ivf_index_versioned(
+        V.ingest_index_versioned(
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 10)),
             base,
         )
@@ -1487,10 +1487,10 @@ def test_compact_merges_fragmented_cells_bit_equal_serving(spark, tmp_path):
     # PQ tier: fragment by ingest, compact, ADC serving bit-equal.
     pq = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 25), pq)
-    V.ingest_ivfpq_index_versioned(
+    V.ingest_index_versioned(
         emb.filter((F.col("vec_id") >= 25) & (F.col("vec_id") < 40)), pq
     )
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= 40), pq)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 40), pq)
     sub = emb.filter(F.col("vec_id") >= 0)
     pre_pq = _adc_topk(spark, sub, pq)
     man_pq = V.read_ivf_manifest(pq, MT.manifest_versions(pq)[-1])
@@ -1512,7 +1512,7 @@ def test_compact_crash_before_publish_changes_nothing(spark, tmp_path):
     emb = _emb(spark)
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), base)
     pre = _topk(spark, base)
     v0 = MT.manifest_versions(base)[-1]
 
@@ -1551,14 +1551,14 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
     # --- cosine tier: stamp via ingest, then every maintenance verb ---
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 20), base)
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         emb.filter((F.col("vec_id") >= 20) & (F.col("vec_id") < 35)),
         base,
         manifest_extra={"stream_batch_id": 7},
     )
     assert committed_stream_batch(base) == 7
     # A PLAIN batch ingest (no stamp of its own) must not drop it.
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 35), base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 35), base)
     assert V.read_ivf_manifest(base, 3)["stream_batch_id"] == 7
     out = V.compact_ivf_index_versioned(spark, base)
     assert out["cells_compacted"] >= 1
@@ -1568,7 +1568,7 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
     )
     out = V.delete_ivf_index_versioned(spark, base, [victim])
     assert V.read_ivf_manifest(base, out["version"])["stream_batch_id"] == 7
-    stats = V.rebalance_ivf_index_versioned(spark, base)
+    stats = V.rebalance_index_versioned(spark, base)
     if stats["cells_split"]:
         assert (
             V.read_ivf_manifest(base, stats["version"])["stream_batch_id"] == 7
@@ -1579,7 +1579,7 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
     assert len(MT.manifest_versions(base)) == 1
     assert committed_stream_batch(base) == 7
     # A newer ingest stamp overrides the carried one.
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         spark.createDataFrame(
             [(10_000, [0.5] + [0.0] * (V.DEFAULT_DIM - 1))],
             "vec_id long, embedding array<float>",
@@ -1592,12 +1592,12 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
     # --- PQ tier: ingest stamp, then rebalance + refresh carry it ---
     pq = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 25), pq)
-    V.ingest_ivfpq_index_versioned(
+    V.ingest_index_versioned(
         emb.filter(F.col("vec_id") >= 25),
         pq,
         manifest_extra={"stream_batch_id": 3},
     )
-    stats = V.rebalance_ivfpq_index_versioned(spark, emb, pq)
+    stats = V.rebalance_index_versioned(spark, pq, emb)
     if stats["cells_split"]:
         assert (
             V.read_ivf_manifest(pq, stats["version"])["stream_batch_id"] == 3
@@ -1622,16 +1622,36 @@ def test_ivfpq_rebalance_refuses_stale_corpus(spark, tmp_path):
     V.build_ivfpq_index_versioned(emb, base)
     pre = _adc_topk(spark, emb, base)
     with pytest.raises(ValueError, match="stale"):
-        V.rebalance_ivfpq_index_versioned(
-            spark, emb.filter(F.col("vec_id") % 2 == 0), base
+        V.rebalance_index_versioned(
+            spark, base, emb.filter(F.col("vec_id") % 2 == 0)
         )
     assert MT.manifest_versions(base) == [1]
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), pre, check_exact=True
     )
     # The complete corpus still rebalances normally afterwards.
-    stats = V.rebalance_ivfpq_index_versioned(spark, emb, base)
+    stats = V.rebalance_index_versioned(spark, base, emb)
     assert stats["cells_split"] >= 1 and stats["version"] == 2
+
+
+def test_rebalance_checks_emb_against_the_manifest_tier(spark, tmp_path):
+    """The latest manifest names the tier, so ``emb`` is checked, never
+    ignored: a cosine store's lists hold the vectors (``emb`` passed is
+    an error), an IVF-PQ store re-encodes from the raw corpus (``emb``
+    missing is an error). Either mismatch raises before anything is
+    staged: no new commit dir, no new version."""
+    import glob
+
+    emb = _emb(spark)
+    cos, pq = str(tmp_path / "cos"), str(tmp_path / "pq")
+    V.build_ivf_index_versioned(emb, cos)
+    V.build_ivfpq_index_versioned(emb, pq)
+    for base, arg, match in ((cos, emb, "pass no emb"), (pq, None, "pass emb")):
+        commits = sorted(glob.glob(os.path.join(base, "data", "commit-*")))
+        with pytest.raises(ValueError, match=match):
+            V.rebalance_index_versioned(spark, base, arg)
+        assert sorted(glob.glob(os.path.join(base, "data", "commit-*"))) == commits
+        assert MT.manifest_versions(base) == [1]
 
 
 def test_compacted_files_stay_id_clustered_for_pruning(spark, tmp_path):
@@ -1647,7 +1667,7 @@ def test_compacted_files_stay_id_clustered_for_pruning(spark, tmp_path):
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 10), base)
     for lo in range(10, 60, 10):
-        V.ingest_ivf_index_versioned(
+        V.ingest_index_versioned(
             emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < lo + 10)),
             base,
         )
@@ -1721,12 +1741,12 @@ def test_ivf_index_history_catalog(spark, tmp_path):
     n_hist = emb.filter(F.col("vec_id") < 25).count()
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    V.ingest_ivf_index_versioned(
+    V.ingest_index_versioned(
         emb.filter(F.col("vec_id") >= 25),
         base,
         manifest_extra={"stream_batch_id": 5},
     )
-    stats = V.rebalance_ivf_index_versioned(spark, base)
+    stats = V.rebalance_index_versioned(spark, base)
     assert stats["cells_split"] >= 1
     victims = [int(r["vec_id"]) for r in emb.select("vec_id").head(2)]
     V.delete_ivf_index_versioned(spark, base, victims)

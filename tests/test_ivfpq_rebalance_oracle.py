@@ -24,8 +24,8 @@ def test_ivf_version_history_matches_oracle(spark, tmp_path):
     split = history_split(emb, "vec_id")
     base = str(tmp_path / "ver")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= split), base)
-    stats = V.rebalance_ivf_index_versioned(spark, base)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= split), base)
+    stats = V.rebalance_index_versioned(spark, base)
     assert stats["cells_split"] >= 1
     got = (
         V.ivf_index_history(spark, base)

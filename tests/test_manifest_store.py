@@ -60,7 +60,7 @@ def test_retry_exhaustion_reraises_and_publishes_nothing(spark, tmp_path):
             MT.publish_manifest(base, v + 1, clone)
 
     with pytest.raises(FileExistsError):
-        V.ingest_ivf_index_versioned(
+        V.ingest_index_versioned(
             emb.filter(F.col("vec_id") >= 25), base, fault=racer, retries=2
         )
     assert steps.count("prepared") == 3 and steps.count("retrying") == 2

@@ -66,7 +66,7 @@ def test_streamed_ingest_is_exactly_once_and_batch_invariant(spark, tmp_path):
     # Batch-invariance: bit-equal to the one-shot build-then-ingest.
     ref = str(tmp_path / "ref")
     V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 25), ref)
-    V.ingest_ivf_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
     pd.testing.assert_frame_equal(
         _topk(spark, base), _topk(spark, ref), check_exact=True
     )
@@ -172,7 +172,7 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
 
     base = str(tmp_path / "pq")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 25), base)
-    AI.run_versioned_ivfpq_ingest_stream(
+    AI.run_versioned_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt1")
     )
     assert MT.manifest_versions(base) == [1, 2, 3, 4]
@@ -184,7 +184,7 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
 
     ref = str(tmp_path / "ref")
     V.build_ivfpq_index_versioned(emb.filter(F.col("vec_id") < 25), ref)
-    V.ingest_ivfpq_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
+    V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 25), ref)
 
     def _serve(path):
         return (
@@ -201,7 +201,7 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
     import os
 
     before = set(globmod.glob(os.path.join(base, "data", "commit-*")))
-    AI.run_versioned_ivfpq_ingest_stream(
+    AI.run_versioned_ingest_stream(
         spark, arrivals, base, str(tmp_path / "ckpt2")
     )
     assert MT.manifest_versions(base) == [1, 2, 3, 4]
