@@ -11,7 +11,9 @@ read one walk of the physical plan's nodes (:func:`plan_nodes`): the
 shapes are looked for in every node, cached subplans and subqueries
 included; the count takes only the query's own shuffle exchanges, so a
 broadcast or reused exchange is not a shuffle and a cached frame's
-shuffles are not counted again in every query that scans it.
+shuffles are not counted again in every query that scans it. Every
+query is planned after ``release_persisted()``, so its counts do not
+depend on which queries ran before it.
 
 Usage::
 
@@ -219,6 +221,7 @@ def main() -> int:
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
 
     from sressentials_spark import loggen
+    from sressentials_spark.artifacts import release_persisted
     from sressentials_spark.catalog import QUERIES
     from sressentials_spark.session import get_spark
 
@@ -231,6 +234,10 @@ def main() -> int:
     shapes = ["Expand", "CartesianProduct", "BroadcastNestedLoopJoin"]
     violations: list[str] = []
     for name, fn in sorted(QUERIES.items()):
+        # Each query plans over a cold cache, as in the driver gate: a
+        # frame an earlier query materialized has a known size, which
+        # can turn this query's shuffle join into a broadcast one.
+        release_persisted()
         try:
             df = fn(spark, sf_dir)
             nodes = plan_nodes(df)

@@ -39,6 +39,7 @@ from sressentials_spark.operators import pipeline as P
 from sressentials_spark.operators import ivf_versioned as IV
 from sressentials_spark.operators.maintenance import manifest_versions
 from sressentials_spark.operators import similarity as S
+from sressentials_spark.operators.linalg import _plane_matrix
 from sressentials_spark.operators import rangejoin as _RJ
 from sressentials_spark.operators import rownum as _RN
 from sressentials_spark.operators import sketch as K
@@ -884,10 +885,11 @@ SELECT * FROM (
 }
 
 
-def _emb_lsh_oracle(threshold: float) -> str:
-    """Banded hyperplane-LSH near-dup oracle: identical 128 planes, band
-    split, candidate join, and exact-cosine verification as
-    ``dedup.embedding_near_dup_lsh``.
+def _emb_bands_ctes(nb_cols: str = "", band_cols: str = "") -> str:
+    """``WITH nb AS (...), bands AS (...),`` — the sign-band rows
+    ``(vec_id, <band_cols>i, val)`` of ``dedup._signed_vectors``: the
+    identical 128 planes and band split, with ``nb_cols`` /
+    ``band_cols`` extra columns in each CTE.
 
     Projections are unrolled to ``0.0 + e[1] - e[2] + ...`` chains: the
     plane weights are all ±1, and IEEE ``a - b`` == ``a + (-1.0 * b)``
@@ -895,13 +897,12 @@ def _emb_lsh_oracle(threshold: float) -> str:
     kernel's per-dimension fold while keeping the SQL ~7x smaller and
     far faster than a per-row list comprehension."""
     bands, bits = D.EMB_LSH_BANDS, D.EMB_LSH_BAND_BITS
-    weights = S.lsh_plane_weights(bands * bits)
+    weights = _plane_matrix(bands * bits, D.DEFAULT_DIM)
 
     def proj(p: int) -> str:
-        row = weights[p]
         terms = "".join(
             f" {'+' if w > 0 else '-'} CAST(embedding[{i + 1}] AS DOUBLE)"
-            for i, w in enumerate(row)
+            for i, w in enumerate(weights[p])
         )
         return f"(0.0{terms})"
 
@@ -918,10 +919,17 @@ def _emb_lsh_oracle(threshold: float) -> str:
         + " ".join(f"WHEN {b} THEN bv{b}" for b in range(bands))
         + " END"
     )
+    return f"""WITH nb AS (SELECT vec_id, {nb_cols}{', '.join(bv_defs)} FROM embeddings),
+bands AS (SELECT vec_id, {band_cols}i, {case_val} AS val
+          FROM nb, generate_series(0, {bands - 1}) AS gs(i)),"""
+
+
+def _emb_lsh_oracle(threshold: float) -> str:
+    """Banded hyperplane-LSH near-dup oracle: the sign bands, candidate
+    join, and exact-cosine verification of
+    ``dedup.embedding_near_dup_lsh``."""
     return f"""
-WITH nb AS (SELECT vec_id, {', '.join(bv_defs)} FROM embeddings),
-bands AS (SELECT vec_id, i, {case_val} AS val
-          FROM nb, generate_series(0, {bands - 1}) AS gs(i)),
+{_emb_bands_ctes()}
 cand AS (SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
          FROM bands a JOIN bands b
            ON a.i = b.i AND a.val = b.val AND a.vec_id < b.vec_id)
@@ -1052,7 +1060,7 @@ GROUP BY e.query_id
 
 def _lsh_proj_sql(vec: str, p: int, planes: int | None = None) -> str:
     """Raw fold-exact projection of ``vec`` onto hyperplane ``p``."""
-    row = S.lsh_plane_weights(planes or S.LSH_PLANES)[p]
+    row = _plane_matrix(planes or S.LSH_PLANES, D.DEFAULT_DIM)[p]
     warr = "[" + ", ".join(str(w) for w in row) + "]::DOUBLE[]"
     return (
         f"list_sum([CAST({vec}[i] AS DOUBLE) * ({warr})[i] "
@@ -1138,8 +1146,9 @@ def sim_cosine_topk_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFram
     query-side knob — no rebuild); fan-in 4/64 of the corpus, the same
     expected cost as a single-probe 4-plane index but with higher
     recall (measured by ``sim_lsh_multiprobe_recall_at_k``)."""
-    return S.cosine_topk_lsh_multiprobe(
-        load_table(spark, sf_dir, "embeddings"), _TOPK_QUERY_IDS, k=10
+    return S.cosine_topk_lsh(
+        load_table(spark, sf_dir, "embeddings"), _TOPK_QUERY_IDS, k=10,
+        nprobe=S.MULTIPROBE_PROBES,
     )
 
 
@@ -2485,14 +2494,14 @@ def _streamed_ivf_ingest_path(spark: SparkSession, sf_dir: str) -> str:
         from sressentials_spark.streaming import ann_ingest as AI
         from sressentials_spark.streaming import stage_arrivals
 
-        stage = stage_arrivals(
-            emb.filter(F.col("vec_id") >= split).select("vec_id", "embedding"),
-            3,
-            "vec_id",
-        )
+        # v1 keeps the arrivals' columns: a store whose commits write
+        # different columns reads back with the schema of whichever file
+        # the scan samples, so its plan would change from run to run.
+        rows = emb.select("vec_id", "embedding")
+        stage = stage_arrivals(rows.filter(F.col("vec_id") >= split), 3, "vec_id")
         arrivals = f"{stage}/arrivals"
         base = scratch_dir("sressentials_ivf_streamed_")
-        IV.build_ivf_index_versioned(emb.filter(F.col("vec_id") < split), base)
+        IV.build_ivf_index_versioned(rows.filter(F.col("vec_id") < split), base)
         AI.run_versioned_ingest_stream(spark, arrivals, base)
         if AI.committed_stream_batch(base) < 0:
             raise ValueError("stream committed no stamped version")
@@ -4850,7 +4859,7 @@ def sim_lsh_multiprobe_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFram
         "query_id", "neighbor_id"
     )
     multi = (
-        S.cosine_topk_lsh_multiprobe(emb, _RECALL_QUERY_IDS, k=10)
+        S.cosine_topk_lsh(emb, _RECALL_QUERY_IDS, k=10, nprobe=S.MULTIPROBE_PROBES)
         .select("query_id", "neighbor_id")
         .withColumn("mhit", F.lit(1))
     )
@@ -6613,38 +6622,12 @@ def events_cumulative_distinct_users(
 
 def _emb_decon_oracle(threshold: float) -> str:
     """Asymmetric (corpus x benchmark) restatement of
-    ``dedup.embedding_decontaminate`` — same unrolled plane
-    projections as ``_emb_lsh_oracle``, with the benchmark flag
-    ``vec_id % 20 = 0`` and a per-corpus-vector hit rollup."""
-    bands, bits = D.EMB_LSH_BANDS, D.EMB_LSH_BAND_BITS
-    weights = S.lsh_plane_weights(bands * bits)
-
-    def proj(p: int) -> str:
-        row = weights[p]
-        terms = "".join(
-            f" {'+' if w > 0 else '-'} CAST(embedding[{i + 1}] AS DOUBLE)"
-            for i, w in enumerate(row)
-        )
-        return f"(0.0{terms})"
-
-    bv_defs = []
-    for b in range(bands):
-        terms = [
-            f"CASE WHEN {proj(b * bits + j)} > 0 THEN CAST({1 << j} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END"
-            for j in range(bits)
-        ]
-        bv_defs.append("(" + " + ".join(terms) + f") AS bv{b}")
-    case_val = (
-        "CASE i "
-        + " ".join(f"WHEN {b} THEN bv{b}" for b in range(bands))
-        + " END"
-    )
+    ``dedup.embedding_decontaminate`` — the sign bands of
+    ``_emb_lsh_oracle``, with the benchmark flag ``vec_id % 20 = 0``
+    and a per-corpus-vector hit rollup."""
+    flag = "(vec_id % 20 = 0) AS is_bench,\n                   "
     return f"""
-WITH nb AS (SELECT vec_id, (vec_id % 20 = 0) AS is_bench,
-                   {', '.join(bv_defs)} FROM embeddings),
-bands AS (SELECT vec_id, is_bench, i, {case_val} AS val
-          FROM nb, generate_series(0, {bands - 1}) AS gs(i)),
+{_emb_bands_ctes(flag, "is_bench, ")}
 cand AS (SELECT DISTINCT c.vec_id AS corpus_id, b.vec_id AS bench_id
          FROM bands c JOIN bands b
            ON c.i = b.i AND c.val = b.val

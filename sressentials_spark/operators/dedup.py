@@ -1,14 +1,26 @@
 """Near-duplicate detection operators for training-data pipelines.
 
-Four detectors over a ``documents``-shaped table, all pure column
-expressions (whole-stage codegen; the only Python is plan assembly):
+Detectors over a ``documents``-shaped table (and an ``embeddings``
+table), all pure column expressions (whole-stage codegen; the only
+Python is plan assembly and the one Arrow signing kernel):
 
 * **exact** — content-hash groupBy (:mod:`.text`);
 * **n-gram Jaccard** — exact pairwise similarity via a shingle
   inverted-index join (optionally document-frequency-capped);
-* **SimHash** — 48-bit signatures + banded Hamming-LSH candidate join;
-* **MinHash + LSH** — banded minhash signatures for candidate
-  generation, exact-Jaccard verification.
+* **banded LSH** — one core for every approximate detector: a
+  signature is cut into band keys (:func:`band_rows`), rows sharing a
+  full band bucket become bare-id candidates (:func:`_band_pairs`),
+  and only candidates pay an exact verification. Its instances:
+
+  - **MinHash** — 12 bands × 2 minhash rows, hot buckets capped
+    (:func:`_cap_buckets`), exact-Jaccard verify (batch pairs and
+    both ingest triages);
+  - **SimHash** — 48-bit signature, 4 × 12-bit bands, the signature
+    rides the band join into an exact Hamming filter;
+  - **embedding cosine** — 16 × 8 hyperplane sign bits per vector,
+    exact fold-cosine verify (:func:`embedding_near_dup_lsh`, and
+    :func:`embedding_decontaminate` with the benchmark side
+    broadcast).
 
 Every hash is derived from ``md5`` (``conv(substr(md5(x),1,15),16,10)``
 → the same 60-bit integer DuckDB computes with
@@ -100,6 +112,9 @@ MINHASH_ID = "doc_id"
 #: A flat band row's key: the band join's equi-join key and the
 #: bucketed index's bucket key.
 BAND_KEYS = ["band"] + [f"r{r}" for r in range(MINHASH_ROWS)]
+#: The key of a sign band (SimHash, embedding hyperplanes): one long of
+#: packed sign bits per band.
+SIGN_BAND_KEYS = ["band", "r0"]
 
 
 def minhash_params(num_hashes: int = MINHASH_HASHES) -> list[tuple[int, int]]:
@@ -215,6 +230,52 @@ def ngram_jaccard_pairs(
 
 
 # --------------------------------------------------------------------------
+# Banded LSH: the candidate core of every approximate detector
+# --------------------------------------------------------------------------
+
+def band_rows(
+    frame: DataFrame, id_col: str, bands: list[list[Column]], *ride: str
+) -> DataFrame:
+    """One ``(id, *ride, band, r0, r1, ...)`` row per band of each row
+    of ``frame``: band ``b``'s key columns are ``bands[b]``. The band
+    join's native key layout, and (unlike a struct column) directly
+    bucketable by ``write_bucketed``."""
+    structs = [
+        F.struct(F.lit(b).alias("band"), *[c.alias(f"r{r}") for r, c in enumerate(cols)])
+        for b, cols in enumerate(bands)
+    ]
+    return frame.select(F.col(id_col), *ride, F.inline(F.array(*structs)))
+
+
+def _band_pairs(
+    a: DataFrame,
+    b: DataFrame,
+    keys: list[str] = BAND_KEYS,
+    *,
+    id_col: str = MINHASH_ID,
+    pair: tuple[str, str] = ("doc_a", "doc_b"),
+    ride: tuple[str, ...] = (),
+    ordered: bool = True,
+) -> DataFrame:
+    """Candidate ``pair`` rows — an ``id_col`` of ``a`` and one of
+    ``b`` — sharing a full band bucket on ``keys`` (one row per shared
+    band), with ``pair[0] < pair[1]`` when ``ordered``. Candidates
+    travel as bare id pairs: only the ``ride`` columns go with them, as
+    ``{c}_a`` / ``{c}_b``. Bucket caps and verification are the
+    caller's steps."""
+    x, y = pair
+
+    def side(f: DataFrame, name: str, s: str) -> DataFrame:
+        rides = [F.col(c).alias(f"{c}_{s}") for c in ride]
+        return f.select(*keys, F.col(id_col).alias(name), *rides)
+
+    out = side(a, x, "a").join(side(b, y, "b"), keys)
+    if ordered:
+        out = out.filter(F.col(x) < F.col(y))
+    return out.select(x, y, *[f"{c}_{s}" for s in "ab" for c in ride])
+
+
+# --------------------------------------------------------------------------
 # SimHash
 # --------------------------------------------------------------------------
 
@@ -279,39 +340,21 @@ def simhash_pairs(
         lambda: tracked_persist(simhash_signatures(docs, id_col)),
     )
     mask = (1 << SIMHASH_BAND_BITS) - 1
-    bands = sig.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("simhash", i * SIMHASH_BAND_BITS)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("val"),
-                    )
-                    for i in range(SIMHASH_BANDS)
-                ]
-            )
-        ).alias("bv"),
+    bands = band_rows(
+        sig,
+        id_col,
+        [
+            [F.shiftright("simhash", i * SIMHASH_BAND_BITS).bitwiseAND(F.lit(mask))]
+            for i in range(SIMHASH_BANDS)
+        ],
+        "simhash",
     )
-    cand = (
-        bands.alias("a")
-        .join(
-            bands.alias("b"),
-            (F.col("a.bv") == F.col("b.bv"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a.simhash").alias("sim_a"),
-            F.col("b.simhash").alias("sim_b"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+    # The one-long signature rides the band join, so the Hamming check
+    # needs no lookup join after the candidate distinct.
+    cand = _band_pairs(
+        bands, bands, SIGN_BAND_KEYS, id_col=id_col, ride=("simhash",)
+    ).distinct()
+    ham = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return cand.select(
         "doc_a", "doc_b", ham.cast("int").alias("hamming")
     ).filter(F.col("hamming") <= max_hamming)
@@ -374,20 +417,15 @@ def minhash_tables(
 
 
 def band_rows_flat(sig: DataFrame) -> DataFrame:
-    """One (id, band, r0, r1) row per band of a signature table — the
-    band join's native key layout, and (unlike a struct column)
-    directly bucketable by ``write_bucketed``."""
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band"),
-            *[
-                F.col(f"s{bi * MINHASH_ROWS + r + 1}").alias(f"r{r}")
-                for r in range(MINHASH_ROWS)
-            ],
-        )
-        for bi in range(MINHASH_BANDS)
-    ]
-    return sig.select(F.col(MINHASH_ID), F.inline(F.array(*band_structs)))
+    """The (id, band, r0, r1) band rows of a minhash signature table."""
+    return band_rows(
+        sig,
+        MINHASH_ID,
+        [
+            [F.col(f"s{bi * MINHASH_ROWS + r + 1}") for r in range(MINHASH_ROWS)]
+            for bi in range(MINHASH_BANDS)
+        ],
+    )
 
 
 @dataclass(frozen=True)
@@ -434,19 +472,6 @@ def _cap_buckets(*bands: DataFrame) -> list[DataFrame]:
         .select(*BAND_KEYS)
     )
     return [b.join(F.broadcast(over), BAND_KEYS, "left_anti") for b in bands]
-
-
-def _band_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Candidate ``(doc_a, doc_b)`` pairs, ``doc_a < doc_b``, sharing a
-    full band bucket (one row per shared band). Candidates travel as
-    bare id pairs — signatures and shingles never ride the band
-    join."""
-    return (
-        a.select(*BAND_KEYS, F.col(MINHASH_ID).alias("doc_a"))
-        .join(b.select(*BAND_KEYS, F.col(MINHASH_ID).alias("doc_b")), BAND_KEYS)
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
 
 
 def _verify(cand: DataFrame, a: MinhashSide, b: MinhashSide) -> DataFrame:
@@ -654,165 +679,110 @@ def embedding_cosine_pairs(
 #: bands so parity is exact, and emitted pairs are exactly verified.
 EMB_LSH_BANDS = 16
 EMB_LSH_BAND_BITS = 8
+#: Id column of the embedding detectors' vectors (their dimension is
+#: DEFAULT_DIM).
+EMB_ID = "vec_id"
 
 
-def embedding_near_dup_lsh(
-    emb: DataFrame,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    dim: int = DEFAULT_DIM,
-    bands: int = EMB_LSH_BANDS,
-    band_bits: int = EMB_LSH_BAND_BITS,
-) -> DataFrame:
-    """Banded-LSH embedding near-dup pairs with exact cosine verify.
+def _signed_vectors(emb: DataFrame, *cols: str) -> tuple[DataFrame, DataFrame]:
+    """The ``(EMB_ID, *cols, embedding, norm)`` vectors of ``emb`` and
+    their ``(EMB_ID, *cols, band, r0)`` sign-band rows.
 
-    The scale path replacing :func:`embedding_cosine_pairs` — the same
-    shape as the MinHash pipeline (candidates from a bucketed
-    equi-join, bare-id pairs, relational verification):
-
-    1. one Arrow-kernel pass signs all ``bands*band_bits`` hyperplane
-       projections into ``bands`` packed long band values per vector
-       (:func:`sressentials_spark.operators.linalg.norm_bands_kernel` —
-       signatures wider than 64 bits can't live in one long);
-    2. the band array explodes to ``(id, band, val)`` rows;
-    3. candidates come from a self-equi-join on ``(band, val)`` —
-       shuffle keyed on band values, fan-in corpus/2^band_bits per
-       band bucket — deduped as bare-id pairs;
-    4. each candidate pair is verified with the exact fold cosine
-       against the corpus (two hash joins), keeping only
-       ``cosine >= threshold``.
-
-    Candidate recall is < 1 by LSH design (see the band constants);
-    every emitted pair is exactly verified, so precision is 1.
-    """
+    One Arrow-kernel pass
+    (:func:`sressentials_spark.operators.linalg.norm_bands_kernel`)
+    computes each vector's fold-exact norm and packs its
+    ``EMB_LSH_BANDS * EMB_LSH_BAND_BITS`` hyperplane signs into one
+    long per band — signatures wider than 64 bits can't live in one
+    long. The vectors are persisted: they feed both band-join sides and
+    both verify lookups, and each unpersisted consumer would re-run the
+    kernel over the whole corpus."""
     from sressentials_spark.operators import linalg
 
-    # (id, band, val) rows are persisted: they feed both sides of the
-    # candidate self-join, and each unpersisted side would re-run the
-    # 128-projection Arrow kernel over the whole corpus.
-    sig = emb.withColumn(
-        "_nb", linalg.norm_bands_kernel(bands, band_bits)(F.col("embedding"))
-    ).select(id_col, F.col("_nb.bands").alias("bands"))
-    exploded = tracked_persist(
-        sig.select(id_col, F.posexplode("bands").alias("band", "val"))
-    )
-    a, b = exploded.alias("a"), exploded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("vec_a"),
-            F.col(f"b.{id_col}").alias("vec_b"),
-        )
-        .distinct()
-    )
-    # Persisted: the norm-annotated corpus feeds BOTH verification
-    # joins (x and y sides); unpersisted, each side would re-run the
-    # norm pass over the whole corpus (same treatment as the minhash
-    # pipeline's shared subplans).
-    n = tracked_persist(
-        with_norm(emb, dim=dim).select(
-            F.col(id_col), F.col("embedding"), F.col("norm")
+    nb = linalg.norm_bands_kernel(EMB_LSH_BANDS, EMB_LSH_BAND_BITS)(F.col("embedding"))
+    signed = tracked_persist(
+        emb.withColumn("_nb", nb).select(
+            EMB_ID, *cols, "embedding", F.col("_nb.norm").alias("norm"),
+            F.col("_nb.bands").alias("bands"),
         )
     )
-    cos = linalg.dot(F.col("x.embedding"), F.col("y.embedding"), dim) / (
-        F.col("x.norm") * F.col("y.norm")
+    bands = band_rows(
+        signed, EMB_ID, [[F.col("bands")[b]] for b in range(EMB_LSH_BANDS)], *cols
+    )
+    return signed, bands
+
+
+def _cosine_verify(
+    cand: DataFrame, a: DataFrame, b: DataFrame, threshold: float
+) -> DataFrame:
+    """The two-id candidate rows with their exact fold cosine, keeping
+    ``cosine >= threshold``: the first id is looked up in the
+    ``(EMB_ID, embedding, norm)`` vectors ``a``, the second in ``b``
+    (two hash joins)."""
+    from sressentials_spark.operators import linalg
+
+    x, y = cand.columns
+    cos = linalg.dot(F.col("a.embedding"), F.col("b.embedding"), DEFAULT_DIM) / (
+        F.col("a.norm") * F.col("b.norm")
     )
     return (
-        cand.join(n.alias("x"), F.col("vec_a") == F.col(f"x.{id_col}"))
-        .join(n.alias("y"), F.col("vec_b") == F.col(f"y.{id_col}"))
-        .select("vec_a", "vec_b", cos.alias("cosine"))
+        cand.join(a.alias("a"), F.col(x) == F.col(f"a.{EMB_ID}"))
+        .join(b.alias("b"), F.col(y) == F.col(f"b.{EMB_ID}"))
+        .select(x, y, cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
     )
 
 
+def embedding_near_dup_lsh(emb: DataFrame, threshold: float = 0.4) -> DataFrame:
+    """Banded-LSH embedding near-dup pairs ``(vec_a, vec_b, cosine)``
+    with exact cosine verify — the scale path replacing
+    :func:`embedding_cosine_pairs`: candidates from the sign-band
+    self-join (shuffle keyed on band values, fan-in
+    corpus/2^EMB_LSH_BAND_BITS per band bucket), deduped as bare-id
+    pairs, each exactly re-scored. Candidate recall is < 1 by LSH
+    design (see the band constants); precision is 1."""
+    signed, bands = _signed_vectors(emb)
+    cand = _band_pairs(
+        bands, bands, SIGN_BAND_KEYS, id_col=EMB_ID, pair=("vec_a", "vec_b")
+    ).distinct()
+    return _cosine_verify(cand, signed, signed, threshold)
+
+
 def embedding_decontaminate(
-    emb: DataFrame,
-    is_benchmark: Column,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    dim: int = DEFAULT_DIM,
-    bands: int = EMB_LSH_BANDS,
-    band_bits: int = EMB_LSH_BAND_BITS,
+    emb: DataFrame, is_benchmark: Column, threshold: float = 0.4
 ) -> DataFrame:
     """Embedding-space decontamination: corpus vectors too close to a
-    held-out benchmark set.
+    held-out benchmark set (the rows where ``is_benchmark`` holds).
 
     The n-gram decontaminator (curation.decontaminate) misses
     paraphrased leakage; this is its embedding-space complement — the
     second gate a training corpus passes before a benchmark score can
-    be trusted. Same asymmetric shape as the incremental-ingest triage:
-    the big side is the corpus, the small side the benchmark, and
-    all-pairs never materializes:
+    be trusted. Corpus and benchmark share the projection planes; the
+    candidates are unordered corpus×benchmark pairs from the sign-band
+    join with the BENCHMARK side broadcast (benchmark suites are
+    thousands of rows, so the corpus band rows never shuffle), exactly
+    re-scored, and the hits aggregate per corpus vector.
 
-    1. one Arrow pass signs the banded hyperplane signatures for ALL
-       vectors (corpus + benchmark share the projection planes);
-    2. candidates come from a (band, val) equi-join where the
-       BENCHMARK side broadcasts — benchmark suites are thousands of
-       rows, so the corpus band rows never shuffle;
-    3. candidates are exactly re-scored with the fold cosine; hits
-       aggregate per corpus vector.
-
-    Returns ``(id_col, n_benchmark_hits, max_cosine)`` for flagged
+    Returns ``(vec_id, n_benchmark_hits, max_cosine)`` for flagged
     corpus vectors only — the drop list (or audit queue). Recall is
     bounded by LSH band collision (same constants and caveat as
     :func:`embedding_near_dup_lsh`); precision is 1 (exact verify).
     """
-    from sressentials_spark.operators import linalg
-
-    flagged = emb.withColumn("_bench", is_benchmark)
-    sig = flagged.withColumn(
-        "_nb", linalg.norm_bands_kernel(bands, band_bits)(F.col("embedding"))
-    ).select(id_col, "_bench", F.col("_nb.bands").alias("bands"))
-    exploded = tracked_persist(
-        sig.select(
-            id_col, "_bench", F.posexplode("bands").alias("band", "val")
-        )
+    signed, bands = _signed_vectors(emb.withColumn("_bench", is_benchmark), "_bench")
+    bench = F.col("_bench")
+    cand = _band_pairs(
+        bands.filter(~bench),
+        F.broadcast(bands.filter(bench)),
+        SIGN_BAND_KEYS,
+        id_col=EMB_ID,
+        pair=("vec_a", "vec_b"),
+        ordered=False,
+    ).distinct()
+    hits = _cosine_verify(
+        cand, signed.filter(~bench), F.broadcast(signed.filter(bench)), threshold
     )
-    corp = exploded.filter(~F.col("_bench")).select(
-        F.col(id_col).alias("corpus_id"), "band", "val"
-    )
-    bench = exploded.filter(F.col("_bench")).select(
-        F.col(id_col).alias("bench_id"), "band", "val"
-    )
-    cand = (
-        corp.join(F.broadcast(bench), ["band", "val"])
-        .select("corpus_id", "bench_id")
-        .distinct()
-    )
-    n = tracked_persist(
-        with_norm(flagged, dim=dim).select(
-            F.col(id_col), F.col("_bench"), F.col("embedding"), F.col("norm")
-        )
-    )
-    cos = linalg.dot(F.col("x.embedding"), F.col("y.embedding"), dim) / (
-        F.col("x.norm") * F.col("y.norm")
-    )
-    hits = (
-        cand.join(
-            n.filter(~F.col("_bench")).alias("x"),
-            F.col("corpus_id") == F.col(f"x.{id_col}"),
-        )
-        .join(
-            F.broadcast(n.filter(F.col("_bench")).alias("y")),
-            F.col("bench_id") == F.col(f"y.{id_col}"),
-        )
-        .select("corpus_id", "bench_id", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-    return (
-        hits.groupBy("corpus_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_benchmark_hits"),
-            F.max("cosine").alias("max_cosine"),
-        )
-        .select(
-            F.col("corpus_id").alias(id_col), "n_benchmark_hits", "max_cosine"
-        )
+    return hits.groupBy(F.col("vec_a").alias(EMB_ID)).agg(
+        F.count(F.lit(1)).alias("n_benchmark_hits"),
+        F.max("cosine").alias("max_cosine"),
     )
 
 

@@ -49,13 +49,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-#: Return types as DataType objects — a DDL string would be parsed at
-#: decoration time, which requires an active SparkSession (imports of
-#: this module must work session-free).
-_NB_TYPE = StructType(
-    [StructField("norm", DoubleType()), StructField("bucket", LongType())]
-)
-
 #: Above this dimension, unrolled expression chains give way to the
 #: Arrow kernels. Two costs bound the cutoff: generated methods fall
 #: out of JIT-compilable territory (round-1 lesson), and — measured in
@@ -122,8 +115,9 @@ def norm_arrow(v: pd.Series) -> pd.Series:
 
 @lru_cache(maxsize=8)
 def _plane_matrix(planes: int, dim: int) -> np.ndarray:
-    """(planes, dim) ±1 hyperplane weights — md5-derived, deterministic
-    (same derivation as ``similarity.lsh_plane_weights``)."""
+    """(planes, dim) ±1 hyperplane weights, derived from md5 parity so
+    an external engine can rebuild the identical planes (the DuckDB
+    oracles embed them as literals)."""
     import hashlib
 
     out = np.empty((planes, dim), dtype=np.float64)
@@ -134,42 +128,16 @@ def _plane_matrix(planes: int, dim: int) -> np.ndarray:
     return out
 
 
-def norm_bucket_kernel(planes: int):
-    """Factory: Arrow kernel computing ``struct<norm, bucket>`` per vector.
-
-    The bucket is the sign-bit signature under the deterministic ±1
-    hyperplanes: bit ``p`` set iff the fold-exact projection onto plane
-    ``p`` is ``> 0`` — the arithmetic the DuckDB oracle states as
-    ``CASE WHEN list_sum([...]) > 0 THEN 1<<p``, one matrix pass per
-    batch.
-    """
-
-    @pandas_udf(_NB_TYPE)
-    def f(v: pd.Series) -> pd.DataFrame:
-        V = _stack(v)
-        n = V.shape[0]
-        if n == 0:
-            return pd.DataFrame(
-                {"norm": pd.Series(dtype=np.float64), "bucket": pd.Series(dtype=np.int64)}
-            )
-        W = _plane_matrix(planes, V.shape[1])
-        bucket = np.zeros(n, dtype=np.int64)
-        for p in range(planes):
-            proj = _fold_dot(V, np.broadcast_to(W[p], V.shape))
-            bucket = bucket + np.where(proj > 0, np.int64(1 << p), np.int64(0))
-        return pd.DataFrame({"norm": np.sqrt(_fold_dot(V, V)), "bucket": bucket})
-
-    return f
-
-
 def norm_bands_kernel(bands: int, band_bits: int):
     """Factory: Arrow kernel computing ``struct<norm, bands>`` per vector.
 
-    Like :func:`norm_bucket_kernel` but for signatures wider than one
-    long: ``bands * band_bits`` hyperplane sign bits are packed into
-    ``bands`` separate long values (band ``b`` bit ``j`` is plane
+    ``bands * band_bits`` hyperplane sign bits are packed into
+    ``bands`` long values: band ``b`` bit ``j`` is plane
     ``b * band_bits + j``, set iff the fold-exact projection is
-    ``> 0``). One matrix pass per Arrow batch; any dimension.
+    ``> 0`` — the arithmetic the DuckDB oracles state as
+    ``CASE WHEN <projection> > 0 THEN 1 << j``. One matrix pass per
+    Arrow batch; any dimension. A single LSH bucket of ``planes`` bits
+    is band 0 of ``norm_bands_kernel(1, planes)``.
     """
     ret = StructType(
         [

@@ -6,8 +6,11 @@
   The correctness baseline; one shuffle (the window partition by query
   id), corpus scanned once.
 * :func:`cosine_topk_lsh` — the scale path: random-hyperplane LSH
-  buckets (sign-bit signature from deterministic ±1 planes) so each
-  query only scores its own bucket. Recall < 1 by design; the planes
+  buckets (sign-bit signature from deterministic ±1 planes, band 0 of
+  the one sign-band kernel the banded near-dup detectors use) so each
+  query scores only its ``nprobe`` most promising buckets: its own
+  (``nprobe=1``, the single-probe index) plus the buckets across its
+  lowest-margin planes (multi-probe). Recall < 1 by design; the planes
   are md5-derived so the result is bit-reproducible in SQL.
 
 Execution-shape notes (rounds 1-2 both lost time here):
@@ -18,7 +21,7 @@ Execution-shape notes (rounds 1-2 both lost time here):
   array HOFs (``aggregate``/``zip_with``) evaluate per element in the
   expression interpreter (~3 ms per 64-dim dot in round 1).
 * The whole-corpus norm+bucket projection uses the Arrow kernel
-  (:func:`sressentials_spark.operators.linalg.norm_bucket_kernel`)
+  (:func:`sressentials_spark.operators.linalg.norm_bands_kernel`)
   instead: one ``(n, dim)`` float64 matrix pass per batch, fold-exact
   per row. Round 2 unrolled norm + 6 plane projections into one
   ~3000-node expression tree; it stayed codegen'd but never reached
@@ -45,7 +48,12 @@ from pyspark.sql import functions as F
 from sressentials_spark.artifacts import get_or_build, tracked_persist
 from sressentials_spark.operators.dedup import DEFAULT_DIM, md5_long, with_norm
 from sressentials_spark.localrel import local_df
-from sressentials_spark.operators.linalg import dot, ivf_cells_kernel, norm_bucket_kernel
+from sressentials_spark.operators.linalg import (
+    _plane_matrix,
+    dot,
+    ivf_cells_kernel,
+    norm_bands_kernel,
+)
 
 #: Number of hyperplanes (sign bits) for the LSH bucketing.
 LSH_PLANES = 6
@@ -59,39 +67,26 @@ IVF_NPROBE = 4
 IVF_SEED = "ivf-v1"
 
 
-def lsh_plane_weights(planes: int = LSH_PLANES, dim: int = DEFAULT_DIM) -> list[list[float]]:
-    """Deterministic ±1 hyperplane weights, derived from md5 parity so
-    an external engine can rebuild the identical planes (the DuckDB
-    oracle embeds them as literals; the Arrow kernel re-derives the
-    same matrix per batch dimension)."""
-    from sressentials_spark.operators.linalg import _plane_matrix
-
-    return [list(row) for row in _plane_matrix(planes, dim)]
-
-
 def attach_norm_bucket(
-    emb: DataFrame,
-    vec_col: str = "embedding",
-    planes: int = LSH_PLANES,
-    dim: int = DEFAULT_DIM,
+    emb: DataFrame, vec_col: str = "embedding", planes: int = LSH_PLANES
 ) -> DataFrame:
-    """Attach ``norm`` and ``bucket`` via the Arrow kernel.
+    """Attach ``norm`` and ``bucket`` via the Arrow kernel: the bucket
+    is the one band of ``norm_bands_kernel(1, planes)``.
 
     This is a whole-corpus projection — every vector pays norm + all
     ``planes`` projections — so it uses the vectorized pandas-UDF path
     (:mod:`sressentials_spark.operators.linalg`): one ``(n, dim)``
     matrix pass per Arrow batch, fold-exact per row, constant-size
-    plan for any dimension. The unrolled expression form of the same
-    arithmetic (round 2) cost ~50 µs/row even codegen'd — a 3000-node
-    tree never reaches JIT-optimal code — and was hardwired to
-    ``dim`` = 64. ``dim`` is accepted for signature parity but the
-    kernel derives the true width from each batch.
+    plan for any dimension (the kernel reads the width from each
+    batch). The unrolled expression form of the same arithmetic
+    (round 2) cost ~50 µs/row even codegen'd — a 3000-node tree never
+    reaches JIT-optimal code — and was hardwired to ``dim`` = 64.
     """
-    nb = norm_bucket_kernel(planes)(F.col(vec_col))
+    nb = norm_bands_kernel(1, planes)(F.col(vec_col))
     return emb.withColumn("_nb", nb).select(
         *emb.columns,
         F.col("_nb.norm").alias("norm"),
-        F.col("_nb.bucket").alias("bucket"),
+        F.col("_nb.bands")[0].alias("bucket"),
     )
 
 
@@ -410,57 +405,6 @@ def _ivf_query(
     )
 
 
-def cosine_topk_lsh(
-    emb: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    id_col: str = "vec_id",
-    dim: int = DEFAULT_DIM,
-    planes: int = LSH_PLANES,
-) -> DataFrame:
-    """Approximate top-k: score only vectors in the query's LSH bucket.
-
-    ``planes`` sizes the index (expected fan-in = corpus / 2^planes);
-    the recall eval uses a 4-plane instance as the equal-fan-in
-    baseline for the 6-plane × 4-probe multi-probe variant."""
-    corpus = _cached_corpus(
-        emb,
-        "bucket",
-        (planes, dim),
-        lambda: attach_norm_bucket(emb, planes=planes, dim=dim),
-    )
-    queries = _collect_queries(
-        corpus, query_ids, id_col, [id_col, "embedding", "norm", "bucket"]
-    ).select(
-        F.col(id_col).alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.col("norm").alias("qnorm"),
-        F.col("bucket").alias("qb"),
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(
-            corpus,
-            (F.col("qb") == F.col("bucket")) & (F.col("query_id") != F.col(id_col)),
-        )
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            (
-                dot(F.col("qv"), F.col("embedding"), dim)
-                / (F.col("qnorm") * F.col("norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
-
-
 #: Multi-probe geometry: total buckets probed per query (own bucket +
 #: ``MULTIPROBE_PROBES - 1`` single-bit flips of the lowest-margin
 #: planes). 4 probes over 6 planes scores ~4/64 of the corpus — the
@@ -484,8 +428,6 @@ def multiprobe_buckets(
     so the DuckDB oracle (``list_sum`` + ``abs`` + window rank) derives
     the identical probe set bit-for-bit.
     """
-    from sressentials_spark.operators.linalg import _plane_matrix
-
     w = _plane_matrix(planes, len(vec))
     projs = []
     for p in range(planes):
@@ -498,33 +440,35 @@ def multiprobe_buckets(
     return [base] + [base ^ (1 << p) for p in flips[: nprobe - 1]]
 
 
-def cosine_topk_lsh_multiprobe(
+def cosine_topk_lsh(
     emb: DataFrame,
     query_ids: list[int],
     k: int = 10,
-    nprobe: int = MULTIPROBE_PROBES,
+    nprobe: int = 1,
     id_col: str = "vec_id",
     dim: int = DEFAULT_DIM,
     planes: int = LSH_PLANES,
 ) -> DataFrame:
     """Approximate top-k scoring the query's ``nprobe`` most promising
-    LSH buckets instead of one.
+    LSH buckets: its own bucket (``nprobe=1``, the single-probe index)
+    plus the :func:`multiprobe_buckets` flips.
 
-    Same corpus artifact as :func:`cosine_topk_lsh` (norm + bucket, one
-    Arrow pass — multi-probe is a QUERY-side knob, the index is
-    unchanged, which is the point: recall tuning without a rebuild).
-    The probe sequence is computed driver-side per query (the query
-    set is a handful of collected rows either way) and joins the
-    corpus as ``nprobe`` bucket equi-probes per query; a neighbor
-    lives in exactly one bucket, so no candidate dedup is needed.
-    At 100 TB with the corpus written bucket-partitioned this reads
-    ``nprobe/2^planes`` of the data per query batch.
+    ``planes`` sizes the index (expected fan-in = corpus / 2^planes per
+    probe); the multi-probe recall eval pits 6 planes × 4 probes
+    against a 4-plane single-probe index at equal fan-in. One corpus
+    artifact per ``planes`` (norm + bucket, one Arrow pass) —
+    multi-probe is a QUERY-side knob, the index is unchanged, which is
+    the point: recall tuning without a rebuild. The probe sequence is
+    computed driver-side per query (the query set is a handful of
+    collected rows either way; its own bucket is bit-identical to the
+    kernel's) and joins the corpus as ``nprobe`` bucket equi-probes
+    per query; a neighbor lives in exactly one bucket, so no
+    candidate dedup is needed. At 100 TB with the corpus written
+    bucket-partitioned this reads ``nprobe/2^planes`` of the data per
+    query batch.
     """
     corpus = _cached_corpus(
-        emb,
-        "bucket",
-        (planes, dim),
-        lambda: attach_norm_bucket(emb, planes=planes, dim=dim),
+        emb, "bucket", (planes,), lambda: attach_norm_bucket(emb, planes=planes)
     )
     qrows = (
         corpus.filter(F.col(id_col).isin(query_ids))

@@ -98,7 +98,7 @@ def test_release_persisted_frees_cached_intermediates(spark, docs):
     assert get_or_build(spark, disk_key, lambda: "on-disk", tier="disk") == "on-disk"
     assert jsc.getPersistentRDDs().size() > baseline
     released = D.release_persisted()
-    assert released >= 4  # exploded bands + norm corpus + shingles/sigs + parse
+    assert released >= 4  # signed vectors + shingles/sigs + parse
     assert D.release_persisted() == 0  # registry drained
     # Every tracked block is back out of the store, the parse included.
     assert jsc.getPersistentRDDs().size() <= baseline

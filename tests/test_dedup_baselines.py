@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from sressentials_spark.catalog import BASELINE_ORACLE_SQL
 from sressentials_spark.operators import dedup as D
@@ -60,3 +61,25 @@ def test_lsh_near_dup_is_verified_subset_of_brute_force(spark):
     for r in lsh:
         key = (r["vec_a"], r["vec_b"])
         assert key in brute and brute[key] == r["cosine"]
+
+
+def test_decontaminate_is_verified_subset_of_brute_force(spark):
+    """Every vector the embedding decontaminator flags has a brute-force
+    corpus x benchmark hit (cosine >= 0.35, benchmark ``vec_id % 20 ==
+    0``); its ``max_cosine`` is one of those brute-force cosines, bit
+    for bit, and it never counts more hits than brute force finds."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    brute: dict[int, list[float]] = {}
+    for r in D.embedding_cosine_pairs(emb, threshold=0.35).collect():
+        a_bench, b_bench = r["vec_a"] % 20 == 0, r["vec_b"] % 20 == 0
+        if a_bench != b_bench:
+            brute.setdefault(r["vec_b"] if a_bench else r["vec_a"], []).append(r["cosine"])
+    flagged = D.embedding_decontaminate(
+        emb, (F.col("vec_id") % 20) == 0, threshold=0.35
+    ).collect()
+    assert flagged, "decontaminator flagged nothing at sf0.001 — fixture degenerate"
+    for r in flagged:
+        hits = brute.get(r["vec_id"], [])
+        assert hits, f"vec {r['vec_id']} flagged without a brute-force hit"
+        assert r["max_cosine"] in hits
+        assert r["n_benchmark_hits"] <= len(hits)

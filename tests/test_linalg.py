@@ -13,7 +13,7 @@ from pyspark.sql.types import ArrayType, FloatType, LongType, StructField, Struc
 
 from sressentials_spark.operators import linalg
 from sressentials_spark.operators.dedup import _dot
-from sressentials_spark.operators.similarity import attach_norm_bucket
+from sressentials_spark.operators.similarity import attach_norm_bucket, multiprobe_buckets
 
 
 def _mk_vectors(spark, n: int, dim: int, seed: int = 7):
@@ -71,10 +71,12 @@ def test_dot_dispatch_unrolled_vs_arrow_bit_identical(spark):
 
 def test_norm_bucket_dim256(spark):
     """attach_norm_bucket discovers the batch dimension — a 256-dim
-    corpus buckets/norms without any plan change."""
+    corpus buckets/norms without any plan change — and the driver-side
+    probe sequence's own bucket is the kernel's, so single-probe LSH is
+    ``nprobe=1``."""
     df, rows = _mk_vectors(spark, 30, 256)
     got = {
-        r["vec_id"]: (r["norm"], r["bucket"])
+        r["vec_id"]: (r["norm"], r["bucket"], r["embedding"])
         for r in attach_norm_bucket(df).collect()
     }
     planes = linalg._plane_matrix(6, 256)
@@ -86,7 +88,8 @@ def test_norm_bucket_dim256(spark):
         for p in range(6):
             if _fold(vec, list(planes[p])) > 0:
                 bucket += 1 << p
-        assert got[vid] == (norm, bucket)
+        assert got[vid][:2] == (norm, bucket)
+        assert multiprobe_buckets(got[vid][2], 6, 1) == [bucket]
 
 
 def test_dot_dim_mismatch_raises(spark):
