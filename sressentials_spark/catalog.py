@@ -3641,9 +3641,9 @@ def streaming_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial maxes merging into state IS the sketch-union property),
     folded to the estimate over the settled registers. Same oracle as
     the batch sketch — both execution models must agree bit-for-bit."""
-    from sressentials_spark.streaming.sketch import run_hll_stream_batch
+    from sressentials_spark.streaming.sketch import run_sketch_stream
 
-    return run_hll_stream_batch(spark, sf_dir)
+    return run_sketch_stream(spark, sf_dir, *K.hll_sketch("user_id"))
 
 
 @register(
@@ -3662,8 +3662,7 @@ def sketch_hll_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day", F.date_trunc("day", "ts")
     )
     daily = K.hll_registers(e, "user_id", extra_keys=["day"])
-    merged = daily.groupBy("bucket").agg(F.max("m_j").alias("m_j"))
-    return K.finish_estimate(merged)
+    return K.finish_estimate(K.hll_union(daily))
 
 
 @register(
@@ -3738,9 +3737,11 @@ def streaming_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows; micro-batch partial counts merging into state IS the CMS
     union), probed over the settled counters. Same oracle as the batch
     sketch — both execution models must agree bit-for-bit."""
-    from sressentials_spark.streaming.sketch import run_cms_stream_batch
+    from sressentials_spark.streaming.sketch import run_sketch_stream
 
-    return run_cms_stream_batch(spark, sf_dir, _CMS_PROBE_USERS)
+    return run_sketch_stream(
+        spark, sf_dir, *K.cms_probe_sketch("user_id", _CMS_PROBE_USERS)
+    )
 
 
 @register(
@@ -3753,9 +3754,9 @@ def streaming_histogram_quantiles_value(spark: SparkSession, sf_dir: str) -> Dat
     histogram union), folded to p50/p90/p99 over the settled bins.
     Same oracle as the batch sketch — both execution models must agree
     bit-for-bit."""
-    from sressentials_spark.streaming.sketch import run_histogram_stream_batch
+    from sressentials_spark.streaming.sketch import run_sketch_stream
 
-    return run_histogram_stream_batch(spark, sf_dir)
+    return run_sketch_stream(spark, sf_dir, *K.histogram_sketch("value"))
 
 
 @register(
@@ -7522,6 +7523,7 @@ def curation_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from sressentials_spark.operators.drift import (  # noqa: E402
+    drift_sketch,
     histogram_drift,
     histogram_drift_oracle_sql,
     histogram_drift_trend_oracle_sql,
@@ -7557,14 +7559,18 @@ def audit_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The drift audit as a LIVE monitor: both cohorts' histograms
-    maintained in streaming state (|types| x 2 x 10 count rows,
-    additive micro-batch merge), PSI/TVD folded batch-side over the
-    settled bins (streaming/sketch.py:run_drift_stream_batch). Shares
+    maintained in streaming state (the batch audit's own (type, bin,
+    c_ref, c_cur) count table, |types| x 10 rows, additive micro-batch
+    merge), PSI/TVD folded batch-side over the settled bins by the
+    batch fold (streaming/sketch.py:run_sketch_stream with
+    operators/drift.py:drift_sketch). Shares
     ``audit_distribution_drift``'s oracle verbatim — the streaming and
     batch execution models must agree bit-for-bit."""
-    from sressentials_spark.streaming.sketch import run_drift_stream_batch
+    from sressentials_spark.streaming.sketch import run_sketch_stream
 
-    return run_drift_stream_batch(spark, sf_dir, split_expr=_DRIFT_SPLIT_SPARK)
+    return run_sketch_stream(
+        spark, sf_dir, *drift_sketch(split_expr=_DRIFT_SPLIT_SPARK)
+    )
 
 
 @register("curation_perplexity_filter", C.unigram_logloss_oracle_sql())
@@ -8042,13 +8048,14 @@ def sketch_f2_selfjoin_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_f2_selfjoin_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The F2 self-join-size estimator over STREAMED counters: the CMS
     counter state (<= d x w rows, additive merge) is maintained by the
-    stream; the min-of-squared-sums fold and the exact baseline run
-    batch-side over the settled state. Shares the batch oracle
-    verbatim — streaming and batch counter tables must agree
-    bit-for-bit (streaming/sketch.py:run_f2_stream_batch)."""
-    from sressentials_spark.streaming.sketch import run_f2_stream_batch
+    stream; the batch estimator's own min-of-squared-sums fold and
+    exact baseline run batch-side over the settled state. Shares the
+    batch oracle verbatim — streaming and batch counter tables must
+    agree bit-for-bit (streaming/sketch.py:run_sketch_stream with
+    operators/sketch.py:cms_f2_sketch)."""
+    from sressentials_spark.streaming.sketch import run_sketch_stream
 
-    return run_f2_stream_batch(spark, sf_dir)
+    return run_sketch_stream(spark, sf_dir, *K.cms_f2_sketch("user_id"))
 
 
 @register(

@@ -36,8 +36,10 @@ histogram itself, so the same plan holds at 100 TB.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from sressentials_spark.operators.sketch import Sketch
 
 #: Fixed-point scale for the per-bin log-likelihood-ratio (micronats).
 DRIFT_LR_SCALE = 10**6
@@ -58,6 +60,42 @@ def _alarm_micronats(psi_alarm: float) -> int:
             f"psi_alarm={psi_alarm!r} is not representable in micronats"
         )
     return int(am)
+
+
+def drift_sketch(
+    *,
+    split_expr: str,
+    group_col: str = "event_type",
+    value_col: str = "value",
+    bin_width: float = 50.0,
+    n_bins: int = 10,
+    psi_alarm: float = 0.25,
+) -> Sketch:
+    """Per-(group, bin) cohort counts ``(grp, bin, c_ref, c_cur)`` — one
+    conditional-aggregation scan, histogram-sized state that merges
+    additively — folded to PSI/TVD (:func:`drift_from_counts`); see
+    :func:`histogram_drift`."""
+
+    def state(df: DataFrame) -> DataFrame:
+        binned = bin_cohorts(
+            df,
+            split_expr=split_expr,
+            group_col=group_col,
+            value_col=value_col,
+            bin_width=bin_width,
+            n_bins=n_bins,
+        )
+        return binned.groupBy("grp", "bin").agg(
+            F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).cast("long").alias("c_ref"),
+            F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).cast("long").alias("c_cur"),
+        )
+
+    return Sketch(
+        state,
+        lambda counts, _src: drift_from_counts(
+            counts, group_col=group_col, n_bins=n_bins, psi_alarm=psi_alarm
+        ),
+    )
 
 
 def histogram_drift(
@@ -84,42 +122,36 @@ def histogram_drift(
     ``tvd`` (exact-deterministic doubles) and ``drifted``
     (``psi >= psi_alarm``).
     """
-    binned = bin_cohorts(
-        df,
+    return drift_sketch(
         split_expr=split_expr,
         group_col=group_col,
         value_col=value_col,
         bin_width=bin_width,
         n_bins=n_bins,
-    )
-    counts = binned.groupBy("grp", "bin").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).cast("long").alias("c_ref"),
-        F.sum(F.when(F.col("is_ref"), 0).otherwise(1)).cast("long").alias("c_cur"),
-    )
-    return drift_from_counts(
-        counts, group_col=group_col, n_bins=n_bins, psi_alarm=psi_alarm
-    )
+        psi_alarm=psi_alarm,
+    )(df)
 
 
 def bin_cohorts(
     df: DataFrame,
-    *,
+    *ride: Column,
     split_expr: str,
     group_col: str,
     value_col: str,
     bin_width: float,
     n_bins: int,
 ) -> DataFrame:
-    """Row-level cohort + bin assignment: ``(grp, is_ref, bin)``.
+    """Row-level cohort + bin assignment: ``(grp, is_ref, *ride, bin)``.
 
-    A pure narrow projection (shared by the batch audit and the
-    streaming monitor, whose stateful agg consumes it directly).
-    NULL metric values are dropped here — the single shared gate for
-    batch, trend, streaming AND the oracles, so no path clamps a NULL
-    into bin 0 while another drops it."""
+    A pure narrow projection, shared by the batch audit, the trend
+    (whose day bucket rides along) and the streaming monitor. NULL
+    metric values are dropped here — the single shared gate for batch,
+    trend, streaming AND the oracles, so no path clamps a NULL into
+    bin 0 while another drops it."""
     return df.filter(F.col(value_col).isNotNull()).select(
         F.col(group_col).alias("grp"),
         F.expr(split_expr).alias("is_ref"),
+        *ride,
         F.least(
             F.greatest(F.floor(F.col(value_col) / F.lit(bin_width)), F.lit(0)),
             F.lit(n_bins - 1),
@@ -129,36 +161,37 @@ def bin_cohorts(
     )
 
 
-def drift_from_counts(
-    counts: DataFrame,
-    *,
-    group_col: str = "event_type",
-    n_bins: int = 10,
-    psi_alarm: float = 0.25,
-) -> DataFrame:
-    """PSI/TVD fold over a settled ``(grp, bin, c_ref, c_cur)`` count
-    table (histogram-sized — at most |groups| x n_bins rows, however
-    large the corpus that produced it)."""
-    spark = counts.sparkSession
-    grid = (
-        counts.select(F.col("grp")).distinct()
-        .crossJoin(F.broadcast(spark.range(n_bins).select(F.col("id").alias("bin"))))
-    )
-    full = (
-        grid.join(counts, ["grp", "bin"], "left")
+def _grid(counts: DataFrame, keys: list[str], n_bins: int, *cols: str) -> DataFrame:
+    """``counts`` on the full ``(keys…, bin)`` grid: every key tuple it
+    holds crossed with every bin, missing ``cols`` counts as 0."""
+    bins = counts.sparkSession.range(n_bins).select(F.col("id").alias("bin"))
+    return (
+        counts.select(*keys).distinct().crossJoin(F.broadcast(bins))
+        .join(counts, [*keys, "bin"], "left")
         .select(
-            "grp",
+            *keys,
             "bin",
-            F.coalesce("c_ref", F.lit(0).cast("long")).alias("c_ref"),
-            F.coalesce("c_cur", F.lit(0).cast("long")).alias("c_cur"),
+            *[F.coalesce(c, F.lit(0).cast("long")).alias(c) for c in cols],
         )
     )
-    totals = full.groupBy("grp").agg(
+
+
+def _psi_fold(
+    full: DataFrame,
+    keys: list[str],
+    *,
+    group_col: str,
+    n_bins: int,
+    psi_alarm: float,
+) -> DataFrame:
+    """PSI/TVD per ``keys`` over a full ``(keys…, bin, c_ref, c_cur)``
+    grid; ``keys[0]`` is ``grp``, output as ``group_col``."""
+    totals = full.groupBy(*keys).agg(
         F.sum("c_ref").cast("long").alias("n_ref"),
         F.sum("c_cur").cast("long").alias("n_cur"),
     )
     b = F.lit(n_bins).cast("long")
-    j = full.join(F.broadcast(totals), "grp")
+    j = full.join(F.broadcast(totals), keys)
     # p - q = A / D with A, D exact BIGINTs; ln(p/q) micro-quantized.
     a = (F.col("c_ref") + 1).cast(_D14) * (F.col("n_cur") + b).cast(_D14) - (
         F.col("c_cur") + 1
@@ -173,15 +206,16 @@ def drift_from_counts(
         )
         .cast("long")
     )
-    per_group = j.groupBy("grp", "n_ref", "n_cur").agg(
+    per = j.groupBy(*keys, "n_ref", "n_cur").agg(
         F.sum(a * lr_micro.cast("decimal(8,0)")).alias("psi_num"),
         F.sum(F.abs(a)).alias("tvd_num"),
     )
     d = (F.col("n_ref") + b).cast("double") * (F.col("n_cur") + b).cast("double")
     psi = F.col("psi_num").cast("double") / d / F.lit(float(DRIFT_LR_SCALE))
     tvd = F.col("tvd_num").cast("double") / d / F.lit(2.0)
-    return per_group.select(
+    return per.select(
         F.col("grp").alias(group_col),
+        *keys[1:],
         "n_ref",
         "n_cur",
         psi.alias("psi"),
@@ -192,6 +226,25 @@ def drift_from_counts(
             * (F.col("n_cur") + b).cast(_D14)
             * F.lit(_alarm_micronats(psi_alarm)).cast("decimal(8,0)")
         ).alias("drifted"),
+    )
+
+
+def drift_from_counts(
+    counts: DataFrame,
+    *,
+    group_col: str = "event_type",
+    n_bins: int = 10,
+    psi_alarm: float = 0.25,
+) -> DataFrame:
+    """PSI/TVD fold over a settled ``(grp, bin, c_ref, c_cur)`` count
+    table (histogram-sized — at most |groups| x n_bins rows, however
+    large the corpus that produced it)."""
+    return _psi_fold(
+        _grid(counts, ["grp"], n_bins, "c_ref", "c_cur"),
+        ["grp"],
+        group_col=group_col,
+        n_bins=n_bins,
+        psi_alarm=psi_alarm,
     )
 
 
@@ -291,90 +344,40 @@ def histogram_drift_trend(
     Output per (group, bucket): ``n_ref``, ``n_cur``, ``psi``,
     ``tvd``, ``drifted``.
     """
-    ref = F.expr(split_expr)
-    # Same NULL-metric gate as bin_cohorts (shared contract with the
-    # oracles and the streaming twin).
-    binned = df.filter(F.col(value_col).isNotNull()).select(
-        F.col(group_col).alias("grp"),
-        ref.alias("is_ref"),
+    binned = bin_cohorts(
+        df,
         F.expr(trend_expr).alias("bucket"),
-        F.least(
-            F.greatest(F.floor(F.col(value_col) / F.lit(bin_width)), F.lit(0)),
-            F.lit(n_bins - 1),
-        )
-        .cast("long")
-        .alias("bin"),
+        split_expr=split_expr,
+        group_col=group_col,
+        value_col=value_col,
+        bin_width=bin_width,
+        n_bins=n_bins,
     )
-    spark = df.sparkSession
-    bins = F.broadcast(spark.range(n_bins).select(F.col("id").alias("bin")))
-    ref_counts = (
+    ref_grid = _grid(
         binned.filter(F.col("is_ref"))
         .groupBy("grp", "bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_ref"))
+        .agg(F.count(F.lit(1)).cast("long").alias("c_ref")),
+        ["grp"],
+        n_bins,
+        "c_ref",
     )
-    ref_grid = (
-        ref_counts.select("grp").distinct().crossJoin(bins)
-        .join(ref_counts, ["grp", "bin"], "left")
-        .select("grp", "bin", F.coalesce("c_ref", F.lit(0).cast("long")).alias("c_ref"))
-    )
-    cur_counts = (
+    cur_grid = _grid(
         binned.filter(~F.col("is_ref"))
         .groupBy("grp", "bucket", "bin")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_cur"))
-    )
-    cur_grid = (
-        cur_counts.select("grp", "bucket").distinct().crossJoin(bins)
-        .join(cur_counts, ["grp", "bucket", "bin"], "left")
-        .select(
-            "grp",
-            "bucket",
-            "bin",
-            F.coalesce("c_cur", F.lit(0).cast("long")).alias("c_cur"),
-        )
+        .agg(F.count(F.lit(1)).cast("long").alias("c_cur")),
+        ["grp", "bucket"],
+        n_bins,
+        "c_cur",
     )
     # Inner join: buckets only exist on the current side; a group with
     # no reference rows contributes no trend rows (promote-gates have
     # nothing to compare against).
-    full = cur_grid.join(F.broadcast(ref_grid), ["grp", "bin"])
-    totals = full.groupBy("grp", "bucket").agg(
-        F.sum("c_ref").cast("long").alias("n_ref"),
-        F.sum("c_cur").cast("long").alias("n_cur"),
-    )
-    b = F.lit(n_bins).cast("long")
-    j = full.join(F.broadcast(totals), ["grp", "bucket"])
-    a = (F.col("c_ref") + 1).cast(_D14) * (F.col("n_cur") + b).cast(_D14) - (
-        F.col("c_cur") + 1
-    ).cast(_D14) * (F.col("n_ref") + b).cast(_D14)
-    lr_micro = (
-        F.round(
-            F.ln(
-                ((F.col("c_ref") + 1).cast("double") * (F.col("n_cur") + b).cast("double"))
-                / ((F.col("c_cur") + 1).cast("double") * (F.col("n_ref") + b).cast("double"))
-            )
-            * F.lit(DRIFT_LR_SCALE)
-        )
-        .cast("long")
-    )
-    per = j.groupBy("grp", "bucket", "n_ref", "n_cur").agg(
-        F.sum(a * lr_micro.cast("decimal(8,0)")).alias("psi_num"),
-        F.sum(F.abs(a)).alias("tvd_num"),
-    )
-    d = (F.col("n_ref") + b).cast("double") * (F.col("n_cur") + b).cast("double")
-    psi = F.col("psi_num").cast("double") / d / F.lit(float(DRIFT_LR_SCALE))
-    tvd = F.col("tvd_num").cast("double") / d / F.lit(2.0)
-    return per.select(
-        F.col("grp").alias(group_col),
-        "bucket",
-        "n_ref",
-        "n_cur",
-        psi.alias("psi"),
-        tvd.alias("tvd"),
-        (
-            F.col("psi_num")
-            >= (F.col("n_ref") + b).cast(_D14)
-            * (F.col("n_cur") + b).cast(_D14)
-            * F.lit(_alarm_micronats(psi_alarm)).cast("decimal(8,0)")
-        ).alias("drifted"),
+    return _psi_fold(
+        cur_grid.join(F.broadcast(ref_grid), ["grp", "bin"]),
+        ["grp", "bucket"],
+        group_col=group_col,
+        n_bins=n_bins,
+        psi_alarm=psi_alarm,
     )
 
 

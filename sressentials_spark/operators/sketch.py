@@ -31,6 +31,10 @@ the 53-bit mantissa.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+from typing import NamedTuple
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -51,6 +55,28 @@ HLL_SEED = "hll-v1"
 #: m >= 64 (Flajolet et al., HyperLogLog 2007). Precomputed HERE and
 #: embedded as the identical literal in the Spark plan and the oracle.
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / float(HLL_M))
+
+
+class Sketch(NamedTuple):
+    """A mergeable sketch as a state stage and a fold.
+
+    ``state(src)`` is a streaming-legal aggregation of the row source
+    whose output is sketch-bounded (HLL registers, CMS counters,
+    histogram bins, drift cohort counts) and whose partials (per
+    partition, per day, per micro-batch) merge into the same table —
+    the sketch-union property. ``fold(state, src)`` turns the settled
+    state into the answer; only the F2 fold reads ``src``, for its
+    exact baseline. Calling the sketch on ``df`` is the batch operator,
+    ``fold(state(df), df)``; the stream replay
+    (:func:`sressentials_spark.streaming.sketch.run_sketch_stream`)
+    drains ``state`` over a file source and applies the same ``fold``.
+    """
+
+    state: Callable[[DataFrame], DataFrame]
+    fold: Callable[[DataFrame, DataFrame], DataFrame]
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        return self.fold(self.state(df), df)
 
 
 def _rho(w: Column) -> Column:
@@ -130,6 +156,27 @@ def finish_estimate(regs: DataFrame) -> DataFrame:
     )
 
 
+def hll_union(*regs: DataFrame) -> DataFrame:
+    """Sketch union: the elementwise register max of ``(..., bucket,
+    m_j)`` tables (any per-group key columns fold away) — exact, so a
+    union of per-day or per-segment registers estimates exactly what
+    one pass over the union of their inputs would."""
+    return (
+        reduce(lambda a, b: a.unionByName(b), regs)
+        .groupBy("bucket")
+        .agg(F.max("m_j").alias("m_j"))
+    )
+
+
+def hll_sketch(col: str, seed: str = HLL_SEED) -> Sketch:
+    """Registers (:func:`hll_registers`) folded to the one-row estimate
+    (:func:`finish_estimate`)."""
+    return Sketch(
+        lambda df: hll_registers(df, col, seed),
+        lambda regs, _src: finish_estimate(regs),
+    )
+
+
 def hll_distinct(
     df: DataFrame, col: str, seed: str = HLL_SEED, with_exact: bool = False
 ) -> DataFrame:
@@ -141,7 +188,7 @@ def hll_distinct(
     default — and the shipped catalog query — omits it, because it is
     the exact ``count_distinct`` the sketch exists to avoid at 100 TB.
     """
-    out = finish_estimate(hll_registers(df, col, seed))
+    out = hll_sketch(col, seed)(df)
     if with_exact:
         exact = (
             df.filter(F.col(col).isNotNull())
@@ -165,21 +212,12 @@ CMS_W = 256
 CMS_SEED = "cms-v1"
 
 
-def cms_counters(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
-    """Build the Count-Min counter table ``(r, c, n)`` for ``df[col]``.
-
-    One narrow projection (each input row generates its ``d`` (row,
-    bucket) coordinates via an exploded literal array — still codegen),
-    then a ``groupBy(r, c).count()``: map-side combinable, so the
-    exchange carries ≤ ``d*w`` rows per map task. Counter merge across
-    partitions/days is elementwise ``+`` — the sketch-union property —
-    so per-shard counters roll up without re-scanning history.
-
-    Hashes are the shared 60-bit md5 integer (seeded per row ``i``), so
-    the counter table is bit-reproducible against the DuckDB oracle.
-    """
-    src = df.filter(F.col(col).isNotNull())
-    coords = F.explode(
+def _cms_coords(col: str, seed: str) -> Column:
+    """The ``d`` (row, bucket) coordinates of ``col`` as one exploded
+    ``rc`` struct per hash row — an exploded literal array, still
+    codegen. Shared by the counter build and the probe, so a key is
+    hashed to the same counters on both sides."""
+    return F.explode(
         F.array(
             *[
                 F.struct(
@@ -196,13 +234,78 @@ def cms_counters(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
                 for i in range(CMS_D)
             ]
         )
-    )
+    ).alias("rc")
+
+
+def cms_counters(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
+    """Build the Count-Min counter table ``(r, c, n)`` for ``df[col]``.
+
+    One narrow projection (each input row generates its ``d`` (row,
+    bucket) coordinates, :func:`_cms_coords`), then a
+    ``groupBy(r, c).count()``: map-side combinable, so the exchange
+    carries ≤ ``d*w`` rows per map task. Counter merge across
+    partitions/days is elementwise ``+`` — the sketch-union property —
+    so per-shard counters roll up without re-scanning history.
+
+    Hashes are the shared 60-bit md5 integer (seeded per row ``i``), so
+    the counter table is bit-reproducible against the DuckDB oracle.
+    """
     return (
-        src.select(coords.alias("rc"))
+        df.filter(F.col(col).isNotNull())
+        .select(_cms_coords(col, seed))
         .select("rc.r", "rc.c")
         .groupBy("r", "c")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+def cms_probe_sketch(
+    col: str, probe_keys: list[int], seed: str = CMS_SEED, heavy_pm: int = 7
+) -> Sketch:
+    """Counters (:func:`cms_counters`) probed at ``probe_keys``; see
+    :func:`cms_probe_counts`."""
+
+    def fold(counters: DataFrame, _src: DataFrame) -> DataFrame:
+        # The probe slate is a literal handful of keys: in one partition
+        # the min-fold and the final sort run without a shuffle.
+        probes = local_df(
+            counters.sparkSession, [(int(k),) for k in probe_keys], f"{col} long"
+        ).coalesce(1)
+        pc = probes.select(F.col(col), _cms_coords(col, seed)).select(
+            F.col(col), F.col("rc.r").alias("r"), F.col("rc.c").alias("c")
+        )
+        est = (
+            pc.join(F.broadcast(counters), ["r", "c"], "left")
+            .groupBy(col)
+            .agg(F.min(F.coalesce("n", F.lit(0))).alias("cms_estimate"))
+        )
+        # Every non-NULL row adds exactly 1 to one counter of each hash
+        # row, so hash row 0's counters sum to the stream total.
+        total = counters.filter(F.col("r") == 0).agg(
+            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("total_rows")
+        )
+        return (
+            est.crossJoin(F.broadcast(total))
+            .select(
+                col,
+                "cms_estimate",
+                "total_rows",
+                F.when(
+                    (F.col("total_rows") > 0)
+                    & (
+                        F.col("cms_estimate") * 1000
+                        >= F.col("total_rows") * heavy_pm
+                    ),
+                    F.lit(1),
+                )
+                .otherwise(F.lit(0))
+                .cast("long")
+                .alias("heavy"),
+            )
+            .orderBy(col)
+        )
+
+    return Sketch(lambda df: cms_counters(df, col, seed), fold)
 
 
 def cms_probe_counts(
@@ -224,81 +327,11 @@ def cms_probe_counts(
     (see :func:`cms_counters`); the probe side is a tiny literal frame
     whose ``d`` coordinates left-join the counters (both sides sketch-
     sized — Spark broadcasts them) and fold with ``min``. The stream
-    total is a plain map-combinable ``count(*)`` (not the distinct
-    count HLL avoids — a scalar count is free at any scale).
+    total is read off the counters themselves (hash row 0 sums to it),
+    so the fold never reads the source: a stream replay folds its
+    settled counters alone.
     """
-    counters = cms_counters(df, col, seed)
-    total = df.filter(F.col(col).isNotNull()).agg(
-        F.count(F.lit(1)).alias("total_rows")
-    )
-    return cms_probe_from_counters(
-        counters, total, col, probe_keys, seed, heavy_pm
-    )
-
-
-def cms_probe_from_counters(
-    counters: DataFrame,
-    total: DataFrame,
-    col: str,
-    probe_keys: list[int],
-    seed: str = CMS_SEED,
-    heavy_pm: int = 7,
-) -> DataFrame:
-    """Probe step over a prebuilt ``(r, c, n)`` counter table and a
-    one-row ``total_rows`` frame — shared by the batch query and the
-    streaming runner (where the counters are the settled state of the
-    streaming aggregation)."""
-    spark = counters.sparkSession
-    probes = local_df(
-        spark, [(int(k),) for k in probe_keys], f"{col} long"
-    )
-    pc = probes.select(
-        F.col(col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).cast("long").alias("r"),
-                        F.pmod(
-                            md5_long(
-                                F.concat(
-                                    F.lit(f"{seed}:{i}:"),
-                                    F.col(col).cast("string"),
-                                )
-                            ),
-                            F.lit(CMS_W),
-                        ).alias("c"),
-                    )
-                    for i in range(CMS_D)
-                ]
-            )
-        ).alias("rc"),
-    ).select(F.col(col), F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
-    est = (
-        pc.join(F.broadcast(counters), ["r", "c"], "left")
-        .groupBy(col)
-        .agg(F.min(F.coalesce("n", F.lit(0))).alias("cms_estimate"))
-    )
-    return (
-        est.crossJoin(F.broadcast(total))
-        .select(
-            col,
-            "cms_estimate",
-            "total_rows",
-            F.when(
-                (F.col("total_rows") > 0)
-                & (
-                    F.col("cms_estimate") * 1000
-                    >= F.col("total_rows") * heavy_pm
-                ),
-                F.lit(1),
-            )
-            .otherwise(F.lit(0))
-            .cast("long")
-            .alias("heavy"),
-        )
-        .orderBy(col)
-    )
+    return cms_probe_sketch(col, probe_keys, seed, heavy_pm)(df)
 
 
 def cms_probe_oracle_sql(
@@ -359,6 +392,72 @@ ORDER BY {col}
 HIST_BINS = 1024
 
 
+def _crossing(counts: DataFrame, key: str, quantiles: list[int]) -> DataFrame:
+    """Per requested integer percentile ``q``, the first ``key`` whose
+    cumulative ``n`` reaches ``q%`` of the total — ties and boundaries
+    resolved by pure integer arithmetic, ``100 * cum >= q * total`` —
+    as ``(quantile, key, n_le)`` with ``n_le`` the cumulative count at
+    it. ``counts`` is a bounded ``(key, n)`` table (histogram bins,
+    cent buckets), so the single-partition ordered window is too."""
+    w_cum = Window.orderBy(key).rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
+    )
+    w_all = Window.orderBy(key).rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    cum = counts.select(
+        key,
+        F.sum("n").over(w_cum).alias("cum"),
+        F.sum("n").over(w_all).alias("total"),
+    )
+    qs = local_df(
+        counts.sparkSession, [(int(q),) for q in quantiles], "quantile long"
+    )
+    return (
+        qs.crossJoin(cum)
+        .filter(F.col("cum") * 100 >= F.col("quantile") * F.col("total"))
+        .groupBy("quantile")
+        .agg(
+            F.min(key).alias(key),
+            F.min_by(F.col("cum"), F.col(key)).alias("n_le"),
+        )
+    )
+
+
+def histogram_sketch(
+    col: str, quantiles: list[int] = (50, 90, 99), bins: int = HIST_BINS
+) -> Sketch:
+    """Bin counts ``(bin, n)`` folded to percentiles; see
+    :func:`histogram_quantiles`."""
+
+    def state(df: DataFrame) -> DataFrame:
+        return (
+            df.filter(F.col(col).isNotNull())
+            .select(
+                F.least(F.lit(bins - 1), F.floor(F.col(col)).cast("long")).alias(
+                    "bin"
+                )
+            )
+            .groupBy("bin")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+
+    def fold(counts: DataFrame, _src: DataFrame) -> DataFrame:
+        return (
+            _crossing(counts, "bin", quantiles)
+            .select(
+                "quantile",
+                "bin",
+                F.col("bin").cast("double").alias("bin_lo"),
+                (F.col("bin") + 1).cast("double").alias("bin_hi"),
+                "n_le",
+            )
+            .orderBy("quantile")
+        )
+
+    return Sketch(state, fold)
+
+
 def histogram_quantiles(
     df: DataFrame,
     col: str,
@@ -369,10 +468,8 @@ def histogram_quantiles(
 
     Output, one row per requested integer percentile ``q``:
     ``(quantile, bin, bin_lo, bin_hi, n_le)`` — the first bin where
-    the cumulative count reaches ``q%`` of the total (ties and
-    boundaries resolved by pure integer arithmetic:
-    ``100 * cum >= q * total``), with the bin's value range and the
-    cumulative count at it.
+    the cumulative count reaches ``q%`` of the total (:func:`_crossing`),
+    with the bin's value range and the cumulative count at it.
 
     Scale shape: one narrow binning projection + a map-side-combinable
     ``groupBy(bin).count()`` — at most ``bins`` rows survive to the
@@ -381,42 +478,7 @@ def histogram_quantiles(
     argument as HLL's fold). Bin width is 1.0 over ``[0, bins)``;
     rescale the column for other domains.
     """
-    src = df.filter(F.col(col).isNotNull())
-    binned = src.select(
-        F.least(F.lit(bins - 1), F.floor(F.col(col)).cast("long")).alias("bin")
-    )
-    counts = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("n"))
-    w_cum = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.orderBy("bin").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = counts.select(
-        "bin",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("total"),
-    )
-    qs = local_df(
-        df.sparkSession, [(int(q),) for q in quantiles], "quantile long"
-    )
-    return (
-        qs.crossJoin(cum)
-        .filter(F.col("cum") * 100 >= F.col("quantile") * F.col("total"))
-        .groupBy("quantile")
-        .agg(
-            F.min("bin").alias("bin"),
-            F.min_by(F.col("cum"), F.col("bin")).alias("n_le"),
-        )
-        .select(
-            "quantile",
-            "bin",
-            F.col("bin").cast("double").alias("bin_lo"),
-            (F.col("bin") + 1).cast("double").alias("bin_hi"),
-            "n_le",
-        )
-        .orderBy("quantile")
-    )
+    return histogram_sketch(col, quantiles, bins)(df)
 
 
 def histogram_quantiles_oracle_sql(
@@ -598,29 +660,14 @@ def quantile_error_eval(
     ``err_cents`` is the distance from the bin midpoint.
     """
     sketch = histogram_quantiles(df, col, quantiles, bins)
-    src = df.filter(F.col(col).isNotNull()).select(
-        F.floor(F.col(col) * 100).cast("long").alias("cents")
+    cents = (
+        df.filter(F.col(col).isNotNull())
+        .select(F.floor(F.col(col) * 100).cast("long").alias("cents"))
+        .groupBy("cents")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
-    counts = src.groupBy("cents").agg(F.count(F.lit(1)).alias("n"))
-    w_cum = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    w_all = Window.orderBy("cents").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    cum = counts.select(
-        "cents",
-        F.sum("n").over(w_cum).alias("cum"),
-        F.sum("n").over(w_all).alias("total"),
-    )
-    qs = local_df(
-        df.sparkSession, [(int(q),) for q in quantiles], "quantile long"
-    )
-    exact = (
-        qs.crossJoin(cum)
-        .filter(F.col("cum") * 100 >= F.col("quantile") * F.col("total"))
-        .groupBy("quantile")
-        .agg(F.min("cents").alias("exact_cents"))
+    exact = _crossing(cents, "cents", quantiles).select(
+        "quantile", F.col("cents").alias("exact_cents")
     )
     return (
         sketch.select("quantile", "bin")
@@ -720,11 +767,7 @@ def hll_set_algebra(
     b = df.filter(cond_b)
     regs_a = hll_registers(a, col, seed)
     regs_b = hll_registers(b, col, seed)
-    regs_u = (
-        regs_a.unionByName(regs_b)
-        .groupBy("bucket")
-        .agg(F.max("m_j").alias("m_j"))
-    )
+    regs_u = hll_union(regs_a, regs_b)
 
     def est(regs: DataFrame, name: str) -> DataFrame:
         return finish_estimate(regs).select(
@@ -819,6 +862,33 @@ FROM fa, fb, fu, ex
 """
 
 
+def cms_f2_sketch(col: str, seed: str = CMS_SEED) -> Sketch:
+    """Counters (:func:`cms_counters`) folded to the F2 estimate beside
+    the exact F2 of ``src``; see :func:`cms_f2_estimate`."""
+
+    def fold(counters: DataFrame, src: DataFrame) -> DataFrame:
+        est = (
+            counters.groupBy("r")
+            .agg(F.sum(F.col("n") * F.col("n")).cast("long").alias("s"))
+            .agg(F.min("s").cast("long").alias("cms_f2_estimate"))
+        )
+        exact = (
+            src.filter(F.col(col).isNotNull())
+            .groupBy(col)
+            .agg(F.count(F.lit(1)).cast("long").alias("f"))
+            .agg(F.sum(F.col("f") * F.col("f")).cast("long").alias("exact_f2"))
+        )
+        return exact.crossJoin(F.broadcast(est)).select(
+            "exact_f2",
+            "cms_f2_estimate",
+            F.expr("((cms_f2_estimate - exact_f2) * 1000) div exact_f2").alias(
+                "over_permille"
+            ),
+        )
+
+    return Sketch(lambda df: cms_counters(df, col, seed), fold)
+
+
 def cms_f2_estimate(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
     """Self-join size (the second frequency moment F2) estimated from
     the Count-Min counter table — the optimizer statistic behind join
@@ -841,28 +911,7 @@ def cms_f2_estimate(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
     ``over_permille`` (floor; 0 means the sketch row had no
     colliding keys).
     """
-    src = df.filter(F.col(col).isNotNull())
-    counters = cms_counters(df, col, seed)
-    est = (
-        counters.groupBy("r")
-        .agg(F.sum(F.col("n") * F.col("n")).cast("long").alias("s"))
-        .agg(F.min("s").cast("long").alias("cms_f2_estimate"))
-    )
-    exact = (
-        src.groupBy(col)
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-        .agg(F.sum(F.col("f") * F.col("f")).cast("long").alias("exact_f2"))
-    )
-    return (
-        exact.crossJoin(F.broadcast(est))
-        .select(
-            "exact_f2",
-            "cms_f2_estimate",
-            F.expr(
-                "((cms_f2_estimate - exact_f2) * 1000) div exact_f2"
-            ).alias("over_permille"),
-        )
-    )
+    return cms_f2_sketch(col, seed)(df)
 
 
 def cms_f2_oracle_sql(table: str, col: str, seed: str = CMS_SEED) -> str:

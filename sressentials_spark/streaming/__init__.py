@@ -43,6 +43,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.types import StructType
 
 from sressentials_spark.scratch import scratch_dir
 
@@ -124,16 +125,16 @@ def file_source(
     spark: SparkSession,
     path: str,
     *,
-    schema: str | None = None,
+    schema: str | StructType | None = None,
     glob: str | None = None,
     recursive: bool = False,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Open ``path`` as a streaming parquet file source.
 
-    ``schema`` is a DDL string; by default it is inferred by
-    ``spark.read`` over the same files (``glob`` → ``pathGlobFilter``,
-    ``recursive`` → ``recursiveFileLookup``).
+    ``schema`` is a DDL string or a StructType; by default it is
+    inferred by ``spark.read`` over the same files (``glob`` →
+    ``pathGlobFilter``, ``recursive`` → ``recursiveFileLookup``).
     ``max_files_per_trigger`` bounds each micro-batch to N files —
     ``1`` replays staged arrivals one file per batch."""
     opts = {}

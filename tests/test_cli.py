@@ -58,21 +58,27 @@ def test_missing_args_is_a_clean_error():
     assert "required" in proc.stderr
 
 
-def test_max_errors_unbounded(tmp_path):
+def test_max_errors_unbounded(tmp_path, spark, monkeypatch, capsys):
     """``--max-errors -1`` prints EVERY diagnostic line — parity with
-    the reference's unbounded loop (Mongo/mongo_parser.py:226-228)."""
+    the reference's unbounded loop (Mongo/mongo_parser.py:226-228).
+    Runs ``cli.main`` in-process on the shared session;
+    ``test_mongo_cli_end_to_end`` covers the subprocess entry point."""
+    from sressentials_spark import cli
+
     bad = "\n".join(f"not json {i}" for i in range(25))
     log = tmp_path / "mongod.log"
     log.write_text(MONGO_LOG + "\n" + bad)
     out = tmp_path / "report.xlsx"
+    monkeypatch.setattr(cli, "get_spark", lambda app_name: spark)
 
-    capped = run_cli("mongo", "-i", str(log), "-o", str(out))
-    assert capped.returncode == 0, capped.stderr[-2000:]
-    assert capped.stderr.count("Invalid JSON. Skipped.") == 10  # default cap
+    assert cli.main(["mongo", "-i", str(log), "-o", str(out)]) == 0
+    capped = capsys.readouterr().err
+    assert capped.count("Invalid JSON. Skipped.") == 10  # default cap
 
-    full = run_cli("mongo", "-i", str(log), "-o", str(out), "--max-errors", "-1")
-    assert full.returncode == 0, full.stderr[-2000:]
-    assert full.stderr.count("Invalid JSON. Skipped.") == 28  # 3 fixture + 25
+    argv = ["mongo", "-i", str(log), "-o", str(out), "--max-errors", "-1"]
+    assert cli.main(argv) == 0
+    full = capsys.readouterr().err
+    assert full.count("Invalid JSON. Skipped.") == 28  # 3 fixture + 25
 
 
 def test_save_report_bytes_zip_fallback(tmp_path, spark):

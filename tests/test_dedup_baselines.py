@@ -83,3 +83,31 @@ def test_decontaminate_is_verified_subset_of_brute_force(spark):
         assert hits, f"vec {r['vec_id']} flagged without a brute-force hit"
         assert r["max_cosine"] in hits
         assert r["n_benchmark_hits"] <= len(hits)
+
+
+def test_decontaminate_keeps_the_largest_of_several_hits(spark):
+    """One corpus vector with two benchmark hits of different exact
+    cosine, both close enough to share a sign band: the decontaminator
+    counts both and reports the LARGER brute-force cosine."""
+    import math
+
+    from sressentials_spark.localrel import local_df
+
+    base = [math.sin(i + 1.0) for i in range(D.DEFAULT_DIM)]
+    near = [base[0] + 0.05, *base[1:]]
+    # local_df, not createDataFrame: the brute-force cosine took ~35 s
+    # over a createDataFrame relation and ~2 s over local_df's.
+    emb = local_df(
+        spark, [(0, base), (1, base), (2, near)], "vec_id long, embedding array<float>"
+    )
+    brute = sorted(
+        r["cosine"] for r in D.embedding_cosine_pairs(emb, threshold=0.35).collect()
+        if r["vec_a"] == 0
+    )
+    assert len(brute) == 2 and brute[0] < brute[1], brute
+    flagged = D.embedding_decontaminate(
+        emb, F.col("vec_id") > 0, threshold=0.35
+    ).collect()
+    assert [(r["vec_id"], r["n_benchmark_hits"], r["max_cosine"]) for r in flagged] == [
+        (0, 2, brute[1])
+    ]

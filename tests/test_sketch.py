@@ -3,7 +3,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from sressentials_spark.operators import sketch as K
+from sressentials_spark.operators.drift import drift_sketch, histogram_drift
 from sressentials_spark.operators.sketch import HLL_M, hll_distinct
+
+SF = "/root/testdata/sf0.001"
 
 
 def _estimate(spark, values, **kw):
@@ -59,7 +63,7 @@ class TestCountMin:
     def _events(self, spark):
         from sressentials_spark.sources.tables import load_table
 
-        return load_table(spark, "/root/testdata/sf0.001", "events")
+        return load_table(spark, SF, "events")
 
     def test_never_underestimates(self, spark):
         # The defining CMS guarantee: estimate >= true count, always.
@@ -111,7 +115,7 @@ class TestHistogramQuantiles:
         from sressentials_spark.operators.sketch import histogram_quantiles
         from sressentials_spark.sources.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF, "events")
         rows = {
             r["quantile"]: r
             for r in histogram_quantiles(ev, "value").collect()
@@ -129,7 +133,7 @@ class TestHistogramQuantiles:
         from sressentials_spark.operators.sketch import histogram_quantiles
         from sressentials_spark.sources.tables import load_table
 
-        ev = load_table(spark, "/root/testdata/sf0.001", "events")
+        ev = load_table(spark, SF, "events")
         a = [r.asDict() for r in histogram_quantiles(ev, "value").collect()]
         b = [
             r.asDict()
@@ -202,70 +206,65 @@ class TestBloom:
         }
 
 
-class TestStreamingCms:
-    def test_multi_batch_counters_merge_to_batch_result(self, spark, tmp_path):
-        import os
+_DRIFT_SPLIT = "ts < timestamp'2024-01-16 00:00:00'"
+_PROBES = list(range(10))
 
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from sressentials_spark.operators.sketch import cms_probe_counts
-        from sressentials_spark.sources.tables import load_table
-        from sressentials_spark.streaming.sketch import run_cms_stream_batch
-
-        # Two files → two micro-batches; per-batch partial counts must
-        # merge in state to exactly the batch sketch's counters.
-        src = pq.read_table("/root/testdata/sf0.001/events.parquet").to_pandas()
-        half = len(src) // 2
-        d = str(tmp_path)
-        fa, fb = os.path.join(d, "ev_a.parquet"), os.path.join(d, "ev_b.parquet")
-        pq.write_table(pa.Table.from_pandas(src.iloc[:half], preserve_index=False), fa)
-        pq.write_table(pa.Table.from_pandas(src.iloc[half:], preserve_index=False), fb)
-        os.utime(fa, (1_000_000, 1_000_000))
-        os.utime(fb, (2_000_000, 2_000_000))
-
-        probes = list(range(10))
-        streamed = run_cms_stream_batch(
-            spark, d, probes, glob="*.parquet", max_files_per_trigger=1
-        ).collect()
-        batch = cms_probe_counts(
-            load_table(spark, "/root/testdata/sf0.001", "events"),
-            "user_id",
-            probes,
-        ).collect()
-        assert [r.asDict() for r in streamed] == [r.asDict() for r in batch]
+#: Each streamed sketch, as (state/fold pair, batch operator).
+_STREAM_CASES = {
+    "hll": (K.hll_sketch("user_id"), lambda ev: K.hll_distinct(ev, "user_id")),
+    "cms_probe": (
+        K.cms_probe_sketch("user_id", _PROBES),
+        lambda ev: K.cms_probe_counts(ev, "user_id", _PROBES),
+    ),
+    "histogram": (
+        K.histogram_sketch("value"),
+        lambda ev: K.histogram_quantiles(ev, "value"),
+    ),
+    "drift": (
+        drift_sketch(split_expr=_DRIFT_SPLIT),
+        lambda ev: histogram_drift(ev, split_expr=_DRIFT_SPLIT),
+    ),
+    "f2": (K.cms_f2_sketch("user_id"), lambda ev: K.cms_f2_estimate(ev, "user_id")),
+}
 
 
-class TestStreamingHll:
-    def test_multi_batch_registers_merge_to_batch_result(self, spark, tmp_path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        import os
+def _rows(df):
+    return sorted((r.asDict() for r in df.collect()), key=repr)
 
-        from sressentials_spark.sources.tables import load_table
-        from sressentials_spark.streaming.sketch import run_hll_stream_batch
 
-        # Split events into two files → two micro-batches with
-        # maxFilesPerTrigger=1; per-batch partial maxes must merge in
-        # state to the exact same registers (and estimate) as batch.
-        src = pq.read_table("/root/testdata/sf0.001/events.parquet").to_pandas()
-        half = len(src) // 2
-        d = str(tmp_path)
-        fa, fb = os.path.join(d, "ev_a.parquet"), os.path.join(d, "ev_b.parquet")
-        pq.write_table(pa.Table.from_pandas(src.iloc[:half], preserve_index=False), fa)
-        pq.write_table(pa.Table.from_pandas(src.iloc[half:], preserve_index=False), fb)
-        os.utime(fa, (1_000_000, 1_000_000))
-        os.utime(fb, (2_000_000, 2_000_000))
+@pytest.fixture(scope="module")
+def two_batch_events(tmp_path_factory):
+    """The sf0.001 events as two files — even rows, then odd rows — so
+    a one-file-per-trigger replay runs two micro-batches and every
+    state row gets partials from both."""
+    import os
 
-        streamed = run_hll_stream_batch(
-            spark, d, glob="*.parquet", max_files_per_trigger=1, with_exact=True
-        ).collect()[0]
-        batch = hll_distinct(
-            load_table(spark, "/root/testdata/sf0.001", "events"),
-            "user_id",
-            with_exact=True,
-        ).collect()[0]
-        assert streamed.asDict() == batch.asDict()
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(os.path.join(SF, "events.parquet"))
+    d = tmp_path_factory.mktemp("two_batch_events")
+    for i, name in enumerate(["ev_a.parquet", "ev_b.parquet"]):
+        path = str(d / name)
+        pq.write_table(events.take(list(range(i, events.num_rows, 2))), path)
+        os.utime(path, (1_000_000 * (i + 1),) * 2)
+    return str(d)
+
+
+@pytest.mark.parametrize("case", sorted(_STREAM_CASES))
+def test_stream_sketch_merges_two_batches_to_batch_result(
+    spark, two_batch_events, case
+):
+    """Per-batch partial state must merge in streaming state to exactly
+    the batch state, so the shared fold answers identically, row for
+    row."""
+    from sressentials_spark.sources.tables import load_table
+    from sressentials_spark.streaming.sketch import run_sketch_stream
+
+    sketch, batch_op = _STREAM_CASES[case]
+    streamed = run_sketch_stream(spark, two_batch_events, *sketch, glob="*.parquet")
+    batch = batch_op(load_table(spark, SF, "events"))
+    assert streamed.columns == batch.columns
+    assert _rows(streamed) == _rows(batch)
 
 
 class TestEmptyInputs:
@@ -307,7 +306,7 @@ def test_quantile_error_eval_invariants(spark):
     from sressentials_spark.sources.tables import load_table
 
     out = quantile_error_eval(
-        load_table(spark, "/root/testdata/sf0.001", "events"), "value"
+        load_table(spark, SF, "events"), "value"
     ).toPandas()
     assert len(out) == 3
     assert (out["in_bin"] == 1).all()
@@ -322,7 +321,7 @@ def test_hll_set_algebra_invariants(spark):
     from pyspark.sql import functions as F
 
     row = hll_set_algebra(
-        load_table(spark, "/root/testdata/sf0.001", "events"),
+        load_table(spark, SF, "events"),
         "user_id",
         F.col("event_type") == "view",
         F.col("event_type") == "purchase",
