@@ -27,6 +27,7 @@ import numpy as np
 from pyspark.sql import SparkSession, functions as F
 
 from sressentials_spark import catalog
+from sressentials_spark.operators import ivf_versioned as IV
 from sressentials_spark.operators import similarity as S
 from sressentials_spark.operators.linalg import quantize_exact
 from sressentials_spark.sources.tables import load_table
@@ -55,16 +56,16 @@ def main() -> None:
         exact[int(r["query_id"])].add(int(r["neighbor_id"]))
 
     # Cell assignment + sizes from the persisted lists; probe order per
-    # query from the frozen coarse centroids (same integer-L2 rank the
-    # engine uses).
-    lists = spark.read.parquet(path).select(
+    # query from the manifest's coarse centroids (same integer-L2 rank
+    # the engine uses).
+    lists = IV.read_ivf_index_version(spark, path).select(
         "vec_id", F.col("cell").cast("long").alias("cell")
     )
     cell_of = {int(r["vec_id"]): int(r["cell"]) for r in lists.collect()}
     sizes: dict[int, int] = {}
     for c in cell_of.values():
         sizes[c] = sizes.get(c, 0) + 1
-    coarse = S.load_ivfpq_coarse(spark, path)
+    coarse = IV.read_ivf_manifest(path, 1)["coarse"]
     cids = sorted(coarse)
     cmat = np.stack([np.asarray(coarse[c], dtype=np.int64) for c in cids])
     qrows = {
@@ -96,7 +97,6 @@ def main() -> None:
             topk=10,
             shortlist=SHORTLIST,
             nprobe=nprobe,
-            m=S.PQ_RERANK_M,
         )
         got: dict[int, set[int]] = {}
         for r in approx.collect():

@@ -1812,40 +1812,26 @@ def sim_pq_adc_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a TRAINED coarse quantizer (integer-exact k-means —
     kmeans-tight cells are what make residuals small and codes sharp;
     docs/ANN_EVAL.md measures the hash-seeded alternative losing half
-    its recall). Served from ONE self-contained persisted artifact:
-    cell-partitioned code lists + frozen centroid/codebook sidecars;
-    the scan reads nprobe/n_cells of an already-~32x-compressed table,
-    and no raw corpus vector is ever touched. Distances are
-    bit-identical to the DuckDB-restated training + encode + ADC chain
-    (fixed re-association order); recall measured by
-    ``sim_ivfpq_recall_at_k``."""
+    its recall). Served from v1 of the PQ rebalance store
+    (``_ivfpq_rebalanced_index_path``, the full-corpus build; v2 is its
+    rebalance): code lists plus both quantizers inside one atomically
+    published manifest. The scan plans only the probed cells' files of
+    an already-~32x-compressed table, and no raw corpus vector is ever
+    touched. Distances are bit-identical to the DuckDB-restated
+    training + encode + ADC chain (fixed re-association order); recall
+    measured by ``sim_ivfpq_recall_at_k``."""
     emb = load_table(spark, sf_dir, "embeddings")
     return _shared_query(
         spark, sf_dir, "sim_pq_adc_topk_ivf",
-        lambda: S.pq_adc_topk_ivf_from_index(
+        lambda: IV.pq_adc_topk_ivfpq_versioned(
             spark,
             emb,
-            _ivfpq_index_path(spark, sf_dir),
+            _ivfpq_rebalanced_index_path(spark, sf_dir),
             _TOPK_QUERY_IDS,
             topk=10,
+            version=1,
         ),
     )
-
-
-def _ivfpq_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the persisted IVF-PQ inverted lists."""
-    from sressentials_spark.scratch import scratch_dir
-
-    def _build() -> str:
-        return S.build_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"),
-            scratch_dir("sressentials_ivfpq_index_"),
-        )
-
-    return get_or_build(spark, ("ivfpq_index", sf_dir), _build, tier="disk")
-
-
-INDEX_BUILDERS["ivfpq_index_build"] = _ivfpq_index_path
 
 
 def _ivf_versioned_delete_topk_sql() -> str:
@@ -1918,7 +1904,7 @@ def _ivfpq_versioned_sql(*, history_split: bool) -> str:
     ``history_split=False`` trains both quantizers on the full corpus
     (the build-then-rebalance composition); ``True`` trains them on
     the oldest-70% slice only and assigns/encodes every row under
-    those frozen artifacts first (the import -> ingest -> rebalance
+    those frozen artifacts first (the build -> ingest -> rebalance
     lifecycle: exactly the ingest oracle's frozen-artifact
     restatement, then the split on the merged population)."""
     m = S.PQ_M
@@ -2002,53 +1988,22 @@ codes2 AS (
 {_ivfadc_tail_sql(queries="allq", cents="cents2", cells="cells2", codes="codes2")}"""
 
 
-@register(
-    "sim_ivfpq_versioned_topk",
-    _ivfpq_adc_sql(m=S.PQ_M, limit=10),  # shares sim_pq_adc_topk_ivf's oracle
-)
-def sim_ivfpq_versioned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC search served from the CRASH-ATOMIC manifest-versioned
-    IVF-PQ store — closing the oracle gap the r9 verdict named: a user
-    serving PQ from the versioned tier now has a correctness row, not
-    just model tests. It serves v1 of the PQ rebalance store
-    (``_ivfpq_rebalanced_index_path``), which the migration verb
-    produced (import of the bare sidecar index: codes verbatim, coarse
-    centroids + residual codebooks moved INSIDE the one atomically
-    published manifest — no sidecar can ever be newer than the lists
-    it describes), and the candidate scan plans only the probed cells'
-    files at the MANIFEST level, the driver-side twin of partition
-    pruning. Serving is bit-identical to the bare store at equal
-    artifacts (shared scoring core similarity._ivfpq_adc_search,
-    pinned by tests), so this query SHARES ``sim_pq_adc_topk_ivf``'s
-    oracle verbatim — same precedent as
-    ``streaming_ivfpq_topk_serving``."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    return IV.pq_adc_topk_ivfpq_versioned(
-        spark,
-        emb,
-        _ivfpq_rebalanced_index_path(spark, sf_dir),
-        _TOPK_QUERY_IDS,
-        topk=10,
-        version=1,
-    )
-
-
 def _ivfpq_rerank_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the RERANK-tier IVF-PQ index: same layout
-    as the main index but a finer M=8 x K=16 grid (8-dim subspaces,
-    ~16x payload vs the main tier's ~32x). The M sweep in
-    docs/ANN_EVAL.md picked this point: finer subspaces sharpen the
-    ADC *shortlist* (rerank recall 780‰ -> 820‰ at equal shortlist)
+    """Build-once handle for the RERANK-tier IVF-PQ index: v1 of a
+    versioned store like the main index, but a finer M=8 x K=16 grid
+    (8-dim subspaces, ~16x payload vs the main tier's ~32x). The M
+    sweep in docs/ANN_EVAL.md picked this point: finer subspaces
+    sharpen the ADC *shortlist* (rerank recall 780‰ -> 820‰ at equal shortlist)
     while pure-ADC top-k barely moves, so only the rerank tier — whose
     final ranking is exact anyway — pays the 2x code payload."""
     from sressentials_spark.scratch import scratch_dir
 
     def _build() -> str:
-        return S.build_ivfpq_index(
-            load_table(spark, sf_dir, "embeddings"),
-            scratch_dir("sressentials_ivfpq_m8_index_"),
-            m=S.PQ_RERANK_M,
+        base = scratch_dir("sressentials_ivfpq_m8_index_")
+        IV.build_ivfpq_index_versioned(
+            load_table(spark, sf_dir, "embeddings"), base, m=S.PQ_RERANK_M
         )
+        return base
 
     return get_or_build(spark, ("ivfpq_m8_index", sf_dir), _build, tier="disk")
 
@@ -2099,7 +2054,6 @@ def sim_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             _TOPK_QUERY_IDS,
             topk=10,
             shortlist=100,
-            m=S.PQ_RERANK_M,
         ),
     )
 
@@ -2317,23 +2271,19 @@ def sim_ivf_versioned_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 def _ivfpq_rebalanced_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once handle for the PQ-tier REBALANCE fixture: the bare
-    full-corpus IVF-PQ index imported as v1 (codes verbatim — no
-    retrain; import is pinned bit-identical to the trained build), then
-    the crash-atomic rebalance splits every oversized cell and
-    re-encodes the moved members under the FROZEN books (v2). Its v1
-    is also the import ``sim_ivfpq_versioned_topk`` serves; sharing
-    the bare builder's trained artifacts keeps the index-build phase
-    from paying a second codebook train for the same index."""
+    """Build-once handle for the PQ-tier REBALANCE fixture: the
+    full-corpus IVF-PQ build as v1, then the crash-atomic rebalance
+    splits every oversized cell and re-encodes the moved members under
+    the FROZEN books (v2). ``sim_pq_adc_topk_ivf`` and
+    ``streaming_ivfpq_topk_serving`` serve its v1, so the index-build
+    phase trains the main-tier quantizers once."""
     emb = load_table(spark, sf_dir, "embeddings")
 
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
 
         base = scratch_dir("sressentials_ivfpq_rebal_")
-        IV.import_ivfpq_index_versioned(
-            spark, _ivfpq_index_path(spark, sf_dir), base
-        )
+        IV.build_ivfpq_index_versioned(emb, base)
         stats = IV.rebalance_index_versioned(spark, base, emb)
         if stats["cells_split"] < 1:
             raise ValueError(f"fixture produced no oversized cell: {stats}")
@@ -2373,11 +2323,11 @@ def sim_ivfpq_rebalance_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
     """Build-once handle for the FULL versioned-PQ lifecycle, all four
-    maintenance verbs composed on ONE store: a bare index trained and
-    built on the oldest 70% migrates in (IMPORT, v1 — codes verbatim),
-    the newest 30% INGESTs under the frozen artifacts (v2), the merged
-    population REBALANCEs (v3 — oversized cells split, moved members
-    re-encoded under frozen books), and the drift-scheduled REFRESH
+    maintenance verbs composed on ONE store: the index is trained and
+    built on the oldest 70% (BUILD, v1), the newest 30% INGESTs under
+    the frozen artifacts (v2), the merged population REBALANCEs (v3 —
+    oversized cells split, moved members re-encoded under frozen
+    books), and the drift-scheduled REFRESH
     retrains both quantizers on the full corpus and re-encodes
     everything (v4). Two queries serve from it at different versions —
     the time-travel read IS a versioned-tier capability:
@@ -2389,12 +2339,10 @@ def _ivfpq_versioned_lifecycle_path(spark: SparkSession, sf_dir: str) -> str:
     def _build() -> str:
         from sressentials_spark.scratch import scratch_dir
 
-        bare = S.build_ivfpq_index(
-            emb.filter(F.col("vec_id") < split),
-            scratch_dir("sressentials_ivfpq_hist_"),
-        )
         base = scratch_dir("sressentials_ivfpq_lifecycle_")
-        IV.import_ivfpq_index_versioned(spark, bare, base)
+        IV.build_ivfpq_index_versioned(
+            emb.filter(F.col("vec_id") < split), base
+        )
         IV.ingest_index_versioned(
             emb.filter(F.col("vec_id") >= split), base
         )
@@ -2422,7 +2370,7 @@ INDEX_BUILDERS["ivfpq_lifecycle_index_build"] = _ivfpq_versioned_lifecycle_path
 )
 def sim_ivfpq_versioned_lifecycle_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFADC serving after the versioned-PQ MAINTENANCE TRIAD —
-    import (bare 70%-trained store migrated, codes verbatim) ->
+    build (trained and encoded on the oldest 70%) ->
     ingest (newest 30% encoded under the frozen artifacts) ->
     rebalance (merged population, oversized cells split, moved rows
     re-encoded under frozen books) — the query that proves the verbs
@@ -3839,8 +3787,9 @@ def sketch_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``groupBy(r, c).count()`` whose exchange carries ≤ d·w rows per map
     task; counter merge is elementwise ``+`` (sketch union), so
     per-day/per-shard counters roll up without re-scanning history.
-    The probe join runs over the broadcast sketch; the only exact
-    aggregate is a scalar ``count(*)`` for the heavy threshold."""
+    The probe join runs over the broadcast sketch, and the heavy
+    threshold's stream total is read off the same counters, so the
+    events are scanned once."""
     return K.cms_probe_counts(
         load_table(spark, sf_dir, "events"), "user_id", _CMS_PROBE_USERS
     )
@@ -7447,8 +7396,8 @@ def asof_cogrouped_purchase_error(
 def streaming_ivfpq_topk_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Micro-batch ANN serving — the online tier in front of the
     persisted IVF-PQ index stack: query batches arrive as a file
-    stream, each micro-batch resolves probes from the persisted
-    cell-partitioned IVF index, scans only those cells' partitions of
+    stream, each micro-batch resolves probes from the manifest of v1
+    of the PQ rebalance store, scans only those cells' files of
     the ~32x-compressed PQ code table, ranks by broadcast ADC lookup
     inside ``foreachBatch``, and appends its top-k to a parquet sink
     (streaming/ann_serving.py). Per batch: O(queries x nprobe/n_cells
@@ -7466,7 +7415,8 @@ def streaming_ivfpq_topk_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
     return run_ivfpq_serving_stream(
         spark,
         sf_dir,
-        _ivfpq_index_path(spark, sf_dir),
+        _ivfpq_rebalanced_index_path(spark, sf_dir),
+        1,
         _TOPK_QUERY_IDS,
         topk=10,
     )

@@ -1,10 +1,11 @@
 """Crash-atomic (manifest-versioned) IVF index lifecycle.
 
-This module is the ONE mutation path for the ANN indexes. The bare
-cell-partitioned stores (operators/similarity.py: ``build_ivf_index``,
-``build_ivfpq_index``) are build-and-serve only; every maintenance
-verb — ingest, rebalance, refresh, compact, delete — runs here, and a
-lifecycle state is served as a version-pinned read of one store. The
+This module is the ONE mutation path for the ANN indexes and the only
+IVF-PQ layout. The bare cell-partitioned cosine store
+(operators/similarity.py: ``build_ivf_index``) is build-and-serve
+only; every maintenance verb — ingest, rebalance, refresh, compact,
+delete — runs here, and a lifecycle state is served as a
+version-pinned read of one store. The
 commit protocol is shared with the snapshot tables: version listing,
 manifest reads, the publish-and-retry loop and vacuum all live in
 operators/maintenance.py (:func:`~maintenance.publish_next`,
@@ -16,8 +17,8 @@ commit stages and lists:
 - what makes an index version is a tiny JSON MANIFEST listing, per
   visible file, its cell and row count — plus the quantizer itself
   (K x dim numbers, small enough to live inline, so one atomic publish
-  covers lists AND quantizers: no sidecar can ever be newer than the
-  lists it describes);
+  covers lists AND quantizers) and the list schema v1 recorded, which
+  every version is read with and every ingest must match;
 - the manifest link-lands with an exclusive ``os.link`` — a crashed
   writer leaves orphan commit dirs (reclaimed by vacuum), NEVER a
   half-split index, and racing writers resolve as optimistic
@@ -38,7 +39,7 @@ its tier — ``centroids`` for cosine-IVF, ``coarse`` + ``books`` for
 IVF-PQ — so :func:`ingest_index_versioned` and
 :func:`rebalance_index_versioned` read it from the latest version;
 one encoder (:func:`_encode`) is the only code that knows the two list
-formats, and the tier is chosen once, by the build (or the import).
+formats, and the tier is chosen once, by the build.
 
 Kill-between-steps model test: tests/test_ivf_versioned.py injects a
 crash after every mutation step and asserts readers always see exactly
@@ -87,10 +88,11 @@ IVF_SPLIT_SEED = "ivf-split-v1"
 
 def _int_keyed(man: dict) -> dict:
     """A copy of ``man`` with the quantizer cell ids back to int (JSON
-    object keys are strings)."""
+    object keys are strings), in ascending cell-id order whatever order
+    the JSON object lists them in."""
     return {
         k: (
-            {int(c): v for c, v in val.items()}
+            {int(c): v for c, v in sorted(val.items(), key=lambda t: int(t[0]))}
             if k in ("centroids", "coarse")
             else val
         )
@@ -314,12 +316,25 @@ def _encode(quantizer: dict, rows: DataFrame, id_col: str = "vec_id") -> DataFra
     return ivf_annotate_frozen(rows, ids, mat, IVF_NPROBE).drop("cells")
 
 
+def _ddl(lists: DataFrame) -> str:
+    """The list schema as the manifest records it: a DDL string of
+    column names and types (nullability is not recorded; a parquet
+    read makes every column nullable)."""
+    return ", ".join(
+        f"`{f.name}` {f.dataType.simpleString()}" for f in lists.schema
+    )
+
+
 def _publish_v1(base_path: str, quantizer: dict, lists: DataFrame) -> int:
     """Commit ``lists`` and ``quantizer`` as version 1 of a fresh
-    store: the one first publish behind both builds and the import."""
+    store: the one first publish behind both builds. The manifest
+    records the list schema (:func:`_ddl`); ``publish_next`` carries it
+    into every later version."""
     entries = _commit_lists(lists, os.path.join(base_path, "data"))
     publish_manifest(
-        base_path, 1, {"version": 1, **quantizer, "files": entries}
+        base_path,
+        1,
+        {"version": 1, **quantizer, "schema": _ddl(lists), "files": entries},
     )
     return 1
 
@@ -369,36 +384,25 @@ def read_ivf_index_version(
     at the LIST level first: pointer blocks whose rolled-up ``cells``
     miss every probed cell are skipped without even loading their
     entry file, so a probe-narrow read costs O(blocks touched) JSON,
-    not O(commits)."""
+    not O(commits). Every version is read with the list schema v1
+    recorded, so no file footer decides the columns."""
     version = version or manifest_versions(base_path)[-1]
     man = _read_manifest_raw(base_path, version)
+    want = None if cells is None else set(cells)
     if "manifest_list" in man:
-        ptrs = man["manifest_list"]
-        if not ptrs:
-            raise ValueError(f"version {version} of {base_path} lists no files")
-        sel = ptrs
-        if cells is not None:
-            want = set(cells)
-            sel = [p for p in ptrs if want.intersection(p["cells"])]
-        entries = [e for p in sel for e in read_manifest_block(base_path, p)]
-        schema_entry = (
-            entries[0]
-            if entries
-            else read_manifest_block(base_path, ptrs[0])[0]
-        )
+        entries = [
+            e
+            for p in man["manifest_list"]
+            if want is None or want.intersection(p["cells"])
+            for e in read_manifest_block(base_path, p)
+        ]
     else:
-        if not man["files"]:
-            raise ValueError(f"version {version} of {base_path} lists no files")
         entries = man["files"]
-        schema_entry = entries[0]
-    if cells is not None:
-        want = set(cells)
+    if want is not None:
         entries = [e for e in entries if e["cell"] in want]
     if not entries:
-        # All pruned: ONE footer read for the schema, not O(index).
-        first = os.path.join(base_path, "data", schema_entry["path"])
-        return spark.read.parquet(first).limit(0)
-    return spark.read.parquet(
+        return local_df(spark, [], man["schema"])
+    return spark.read.schema(man["schema"]).parquet(
         *[os.path.join(base_path, "data", e["path"]) for e in entries]
     )
 
@@ -485,7 +489,9 @@ def ingest_index_versioned(
     every probe). ``retries`` bounds pathological contention (past it
     the ``FileExistsError`` re-raises); the staged files of abandoned
     attempts are vacuum fodder. ``fault("staged")`` fires once, after
-    the first staging; an empty batch commits nothing.
+    the first staging; an empty batch commits nothing. A batch whose
+    encoded columns differ from the list schema v1 recorded raises
+    ``ValueError`` before anything is staged.
 
     ``manifest_extra`` rides verbatim in the published manifest —
     the hook a transactional upstream uses to make ingest IDEMPOTENT:
@@ -500,10 +506,16 @@ def ingest_index_versioned(
         man = _resolved(base_path, parent)
         under = [parent.get(k) for k in ("centroids", "coarse", "books")]
         if staged.get("under") != under:
+            lists = _encode(man, emb_batch, id_col)
+            if _ddl(lists) != man["schema"]:
+                raise ValueError(
+                    f"{base_path} lists are ({man['schema']}); the batch "
+                    f"encodes to ({_ddl(lists)})"
+                )
             first = not staged
             staged["under"] = under
             staged["entries"] = _commit_lists(
-                _encode(man, emb_batch, id_col), os.path.join(base_path, "data")
+                lists, os.path.join(base_path, "data")
             )
             if first and staged["entries"]:
                 fault("staged")
@@ -703,13 +715,21 @@ def build_ivfpq_index_versioned(
     iters: int = PQ_ITERS,
     id_col: str = "vec_id",
 ) -> int:
-    """Commit version 1 of a manifest-versioned IVF-PQ index: the same
-    trained coarse quantizer + residual codebooks + encode pass as
-    :func:`similarity.build_ivfpq_index` (results pinned bit-identical
-    by tests), but BOTH frozen artifacts ride inside the
-    atomically-published manifest instead of sidecar parquet dirs — so
-    there is no window where lists and quantizers can disagree, the
-    exact hazard sidecars re-introduce on every maintenance write."""
+    """Commit version 1 of an IVF-PQ index (Jegou et al., TPAMI 2011
+    SIV — the FAISS ``IVFPQ`` layout): a TRAINED coarse quantizer
+    (integer-exact Lloyd's k-means) partitions the corpus into cells,
+    and every vector's RESIDUAL against its cell centroid is PQ-coded
+    with residual-trained codebooks (:func:`similarity.train_ivfpq`,
+    :func:`similarity._encode_ivfpq_lists`). The per-vector payload is
+    M small ints (~32x under the raw floats, which stay in cold
+    storage), and a serve reads only its probed cells' files. BOTH
+    quantizers are trained on purpose: k-means cells are tight (the
+    hash-seeded cells of the cosine-IVF tier do not shrink residuals,
+    and residual coding then HURTS recall — docs/ANN_EVAL.md), and
+    within tight cells residual PQ recovers most of the cell ceiling.
+    Both frozen artifacts ride inside the atomically published
+    manifest, so lists and quantizers can never disagree; the probe
+    width is a serve-time choice (:func:`pq_adc_topk_ivfpq_versioned`)."""
     from sressentials_spark.operators import similarity as S
 
     quantizer = _pq_quantizers(*S.train_ivfpq(emb, n_cells, m, k, iters, id_col))
@@ -725,12 +745,19 @@ def pq_adc_topk_ivfpq_versioned(
     version: int | None = None,
     nprobe: int = IVF_NPROBE,
     id_col: str = "vec_id",
+    qrows: list | None = None,
 ) -> DataFrame:
-    """IVFADC search served from a committed IVF-PQ version: probes,
-    distance tables and codes all derive from ONE manifest (quantizers
-    inline), and the candidate scan plans only the probed cells' files
-    — bit-identical to the bare store's search at equal artifacts
-    (shared scoring core: similarity._ivfpq_adc_search)."""
+    """IVFADC search (Jegou et al. 2011 SIV) served from a committed
+    IVF-PQ version (default latest): each query ranks only the PQ code
+    words living in its ``nprobe`` probed cells (exact integer L2
+    against the manifest's coarse centroids), by per-(probed cell,
+    subspace) table lookup against its residual in that cell; no raw
+    corpus vector is touched. Probes, distance tables and codes all
+    derive from ONE manifest (quantizers inline), and the candidate
+    scan plans only the probed cells' files (scoring core:
+    similarity._ivfpq_adc_search; one shuffle, the per-query rank
+    window). ``qrows`` are the collected ``(id_col, embedding)`` query
+    rows when the caller already holds them (the rerank does)."""
     from sressentials_spark.operators import similarity as S
 
     version = version or manifest_versions(base_path)[-1]
@@ -749,6 +776,7 @@ def pq_adc_topk_ivfpq_versioned(
         nprobe=nprobe,
         m=len(books),
         id_col=id_col,
+        qrows=qrows,
     )
 
 
@@ -815,7 +843,7 @@ def compact_ivf_index_versioned(
         replaced: set[str] = set()
         new_entries: list[dict] = []
         for cell, (es, k) in sorted(todo.items()):
-            rows = spark.read.parquet(
+            rows = spark.read.schema(man["schema"]).parquet(
                 *[os.path.join(data_dir, e["path"]) for e in es]
             )
             # Range-partition on the id so each compacted file covers a
@@ -912,7 +940,8 @@ def delete_ivf_index_versioned(
         if not candidates:
             return None
         hits = (
-            spark.read.parquet(*candidates)
+            spark.read.schema(man["schema"])
+            .parquet(*candidates)
             .select(F.col(id_col), F.input_file_name().alias("_f"))
             .filter(F.col(id_col).isin(want))
             .groupBy("_f")
@@ -944,7 +973,7 @@ def delete_ivf_index_versioned(
                     "would leave victims visible"
                 )
             affected[cand] = int(r["count"])
-        survivors = spark.read.parquet(*affected).filter(
+        survivors = spark.read.schema(man["schema"]).parquet(*affected).filter(
             ~F.col(id_col).isin(want)
         )
         entries = _commit_lists(survivors, os.path.join(base_path, "data"))
@@ -976,9 +1005,7 @@ def refresh_ivfpq_index_versioned(
     codebooks as ONE new manifest version. Readers of the previous
     version are never disturbed; a crash anywhere before the final
     link leaves the old quantizers fully live (staged files are vacuum
-    fodder) — the swap the bare sidecar layout cannot do safely, since
-    rewriting ``_coarse``/``_pq_books`` next to live lists has a
-    window where lists and quantizers disagree.
+    fodder): lists and quantizers swap in the same publish.
 
     Cost is O(corpus) — a refresh IS the periodic rebuild, amortized
     across the many O(batch) ingests it re-anchors. Single
@@ -1088,38 +1115,6 @@ def ivfpq_refresh_decision(
         "hist_n bigint, batch_n bigint, hist_err bigint, batch_err bigint, "
         "drift_permille bigint, decision string",
     )
-
-
-def import_ivfpq_index_versioned(
-    spark,
-    bare_path: str,
-    base_path: str,
-    id_col: str = "vec_id",
-) -> int:
-    """Migrate a bare sidecar-layout IVF-PQ index
-    (:func:`similarity.build_ivfpq_index`: ``cell=*/`` code lists +
-    ``_coarse``/``_pq_books`` parquet sidecars) into the
-    manifest-versioned store as version 1 — the adoption path for an
-    existing index estate: no retrain, no re-encode (the codes are
-    copied verbatim, so serving is bit-identical by construction —
-    pinned by tests), one read+write pass over the compressed lists
-    (M small ints per vector, ~32x under the raw corpus) and the
-    quantizers move INSIDE the atomically-published manifest. A crash
-    anywhere before the final link leaves no manifest — readers see
-    "no versions", never a partial import; the staged commit files are
-    vacuum fodder. After import, the bare store is unreferenced and
-    can be retired."""
-    from sressentials_spark.operators import similarity as S
-
-    books = S.load_pq_books(spark, bare_path)
-    coarse = S.load_ivfpq_coarse(spark, bare_path)
-    m = len(books)
-    lists = spark.read.parquet(bare_path).select(
-        F.col(id_col),
-        F.col("cell").cast("long").alias("cell"),
-        *[f"code_{i}" for i in range(m)],
-    )
-    return _publish_v1(base_path, _pq_quantizers(coarse, books), lists)
 
 
 def promote_ivf_manifest_list(

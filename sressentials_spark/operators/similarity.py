@@ -39,9 +39,6 @@ whose fan-in is corpus/2^planes per query.
 
 from __future__ import annotations
 
-import glob as globmod
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -294,28 +291,6 @@ def build_ivf_index(
         ivf_annotate_frozen(emb, ids, mat, nprobe), base_path, ["cell"]
     )
     return base_path
-
-
-def _read_sidecar_pydict(base_path: str, name: str) -> dict:
-    """Read a K-row IVF-PQ index sidecar (``_coarse``/``_pq_books``)
-    directly with pyarrow on the driver.
-
-    These are bounded metadata artifacts — K centroids or M*K codebook
-    rows — and every serve query loads them, so routing each load
-    through a Spark job (scan + collect) paid ~0.25-0.3 s of py4j/job
-    latency per sidecar per query (profiled: 0.54 s of a 2.1 s
-    IVF-PQ serve was the two sidecar loads). A driver-direct read is
-    both the fast path and the honest one at scale: the index's
-    manifest metadata never needs a distributed scan. Shares the
-    module's documented LOCAL-FILESYSTEM CONTRACT (glob/getsize
-    elsewhere); an object-store port wraps this with its own reader.
-    """
-    import pyarrow.parquet as pq
-
-    parts = sorted(globmod.glob(os.path.join(base_path, name, "part-*.parquet")))
-    if not parts:
-        raise FileNotFoundError(f"no parquet sidecar at {base_path}/{name}")
-    return pq.read_table(parts).to_pydict()
 
 
 def cosine_topk_ivf_from_index(
@@ -688,7 +663,7 @@ def pq_train_sql_ctes(
     codes still cover all of ``src`` — the frozen-codebook ingest
     restatement trains on the history slice and encodes history +
     ingested batch alike (mirrors build-then-ingest under frozen
-    ``_pq_books``)."""
+    codebooks)."""
     from sressentials_spark.operators.cluster import QUANT_SCALE
 
     dsub = dim // m
@@ -864,9 +839,8 @@ def train_ivfpq(
     cells (``{cid: integer centroid}``, cluster.kmeans_fit_centroids)
     and the per-subspace codebooks trained on residuals against them
     (:func:`pq_train_codebooks` shape). Returns ``(coarse, books)``.
-    The one trainer behind the bare build and the versioned build and
-    refresh, so equal inputs give bit-identical artifacts on every
-    path."""
+    The one trainer behind the versioned build and refresh, so equal
+    inputs give bit-identical artifacts on both paths."""
     from sressentials_spark.operators.cluster import kmeans_fit_centroids
 
     coarse = kmeans_fit_centroids(emb, k=n_cells, iters=iters, id_col=id_col)
@@ -874,60 +848,6 @@ def train_ivfpq(
         emb, m, k, iters=iters, id_col=id_col, residual_coarse=coarse
     )
     return coarse, books
-
-
-def build_ivfpq_index(
-    emb: DataFrame,
-    base_path: str,
-    n_cells: int = IVF_CELLS,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    iters: int = PQ_ITERS,
-    id_col: str = "vec_id",
-) -> str:
-    """Materialize the IVF-PQ inverted lists (Jegou et al., TPAMI 2011
-    SIV — the FAISS ``IVFPQ`` layout): a TRAINED coarse quantizer
-    (integer-exact Lloyd's k-means, cluster.kmeans_fit_centroids)
-    partitions the corpus into cells, and every vector's RESIDUAL
-    against its cell centroid is PQ-coded with residual-trained
-    codebooks. The whole serving artifact is frozen at build time:
-    cell-partitioned code lists + two sidecars (``_coarse`` centroids,
-    ``_pq_books`` codebooks) — self-contained, nothing recomputed at
-    query time.
-
-    This is THE billion-scale serving artifact: the per-vector payload
-    is M small ints (~32x smaller than the raw floats, which stay in
-    cold storage), and a query batch's scan is pruned to its probed
-    cells at the PARTITION level — the probed fraction of an already-
-    32x-compressed table is what makes exhaustive-within-cell search
-    affordable at 100 TB. The probe width is a serve-time choice
-    (:func:`pq_adc_topk_ivf_from_index`), not part of the artifact.
-    BOTH quantizers are trained on purpose: k-means cells are tight
-    (the hash-seeded cells of the cosine-IVF tier measurably do not
-    shrink residuals, and residual coding then HURTS recall — measured
-    in docs/ANN_EVAL.md), and within tight cells residual PQ recovers
-    most of the cell ceiling."""
-    from sressentials_spark import sinks
-
-    spark = emb.sparkSession
-    coarse, books = train_ivfpq(emb, n_cells, m, k, iters, id_col)
-    lists = _encode_ivfpq_lists(emb, coarse, books, m=m, id_col=id_col)
-    sinks.write_partitioned(lists, base_path, ["cell"])
-    local_df(
-        spark,
-        [(int(cid), [int(x) for x in comp]) for cid, comp in sorted(coarse.items())],
-        "cid long, cq array<long>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base_path}/_coarse")
-    local_df(
-        spark,
-        [
-            (mi, int(cid), [int(x) for x in row])
-            for mi, (cids, C) in enumerate(books)
-            for cid, row in zip(cids.tolist(), C)
-        ],
-        "m int, cid long, cq array<long>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{base_path}/_pq_books")
-    return base_path
 
 
 def _encode_ivfpq_lists(
@@ -995,7 +915,7 @@ def ivfpq_quantization_error(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Per-vector integer PQ quantization error under an index's FROZEN
-    artifacts — ``coarse`` / ``books`` in their loader shapes and
+    artifacts — ``coarse`` / ``books`` in their manifest shapes and
     ``lists``, the inverted-list rows they encoded (the same seam as
     :func:`_ivfpq_adc_search`): for each listed row, the exact int64
     squared L2 distance between its quantized residual (raw embedding
@@ -1076,87 +996,6 @@ def ivfpq_quantization_error(
     return err
 
 
-def load_ivfpq_coarse(spark, base_path: str) -> dict[int, list[int]]:
-    """The frozen trained coarse centroids persisted by
-    :func:`build_ivfpq_index`, in kmeans_fit_centroids shape.
-
-    Ascending-cid iteration order is part of the contract (the old
-    Spark-job loader ``orderBy("cid")``-ed; part-file enumeration order
-    is NOT trusted to reproduce it), so the dict is built sorted."""
-    d = _read_sidecar_pydict(base_path, "_coarse")
-    return {
-        int(cid): [int(x) for x in cq]
-        for cid, cq in sorted(zip(d["cid"], d["cq"]), key=lambda t: int(t[0]))
-    }
-
-
-def load_pq_books(spark, base_path: str):
-    """The frozen residual codebooks persisted by
-    :func:`build_ivfpq_index`, in :func:`pq_train_codebooks` shape."""
-    import numpy as np
-
-    d = _read_sidecar_pydict(base_path, "_pq_books")
-    out: dict[int, list] = {}
-    for mi, cid, cq in sorted(
-        zip(d["m"], d["cid"], d["cq"]), key=lambda t: (t[0], t[1])
-    ):
-        out.setdefault(int(mi), []).append((int(cid), cq))
-    books = []
-    for mi in sorted(out):
-        cids = np.array([c for c, _ in out[mi]], dtype=np.int64)
-        C = np.stack([np.asarray(v, dtype=np.int64) for _, v in out[mi]])
-        books.append((cids, C))
-    return books
-
-
-def pq_adc_topk_ivf_from_index(
-    spark,
-    emb: DataFrame,
-    ivfpq_path: str,
-    query_ids: list[int],
-    topk: int = 10,
-    nprobe: int = IVF_NPROBE,
-    m: int = PQ_M,
-    k: int = PQ_K,
-    id_col: str = "vec_id",
-    qrows: list | None = None,
-) -> DataFrame:
-    """IVF-PQ search (IVFADC): trained-coarse cell pruning composed
-    with RESIDUAL compressed-domain asymmetric-distance scoring — each
-    query ranks only the PQ code words living in its ``nprobe`` probed
-    cells (exact integer L2 argmin against the frozen coarse
-    centroids), by per-(probed cell, subspace) table lookup against
-    the query's residual in that cell (``q - centroid(cell)``); no raw
-    corpus vector is ever touched.
-
-    Execution shape: probes, centroids and codebooks all come from the
-    self-contained index sidecars (driver-side math over K*dim ints —
-    no corpus job), the candidate scan reads ONLY the probed cells'
-    partitions of the persisted inverted-list table
-    (``PartitionFilters`` — whole directories skipped), codes unpivot
-    to ``(m, code)`` and a broadcast per-(query, cell) distance-table
-    join resolves every lookup. Distances re-associate in the fixed
-    ``((d0+d1)+d2)+d3`` order, so the doubles are bit-identical to the
-    DuckDB restatement. One shuffle (the per-query rank window)."""
-    books = load_pq_books(spark, ivfpq_path)
-    coarse = load_ivfpq_coarse(spark, ivfpq_path)
-    return _ivfpq_adc_search(
-        spark,
-        emb,
-        coarse,
-        books,
-        lambda probed: spark.read.parquet(ivfpq_path).filter(
-            F.col("cell").isin(probed)
-        ),
-        query_ids,
-        topk=topk,
-        nprobe=nprobe,
-        m=m,
-        id_col=id_col,
-        qrows=qrows,
-    )
-
-
 def _ivfpq_adc_search(
     spark,
     emb: DataFrame,
@@ -1172,11 +1011,13 @@ def _ivfpq_adc_search(
     qrows: list | None = None,
 ) -> DataFrame:
     """The IVFADC scoring core against GIVEN frozen artifacts:
-    ``coarse`` / ``books`` in their loader shapes and ``lists_for``, a
-    callable returning the inverted-list rows for the probed cells —
-    the seam that lets the bare cell-partitioned store and the
-    manifest-versioned store (operators/ivf_versioned.py) share one
-    bit-identical search.
+    ``coarse`` / ``books`` in their manifest shapes
+    (operators/ivf_versioned.py) and ``lists_for``, a callable
+    returning the inverted-list rows for the probed cells — the
+    versioned store's manifest-pruned read
+    (:func:`~sressentials_spark.operators.ivf_versioned.pq_adc_topk_ivfpq_versioned`),
+    or in-memory :func:`_encode_ivfpq_lists` rows as an independent
+    reference for that read.
 
     Plan shape (r13): the per-(query, probed-cell) ADC distance table
     travels as ONE ``array<array<double>>`` column on the broadcast
@@ -1293,27 +1134,30 @@ def _adc_lookup_sum(m: int):
 def pq_adc_rerank_topk(
     spark,
     emb: DataFrame,
-    ivfpq_path: str,
+    base_path: str,
     query_ids: list[int],
     topk: int = 10,
     shortlist: int = 50,
     nprobe: int = IVF_NPROBE,
-    m: int = PQ_M,
-    k: int = PQ_K,
     id_col: str = "vec_id",
     dim: int = DEFAULT_DIM,
 ) -> DataFrame:
     """Two-stage serving (the production vector-search pattern):
     stage 1 ranks the probed cells' PQ codes by ADC and keeps a
     ``shortlist`` of candidates per query (compressed-domain, no raw
-    vector touched); stage 2 re-ranks ONLY the shortlist by exact
-    cosine against the raw vectors. Raw-vector I/O is
-    O(queries x shortlist) — a few KB per query — while recall
-    recovers to the cell ceiling: quantization error can reorder a
-    shortlist but no longer decides the top-k
-    (measured in docs/ANN_EVAL.md). The re-rank join is an
-    id-equi-join against the corpus (pushed-down ``isin`` fetch), and
-    the final rank is the usual per-query window."""
+    vector touched) from the latest version of the IVF-PQ store at
+    ``base_path``, quantizers read from its manifest; stage 2 re-ranks
+    ONLY the shortlist by exact cosine against the raw vectors.
+    Raw-vector I/O is O(queries x shortlist) — a few KB per query —
+    while recall recovers to the cell ceiling: quantization error can
+    reorder a shortlist but no longer decides the top-k (measured in
+    docs/ANN_EVAL.md). The re-rank join is an id-equi-join against the
+    corpus (pushed-down ``isin`` fetch), and the final rank is the
+    usual per-query window."""
+    from sressentials_spark.operators.ivf_versioned import (
+        pq_adc_topk_ivfpq_versioned,
+    )
+
     # ONE query-row collect serves both stages: the ADC shortlist's
     # probe selection and the exact re-rank's broadcast query side read
     # the same (id, embedding) rows (two scan+collect jobs per serve
@@ -1323,15 +1167,13 @@ def pq_adc_rerank_topk(
         .select(id_col, "embedding")
         .collect()
     )
-    short = pq_adc_topk_ivf_from_index(
+    short = pq_adc_topk_ivfpq_versioned(
         spark,
         emb,
-        ivfpq_path,
+        base_path,
         query_ids,
         topk=shortlist,
         nprobe=nprobe,
-        m=m,
-        k=k,
         id_col=id_col,
         qrows=qrows,
     ).select("query_id", "neighbor_id")

@@ -254,6 +254,11 @@ def cms_counters(df: DataFrame, col: str, seed: str = CMS_SEED) -> DataFrame:
         df.filter(F.col(col).isNotNull())
         .select(_cms_coords(col, seed))
         .select("rc.r", "rc.c")
+        # Drops nothing (a non-NULL key always hashes to a bucket). The
+        # probe's left join infers this filter into its counter subplan;
+        # stating it here gives every consumer the same subplan, so the
+        # counter exchange is reused and the source is scanned once.
+        .filter(F.col("c").isNotNull())
         .groupBy("r", "c")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -280,9 +285,14 @@ def cms_probe_sketch(
             .agg(F.min(F.coalesce("n", F.lit(0))).alias("cms_estimate"))
         )
         # Every non-NULL row adds exactly 1 to one counter of each hash
-        # row, so hash row 0's counters sum to the stream total.
-        total = counters.filter(F.col("r") == 0).agg(
-            F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("total_rows")
+        # row, so hash row 0's counters sum to the stream total. A
+        # conditional sum, not a filter: a filter on ``r`` would be
+        # pushed below the counter aggregate and give this consumer a
+        # counter subplan of its own.
+        total = counters.agg(
+            F.coalesce(F.sum(F.when(F.col("r") == 0, F.col("n"))), F.lit(0))
+            .cast("long")
+            .alias("total_rows")
         )
         return (
             est.crossJoin(F.broadcast(total))

@@ -1,14 +1,15 @@
 """Micro-batch ANN serving: IVF-PQ (IVFADC) top-k inside foreachBatch.
 
-The batch ANN stack ends at a persisted SELF-CONTAINED IVF-PQ index —
-cell-partitioned residual code lists plus frozen trained-coarse
-centroids and codebooks as sidecars (operators/similarity.py). This
-module puts a QUERY STREAM in front of it: the online serving tier a
-vector store runs. Query batches arrive as files; each micro-batch
-resolves its probed cells against the frozen coarse centroids
-(driver-side integer math — no corpus job), scans ONLY those cells'
-partitions of the ~32×-compressed code table, ranks candidates by
-broadcast ADC distance-table lookup, and appends its top-k to a
+The batch ANN stack ends at a persisted IVF-PQ index — a
+manifest-versioned store whose manifest holds the frozen trained-coarse
+centroids and codebooks beside the residual code lists it names
+(operators/ivf_versioned.py). This module puts a QUERY STREAM in front
+of it: the online serving tier a vector store runs. Query batches
+arrive as files; each micro-batch resolves its probed cells against
+the manifest's coarse centroids (driver-side integer math — no corpus
+job), scans ONLY those cells' files of the ~32×-compressed code table,
+ranks candidates by broadcast ADC distance-table lookup, and appends
+its top-k to a
 parquet sink (executors score and write; the driver handles only the
 batch's query ids — a few rows per request batch, the one collect a
 serving tier legitimately pays).
@@ -16,8 +17,7 @@ serving tier legitimately pays).
 Per micro-batch the cost is O(queries × nprobe/n_cells × compressed
 corpus): the index is never rebuilt, never rescanned in full, never
 held in memory between batches — the steady-state serving cost at
-100 TB, where the same two artifacts are warehouse tables and each
-query batch is a request window.
+100 TB, where each query batch is a request window.
 
 Batching invariance (what makes this oracle-checkable): every query
 is scored independently against the same frozen artifacts — per-query
@@ -48,14 +48,16 @@ from sressentials_spark.streaming import (
 def run_ivfpq_serving_stream(
     spark: SparkSession,
     sf_dir: str,
-    ivfpq_path: str,
+    base_path: str,
+    version: int,
     query_ids: list[int],
     topk: int = 10,
 ) -> DataFrame:
     """Replay the staged query arrivals through the IVFADC serving
-    tier (one file per trigger) and return the accumulated top-k
-    table from the parquet sink."""
-    from sressentials_spark.operators import similarity as S
+    tier (one file per trigger) against ``version`` of the IVF-PQ
+    store at ``base_path`` and return the accumulated top-k table from
+    the parquet sink."""
+    from sressentials_spark.operators import ivf_versioned as IV
     from sressentials_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -80,12 +82,13 @@ def run_ivfpq_serving_stream(
             qids = [int(r["query_id"]) for r in batch.select("query_id").collect()]
             if not qids:
                 return
-            S.pq_adc_topk_ivf_from_index(
+            IV.pq_adc_topk_ivfpq_versioned(
                 batch.sparkSession,
                 emb,
-                ivfpq_path,
+                base_path,
                 qids,
                 topk=topk,
+                version=version,
             ).write.mode("append").parquet(out)
 
         drain_foreach_batch(

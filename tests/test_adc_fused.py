@@ -5,8 +5,9 @@ The fused plan replaces the r12 explode + (m, code) lookup join +
 re-aggregation with a broadcast array-of-arrays distance table read by
 ``element_at`` projection; these tests pin that the driver-side table
 math is bit-identical to the scalar left-fold reference, that sparse
-(surviving-id) codebooks index correctly, and that the sidecar loader
-orders by cid regardless of part-file enumeration order.
+(surviving-id) codebooks index correctly, and that the manifest read
+hands back quantizers in ascending cid order whatever order the JSON
+object lists them in.
 """
 
 from __future__ import annotations
@@ -66,22 +67,23 @@ class TestAdcTables:
                 assert np.isnan(tab[mi][gap])
 
 
-class TestCoarseLoaderOrder:
-    def test_load_ivfpq_coarse_sorts_by_cid(self, spark, tmp_path, monkeypatch):
-        # Shuffled sidecar: the pydict arrives in file order; the
-        # loader must still hand back ascending-cid iteration order
-        # (the old Spark loader's orderBy contract).
-        monkeypatch.setattr(
-            S,
-            "_read_sidecar_pydict",
-            lambda base, name: {
-                "cid": [3, 0, 2, 1],
-                "cq": [[30, 30], [0, 0], [20, 20], [10, 10]],
-            },
+class TestManifestQuantizerOrder:
+    def test_manifest_coarse_sorts_by_cid(self):
+        # A manifest whose JSON object lists cells out of order: the
+        # read must still hand back ascending-cid iteration order.
+        from sressentials_spark.operators import ivf_versioned as V
+
+        man = V._int_keyed(
+            {
+                "version": 1,
+                "coarse": {"3": [30, 30], "0": [0, 0], "2": [20, 20], "1": [10, 10]},
+                "centroids": {"10": [1.0], "9": [0.5]},
+            }
         )
-        d = S.load_ivfpq_coarse(spark, str(tmp_path))
-        assert list(d) == [0, 1, 2, 3]
-        assert d[2] == [20, 20]
+        assert list(man["coarse"]) == [0, 1, 2, 3]
+        assert man["coarse"][2] == [20, 20]
+        assert list(man["centroids"]) == [9, 10]
+        assert man["version"] == 1
 
 
 class TestLocalDfFallbacks:

@@ -23,7 +23,6 @@ def test_registry_names() -> None:
         "dedup_index_build",
         "ivf_index_build",
         "ivf_rebalance_index_build",
-        "ivfpq_index_build",
         "ivfpq_rerank_index_build",
         "ivf_versioned_index_build",
         "ivf_versioned_delete_index_build",

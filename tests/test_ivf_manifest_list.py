@@ -294,11 +294,12 @@ def test_streaming_exactly_once_on_promoted_store(spark, tmp_path):
 
     from sressentials_spark.streaming import ann_ingest as AI
 
-    emb = _emb(spark)
+    # The arrivals carry (vec_id, embedding), and an ingest must match
+    # the list schema v1 recorded, so v1 is built on those columns too.
+    emb = _emb(spark).select("vec_id", "embedding")
     arrivals = str(tmp_path / "arrivals")
     (
         emb.filter(F.col("vec_id") >= 25)
-        .select("vec_id", "embedding")
         .repartitionByRange(3, "vec_id")
         .write.mode("overwrite")
         .parquet(arrivals)
@@ -354,6 +355,7 @@ def test_list_level_pruning_skips_unprobed_blocks(spark, tmp_path, monkeypatch):
     payload["centroids"] = {
         str(c): v for c, v in sorted(raw["centroids"].items())
     }
+    payload["schema"] = raw["schema"]
     MT.publish_manifest(base, 3, payload)
 
     loads: list[str] = []

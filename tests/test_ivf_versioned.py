@@ -365,6 +365,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
                     "centroids": {
                         str(c): v for c, v in man1["centroids"].items()
                     },
+                    "schema": man1["schema"],
                     "files": man1["files"],
                 },
             )
@@ -398,6 +399,7 @@ def test_racing_publisher_loses_cleanly(spark, tmp_path):
                     "centroids": {
                         str(c): cv for c, cv in m["centroids"].items()
                     },
+                    "schema": m["schema"],
                     "files": m["files"],
                 },
             )
@@ -612,15 +614,31 @@ def _adc_topk(spark, emb, base, version=None):
 
 
 def test_ivfpq_versioned_build_matches_bare_index(spark, tmp_path):
-    """The versioned IVF-PQ tier serves bit-identically to the bare
-    sidecar store at equal trained artifacts (shared scoring core) —
-    and the manifest carries BOTH quantizers inline."""
+    """v1 of the IVF-PQ store carries BOTH quantizers inline, equal to
+    a direct ``train_ivfpq`` over the corpus, and serves exactly what
+    the scoring core computes over the bare lists: the same corpus
+    encoded in memory under those quantizers, no store involved."""
     emb = _emb(spark)
-    bare = S.build_ivfpq_index(emb, str(tmp_path / "bare"))
     base = str(tmp_path / "ver")
     assert V.build_ivfpq_index_versioned(emb, base) == 1
+    coarse, books = S.train_ivfpq(emb)
+    man = V.read_ivf_manifest(base, 1)
+    assert man["coarse"] == coarse
+    ver_books = V._books_from_json(man["books"])
+    assert len(ver_books) == len(books)
+    for (ac, aC), (bc, bC) in zip(ver_books, books):
+        assert ac.tolist() == bc.tolist() and (aC == bC).all()
+    bare = S._encode_ivfpq_lists(emb, coarse, books)
     want = (
-        S.pq_adc_topk_ivf_from_index(spark, emb, bare, QIDS, topk=10)
+        S._ivfpq_adc_search(
+            spark,
+            emb,
+            coarse,
+            books,
+            lambda probed: bare.filter(bare["cell"].isin(probed)),
+            QIDS,
+            topk=10,
+        )
         .toPandas()
         .sort_values(["query_id", "rank"])
         .reset_index(drop=True)
@@ -628,13 +646,6 @@ def test_ivfpq_versioned_build_matches_bare_index(spark, tmp_path):
     pd.testing.assert_frame_equal(
         _adc_topk(spark, emb, base), want, check_exact=True
     )
-    man = V.read_ivf_manifest(base, 1)
-    assert man["coarse"] == S.load_ivfpq_coarse(spark, bare)
-    bare_books = S.load_pq_books(spark, bare)
-    ver_books = V._books_from_json(man["books"])
-    assert len(ver_books) == len(bare_books)
-    for (ac, aC), (bc, bC) in zip(ver_books, bare_books):
-        assert ac.tolist() == bc.tolist() and (aC == bC).all()
 
 
 def test_ivfpq_versioned_ingest_frozen_and_atomic(spark, tmp_path):
@@ -920,70 +931,60 @@ def test_query_src_lookup_matches_index_scan_fallback(spark, tmp_path):
     pd.testing.assert_frame_equal(via_src, via_fallback, check_exact=True)
 
 
-def test_import_bare_ivfpq_serves_bit_identically(spark, tmp_path):
-    """import_ivfpq_index_versioned migrates a bare sidecar-layout
-    IVF-PQ index into the manifest store without retrain or re-encode:
-    the imported v1 serves bit-identically to the bare store AND to a
-    from-scratch versioned build over the same corpus (training is
-    deterministic), and post-import ingest keeps working against the
-    manifest's frozen quantizers."""
-    from pyspark.sql import functions as F
-
-    emb = _emb(spark)
-    bare = S.build_ivfpq_index(emb, str(tmp_path / "bare"))
-    base = str(tmp_path / "imported")
-    assert V.import_ivfpq_index_versioned(spark, bare, base) == 1
-    want = (
-        S.pq_adc_topk_ivf_from_index(spark, emb, bare, QIDS, topk=10)
-        .toPandas()
-        .sort_values(["query_id", "rank"])
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(
-        _adc_topk(spark, emb, base), want, check_exact=True
-    )
-    scratch = str(tmp_path / "scratch")
-    V.build_ivfpq_index_versioned(emb, scratch)
-    man_imported = V.read_ivf_manifest(base, 1)
-    man_built = V.read_ivf_manifest(scratch, 1)
-    assert man_imported["coarse"] == man_built["coarse"]
-    assert man_imported["books"] == man_built["books"]
-    # The lifecycle continues from the imported manifest: ingest a
-    # disjoint batch (re-keyed ids) and both versions stay servable.
-    batch = emb.limit(5).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(1_000_000)
-    )
-    assert V.ingest_index_versioned(batch, base) == 2
-    assert MT.manifest_versions(base) == [1, 2]
-    pd.testing.assert_frame_equal(
-        _adc_topk(spark, emb, base, version=1), want, check_exact=True
-    )
-
-
-def test_import_crash_before_publish_leaves_no_version(spark, tmp_path, monkeypatch):
-    """A kill anywhere before the final manifest link leaves NO
-    committed version — readers see an empty store, never a partial
-    import; the staged commit is vacuum fodder."""
+def test_build_crash_before_publish_leaves_no_version(spark, tmp_path, monkeypatch):
+    """A kill anywhere before the v1 manifest link leaves NO committed
+    version — readers see an empty store, never a partial build; the
+    staged commit is vacuum fodder."""
     import glob as globmod
 
     class Kill(RuntimeError):
         pass
 
     emb = _emb(spark)
-    bare = S.build_ivfpq_index(emb, str(tmp_path / "bare"))
-    base = str(tmp_path / "imported")
+    base = str(tmp_path / "ver")
 
     def boom(base_path, version, payload):
         raise Kill("publish")
 
     monkeypatch.setattr(V, "publish_manifest", boom)
     with pytest.raises(Kill):
-        V.import_ivfpq_index_versioned(spark, bare, base)
+        V.build_ivfpq_index_versioned(emb, base)
     assert MT.manifest_versions(base) == []
     staged = globmod.glob(os.path.join(base, "data", "commit-*"))
     assert len(staged) == 1  # orphaned, reclaimed by vacuum once quiesced
     monkeypatch.undo()
-    assert V.import_ivfpq_index_versioned(spark, bare, base) == 1
+    assert V.build_ivfpq_index_versioned(emb, base) == 1
+
+
+def test_every_version_reads_with_the_schema_v1_recorded(spark, tmp_path):
+    """v1 records its list schema; an ingest whose batch encodes to
+    other columns (a v1 built with ``label`` against a batch of
+    ``(vec_id, embedding)``) raises before it stages anything, and a
+    read whose cells are pruned to nothing returns that schema."""
+    import glob as globmod
+
+    from pyspark.sql import functions as F
+
+    emb = _emb(spark)
+    base = str(tmp_path / "ver")
+    V.build_ivf_index_versioned(emb.filter(F.col("vec_id") < 30), base)
+    schema = V.read_ivf_manifest(base, 1)["schema"]
+    assert "`label` int" in schema
+    with pytest.raises(ValueError, match="encodes to"):
+        V.ingest_index_versioned(
+            emb.filter(F.col("vec_id") >= 30).select("vec_id", "embedding"), base
+        )
+    assert MT.manifest_versions(base) == [1]
+    assert len(globmod.glob(os.path.join(base, "data", "commit-*"))) == 1
+    assert V.ingest_index_versioned(emb.filter(F.col("vec_id") >= 30), base) == 2
+    assert V.read_ivf_manifest(base, 2)["schema"] == schema
+    full = V.read_ivf_index_version(spark, base, 2)
+    empty = V.read_ivf_index_version(spark, base, 2, cells=[-1])
+    assert empty.count() == 0
+    assert [(f.name, f.dataType) for f in empty.schema] == [
+        (f.name, f.dataType) for f in full.schema
+    ]
+    assert V._ddl(empty) == schema
 
 
 def test_refresh_retrains_and_swaps_quantizers_atomically(spark, tmp_path):
@@ -1578,11 +1579,12 @@ def test_maintenance_publishes_carry_stream_stamp(spark, tmp_path):
     MT.vacuum(base, keep_last=1, orphan_min_age_s=0)
     assert len(MT.manifest_versions(base)) == 1
     assert committed_stream_batch(base) == 7
-    # A newer ingest stamp overrides the carried one.
+    # A newer ingest stamp overrides the carried one (the row carries
+    # the columns v1 recorded, or the ingest is refused).
     V.ingest_index_versioned(
         spark.createDataFrame(
-            [(10_000, [0.5] + [0.0] * (V.DEFAULT_DIM - 1))],
-            "vec_id long, embedding array<float>",
+            [(10_000, [0.5] + [0.0] * (V.DEFAULT_DIM - 1), 0)],
+            "vec_id long, embedding array<float>, label int",
         ),
         base,
         manifest_extra={"stream_batch_id": 8},

@@ -87,6 +87,17 @@ def test_cms_probe_broadcasts_counters(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_cms_probe_scans_events_once(spark):
+    # The probe's estimates and the stream total read one counter
+    # subplan: its exchange is reused, so the events are scanned once.
+    from sressentials_spark.catalog import QUERIES
+
+    df = QUERIES["sketch_cms_user_counts"](spark, SF)
+    df.collect()
+    final = _plan(df).split("== Initial Plan ==")[0]
+    assert final.count("FileScan parquet") == 1
+
+
 def test_retention_plan_has_no_expand(spark):
     # Multiple count_distincts compile to an Expand (input-row
     # multiplication); the retention query's rewrite must avoid it.

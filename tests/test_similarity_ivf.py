@@ -202,37 +202,41 @@ class TestIvfPq:
     def test_index_serves_pruned_and_matches_artifact_rederivation(
         self, spark, tmp_path
     ):
-        """IVF-PQ contract (residual coding, trained coarse): (a) the
-        candidate scan is pruned to the probed cells at the PARTITION
-        level; (b) every returned pair is re-derivable from the
-        persisted artifacts alone — home cell in the query's probed
-        cells (integer-L2 probes vs the frozen _coarse sidecar), ADC
-        distance equal to an independent driver-side fold over the
-        pair's stored code word, ranks dense and distance-sorted."""
+        """IVF-PQ contract (residual coding, trained coarse), served
+        from v1 of the versioned store: (a) the candidate scan reads
+        only the probed cells' files; (b) every returned pair is
+        re-derivable from the manifest's artifacts alone — home cell
+        in the query's probed cells (integer-L2 probes vs the frozen
+        coarse centroids), ADC distance equal to an independent
+        driver-side fold over the pair's stored code word, ranks dense
+        and distance-sorted."""
+        import re
+
         import numpy as np
 
+        from sressentials_spark.operators import ivf_versioned as V
         from sressentials_spark.operators.cluster import QUANT_SCALE
         from sressentials_spark.operators.dedup import release_persisted
         from sressentials_spark.operators.linalg import quantize_exact
         from sressentials_spark.sources.tables import load_table
 
         emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-        pq_path = S.build_ivfpq_index(emb, str(tmp_path / "ivfpq"))
+        base = str(tmp_path / "ivfpq")
+        V.build_ivfpq_index_versioned(emb, base)
         qids = [0, 1, 2]
 
-        got = S.pq_adc_topk_ivf_from_index(spark, emb, pq_path, qids, topk=10)
-        plan = got._jdf.queryExecution().executedPlan().toString()
-        assert any(
-            "cell" in seg.split("]")[0]
-            for seg in plan.split("PartitionFilters")[1:]
-        )
+        got = V.pq_adc_topk_ivfpq_versioned(spark, emb, base, qids, topk=10)
+        scanned = {
+            int(re.search(r"cellp=(-?\d+)/", f).group(1))
+            for f in got.inputFiles()
+        }
         got_pdf = got.toPandas()
         assert len(got_pdf) > 0
 
-        coarse = S.load_ivfpq_coarse(spark, pq_path)
-        books = S.load_pq_books(spark, pq_path)
-        fbooks = S.pq_books_float(books)
-        lists = spark.read.parquet(pq_path).toPandas()
+        man = V.read_ivf_manifest(base, 1)
+        coarse = man["coarse"]
+        fbooks = S.pq_books_float(V._books_from_json(man["books"]))
+        lists = V.read_ivf_index_version(spark, base).toPandas()
         home = dict(zip(lists["vec_id"], lists["cell"]))
         codes = {
             int(r["vec_id"]): [int(r[f"code_{i}"]) for i in range(S.PQ_M)]
@@ -250,6 +254,7 @@ class TestIvfPq:
         dsub = fbooks[0][1].shape[1]
         cmap = {int(c): j for j, c in enumerate(cids_c)}
 
+        all_probed: set[int] = set()
         for qid, grp in got_pdf.groupby("query_id"):
             qv = qvec[int(qid)]
             Q = quantize_exact(qv[None, :])[0]
@@ -259,6 +264,7 @@ class TestIvfPq:
                 int(cids_c[j])
                 for j in np.argsort(dist, kind="stable")[: S.IVF_NPROBE]
             }
+            all_probed |= probed
             g = grp.sort_values("rank").reset_index(drop=True)
             # ranks dense 1..n, distance-sorted with id tie-break
             assert list(g["rank"]) == list(range(1, len(g) + 1))
@@ -280,6 +286,8 @@ class TestIvfPq:
                         acc = acc + t * t
                     exp = exp + acc
                 assert r["adc_dist"] == exp, (qid, nid)
+        assert scanned == all_probed & {int(c) for c in home.values()}
+        assert len(scanned) < len(coarse)
 
 
 def test_quantize_exact_matches_duckdb_round():
@@ -341,14 +349,16 @@ def test_quantize_exact_matches_spark_round(spark):
 def test_rerank_is_exact_cosine_over_the_adc_shortlist(spark, tmp_path):
     """Two-stage contract: the re-ranked top-k is contained in the ADC
     shortlist and ordered by exact cosine (ties to the lowest id)."""
+    from sressentials_spark.operators import ivf_versioned as V
     from sressentials_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = S.build_ivfpq_index(emb, str(tmp_path / "ivfpq"))
+    base = str(tmp_path / "ivfpq")
+    V.build_ivfpq_index_versioned(emb, base)
     qids = [0, 1, 2]
     short = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.pq_adc_topk_ivf_from_index(
+        for r in V.pq_adc_topk_ivfpq_versioned(
             spark, emb, base, qids, topk=25
         ).collect()
     }
@@ -366,27 +376,29 @@ def test_rerank_is_exact_cosine_over_the_adc_shortlist(spark, tmp_path):
 def test_rerank_tier_m8_index_layout_and_contract(spark, tmp_path):
     """The rerank tier's finer grid (PQ_RERANK_M=8, docs/ANN_EVAL.md M
     sweep): the index carries 8 code columns (8-dim subspaces), the
-    books sidecar has 8 subspace groups, and the two-stage contract
+    manifest's books have 8 subspace groups, and the two-stage contract
     (shortlist containment + exact-cosine order) holds unchanged."""
+    from sressentials_spark.operators import ivf_versioned as V
     from sressentials_spark.sources.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    base = S.build_ivfpq_index(emb, str(tmp_path / "m8"), m=S.PQ_RERANK_M)
-    cols = spark.read.parquet(base).columns
+    base = str(tmp_path / "m8")
+    V.build_ivfpq_index_versioned(emb, base, m=S.PQ_RERANK_M)
+    cols = V.read_ivf_index_version(spark, base).columns
     assert [f"code_{i}" for i in range(8)] == [
         c for c in cols if c.startswith("code_")
     ]
-    books = S.load_pq_books(spark, base)
+    books = V._books_from_json(V.read_ivf_manifest(base, 1)["books"])
     assert len(books) == 8 and books[0][1].shape[1] == 8
     qids = [0, 1, 2]
     short = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.pq_adc_topk_ivf_from_index(
-            spark, emb, base, qids, topk=25, m=S.PQ_RERANK_M
+        for r in V.pq_adc_topk_ivfpq_versioned(
+            spark, emb, base, qids, topk=25
         ).collect()
     }
     got = S.pq_adc_rerank_topk(
-        spark, emb, base, qids, topk=10, shortlist=25, m=S.PQ_RERANK_M
+        spark, emb, base, qids, topk=10, shortlist=25
     ).toPandas()
     assert set(zip(got["query_id"], got["neighbor_id"])) <= short
     for _, g in got.groupby("query_id"):

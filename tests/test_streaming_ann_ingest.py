@@ -35,6 +35,12 @@ def _stage_arrivals(spark, emb, tmp_path, n_files=3):
     return f"{d}/arrivals"
 
 
+def _emb(spark):
+    # The arrivals carry (vec_id, embedding), and an ingest must match
+    # the list schema v1 recorded, so v1 is built on those columns too.
+    return load_table(spark, SF, "embeddings").select("vec_id", "embedding")
+
+
 def _topk(spark, base):
     return (
         V.cosine_topk_ivf_versioned(spark, base, QIDS, k=10)
@@ -45,7 +51,7 @@ def _topk(spark, base):
 
 
 def test_streamed_ingest_is_exactly_once_and_batch_invariant(spark, tmp_path):
-    emb = load_table(spark, SF, "embeddings")
+    emb = _emb(spark)
     arrivals = _stage_arrivals(spark, emb, tmp_path)
 
     base = str(tmp_path / "ver")
@@ -108,7 +114,7 @@ def test_empty_batch_skips_stamp_and_redelivery_is_noop(spark, tmp_path):
     its redelivery is NOT skipped by the stamp check and must flow
     through the verb's early-return without committing anything. If the
     verbs' empty-batch early-return ever changes, this test trips."""
-    emb = load_table(spark, SF, "embeddings")
+    emb = _emb(spark)
     arrivals = _stage_arrivals(spark, emb, tmp_path, n_files=2)
     empty_dir = str(tmp_path / "empty")
     (
@@ -167,7 +173,7 @@ def test_streamed_ivfpq_ingest_is_exactly_once_and_batch_invariant(
     (frozen-artifact encoding is batch-invariant) and a full
     redelivery commits nothing — including after a maintenance commit
     plus vacuum, since every descendant publish carries the stamp."""
-    emb = load_table(spark, SF, "embeddings")
+    emb = _emb(spark)
     arrivals = _stage_arrivals(spark, emb, tmp_path)
 
     base = str(tmp_path / "pq")
