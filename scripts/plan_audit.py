@@ -6,14 +6,16 @@ jobs — ``Expand`` (multi-count_distinct row blow-up),
 ``CartesianProduct`` and ``BroadcastNestedLoopJoin`` (non-equi joins
 over big sides) — and fails unless every occurrence is on the explicit
 allowlist below (each entry documents WHY the shape is intentional).
-Also reports per-query counts of shuffle exchanges as a cost map. Both
+Also reports per-query counts of shuffle exchanges as a cost map. All
 read one walk of the physical plan's nodes (:func:`plan_nodes`): the
 shapes are looked for in every node, cached subplans and subqueries
-included; the count takes only the query's own shuffle exchanges, so a
-broadcast or reused exchange is not a shuffle and a cached frame's
-shuffles are not counted again in every query that scans it. Every
-query is planned after ``release_persisted()``, so its counts do not
-depend on which queries ran before it.
+included. ``exchanges`` counts only the query's own shuffle exchanges,
+so a broadcast or reused exchange is not a shuffle and a cached frame's
+shuffles are not counted again in every query that scans it;
+``cached`` counts the shuffles inside the cached subplans the query
+scans, so a shuffle added to a session-shared frame still shows in its
+consumers. Every query is planned after ``release_persisted()``, so its
+counts do not depend on which queries ran before it.
 
 Usage::
 
@@ -190,29 +192,35 @@ ALLOWED: dict[str, dict[str, str]] = {
 }
 
 
-def plan_nodes(df) -> list[tuple[str, bool]]:
-    """``(class name, own)`` of every node in ``df``'s executed physical
-    plan, descending through ``AdaptiveSparkPlanExec`` and AQE query
-    stages. ``own`` marks the nodes reached through children alone: the
-    plan the query runs itself. Inner plans — a cached frame's subplan
-    under an in-memory scan, a subquery — are walked too, with ``own``
-    false, so an expensive shape is seen wherever it sits but a
-    cached frame's shuffles are not counted again in every query that
-    scans it."""
-    nodes: list[tuple[str, bool]] = []
-    stack = [(df._jdf.queryExecution().executedPlan(), True)]
+def plan_nodes(df) -> list[tuple[str, str]]:
+    """``(class name, scope)`` of every node in ``df``'s executed
+    physical plan, descending through ``AdaptiveSparkPlanExec`` and AQE
+    query stages. Scope ``"own"`` marks the nodes reached through
+    children alone: the plan the query runs itself. Inner plans are
+    walked too, so an expensive shape is seen wherever it sits:
+    ``"cached"`` marks a cached frame's subplan (anything under an
+    in-memory relation), ``"inner"`` a subquery of the query's own
+    plan. A cached frame's shuffles are therefore not counted as own in
+    every query that scans it, but stay countable."""
+    nodes: list[tuple[str, str]] = []
+    stack = [(df._jdf.queryExecution().executedPlan(), "own")]
     while stack:
-        node, own = stack.pop()
+        node, scope = stack.pop()
         name = node.getClass().getSimpleName()
         if name == "AdaptiveSparkPlanExec":
-            stack.append((node.executedPlan(), own))
+            stack.append((node.executedPlan(), scope))
             continue
         if name.endswith("QueryStageExec"):
-            stack.append((node.plan(), own))
+            stack.append((node.plan(), scope))
             continue
-        nodes.append((name, own))
-        for seq, inner_own in ((node.children(), own), (node.innerChildren(), False)):
-            stack.extend((seq.apply(i), inner_own) for i in range(seq.size()))
+        nodes.append((name, scope))
+        inner = (
+            "cached"
+            if name in ("InMemoryTableScanExec", "InMemoryRelation")
+            else "inner" if scope == "own" else scope
+        )
+        for seq, s in ((node.children(), scope), (node.innerChildren(), inner)):
+            stack.extend((seq.apply(i), s) for i in range(seq.size()))
     return nodes
 
 
@@ -244,7 +252,8 @@ def main() -> int:
         except Exception as exc:  # plan-time failure is itself a finding
             violations.append(f"{name}: PLAN FAILURE {type(exc).__name__}: {exc}")
             continue
-        n_exchange = nodes.count(("ShuffleExchangeExec", True))
+        n_exchange = nodes.count(("ShuffleExchangeExec", "own"))
+        n_cached = nodes.count(("ShuffleExchangeExec", "cached"))
         flagged = [s for s in shapes if any(n == f"{s}Exec" for n, _ in nodes)]
         allowed = ALLOWED.get(name, {})
         bad = [s for s in flagged if s not in allowed]
@@ -252,7 +261,10 @@ def main() -> int:
             f"{s}(ok: {allowed[s]})" if s in allowed else f"{s}(UNEXPLAINED)"
             for s in flagged
         )
-        print(f"  {name}: exchanges={n_exchange}" + (f" {note}" if note else ""))
+        print(
+            f"  {name}: exchanges={n_exchange} cached={n_cached}"
+            + (f" {note}" if note else "")
+        )
         for s in bad:
             violations.append(f"{name}: unexplained {s}")
     if violations:

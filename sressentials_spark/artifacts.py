@@ -78,6 +78,15 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return track(df.persist(StorageLevel.MEMORY_AND_DISK))
 
 
+def tracked_checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)`` such that
+    :func:`release_persisted` frees it: the lineage-cutting twin of
+    :func:`tracked_persist` for iterative operators. Unlike a persisted
+    frame, a freed checkpoint cannot be recomputed, so only free it
+    once its consumers have materialized."""
+    return track(df.localCheckpoint(eager=True))
+
+
 @contextmanager
 def tracking():
     """Yield the list of frames tracked inside the block; frames
@@ -98,10 +107,18 @@ def tracking():
 
 def free(frames: list[DataFrame], blocking: bool = False) -> int:
     """Unpersist ``frames`` and drop them from the registry; returns
-    how many were freed."""
+    how many were freed.
+
+    A local checkpoint's rows are a persisted RDD the cache manager
+    never sees, so ``DataFrame.unpersist`` leaves them cached until the
+    JVM cleaner collects the RDD; a frame whose plan is that RDD scan
+    has the RDD itself unpersisted."""
     for f in frames:
         try:
             f.unpersist(blocking=blocking)
+            plan = f._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(blocking)
         except Exception:  # context already gone — nothing to free
             pass
     gone = {id(f) for f in frames}

@@ -58,12 +58,10 @@ from sressentials_spark.localrel import local_df
 
 from sressentials_spark.operators.maintenance import (
     DEFAULT_TARGET_BYTES,
-    atomic_publish_json,
     manifest_versions,
     publish_manifest,
     publish_next,
     read_manifest,
-    read_manifest_block,
 )
 from sressentials_spark.operators.similarity import (
     DEFAULT_DIM,
@@ -100,119 +98,23 @@ def _int_keyed(man: dict) -> dict:
     }
 
 
-def _read_manifest_raw(base_path: str, version: int) -> dict:
-    """The version JSON exactly as published (quantizer keys back to
-    int), WITHOUT resolving a two-level ``manifest_list`` into entries.
-    This is the O(1)-read surface: quantizers, riders (e.g. the
-    streaming ``stream_batch_id`` stamp) and the pointer rollup stats
-    all live here, so callers that don't need per-file entries — probe
-    derivation, the exactly-once stamp scan, the history catalog —
-    never pay the block reads."""
-    return _int_keyed(read_manifest(base_path, version))
-
-
-def _resolved(base_path: str, man: dict | None) -> dict:
-    """A published manifest as every verb reads it: quantizer keys
-    back to int and, for a two-level manifest, each pointed-to block
-    loaded and flattened into the same ``files`` shape, with
-    ``_blocks`` (pointer, entries) pairs attached so a descendant
-    publish can reuse untouched blocks without re-reading them."""
-    if man is None:
-        raise ValueError(f"no index versions under {base_path}")
-    man = _int_keyed(man)
-    if "manifest_list" in man:
-        blocks = [
-            (ptr, read_manifest_block(base_path, ptr))
-            for ptr in man["manifest_list"]
-        ]
-        man["files"] = [e for _, block in blocks for e in block]
-        man["_blocks"] = blocks
-    return man
-
-
 def read_ivf_manifest(base_path: str, version: int) -> dict:
     """One committed version: ``{"version", "files": [{"path", "cell",
     "rows"}]}`` plus the quantizer — ``centroids: {cid: [f64]}`` for
     the cosine-IVF tier, or ``coarse: {cid: [i64]}`` + ``books``
     (per-subspace ``[cid, [i64]]`` lists) for the IVF-PQ tier (cid
-    keys back to int either way).
-
-    Reads BOTH layouts transparently: a two-level manifest (published
-    by :func:`promote_ivf_manifest_list` or any descendant of one) is
-    resolved by loading each pointed-to manifest file and flattening
-    into the same ``files`` shape, so every verb sees one contract."""
-    return _resolved(base_path, read_manifest(base_path, version))
+    keys back to int either way) — and the riders (e.g. the streaming
+    ``stream_batch_id`` stamp). One small JSON read: quantizers and
+    the file listing both live inline."""
+    return _int_keyed(read_manifest(base_path, version))
 
 
-def _write_manifest_file(base_path: str, entries: list[dict]) -> dict:
-    """Stage one immutable manifest FILE (two-level layout) holding an
-    entry block, and return its pointer with rolled-up stats — the
-    list-level pruning surface: ``cells`` (every cell the block
-    touches), ``n_files``/``n_rows``, and the block's id range when
-    every entry carries footer stats. Names are writer-unique (uuid),
-    written through the same fsync discipline as version manifests;
-    a block staged by a writer that then loses its publish race is
-    unreferenced and reclaims as vacuum fodder."""
-    import uuid
-
-    os.makedirs(os.path.join(base_path, "manifests"), exist_ok=True)
-    rel = os.path.join("manifests", f"manifest-{uuid.uuid4().hex[:16]}.json")
-    atomic_publish_json(os.path.join(base_path, rel), {"files": entries})
-    ptr = {
-        "path": rel,
-        "n_files": len(entries),
-        "n_rows": int(sum(e["rows"] for e in entries)),
-        "cells": sorted({int(e["cell"]) for e in entries}),
-    }
-    if entries and all("min_id" in e for e in entries):
-        ptr["min_id"] = min(int(e["min_id"]) for e in entries)
-        ptr["max_id"] = max(int(e["max_id"]) for e in entries)
-    return ptr
-
-
-def _files_payload(
-    base_path: str, parent_man: dict | None, entries: list[dict]
-) -> dict:
-    """The files-listing half of a child publish payload, in the
-    PARENT's layout — the rule that makes every maintenance verb
-    layout-preserving without knowing about layouts:
-
-    - single-level parent (or none): ``{"files": entries}`` — the
-      original O(index files) JSON, fine at maintenance cadence;
-    - two-level parent: parent blocks whose entries survive intact are
-      REUSED by pointer (zero bytes written), blocks the verb shrank
-      (delete/rebalance/compact dropped some of their files) are
-      rewritten with just the survivors, and entries the parent never
-      listed (the verb's fresh commits) land as new blocks grouped by
-      their immutable ``commit-<id>`` dir. Publish cost becomes
-      O(commits touched): an ingest writes exactly one new block and
-      re-points the rest.
-
-    ``entries`` is the child's complete flattened file list (kept +
-    new), exactly what the verbs already compute."""
-    if parent_man is None or "manifest_list" not in parent_man:
-        return {"files": entries}
-    blocks = parent_man.get("_blocks") or [
-        (ptr, read_manifest_block(base_path, ptr))
-        for ptr in parent_man["manifest_list"]
-    ]
-    kept_paths = {e["path"] for e in entries}
-    pointers: list[dict] = []
-    parent_paths: set[str] = set()
-    for ptr, block in blocks:
-        parent_paths.update(e["path"] for e in block)
-        surviving = [e for e in block if e["path"] in kept_paths]
-        if len(surviving) == len(block):
-            pointers.append(ptr)
-        elif surviving:
-            pointers.append(_write_manifest_file(base_path, surviving))
-    fresh = [e for e in entries if e["path"] not in parent_paths]
-    by_commit: dict[str, list[dict]] = {}
-    for e in fresh:
-        by_commit.setdefault(e["path"].split("/", 1)[0], []).append(e)
-    for _, block in sorted(by_commit.items()):
-        pointers.append(_write_manifest_file(base_path, block))
-    return {"manifest_list": pointers}
+def _plan_parent(base_path: str, parent: dict | None) -> dict:
+    """The parent manifest a publish plan builds on, quantizer keys
+    back to int. Every verb past the build needs a committed version."""
+    if parent is None:
+        raise ValueError(f"no index versions under {base_path}")
+    return _int_keyed(parent)
 
 
 def _commit_lists(
@@ -380,25 +282,13 @@ def read_ivf_index_version(
     """The index lists exactly as of ``version`` (default latest),
     optionally pruned to ``cells`` at the MANIFEST level — only the
     named cells' files are handed to the scan, the driver-side twin of
-    partition pruning. Under the two-level layout the pruning happens
-    at the LIST level first: pointer blocks whose rolled-up ``cells``
-    miss every probed cell are skipped without even loading their
-    entry file, so a probe-narrow read costs O(blocks touched) JSON,
-    not O(commits). Every version is read with the list schema v1
+    partition pruning. Every version is read with the list schema v1
     recorded, so no file footer decides the columns."""
     version = version or manifest_versions(base_path)[-1]
-    man = _read_manifest_raw(base_path, version)
-    want = None if cells is None else set(cells)
-    if "manifest_list" in man:
-        entries = [
-            e
-            for p in man["manifest_list"]
-            if want is None or want.intersection(p["cells"])
-            for e in read_manifest_block(base_path, p)
-        ]
-    else:
-        entries = man["files"]
-    if want is not None:
+    man = read_ivf_manifest(base_path, version)
+    entries = man["files"]
+    if cells is not None:
+        want = set(cells)
         entries = [e for e in entries if e["cell"] in want]
     if not entries:
         return local_df(spark, [], man["schema"])
@@ -433,7 +323,7 @@ def cosine_topk_ivf_versioned(
     self-contained fallback — at scale, always pass ``query_src`` (the
     corpus scan stays manifest-pruned either way)."""
     version = version or manifest_versions(base_path)[-1]
-    man = _read_manifest_raw(base_path, version)  # centroids ride inline
+    man = read_ivf_manifest(base_path, version)  # centroids ride inline
     ids, mat = _load_centroids(man)
     src = (
         query_src
@@ -503,7 +393,7 @@ def ingest_index_versioned(
     staged: dict = {}
 
     def plan(parent: dict | None) -> dict | None:
-        man = _resolved(base_path, parent)
+        man = _plan_parent(base_path, parent)
         under = [parent.get(k) for k in ("centroids", "coarse", "books")]
         if staged.get("under") != under:
             lists = _encode(man, emb_batch, id_col)
@@ -522,7 +412,7 @@ def ingest_index_versioned(
         if not staged["entries"]:
             return None
         return {
-            **_files_payload(base_path, man, man["files"] + staged["entries"]),
+            "files": man["files"] + staged["entries"],
             **(manifest_extra or {}),
         }
 
@@ -608,7 +498,7 @@ def rebalance_index_versioned(
     # (and maybe the quantizer), so the split decision's inputs are
     # stale. Abandoned stages are vacuum fodder.
     def plan(parent: dict | None) -> dict | None:
-        man = _resolved(base_path, parent)
+        man = _plan_parent(base_path, parent)
         pq = "coarse" in man
         if pq != (emb is not None):
             raise ValueError(
@@ -696,7 +586,7 @@ def rebalance_index_versioned(
         files = [e for e in man["files"] if e["cell"] not in split]
         return {
             key: dict(sorted(cents.items())),
-            **_files_payload(base_path, man, files + new_entries),
+            "files": files + new_entries,
         }
 
     version = publish_next(base_path, plan, retries=retries, fault=fault)
@@ -761,7 +651,7 @@ def pq_adc_topk_ivfpq_versioned(
     from sressentials_spark.operators import similarity as S
 
     version = version or manifest_versions(base_path)[-1]
-    man = _read_manifest_raw(base_path, version)  # quantizers ride inline
+    man = read_ivf_manifest(base_path, version)  # quantizers ride inline
     books = _books_from_json(man["books"])
     return S._ivfpq_adc_search(
         spark,
@@ -820,7 +710,7 @@ def compact_ivf_index_versioned(
     stats: dict = {}
 
     def plan(parent: dict | None) -> dict | None:
-        man = _resolved(base_path, parent)
+        man = _plan_parent(base_path, parent)
         by_cell: dict[int, list[dict]] = {}
         for e in man["files"]:
             by_cell.setdefault(e["cell"], []).append(e)
@@ -858,7 +748,7 @@ def compact_ivf_index_versioned(
             fault(f"staged:{cell}")
         kept = [e for e in man["files"] if e["path"] not in replaced]
         stats["files_after"] = len(kept) + len(new_entries)
-        return _files_payload(base_path, man, kept + new_entries)
+        return {"files": kept + new_entries}
 
     version = publish_next(base_path, plan, retries=retries, fault=fault)
     return {**stats, "version": version}
@@ -929,7 +819,7 @@ def delete_ivf_index_versioned(
     stats: dict = {}
 
     def plan(parent: dict | None) -> dict | None:
-        man = _resolved(base_path, parent)
+        man = _plan_parent(base_path, parent)
         paths = {
             os.path.join(base_path, "data", e["path"]): e for e in man["files"]
         }
@@ -982,7 +872,7 @@ def delete_ivf_index_versioned(
         stats.update(
             deleted_rows=sum(affected.values()), files_rewritten=len(affected)
         )
-        return _files_payload(base_path, man, kept + entries)
+        return {"files": kept + entries}
 
     version = publish_next(base_path, plan, retries=retries, fault=fault)
     return {**stats, "version": version}
@@ -1020,7 +910,7 @@ def refresh_ivfpq_index_versioned(
     fault = fault or (lambda step: None)
 
     def plan(parent: dict | None) -> dict:
-        man = _resolved(base_path, parent)
+        _plan_parent(base_path, parent)
         quantizer = _pq_quantizers(
             *S.train_ivfpq(emb, n_cells, m, k, iters, id_col)
         )
@@ -1028,7 +918,7 @@ def refresh_ivfpq_index_versioned(
             _encode(quantizer, emb, id_col), os.path.join(base_path, "data")
         )
         fault("staged")
-        return {**quantizer, **_files_payload(base_path, man, entries)}
+        return {**quantizer, "files": entries}
 
     return publish_next(base_path, plan, retries=0, fault=fault)
 
@@ -1064,7 +954,7 @@ def ivfpq_refresh_decision(
     from sressentials_spark.operators import similarity as S
 
     version = version or manifest_versions(base_path)[-1]
-    man = _read_manifest_raw(base_path, version)  # quantizers ride inline
+    man = read_ivf_manifest(base_path, version)  # quantizers ride inline
     err = S.ivfpq_quantization_error(
         spark,
         emb,
@@ -1117,60 +1007,6 @@ def ivfpq_refresh_decision(
     )
 
 
-def promote_ivf_manifest_list(
-    base_path: str,
-    *,
-    fault: Callable[[str], None] | None = None,
-    retries: int = 5,
-) -> dict:
-    """Promote the LATEST version to the TWO-LEVEL manifest layout —
-    the Iceberg manifest-list split, and the 100 TB growth path the
-    single-JSON manifest can't walk: one flat manifest is re-written
-    in full by every publish (O(index files) JSON — ~20-40 MB at
-    200k files), which is fine at maintenance cadence but the wrong
-    shape for high-frequency streaming ingest. Promotion maps the
-    existing layout onto the split 1:1 WITHOUT rewriting history or
-    touching a single data file: entries are already grouped by their
-    immutable ``commit-<id>`` dir, so each commit's entry block lands
-    as its own immutable manifest FILE (``manifests/manifest-*.json``)
-    and the published version shrinks to a manifest LIST — one pointer
-    per live commit with rolled-up ``cells``/``n_rows``/id-range stats
-    for driver-side pruning at the list level. After promotion every
-    descendant publish is layout-preserving (``_files_payload``):
-    untouched blocks are reused by pointer, so an ingest's publish
-    cost drops to O(commits touched), and reads/serving are bit-equal
-    by construction (rows, cells and quantizers are byte-identical —
-    only the listing's shape changed).
-
-    Commit discipline is the house verb's verbatim: blocks stage
-    first (writer-unique names), the version JSON publishes LAST via
-    one atomic exclusive link, riders carry forward, a crash anywhere
-    before the link leaves the flat version fully live (staged blocks
-    are vacuum fodder), and a lost publish race re-plans against the
-    new latest. Idempotent: an already-two-level latest returns
-    ``promoted=False`` without writing anything."""
-    fault = fault or (lambda step: None)
-    stats: dict = {}
-
-    def plan(parent: dict | None) -> dict | None:
-        if parent is not None and "manifest_list" in parent:
-            stats.update(promoted=False, n_manifests=len(parent["manifest_list"]))
-            return None
-        entries = _resolved(base_path, parent)["files"]
-        by_commit: dict[str, list[dict]] = {}
-        for e in entries:
-            by_commit.setdefault(e["path"].split("/", 1)[0], []).append(e)
-        pointers: list[dict] = []
-        for commit, block in sorted(by_commit.items()):
-            pointers.append(_write_manifest_file(base_path, block))
-            fault(f"staged:{commit}")
-        stats.update(promoted=True, n_manifests=len(pointers), n_files=len(entries))
-        return {"manifest_list": pointers}
-
-    version = publish_next(base_path, plan, retries=retries, fault=fault)
-    return {**stats, "version": version}
-
-
 def ivf_index_history(spark, base_path: str) -> "DataFrame":
     """The index's committed-version catalog as a queryable DataFrame —
     the versioned tier's twin of Iceberg's ``snapshots`` metadata
@@ -1189,23 +1025,14 @@ def ivf_index_history(spark, base_path: str) -> "DataFrame":
     a model-tested column."""
     rows = []
     for v in manifest_versions(base_path):
-        # Raw read: both layouts answer from the version JSON alone —
-        # flat manifests list entries inline, two-level ones carry the
-        # per-block rollups — so history never loads an entry block.
-        man = _read_manifest_raw(base_path, v)
+        man = read_ivf_manifest(base_path, v)
         quant = man.get("centroids") or man.get("coarse") or {}
         stamp = man.get("stream_batch_id")
-        if "manifest_list" in man:
-            n_files = sum(int(p["n_files"]) for p in man["manifest_list"])
-            n_rows = sum(int(p["n_rows"]) for p in man["manifest_list"])
-        else:
-            n_files = len(man["files"])
-            n_rows = sum(e["rows"] for e in man["files"])
         rows.append(
             (
                 int(v),
-                int(n_files),
-                int(n_rows),
+                len(man["files"]),
+                int(sum(e["rows"] for e in man["files"])),
                 len(quant),
                 int(stamp) if stamp is not None else None,
             )

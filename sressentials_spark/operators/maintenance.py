@@ -234,16 +234,15 @@ def corrupt_then_rebuild_day(
 # --------------------------------------------------------------------------
 
 #: Keys a child manifest never inherits from its parent: the version
-#: number and the file listing (flat ``files`` or two-level
-#: ``manifest_list``) are the child's own, and ``_blocks`` is the index
-#: tier's in-memory block cache. Every other key — ``mode``, the index
-#: quantizers, riders a transactional upstream stamped in (the
-#: streaming ingest's ``stream_batch_id``) — carries forward unless the
-#: child restates it: the streaming exactly-once recipe reads its stamp
-#: from the VISIBLE manifests, so a maintenance verb that dropped it
-#: would, after vacuum expires the stamped version, let a redelivered
-#: micro-batch re-ingest its rows (duplicates with no error).
-_STRUCTURAL_KEYS = frozenset({"version", "files", "manifest_list", "_blocks"})
+#: number and the ``files`` listing are the child's own. Every other
+#: key — ``mode``, the index quantizers, riders a transactional
+#: upstream stamped in (the streaming ingest's ``stream_batch_id``) —
+#: carries forward unless the child restates it: the streaming
+#: exactly-once recipe reads its stamp from the VISIBLE manifests, so a
+#: maintenance verb that dropped it would, after vacuum expires the
+#: stamped version, let a redelivered micro-batch re-ingest its rows
+#: (duplicates with no error).
+_STRUCTURAL_KEYS = frozenset({"version", "files"})
 
 
 def _manifest_path(store_dir: str, version: int) -> str:
@@ -265,26 +264,9 @@ def read_manifest(store_dir: str, version: int) -> dict:
         return json.load(fh)
 
 
-def read_manifest_block(store_dir: str, pointer: dict) -> list[dict]:
-    """The entry block one ``manifest_list`` pointer names (the
-    two-level layout: the version JSON lists pointers, each block file
-    under ``manifests/`` lists entries)."""
-    with open(os.path.join(store_dir, pointer["path"])) as fh:
-        return json.load(fh)["files"]
-
-
-def _manifest_entries(store_dir: str, man: dict) -> list[dict]:
-    """Every file entry a manifest makes visible, in either layout."""
-    if "manifest_list" in man:
-        return [
-            e for p in man["manifest_list"] for e in read_manifest_block(store_dir, p)
-        ]
-    return man["files"]
-
-
 def atomic_publish_json(path: str, payload: dict) -> None:
     """Exclusive, DURABLE json publish — the one commit idiom behind
-    every version manifest and manifest block:
+    every version manifest:
 
     * the staging file name is WRITER-UNIQUE (uuid suffix): two racers
       must never share a staging inode, or the winner's ``os.link``
@@ -337,10 +319,10 @@ def publish_next(
 
     1. reads the latest manifest (``None`` for a fresh store);
     2. calls ``plan(parent)``, which stages the child's data files and
-       returns its files half (``files`` or ``manifest_list``) plus
-       every key it changes — or ``None`` when there is nothing to
-       commit, in which case the parent's version (0 when fresh) is
-       returned and nothing is published;
+       returns its ``files`` listing plus every key it changes — or
+       ``None`` when there is nothing to commit, in which case the
+       parent's version (0 when fresh) is returned and nothing is
+       published;
     3. carries every other parent key forward (see
        ``_STRUCTURAL_KEYS``);
     4. calls ``fault("prepared")``, link-publishes the child as
@@ -414,8 +396,7 @@ def vacuum(
     100 TB retention job: deletes are manifest-driven unlinks, never a
     data scan. Works from the on-disk layout alone, so one vacuum
     serves both tiers: flat ``data/commit-<id>/part-*`` snapshot
-    commits and ``cellp=``-partitioned index commits, flat and
-    two-level (``manifests/`` block) listings.
+    commits and ``cellp=``-partitioned index commits.
 
     Two reclamation classes (the Iceberg split): files referenced by
     an EXPIRED manifest were durably committed, so they delete freely;
@@ -432,8 +413,7 @@ def vacuum(
     store with no versions at all raises before deleting anything:
     with nothing committed, every file would look like an orphan.
     Returns ``{"files_removed", "files_live", "versions_expired",
-    "versions_kept" (the kept version list), "manifest_files_removed"
-    (two-level blocks)}``."""
+    "versions_kept" (the kept version list)}``."""
     if keep_last < 1:
         raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     versions = manifest_versions(store_dir)
@@ -441,23 +421,12 @@ def vacuum(
         raise ValueError(f"no versions under {store_dir}")
     keep = versions[-keep_last:]
     expired = versions[:-keep_last]
-    # Reachability covers data files AND two-level blocks: a block
-    # shared between an expired and a kept version (pointer reuse)
-    # stays live.
     live: set[str] = set()
-    live_blocks: set[str] = set()
     committed: set[str] = set()  # referenced by an expired manifest
-    committed_blocks: set[str] = set()
     for v in versions:
-        man = read_manifest(store_dir, v)
-        files, blocks = (
-            (live, live_blocks) if v in keep else (committed, committed_blocks)
-        )
-        files.update(
-            os.path.normpath(e["path"]) for e in _manifest_entries(store_dir, man)
-        )
-        blocks.update(
-            os.path.normpath(p["path"]) for p in man.get("manifest_list", [])
+        (live if v in keep else committed).update(
+            os.path.normpath(e["path"])
+            for e in read_manifest(store_dir, v)["files"]
         )
     data_dir = os.path.join(store_dir, "data")
     removed = 0
@@ -527,24 +496,9 @@ def vacuum(
             shutil.rmtree(d)
     for v in expired:
         os.unlink(_manifest_path(store_dir, v))
-    # Blocks are swept AFTER the expired version JSONs so a crash
-    # mid-vacuum can never strand a readable expired version with
-    # missing blocks: blocks referenced only by an unlinked expired
-    # version reclaim freely; blocks no version explains may be a live
-    # writer's staging and honour the grace window.
-    blocks_removed = 0
-    for f in globmod.glob(os.path.join(store_dir, "manifests", "*.json")):
-        rel = os.path.relpath(f, store_dir)
-        if rel in live_blocks:
-            continue
-        if rel in committed_blocks or _quiesced(f, orphan_min_age_s, now):
-            os.unlink(f)
-            blocks_removed += 1
     # Stray staging manifests (a writer killed inside publish): unique
     # per writer, so quiesced ones are dead.
-    for t in globmod.glob(
-        os.path.join(store_dir, "manifest-v*.json.tmp-*")
-    ) + globmod.glob(os.path.join(store_dir, "manifests", "*.json.tmp-*")):
+    for t in globmod.glob(os.path.join(store_dir, "manifest-v*.json.tmp-*")):
         if _quiesced(t, orphan_min_age_s, now):
             os.unlink(t)
     return {
@@ -552,7 +506,6 @@ def vacuum(
         "files_live": len(live),
         "versions_expired": len(expired),
         "versions_kept": keep,
-        "manifest_files_removed": blocks_removed,
     }
 
 

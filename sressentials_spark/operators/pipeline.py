@@ -22,6 +22,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sressentials_spark import artifacts
 from sressentials_spark.operators.dedup import md5_long
 from sressentials_spark.operators.text import tokens
 
@@ -309,7 +310,9 @@ def connected_components(
     labels = nodes.select(
         F.col(id_col).alias("id"), F.col(id_col).alias("comp")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    handle = labels  # the persisted frame the current `labels` derives from
+    # The materialized rounds the current `labels` still reads: a
+    # checkpoint round cuts the lineage, so the rounds before it free.
+    held = [labels]
 
     converged = False
     for i in range(max_iter):
@@ -327,7 +330,8 @@ def connected_components(
             .cast("long")
             .alias("_changed"),
         )
-        if (i + 1) % checkpoint_every == 0:
+        cut = (i + 1) % checkpoint_every == 0
+        if cut:
             # Truncate lineage: the plan otherwise nests one join
             # deeper per round. Eager, so the subsequent agg reads the
             # materialized blocks.
@@ -335,19 +339,24 @@ def connected_components(
         else:
             updated = updated.persist(StorageLevel.MEMORY_AND_DISK)
         changed = updated.agg(F.sum("_changed")).collect()[0][0] or 0
-        handle.unpersist()
-        handle = updated
+        if cut:
+            artifacts.free(held)
+            held = []
+        held.append(updated)
         labels = updated.drop("_changed")
         if changed == 0:
             converged = True
             break
     edges.unpersist()
     if not converged and strict:
+        artifacts.free(held)
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
             "(component diameter exceeds the iteration budget); raise "
             "max_iter or pass strict=False to accept partial propagation"
         )
+    for f in held:  # the returned frame reads them: release frees them
+        artifacts.track(f)
     return labels.select(
         F.col("id").alias(id_col),
         F.col("comp").alias("canonical_id"),
@@ -412,9 +421,9 @@ def pagerank_integer(
         )
     # Materialize the final vector, then release the loop inputs: the
     # returned frame carries no dangling persisted dependencies.
-    out = ranks.select(
-        "node", F.col("pr").cast("long").alias("pr")
-    ).localCheckpoint(eager=True)
+    out = artifacts.tracked_checkpoint(
+        ranks.select("node", F.col("pr").cast("long").alias("pr"))
+    )
     e.unpersist()
     deg.unpersist()
     return out
@@ -491,11 +500,10 @@ def triangle_counts(
         F.col("src").alias("v"), F.col("dst").alias("w")
     )
     tri = wedges.join(closing, ["v", "w"]).select("u", "v", "w")
-    out = (
+    out = artifacts.tracked_checkpoint(
         tri.select(F.explode(F.array("u", "v", "w")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
-        .localCheckpoint(eager=True)
     )
     oriented.unpersist()
     e.unpersist()

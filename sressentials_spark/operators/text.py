@@ -176,14 +176,6 @@ def exact_dedup_groups(
     )
 
 
-def deduplicate_exact(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Keep exactly one document (smallest id) per distinct text."""
-    keep = exact_dedup_groups(docs, text_col, id_col).select(
-        F.col("keep_doc_id").alias(id_col)
-    )
-    return docs.join(keep, id_col, "left_semi")
-
-
 def bpe_merge_pair_counts(
     docs: DataFrame,
     k: int = 20,

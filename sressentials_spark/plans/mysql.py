@@ -116,17 +116,13 @@ def extract_entries(base: DataFrame) -> DataFrame:
     return ext.withColumn("matched", matched)
 
 
-def detailed_metrics(base: DataFrame) -> DataFrame:
-    """Per-entry metric rows (Detailed Metrics sheet), file order.
+def detailed_from_extracted(ext: DataFrame) -> DataFrame:
+    """Per-entry metric rows (Detailed Metrics sheet), file order, over
+    pre-extracted entries (so the regex pass can be persisted once and
+    shared across sheets).
 
     Returns the 8 reference columns plus ``entry_no``.
     """
-    return detailed_from_extracted(extract_entries(base))
-
-
-def detailed_from_extracted(ext: DataFrame) -> DataFrame:
-    """As :func:`detailed_metrics`, over pre-extracted entries (so the
-    regex pass can be persisted once and shared across sheets)."""
     ext = ext.filter(F.col("matched"))
     query = F.when(F.col("_Query") == "", F.lit(_EMPTY_QUERY)).otherwise(F.col("_Query"))
     return ext.select(
@@ -160,13 +156,9 @@ def aggregate_results(detailed: DataFrame) -> DataFrame:
     )
 
 
-def skip_warnings(base: DataFrame) -> DataFrame:
-    """S9: per-entry skip diagnostics with field-match booleans (``:92-96``)."""
-    return warnings_from_extracted(extract_entries(base))
-
-
 def warnings_from_extracted(ext: DataFrame) -> DataFrame:
-    """As :func:`skip_warnings`, over pre-extracted entries.
+    """S9: per-entry skip diagnostics with field-match booleans
+    (``:92-96``), over pre-extracted entries.
 
     The per-field booleans come from the fused extraction's ``_m_*``
     flags — no regex re-evaluation on the diagnostics path.

@@ -30,7 +30,6 @@ _COMMAND_PATH = "$.attr.command"
 def read_mongo_log(
     spark: SparkSession,
     path: str,
-    number_lines: bool = True,
     per_file: bool = False,
 ) -> DataFrame:
     """Scan a MongoDB log into ``(value, line_no, parsed, command, valid)``.
@@ -57,10 +56,8 @@ def read_mongo_log(
     nparts = lines.rdd.getNumPartitions()
     if per_file:
         lines = with_file_row_numbers(lines, "line_no", file_col="src_file")
-    elif number_lines:
-        lines = with_row_numbers(lines, "line_no")
     else:
-        lines = lines.withColumn("line_no", F.monotonically_increasing_id() + 1)
+        lines = with_row_numbers(lines, "line_no")
     lines = fan_out_numbered(lines, nparts)
     parsed = F.from_json(
         F.col("value"),

@@ -51,9 +51,8 @@ def committed_stream_batch(base_path: str) -> int:
     LATEST manifest normally holds the high-water mark and the stamp
     survives maintenance followed by ``vacuum(keep_last=1)``; the
     descending scan is belt and braces for manifests published before
-    that rule existed. Raw read: the stamp rides in the version JSON
-    itself, so the scan never loads a two-level version's entry
-    blocks — O(1) per version regardless of index size."""
+    that rule existed. The stamp rides in the version JSON itself: one
+    small read per version, no data-file scan."""
     for v in reversed(manifest_versions(base_path)):
         man = read_manifest(base_path, v)
         if _STAMP in man:

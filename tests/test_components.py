@@ -102,3 +102,30 @@ class TestPagerankInteger:
             for r in pagerank_integer(df.repartition(13)).collect()
         }
         assert a == b
+
+
+def test_release_frees_graph_checkpoints(spark):
+    """The component, PageRank and triangle queries cut lineage with
+    local checkpoints, whose RDDs the cache manager never sees;
+    release_persisted() must still free every one of them at once, with
+    no wait for the JVM cleaner."""
+    from sressentials_spark import artifacts, catalog
+    from tests.test_dedup import SF_DIR
+
+    artifacts.release_persisted()
+    jsc = spark.sparkContext._jsc.sc()
+    baseline = jsc.getPersistentRDDs().size()
+    results = [
+        getattr(catalog, q)(spark, SF_DIR)
+        for q in (
+            "emb_dedup_components",
+            "dedup_components",
+            "graph_pagerank_copurchase",
+            "graph_triangle_counts",
+        )
+    ]
+    for df in results:
+        assert df.count() > 0
+    assert jsc.getPersistentRDDs().size() > baseline
+    artifacts.release_persisted()
+    assert jsc.getPersistentRDDs().size() == baseline

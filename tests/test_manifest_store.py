@@ -82,7 +82,7 @@ def test_child_carries_quantizers_and_riders_it_does_not_restate(spark, tmp_path
         "coarse": {"0": [1, 2], "7": [3, 4]},
         "books": [[[0, [5, 6]]]],
         "stream_batch_id": 7,
-        "manifest_list": [{"path": "manifests/manifest-x.json"}],
+        "files": [{"path": "commit-old/f"}],
     }
     MT.publish_manifest(store, 1, parent)
     assert MT.publish_next(

@@ -24,11 +24,34 @@ def test_counts_only_the_shuffles_a_query_plans_itself(spark):
     try:
         query = cached.groupBy("count").agg(F.sum("k").alias("s"))
         nodes = plan_nodes(query)
-        assert nodes.count(("ShuffleExchangeExec", True)) == 1
-        assert ("InMemoryTableScanExec", True) in nodes
+        assert nodes.count(("ShuffleExchangeExec", "own")) == 1
+        assert ("InMemoryTableScanExec", "own") in nodes
         # The cached subplan is walked (its shapes are audited) but its
         # nodes are not the query's own.
-        assert ("BroadcastExchangeExec", False) in nodes
-        assert nodes.count(("ShuffleExchangeExec", False)) == 1
+        assert ("BroadcastExchangeExec", "cached") in nodes
+        assert nodes.count(("ShuffleExchangeExec", "cached")) == 1
     finally:
         cached.unpersist()
+
+
+def test_reports_the_shuffles_of_a_shared_frame_its_consumer_scans(spark):
+    """A consumer of a session-shared frame (``catalog._shared_query``)
+    plans no shuffle of its own; the shared frame's aggregation shuffle
+    sits under the in-memory scan and is reported as cached, so a
+    shuffle added to the shared frame shows in every consumer."""
+    from sressentials_spark.artifacts import release_persisted
+    from sressentials_spark.catalog import _shared_query
+
+    release_persisted()
+    try:
+        shared = _shared_query(
+            spark,
+            "plan-audit",
+            "shared_probe",
+            lambda: spark.range(200).groupBy((F.col("id") % 7).alias("k")).count(),
+        )
+        nodes = plan_nodes(shared.filter(F.col("count") > 20).select("k"))
+        assert nodes.count(("ShuffleExchangeExec", "own")) == 0
+        assert nodes.count(("ShuffleExchangeExec", "cached")) >= 1
+    finally:
+        release_persisted()
