@@ -14,7 +14,10 @@ so a broadcast or reused exchange is not a shuffle and a cached frame's
 shuffles are not counted again in every query that scans it;
 ``cached`` counts the shuffles inside the cached subplans the query
 scans, so a shuffle added to a session-shared frame still shows in its
-consumers. Every query is planned after ``release_persisted()``, so its
+consumers. ``python`` lists the query's own Python-evaluating nodes
+(:func:`python_nodes`): each is a stage of tasks that pays the Python
+worker's per-task floor, so they sit beside the shuffle count in the
+cost map. Every query is planned after ``release_persisted()``, so its
 counts do not depend on which queries ran before it.
 
 Usage::
@@ -224,6 +227,28 @@ def plan_nodes(df) -> list[tuple[str, str]]:
     return nodes
 
 
+#: Name prefixes of the physical nodes that evaluate Python: Arrow and
+#: pickled scalar UDFs, grouped and mapped pandas functions.
+PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "FlatMapGroupsInPandas",
+    "MapInPandas",
+)
+
+
+def python_nodes(nodes: list[tuple[str, str]]) -> dict[str, int]:
+    """Count of each Python-evaluating node class among a query's own
+    nodes (``plan_nodes`` scope ``"own"``), by class name without its
+    ``Exec`` suffix."""
+    out: dict[str, int] = {}
+    for name, scope in nodes:
+        if scope == "own" and name.startswith(PYTHON_NODES):
+            key = name.removesuffix("Exec")
+            out[key] = out.get(key, 0) + 1
+    return dict(sorted(out.items()))
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
@@ -261,8 +286,10 @@ def main() -> int:
             f"{s}(ok: {allowed[s]})" if s in allowed else f"{s}(UNEXPLAINED)"
             for s in flagged
         )
+        py = ",".join(f"{k}:{v}" for k, v in python_nodes(nodes).items())
         print(
             f"  {name}: exchanges={n_exchange} cached={n_cached}"
+            + (f" python={py}" if py else "")
             + (f" {note}" if note else "")
         )
         for s in bad:

@@ -309,10 +309,11 @@ def cosine_topk_ivf_versioned(
     query_src: DataFrame | None = None,
 ) -> DataFrame:
     """IVF top-k served from a committed version: probes derive from
-    the MANIFEST centroid set (query rows re-annotated by the same
-    Arrow kernel as the build — always consistent with the lists the
-    same manifest names), and the corpus scan plans only the probed
-    cells' files. Bit-identical to the bare index's serve at the same
+    the MANIFEST centroid set (the collected query rows are probed on
+    the driver by the same numpy body as the build's Arrow kernel,
+    ``linalg.ivf_cells`` — always consistent with the lists the same
+    manifest names), and the corpus scan plans only the probed cells'
+    files. Bit-identical to the bare index's serve at the same
     centroid set (pinned by tests).
 
     ``query_src`` (``id_col`` + ``embedding``) is where the query
@@ -322,6 +323,10 @@ def cosine_topk_ivf_versioned(
     ``isin`` filter): an O(index) read per batch that exists only as a
     self-contained fallback — at scale, always pass ``query_src`` (the
     corpus scan stays manifest-pruned either way)."""
+    import numpy as np
+
+    from sressentials_spark.operators.linalg import ivf_cells
+
     version = version or manifest_versions(base_path)[-1]
     man = read_ivf_manifest(base_path, version)  # centroids ride inline
     ids, mat = _load_centroids(man)
@@ -329,20 +334,28 @@ def cosine_topk_ivf_versioned(
         query_src
         if query_src is not None
         else read_ivf_index_version(spark, base_path, version)
-    )
-    qcols = [id_col, "embedding"]
+    ).select(id_col, "embedding")
     qrows = (
-        src.filter(F.col(id_col).isin(query_ids)).select(*qcols).collect()
+        src.filter(F.col(id_col).isin(query_ids))
+        .coalesce(spark.sparkContext.defaultParallelism)
+        .collect()
     )
-    qsrc = local_df(spark, qrows, src.select(*qcols).schema)
-    qann = ivf_annotate_frozen(qsrc, ids, mat, nprobe)
-    qann_rows = qann.collect()
-    probed = sorted({int(c) for r in qann_rows for c in r["cells"]})
+    qann_rows = []
+    if qrows:
+        vnorm, cells = ivf_cells(ids, mat, nprobe)(
+            np.asarray([r["embedding"] for r in qrows], dtype=np.float64)
+        )
+        qann_rows = [
+            (r[id_col], r["embedding"], float(n), [int(c) for c in cs])
+            for r, n, cs in zip(qrows, vnorm, cells)
+        ]
+    probed = sorted({c for r in qann_rows for c in r[3]})
     corpus = read_ivf_index_version(spark, base_path, version, cells=probed)
-    queries_src = local_df(spark, qann_rows, qann.schema)
+    schema = f"{_ddl(src)}, `norm` double, `cells` array<bigint>"
     return _ivf_query(
         corpus, query_ids, k, id_col, dim,
-        filter_col=None, prune_cells=False, queries_src=queries_src,
+        filter_col=None, prune_cells=False,
+        queries_src=local_df(spark, qann_rows, schema),
     )
 
 

@@ -57,7 +57,11 @@ from pyspark.sql.types import (
 #: 2.7s unrolled vs 0.66s through the Arrow kernel at dim 64, 2000
 #: rows: Catalyst tree-walk cost, not execution). Unrolling only pays
 #: for itself on genuinely small vectors where the per-batch Arrow
-#: exchange would dominate.
+#: exchange would dominate. Re-measured on IVF serving (perfbench
+#: ``corpus_serve`` data, 600 vectors at dim 64, ``local[2]``, 12
+#: interleaved requests, same rows): the cutoff raised to 64 served a
+#: request in 1.55 s against 0.83 s through the Arrow kernel once each
+#: request scans in one task wave, and 1.46 s against 1.38 s before.
 UNROLL_MAX_DIM = 32
 
 
@@ -167,25 +171,51 @@ def norm_bands_kernel(bands: int, band_bits: int):
     return f
 
 
-def ivf_cells_kernel(centroid_ids: list[int], centroids: np.ndarray, nprobe: int):
-    """Factory: Arrow kernel assigning each vector its ``nprobe``
-    nearest IVF centroids (cosine descending, centroid id ascending on
-    ties), returned as ``struct<norm double, cells array<long>>``.
+def ivf_cells(centroid_ids: list[int], centroids: np.ndarray, nprobe: int):
+    """Factory: ``assign(V) -> (norm, cells)`` for an ``(n, dim)``
+    float64 matrix — each row's fold-exact L2 norm and its ``nprobe``
+    nearest IVF centroid ids, an ``(n, nprobe)`` int64 matrix (cosine
+    descending, centroid id ascending on ties).
 
-    ``centroids`` is a small ``(K, dim)`` float64 matrix captured in
-    the closure (16 × 64 doubles here — at any realistic K it rides to
-    executors as task-closure bytes, the moral equivalent of a
-    broadcast dim table). Per-centroid cosine uses the shared
-    fold-exact dot, so the assignment argmax is bit-reproducible
-    against the DuckDB oracle's ``list_sum`` restatement. Centroid
-    columns are pre-sorted by id so a *stable* argsort on descending
-    cosine yields the id-ascending tie-break for free.
+    Per-centroid cosine uses the shared fold-exact dot, so the
+    assignment argmax is bit-reproducible against the DuckDB oracle's
+    ``list_sum`` restatement. Centroid columns are pre-sorted by id so
+    a *stable* argsort on descending cosine yields the id-ascending
+    tie-break for free. The one body behind both the Arrow kernel
+    (:func:`ivf_cells_kernel`, a corpus pass) and a driver-side probe
+    of a few collected query rows (``ivf_versioned.
+    cosine_topk_ivf_versioned``): one implementation, so the two can
+    never disagree on a probe list.
     """
     order = np.argsort(np.asarray(centroid_ids))
     cids = np.asarray(centroid_ids, dtype=np.int64)[order]
     C = np.asarray(centroids, dtype=np.float64)[order]
     cnorm = np.sqrt(_fold_dot(C, C))
     take = min(nprobe, len(cids))
+
+    def assign(V: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        vnorm = np.sqrt(_fold_dot(V, V))
+        cos = np.empty((V.shape[0], len(cids)), dtype=np.float64)
+        for k in range(len(cids)):
+            cos[:, k] = _fold_dot(V, np.broadcast_to(C[k], V.shape)) / (
+                vnorm * cnorm[k]
+            )
+        return vnorm, cids[np.argsort(-cos, axis=1, kind="stable")[:, :take]]
+
+    return assign
+
+
+def ivf_cells_kernel(centroid_ids: list[int], centroids: np.ndarray, nprobe: int):
+    """Factory: Arrow kernel assigning each vector its ``nprobe``
+    nearest IVF centroids (:func:`ivf_cells`), returned as
+    ``struct<norm double, cells array<long>>``.
+
+    ``centroids`` is a small ``(K, dim)`` float64 matrix captured in
+    the closure (16 × 64 doubles here — at any realistic K it rides to
+    executors as task-closure bytes, the moral equivalent of a
+    broadcast dim table).
+    """
+    assign = ivf_cells(centroid_ids, centroids, nprobe)
     ret = StructType(
         [
             StructField("norm", DoubleType()),
@@ -196,19 +226,12 @@ def ivf_cells_kernel(centroid_ids: list[int], centroids: np.ndarray, nprobe: int
     @pandas_udf(ret)
     def f(v: pd.Series) -> pd.DataFrame:
         V = _stack(v)
-        n = V.shape[0]
-        if n == 0:
+        if V.shape[0] == 0:
             return pd.DataFrame(
                 {"norm": pd.Series(dtype=np.float64), "cells": pd.Series(dtype=object)}
             )
-        vnorm = np.sqrt(_fold_dot(V, V))
-        cos = np.empty((n, len(cids)), dtype=np.float64)
-        for k in range(len(cids)):
-            cos[:, k] = _fold_dot(V, np.broadcast_to(C[k], V.shape)) / (
-                vnorm * cnorm[k]
-            )
-        nearest = np.argsort(-cos, axis=1, kind="stable")[:, :take]
-        return pd.DataFrame({"norm": vnorm, "cells": list(cids[nearest])})
+        vnorm, cells = assign(V)
+        return pd.DataFrame({"norm": vnorm, "cells": list(cells)})
 
     return f
 

@@ -334,13 +334,26 @@ def _ivf_query(
     where the query rows' probe lists come from — the versioned serve
     (operators/ivf_versioned.py) annotates the query rows against the
     centroid set of the manifest version it reads, since its lists
-    store no probe arrays."""
+    store no probe arrays.
+
+    Both scans are coalesced to ``defaultParallelism`` partitions: one
+    task wave per request. A probed cell's file is small, and Spark
+    charges each file the 4 MB open cost against the engine's 8 MB
+    split size, so a request's probed cells otherwise plan a split per
+    two files, each a task of the Arrow ``dot`` kernel whose Python
+    floor (~200 ms at 30-90 ms of JVM CPU) dwarfs its work. ``coalesce``
+    never adds partitions or a shuffle, so wherever splits <= slots it
+    changes nothing."""
     spark = annotated.sparkSession
+    width = spark.sparkContext.defaultParallelism
     extra = [filter_col] if filter_col else []
     qcols = [id_col, "embedding", "norm", *extra, "cells"]
     qsrc = queries_src if queries_src is not None else annotated
     qrows = (
-        qsrc.filter(F.col(id_col).isin(query_ids)).select(*qcols).collect()
+        qsrc.filter(F.col(id_col).isin(query_ids))
+        .select(*qcols)
+        .coalesce(width)
+        .collect()
     )
     queries = local_df(spark, qrows, qsrc.select(*qcols).schema).select(
         F.col(id_col).alias("query_id"),
@@ -353,7 +366,9 @@ def _ivf_query(
     if prune_cells:
         probed = sorted({int(c) for r in qrows for c in r["cells"]})
         corpus = corpus.filter(F.col("cell").isin(probed))
-    corpus = corpus.select(F.col(id_col), "embedding", "norm", *extra, "cell")
+    corpus = corpus.select(
+        F.col(id_col), "embedding", "norm", *extra, "cell"
+    ).coalesce(width)
     join_cond = (F.col("pcell") == F.col("cell")) & (
         F.col("query_id") != F.col(id_col)
     )

@@ -13,6 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: Upper bound of the default driver heap.
+DRIVER_MEMORY_MAX_MB = 32 * 1024
+
+
+def default_driver_memory() -> str:
+    """The default ``spark.driver.memory``: 32 GB, or three quarters of
+    the box's physical RAM where that is less, so the local-mode heap
+    (driver and executors in one JVM) can never be sized past the
+    machine. ``SPARK_DRIVER_MEMORY`` overrides it in :func:`get_spark`."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):  # no sysconf, or no such name
+        return f"{DRIVER_MEMORY_MAX_MB}m"
+    return f"{min(DRIVER_MEMORY_MAX_MB, phys * 3 // 4 // 2**20)}m"
+
 
 def get_spark(
     app_name: str = "sressentials_spark",
@@ -62,7 +77,10 @@ def get_spark(
         # timestamps (testdata is µs-exact, so the cast is lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
         # Many distinct query plans per session → lots of generated
         # classes; give the JIT head-room so hot codegen methods don't
         # linger interpreted (observed 10-50x slowdowns otherwise).
@@ -70,6 +88,10 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize=512m -XX:CICompilerCount=6",
         )
+        # Python workers fork from a daemon that has already imported
+        # numpy, pandas and pyarrow: each worker's first task would pay
+        # ~0.8 s for those imports otherwise (sressentials_spark/pydaemon.py).
+        .config("spark.python.daemon.module", "sressentials_spark.pydaemon")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
     )

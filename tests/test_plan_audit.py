@@ -1,16 +1,18 @@
-"""The plan walk behind ``scripts/plan_audit.py``'s exchange counts."""
+"""The plan walk behind ``scripts/plan_audit.py``'s exchange and
+Python-node counts."""
 
 from __future__ import annotations
 
 import os
 import sys
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
 )
-from plan_audit import plan_nodes  # noqa: E402
+from plan_audit import plan_nodes, python_nodes  # noqa: E402
 
 
 def test_counts_only_the_shuffles_a_query_plans_itself(spark):
@@ -55,3 +57,37 @@ def test_reports_the_shuffles_of_a_shared_frame_its_consumer_scans(spark):
         assert nodes.count(("ShuffleExchangeExec", "cached")) >= 1
     finally:
         release_persisted()
+
+
+def test_reports_the_python_evaluating_nodes_a_query_plans_itself(spark):
+    """Each Python-evaluating node of the query's own plan is reported
+    once by class; a Python UDF inside a cached frame's subplan belongs
+    to the frame, not to the query scanning it."""
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    @F.udf("long")
+    def twice(x):
+        return 2 * x
+
+    def keep(batches):
+        yield from batches
+
+    cached = spark.range(20).select(twice("id").alias("id")).persist()
+    try:
+        query = (
+            cached.select(plus_one("id").alias("id"), twice("id").alias("t"))
+            .mapInPandas(keep, "id long, t long")
+            .groupBy("t")
+            .applyInPandas(lambda pdf: pdf, "id long, t long")
+        )
+        assert python_nodes(plan_nodes(query)) == {
+            "ArrowEvalPython": 1,
+            "BatchEvalPython": 1,
+            "FlatMapGroupsInPandas": 1,
+            "MapInPandas": 1,
+        }
+        assert python_nodes(plan_nodes(spark.range(5))) == {}
+    finally:
+        cached.unpersist()

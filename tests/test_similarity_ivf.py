@@ -198,6 +198,54 @@ def test_cached_corpus_keyed_by_corpus_plan(spark):
     release_persisted()
 
 
+def test_store_serve_runs_one_task_wave_per_request(spark, tmp_path):
+    """A store whose probed cells span more file splits than the
+    session has slots is scored in at most ``defaultParallelism``
+    tasks per stage (the request's scans are coalesced to one wave),
+    with the same rows as the in-session path."""
+    from sressentials_spark import sinks
+    from sressentials_spark.operators.dedup import release_persisted
+
+    rng = random.Random(11)
+    emb = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(240)],
+        "vec_id long, embedding array<float>",
+    )
+    path = str(tmp_path / "ivf_many_files")
+    # 24 writer partitions: each cell directory holds up to 24 files.
+    sinks.write_partitioned(S.ivf_annotate(emb).repartition(24), path, ["cell"])
+    qids = [0, 1, 2]
+    slots = spark.sparkContext.defaultParallelism
+    probed = sorted(
+        {c for r in spark.read.parquet(path).filter(F.col("vec_id").isin(qids))
+         .select("cells").collect() for c in r["cells"]}
+    )
+    assert (
+        spark.read.parquet(path).filter(F.col("cell").isin(probed))
+        .rdd.getNumPartitions() > slots
+    )
+
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-one-wave", "store serve")
+    try:
+        served = sorted(
+            S.cosine_topk_ivf_from_index(spark, path, qids, k=10, dim=8).collect()
+        )
+    finally:
+        sc.setJobGroup("", "")
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("ivf-one-wave")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks and max(tasks) <= slots, tasks
+
+    in_session = sorted(S.cosine_topk_ivf(emb, qids, k=10, dim=8).collect())
+    release_persisted()
+    assert served == in_session and len(served) == 30
+
+
 class TestIvfPq:
     def test_index_serves_pruned_and_matches_artifact_rederivation(
         self, spark, tmp_path
