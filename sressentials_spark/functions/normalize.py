@@ -10,7 +10,18 @@ its stale tests):
   cross-collection. Array/object values are untouched.
 * N2 (``MySql/mysqlLogParser.py:8-13``): integer literals and
   ``'...'`` string literals become ``?``, then the whole query is
-  uppercased (decimals become ``?.?``).
+  uppercased (decimals become ``?.?``). The session runs ``upper`` on
+  the JVM's case mappings (``spark.sql.icu.caseMappings.enabled=false``
+  in ``session.get_spark``): ASCII takes a byte fast path, anything
+  else ``String.toUpperCase``. ICU's one-argument ``toUpperCase`` (the
+  Spark default) and the JVM's both follow the JVM default locale;
+  Python's ``str.upper`` follows none. Against Python 3.11 (Unicode
+  14), JDK 17 (Unicode 13) leaves 40 code points un-uppercased and ICU
+  77 (Unicode 16) uppercases 27 that Python leaves alone; every other
+  code point agrees (tests/test_normalize.py names them). The JVM path
+  also skips ICU's one-time cold cost: the first ``upper`` in a JVM
+  built a title-case table over every code point, ~1.7 s of CPU on one
+  task while the others waited.
 * N3 (``MySql/mysqlLogParser.py:71-74``): ``Query_time`` seconds →
   milliseconds, unparseable → 0.0.
 

@@ -77,6 +77,14 @@ def get_spark(
         # timestamps (testdata is µs-exact, so the cast is lossless).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # upper/lower use the JVM's case mappings, not ICU's: the first
+        # ICU call in a JVM initialises CollationAwareUTF8String, whose
+        # static initialiser title-cases all 1,114,112 code points (~1.7 s
+        # of CPU on one task while the stage's other tasks wait on the
+        # class-init lock), and a one-shot CLI run pays it every time.
+        # Both follow the JVM default locale; SCALING.md ("Global
+        # posture") has the Unicode-version trade.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),

@@ -34,3 +34,10 @@ def test_python_workers_fork_with_the_kernel_imports_done(spark):
         return all(m in sys.modules for m in ("pyarrow", "pandas", "numpy"))
 
     assert spark.range(1).select(preloaded("id").alias("ok")).first()["ok"]
+
+
+def test_session_uses_jvm_case_mappings(spark):
+    """upper/lower take the JVM's case mappings: Spark's ICU path builds
+    a title-case table over every code point on its first call in a JVM
+    (about 1.7 s of CPU while other tasks wait on the class-init lock)."""
+    assert spark.conf.get("spark.sql.icu.caseMappings.enabled") == "false"
